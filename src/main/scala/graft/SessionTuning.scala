@@ -1,7 +1,7 @@
 package graft
 
 /** Session-level I/O tuning shared by the driver mains (Bench / Verify /
-  * Explain / ScaleCheck / RecallCheck / SemProf).
+  * Explain / ScaleCheck / RecallCheck).
   *
   * Shuffle block files are the measured bottleneck of the small-shuffle
   * queries on this host (guide §2.1: "Local disk bandwidth for shuffle

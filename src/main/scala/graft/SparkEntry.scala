@@ -6,77 +6,31 @@ import graft.funcs._
 import graft.ir.Expr._
 import graft.model.Model
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   * Each `queries` entry exercises one operator from SURVEY.md §2 through the
   * graft Model API; `oracleSql` holds the DuckDB-equivalent ANSI SQL the
-  * driver checks against at sf0.01.
+  * driver checks against at sf0.01. Every persisted artifact a query
+  * serves from is memoized through [[Fixtures]].
   */
 object SparkEntry {
-
-  /** Per-JVM unique suffix for scratch tables/paths (q_dedup_incremental,
-    * q_image_neardup_incr): concurrent Verify/Bench JVMs over the same data
-    * dir must not share a catalog table name or an overwrite path. */
-  private lazy val runTag: String =
-    java.lang.Long.toHexString(
-      java.util.UUID.randomUUID().getMostSignificantBits & 0xffffffffL)
 
   /** Per-JVM version counter for q_dedup_promote's maintenance loop:
     * each call must publish NEW version names (re-using one would
     * overwrite files a cached relation still references). */
   private val promoteSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Fixture FORMAT version, baked into every memoized fixture name:
-    * fixtures are keyed by (data dir, params), so a change to a builder
-    * (minhashIndex, kmeans/ivfIndexSave, knNgramFit, the WARC/WET
-    * writers) would otherwise keep serving the stale on-disk artifact
-    * across sessions until someone deleted target/fixtures by hand.
-    * Bump this token whenever any fixture builder's output changes. */
-  private val FixtureVer = "f3" // f3: substring index gained the
-                                // postings/ + freq/ + hot/ subdir layout
-
-  /** Atomic fixture publish: rename the fully-written staging dir into
-    * place. A lost race (a concurrent winner already published) discards
-    * the loser's complete copy benignly; any OTHER rename failure
-    * (crash-truncated tmp, permissions, cross-device move) must fail
-    * loudly here — swallowed, it resurfaces as an unrelated
-    * path-not-found on the first read with no hint of the real cause. */
-  private def publishFixture(
-      tmp: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-    if (!tmp.toFile.renameTo(dst.toFile)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-      if (!java.nio.file.Files.exists(dst))
-        throw new IllegalStateException(
-          s"fixture publish failed: rename $tmp -> $dst failed and no " +
-            "concurrent winner produced the artifact (disk full? perms?)")
-    }
-
   private def m(dir: String, table: String): Model = Model.parquet(dir, table)
 
-  /** Unicode fixture corpus for the tokenizer-path queries: decompose
-    * every 'e' into e + U+0301 (NFC must re-compose it) and swap 'a' for
-    * 'ä' (the `\p{L}` split must keep it). Built with Scala literals —
-    * Spark's chr() is ASCII-only; the DuckDB twin is [[UniDocsCte]]. */
-  /** Memoized MULTI-SHARD gzipped-WARC fixture of linked HTML pages,
-    * shared by q_pagerank_links / q_hits_links: each doc links to
+  /** MULTI-SHARD gzipped-WARC fixture of linked HTML pages, shared by
+    * q_pagerank_links / q_hits_links: each doc links to
     * srcs[(doc_id·7 + j·13) mod nSrc] for j ≤ doc_id mod 4 (alternating
     * quote styles) plus relative/javascript noise anchors the extractor
     * must ignore. Written as 8 shards (docs round-robin by id) read back
     * through the glob path — the reader's one-task-per-shard parallelism
     * is exercised, not just its record walk (a single-shard fixture
-    * serializes extraction behind one task). Deterministic per data dir
-    * — built once, on disk. */
-  private def linksWarcFixture(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = synchronized {
-    val fixDir = java.nio.file.Paths.get("/root/repo/target/fixtures")
-      .resolve(s"links_${FixtureVer}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val glob = s"$fixDir/*.warc.gz"
-    if (!java.nio.file.Files.exists(fixDir)) {
-      // per-builder tmp dir: two concurrent builders (tests + Verify in
-      // separate JVMs) must not share a staging path, or the rename can
-      // publish a partially-written fixture
-      val tmp = java.nio.file.Paths.get(fixDir.toString + ".tmp-" + runTag)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-      java.nio.file.Files.createDirectories(tmp)
+    * serializes extraction behind one task). */
+  private def linksWarcGlob(s: SparkSession, dir: String): String =
+    Fixtures.files("links", dir, "*.warc.gz") { tmp =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "source")
       // fixture-only driver collects: 20 sources, |docs| rows
@@ -101,253 +55,105 @@ object SparkEntry {
         graft.sources.Warc.write(s"$tmp/shard$k.warc.gz",
           rows.filter(_._1 % 8 == k).map(_._2).toSeq)
       }
-      publishFixture(tmp, fixDir)
     }
-    glob
-  }
 
-  /** Memoized bucketed-index fixture — [[linksWarcFixture]]'s pattern for
-    * the PERSISTED indexes the `*_incr` / `q_stream_*` queries serve
-    * from: those queries' job is to time the serve JOIN against an index
-    * production built at ingest, and rebuilding the index inside the
-    * timed body measured build+serve (why those rows churned hardest in
-    * sweeps). The index contents are deterministic per (data dir,
-    * params) — both encoded in `name` — so the first call anywhere
-    * builds it bucketed under target/fixtures via a per-JVM staging dir
-    * + atomic rename (a lost race just discards the loser's complete
-    * staging copy), and every later call — including later JVMs — only
-    * REGISTERS the existing files as an external bucketed table (catalog
-    * metadata is per-session; the on-disk hash-on-key layout is not, and
-    * registration preserves it, so the serve join still plans zero
-    * index-side exchanges). Returns the catalog table name. */
-  private def indexFixture(
-      s: SparkSession, name0: String, key: String, buckets: Int)(
-      build: => org.apache.spark.sql.DataFrame): String = synchronized {
-    val name = s"${FixtureVer}_$name0"
-    val tbl = "fix_" + name
-    if (!s.catalog.tableExists(tbl)) {
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!java.nio.file.Files.exists(dataDir)) {
-        val tmpTbl = s"${tbl}_tmp_$runTag"
-        val tmpPath = root.resolve(s"$name.tmp-$runTag")
-        org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-        graft.sources.ParquetIO.writeBucketed(
-          build, tmpTbl, tmpPath.toString, key, buckets)
-        s.sql(s"DROP TABLE IF EXISTS $tmpTbl") // external table: files stay
-        publishFixture(tmpPath, dataDir)
-      }
-      val ddl = s.read.parquet(dataDir.toString).schema.toDDL
-      s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
-                LOCATION '$dataDir'""")
-    }
-    tbl
-  }
-
-  /** [[indexFixture]] for the two-part IVF artifact (`centroids/` plain
-    * parquet + `postings/` bucketed on `__cell__`): builds once per data
-    * dir, registers the postings as an external bucketed table, returns
-    * (index dir, postings table name). */
-  private def ivfIndexFixture(
+  /** Persisted two-part IVF artifact (`centroids/` plain parquet +
+    * `postings/` bucketed on `__cell__`) the `q_ann_ivf*` serve queries
+    * time their read path against: the fit and the bucketed write are
+    * ingest-time work. Returns (index dir, postings table name). */
+  private def ivfIndex(
       s: SparkSession, dir: String, attrs: Seq[String] = Seq.empty)
       : (String, String) =
-    synchronized {
-      val name = s"ivf_$FixtureVer" +
-        (if (attrs.isEmpty) "" else attrs.mkString("_", "_", "")) + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tbl = "fix_" + name
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!s.catalog.tableExists(tbl)) {
-        if (!java.nio.file.Files.exists(dataDir)) {
-          val tmpTbl = s"${tbl}_tmp_$runTag"
-          val tmpPath = root.resolve(s"$name.tmp-$runTag")
-          org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-          val emb = s.read.parquet(s"$dir/embeddings.parquet")
-          val cents = graft.llm.Embeddings.kmeansFitSqrtK(
-            emb, "vec_id", "embedding", iters = 2)
-          graft.llm.Embeddings.ivfIndexSave(
-            emb, "vec_id", "embedding", cents, tmpTbl, tmpPath.toString,
-            attrs = attrs)
-          s.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          publishFixture(tmpPath, dataDir)
-        }
-        val ddl = s.read.parquet(s"$dataDir/postings").schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                  CLUSTERED BY (__cell__) SORTED BY (__cell__) INTO 8 BUCKETS
-                  LOCATION '$dataDir/postings'""")
-      }
-      (dataDir.toString, tbl)
+    Fixtures.bucketed(s, "ivf" + attrs.map("_" + _).mkString, dir,
+        "__cell__", sub = "postings") { (tbl, path) =>
+      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val cents = graft.llm.Embeddings.kmeansFitSqrtK(
+        emb, "vec_id", "embedding", iters = 2)
+      graft.llm.Embeddings.ivfIndexSave(
+        emb, "vec_id", "embedding", cents, tbl, path, attrs = attrs)
     }
 
-  /** [[ivfIndexFixture]] for the PQ-CODED persisted artifact
+  /** [[ivfIndex]] for the PQ-CODED persisted artifact
     * ([[graft.llm.Embeddings.ivfPqIndexSave]]): coarse sqrt(n) k-means
     * + m=2 segment codebooks fit once at ingest, postings store only
     * (cell, id, codes) — the serve queries time the coded-scan + ADC +
     * rerank read path, never the fit. */
-  private def ivfPqIndexFixture(
-      s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val name = s"ivfpq_${FixtureVer}_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tbl = "fix_" + name
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!s.catalog.tableExists(tbl)) {
-        if (!java.nio.file.Files.exists(dataDir)) {
-          val tmpTbl = s"${tbl}_tmp_$runTag"
-          val tmpPath = root.resolve(s"$name.tmp-$runTag")
-          org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-          val emb = s.read.parquet(s"$dir/embeddings.parquet")
-          val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
-            emb, "vec_id", "embedding", iters = 2)
-          val cb = graft.llm.Embeddings.pqCodebooks(
-            emb, "vec_id", "embedding", dim = 64, m = 2,
-            initPred = org.apache.spark.sql.functions.col("vec_id") < 4,
-            iters = 2)
-          graft.llm.Embeddings.ivfPqIndexSave(
-            emb, "vec_id", "embedding", coarse, cb, dim = 64, m = 2,
-            tmpTbl, tmpPath.toString)
-          s.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          publishFixture(tmpPath, dataDir)
-        }
-        val ddl = s.read.parquet(s"$dataDir/postings").schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                  CLUSTERED BY (__cell__) SORTED BY (__cell__) INTO 8 BUCKETS
-                  LOCATION '$dataDir/postings'""")
-      }
-      (dataDir.toString, tbl)
+  private def ivfPqIndex(s: SparkSession, dir: String): (String, String) =
+    Fixtures.bucketed(s, "ivfpq", dir, "__cell__", sub = "postings") {
+      (tbl, path) =>
+        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
+          emb, "vec_id", "embedding", iters = 2)
+        val cb = graft.llm.Embeddings.pqCodebooks(
+          emb, "vec_id", "embedding", dim = 64, m = 2,
+          initPred = org.apache.spark.sql.functions.col("vec_id") < 4,
+          iters = 2)
+        graft.llm.Embeddings.ivfPqIndexSave(
+          emb, "vec_id", "embedding", coarse, cb, dim = 64, m = 2,
+          tbl, path)
     }
 
-  /** Memoized persisted SQ8 artifact over the full embeddings table
+  /** Persisted SQ8 artifact over the full embeddings table
     * ([[graft.llm.Embeddings.sq8IndexSave]]): params sidecar + bucketed
     * coded postings (4× smaller than raw vectors). q_ann_sq8_indexed
     * times the coded-scan serve path only. */
-  private def sq8IndexFixture(
-      s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val name = s"sq8_${FixtureVer}_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tbl = "fix_" + name
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!s.catalog.tableExists(tbl)) {
-        if (!java.nio.file.Files.exists(dataDir)) {
-          val tmpTbl = s"${tbl}_tmp_$runTag"
-          val tmpPath = root.resolve(s"$name.tmp-$runTag")
-          org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-          val emb = s.read.parquet(s"$dir/embeddings.parquet")
-          graft.llm.Embeddings.sq8IndexSave(
-            emb, "vec_id", "embedding", dim = 64, tmpTbl, tmpPath.toString)
-          s.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          publishFixture(tmpPath, dataDir)
-        }
-        val ddl = s.read.parquet(s"$dataDir/postings").schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                  CLUSTERED BY (vec_id) SORTED BY (vec_id) INTO 8 BUCKETS
-                  LOCATION '$dataDir/postings'""")
-      }
-      (dataDir.toString, tbl)
+  private def sq8Index(s: SparkSession, dir: String): (String, String) =
+    Fixtures.bucketed(s, "sq8", dir, "vec_id", sub = "postings") {
+      (tbl, path) =>
+        graft.llm.Embeddings.sq8IndexSave(
+          s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+          dim = 64, tbl, path)
     }
 
-  /** Memoized persisted IVF-SQ8 artifact (coarse sqrt(n) cells + GLOBAL
-    * per-dim SQ8 params — [[graft.llm.Embeddings.ivfSq8IndexSave]]):
-    * cell-gated quantized serving at 4× fewer posting bytes with
-    * near-exact within-cell ranking. */
-  private def ivfSq8IndexFixture(
-      s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val name = s"ivfsq8_${FixtureVer}_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tbl = "fix_" + name
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!s.catalog.tableExists(tbl)) {
-        if (!java.nio.file.Files.exists(dataDir)) {
-          val tmpTbl = s"${tbl}_tmp_$runTag"
-          val tmpPath = root.resolve(s"$name.tmp-$runTag")
-          org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-          val emb = s.read.parquet(s"$dir/embeddings.parquet")
-          val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
-            emb, "vec_id", "embedding", iters = 2)
-          graft.llm.Embeddings.ivfSq8IndexSave(
-            emb, "vec_id", "embedding", coarse, dim = 64,
-            tmpTbl, tmpPath.toString)
-          s.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          publishFixture(tmpPath, dataDir)
-        }
-        val ddl = s.read.parquet(s"$dataDir/postings").schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                  CLUSTERED BY (__cell__) SORTED BY (__cell__) INTO 8 BUCKETS
-                  LOCATION '$dataDir/postings'""")
-      }
-      (dataDir.toString, tbl)
+  /** Persisted IVF-SQ8 artifact (coarse sqrt(n) cells + GLOBAL per-dim
+    * SQ8 params — [[graft.llm.Embeddings.ivfSq8IndexSave]]): cell-gated
+    * quantized serving at 4× fewer posting bytes with near-exact
+    * within-cell ranking. */
+  private def ivfSq8Index(s: SparkSession, dir: String): (String, String) =
+    Fixtures.bucketed(s, "ivfsq8", dir, "__cell__", sub = "postings") {
+      (tbl, path) =>
+        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
+          emb, "vec_id", "embedding", iters = 2)
+        graft.llm.Embeddings.ivfSq8IndexSave(
+          emb, "vec_id", "embedding", coarse, dim = 64, tbl, path)
     }
 
-  /** [[ivfPqIndexFixture]]'s RESIDUAL-coded twin
+  /** [[ivfPqIndex]]'s RESIDUAL-coded twin
     * ([[graft.llm.Embeddings.ivfPqIndexSave]] with `residual = true`,
     * codebooks fit on x − c(cell) — FAISS's by-residual IndexIVFPQ):
     * postings store (cell, id, m codes, ‖ĉ+r̂‖) and the serve query
     * times the coded-scan + residual-ADC read path. */
-  private def ivfPqResidualIndexFixture(
+  private def ivfPqResidualIndex(
       s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      // "ivfpqr2": the residual builder's output changed when the
-      // quantizer metric moved cosine → L2 (fit + encode) — a fresh
-      // name invalidates any cosine-coded artifact on disk without
-      // forcing a rebuild of every OTHER memoized fixture (the
-      // FixtureVer bump's blast radius)
-      val name = s"ivfpqr2_${FixtureVer}_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tbl = "fix_" + name
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!s.catalog.tableExists(tbl)) {
-        if (!java.nio.file.Files.exists(dataDir)) {
-          val tmpTbl = s"${tbl}_tmp_$runTag"
-          val tmpPath = root.resolve(s"$name.tmp-$runTag")
-          org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-          val emb = s.read.parquet(s"$dir/embeddings.parquet")
-          val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
-            emb, "vec_id", "embedding", iters = 2)
-          val cb = graft.llm.Embeddings.pqResidualCodebooks(
-            emb, "vec_id", "embedding", coarse, dim = 64, m = 2,
-            initPred = org.apache.spark.sql.functions.col("vec_id") < 4,
-            iters = 2)
-          graft.llm.Embeddings.ivfPqIndexSave(
-            emb, "vec_id", "embedding", coarse, cb, dim = 64, m = 2,
-            tmpTbl, tmpPath.toString, residual = true)
-          s.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          publishFixture(tmpPath, dataDir)
-        }
-        val ddl = s.read.parquet(s"$dataDir/postings").schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                  CLUSTERED BY (__cell__) SORTED BY (__cell__) INTO 8 BUCKETS
-                  LOCATION '$dataDir/postings'""")
-      }
-      (dataDir.toString, tbl)
+    // "ivfpqr2": the residual builder's output changed when the
+    // quantizer metric moved cosine → L2 (fit + encode) — a fresh
+    // name invalidates any cosine-coded artifact on disk without
+    // forcing a rebuild of every OTHER memoized fixture
+    Fixtures.bucketed(s, "ivfpqr2", dir, "__cell__", sub = "postings") {
+      (tbl, path) =>
+        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
+          emb, "vec_id", "embedding", iters = 2)
+        val cb = graft.llm.Embeddings.pqResidualCodebooks(
+          emb, "vec_id", "embedding", coarse, dim = 64, m = 2,
+          initPred = org.apache.spark.sql.functions.col("vec_id") < 4,
+          iters = 2)
+        graft.llm.Embeddings.ivfPqIndexSave(
+          emb, "vec_id", "embedding", coarse, cb, dim = 64, m = 2,
+          tbl, path, residual = true)
     }
 
-  /** Memoized MULTI-SHARD WET fixture (the extracted-text sibling of
-    * [[linksWarcFixture]]): 8 `.warc.wet.gz` shards (docs round-robin by
+  /** MULTI-SHARD WET fixture (the extracted-text sibling of
+    * [[linksWarcGlob]]): 8 `.warc.wet.gz` shards (docs round-robin by
     * id), each led by the per-shard `warcinfo` record real WET files
     * carry (the reader must skip it) followed by one `conversion`
     * record per page whose payload is the document text. Multi-shard on
     * purpose: a single-shard fixture serializes the scan behind one
     * gzip task and ScaleCheck would measure the fixture, not the
     * operator. */
-  private def wetFixture(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = synchronized {
-    val fixDir = java.nio.file.Paths.get("/root/repo/target/fixtures")
-      .resolve(s"wet_${FixtureVer}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val glob = s"$fixDir/*.warc.wet.gz"
-    if (!java.nio.file.Files.exists(fixDir)) {
-      val tmp = java.nio.file.Paths.get(fixDir.toString + ".tmp-" + runTag)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-      java.nio.file.Files.createDirectories(tmp)
+  private def wetGlob(s: SparkSession, dir: String): String =
+    Fixtures.files("wet", dir, "*.warc.wet.gz") { tmp =>
       val rows = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "source", "text")
         .collect().sortBy(_.getLong(0)) // fixture-only driver collect
@@ -362,29 +168,19 @@ object SparkEntry {
           }.toSeq
         graft.sources.Warc.write(s"$tmp/shard$k.warc.wet.gz", recs)
       }
-      publishFixture(tmp, fixDir)
     }
-    glob
-  }
 
-  /** Memoized MULTI-SHARD WAT fixture — the link-METADATA member of the
-    * crawl trio: 8 `.warc.wat.gz` shards, one `metadata` record per doc
-    * whose JSON envelope lists the SAME anchor targets
-    * [[linksWarcFixture]] encodes as HTML (`srcs[(id·7+j·13) mod n]` for
-    * j ≤ id mod 4), PLUS the relative/javascript noise anchors (present
-    * in the Links array — the GRAPH layer must drop them) and an
-    * `IMG@/src` entry with an absolute URL (the READER must drop it:
-    * only `A@/href` rows are links). Edge set therefore ≡ the HTML
-    * extraction's, so q_pagerank_wat shares q_pagerank_links' oracle. */
-  private def watFixture(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = synchronized {
-    val fixDir = java.nio.file.Paths.get("/root/repo/target/fixtures")
-      .resolve(s"wat_${FixtureVer}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val glob = s"$fixDir/*.warc.wat.gz"
-    if (!java.nio.file.Files.exists(fixDir)) {
-      val tmp = java.nio.file.Paths.get(fixDir.toString + ".tmp-" + runTag)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
-      java.nio.file.Files.createDirectories(tmp)
+  /** MULTI-SHARD WAT fixture — the link-METADATA member of the crawl
+    * trio: 8 `.warc.wat.gz` shards, one `metadata` record per doc whose
+    * JSON envelope lists the SAME anchor targets [[linksWarcGlob]]
+    * encodes as HTML (`srcs[(id·7+j·13) mod n]` for j ≤ id mod 4), PLUS
+    * the relative/javascript noise anchors (present in the Links array —
+    * the GRAPH layer must drop them) and an `IMG@/src` entry with an
+    * absolute URL (the READER must drop it: only `A@/href` rows are
+    * links). Edge set therefore ≡ the HTML extraction's, so
+    * q_pagerank_wat shares q_pagerank_links' oracle. */
+  private def watGlob(s: SparkSession, dir: String): String =
+    Fixtures.files("wat", dir, "*.warc.wat.gz") { tmp =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "source")
       // fixture-only driver collects: 20 sources, |docs| rows
@@ -412,113 +208,65 @@ object SparkEntry {
           rows.filter(_._1 % 8 == k).map(_._2).toSeq
         graft.sources.Warc.write(s"$tmp/shard$k.warc.wat.gz", recs)
       }
-      publishFixture(tmp, fixDir)
-    }
-    glob
-  }
-
-  /** [[indexFixture]] for PLAIN-parquet model artifacts (KN level
-    * tables etc. — no bucketing catalog entry to register): memoized
-    * per (data dir, params) via `name`, built once anywhere through a
-    * per-JVM staging dir + atomic rename, returns the artifact dir. The
-    * serve-side queries time scoring against a model production fit at
-    * ingest, not the fit itself. */
-  private def dirFixture(name0: String)(build: String => Unit): String =
-    synchronized {
-      val name = s"${FixtureVer}_$name0"
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!java.nio.file.Files.exists(dataDir)) {
-        val tmpPath = root.resolve(s"$name.tmp-$runTag")
-        org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-        build(tmpPath.toString)
-        publishFixture(tmpPath, dataDir)
-      }
-      dataDir.toString
     }
 
-  /** Memoized persisted substring gram-posting index over the documents
-    * table (minMatchWords = 8): the admission queries' stream-static
-    * corpus side. Bucketed on __gh__; catalog entries are per-JVM, the
-    * on-disk layout is not — same re-registration as ivfIndexFixture. */
-  private def substrIndexFixture(
-      s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val name = s"substr_${FixtureVer}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tbl = "fix_" + name
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!s.catalog.tableExists(tbl)) {
-        if (!java.nio.file.Files.exists(dataDir)) {
-          val tmpTbl = s"${tbl}_tmp_$runTag"
-          val tmpPath = root.resolve(s"$name.tmp-$runTag")
-          org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-          val docs = s.read.parquet(s"$dir/documents.parquet")
-          graft.llm.Dedup.substringIndexSave(docs, "doc_id", "text",
-            minMatchWords = 8, tmpTbl, tmpPath.toString)
-          s.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          publishFixture(tmpPath, dataDir)
-        }
-        val ddl = s.read.parquet(s"$dataDir/postings").schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                  CLUSTERED BY (__gh__) SORTED BY (__gh__) INTO 8 BUCKETS
-                  LOCATION '$dataDir/postings'""")
-      }
-      (dataDir.toString, tbl)
+  /** Persisted substring gram-posting index over the documents table
+    * (minMatchWords = 8): the admission queries' stream-static corpus
+    * side, bucketed on __gh__. */
+  private def substrIndex(s: SparkSession, dir: String): (String, String) =
+    Fixtures.bucketed(s, "substr", dir, "__gh__", sub = "postings") {
+      (tbl, path) =>
+        graft.llm.Dedup.substringIndexSave(
+          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+          minMatchWords = 8, tbl, path)
     }
 
-  /** Memoized APPEND-MAINTAINED substring index: the corpus' even-id half
-    * saved, the odd half appended via [[graft.llm.Dedup
-    * .substringIndexAppend]] — so the final artifact covers the full
-    * documents table and q_substr_admit_incr's served matches are value-
-    * identical to q_substr_admit's rebuilt-index ones (the parity the
+  /** APPEND-MAINTAINED substring index: the corpus' even-id half saved,
+    * the odd half appended via [[graft.llm.Dedup.substringIndexAppend]]
+    * — so the final artifact covers the full documents table and
+    * q_substr_admit_incr's served matches are value-identical to
+    * q_substr_admit's rebuilt-index ones (the parity the
     * oracle-by-reference rides). The timed body is the SERVE only. */
-  private def substrIncrIndexFixture(
+  private def substrIncrIndex(
       s: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val name = s"substri_${FixtureVer}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      val tbl = "fix_" + name
-      val root = java.nio.file.Paths.get("/root/repo/target/fixtures/idx")
-      java.nio.file.Files.createDirectories(root)
-      val dataDir = root.resolve(name)
-      if (!s.catalog.tableExists(tbl)) {
-        if (!java.nio.file.Files.exists(dataDir)) {
-          val tmpTbl = s"${tbl}_tmp_$runTag"
-          val tmpPath = root.resolve(s"$name.tmp-$runTag")
-          org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-          val docs = s.read.parquet(s"$dir/documents.parquet")
-          graft.llm.Dedup.substringIndexSave(
-            docs.where(org.apache.spark.sql.functions.pmod(
-              org.apache.spark.sql.functions.col("doc_id"),
-              org.apache.spark.sql.functions.lit(2L)) === 0L),
-            "doc_id", "text", minMatchWords = 8, tmpTbl, tmpPath.toString)
-          graft.llm.Dedup.substringIndexAppend(
-            docs.where(org.apache.spark.sql.functions.pmod(
-              org.apache.spark.sql.functions.col("doc_id"),
-              org.apache.spark.sql.functions.lit(2L)) === 1L),
-            "doc_id", "text", tmpTbl, tmpPath.toString)
-          s.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          publishFixture(tmpPath, dataDir)
-        }
-        val ddl = s.read.parquet(s"$dataDir/postings").schema.toDDL
-        s.sql(s"""CREATE TABLE $tbl ($ddl) USING parquet
-                  CLUSTERED BY (__gh__) SORTED BY (__gh__) INTO 8 BUCKETS
-                  LOCATION '$dataDir/postings'""")
-      }
-      (dataDir.toString, tbl)
+    Fixtures.bucketed(s, "substri", dir, "__gh__", sub = "postings") {
+      (tbl, path) =>
+        import org.apache.spark.sql.{functions => F}
+        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val half = F.pmod(F.col("doc_id"), F.lit(2L))
+        graft.llm.Dedup.substringIndexSave(docs.where(half === 0L),
+          "doc_id", "text", minMatchWords = 8, tbl, path)
+        graft.llm.Dedup.substringIndexAppend(docs.where(half === 1L),
+          "doc_id", "text", tbl, path)
     }
 
-  /** Memoized persisted PageRank artifact over the BASE synthetic edge
-    * family (j ∈ 1..2 of q_pagerank's j ≤ doc_id%5 fixture), ranks
-    * converged 5 rounds — so q_pagerank_incr's timed body is the
-    * incremental read path only: append-shaped delta + 2 warm rounds. */
-  private def pageRankIndexFixture(
-      s: SparkSession, dir: String): String =
-    dirFixture("pridx_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+  /** Persisted MinHash band index of the odd-id documents (the
+    * "already indexed" crawl), bucketed on `__bkey__`: the
+    * q_dedup_incremental family joins its even-id slice against it. */
+  private def oddMinhashIndex(
+      s: SparkSession, docs: DataFrame, dir: String): String =
+    Fixtures.index(s, "minhash8x2_odd", dir, "__bkey__") {
+      graft.llm.Dedup.minhashIndex(
+        docs.where(org.apache.spark.sql.functions.col("doc_id") % 2 === 1),
+        "doc_id", "text")
+    }
+
+  /** Persisted order-5 Kneser-Ney model fit on the doc_id % 4 == 0
+    * quarter: the train-once model the KN serve queries score and
+    * profile through. */
+  private def knModelQ4(docs: DataFrame, dir: String): String =
+    Fixtures.dir("kn5v2_q4", dir) { p =>
+      graft.llm.LangModel.knNgramFit(
+        docs.where(org.apache.spark.sql.functions.col("doc_id") % 4 === 0),
+        "text", p, order = 5)
+    }
+
+  /** Persisted PageRank artifact over the BASE synthetic edge family
+    * (j ∈ 1..2 of q_pagerank's j ≤ doc_id%5 fixture), ranks converged 5
+    * rounds — so q_pagerank_incr's timed body is the incremental read
+    * path only: append-shaped delta + 2 warm rounds. */
+  private def pageRankIndex(s: SparkSession, dir: String): String =
+    Fixtures.dir("pridx", dir) { tmp =>
       import org.apache.spark.sql.{functions => F}
       val df = s.read.parquet(s"$dir/documents.parquet")
       val n = df.count()
@@ -532,20 +280,20 @@ object SparkEntry {
         iterations = 5, tmp)
     }
 
-  /** Memoized z-ordered rewrite of the events table on (user_id, value)
+  /** Z-ordered rewrite of the events table on (user_id, value)
     * ([[graft.sources.Layout.writeZOrdered]], 16 files): q_zorder_skip's
     * timed body is the pruned 2-D box scan only — the layout job runs
     * once per data dir, the `OPTIMIZE ZORDER` amortization shape. */
-  private def zorderFixture(s: SparkSession, dir: String): String =
-    dirFixture("zord_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+  private def zorderedEvents(s: SparkSession, dir: String): String =
+    Fixtures.dir("zord", dir) { tmp =>
       graft.sources.Layout.writeZOrdered(
         s.read.parquet(s"$dir/events.parquet"), "user_id", "value", tmp, 16)
     }
 
   /** 3-column twin: events z-ordered on (user_id, value, epoch micros)
     * — the triple-predicate layout q_zorder3_skip serves from. */
-  private def zorder3Fixture(s: SparkSession, dir: String): String =
-    dirFixture("zord3_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+  private def zorderedEvents3(s: SparkSession, dir: String): String =
+    Fixtures.dir("zord3", dir) { tmp =>
       import org.apache.spark.sql.{functions => F}
       graft.sources.Layout.writeZOrdered3(
         s.read.parquet(s"$dir/events.parquet")
@@ -555,9 +303,9 @@ object SparkEntry {
 
   /** Metric rollup cache over events at (user, type, day) grain —
     * base slice SAVED, post-cutoff slice APPENDED, so every serve off
-    * this fixture exercises the delta-maintenance merge path. */
-  private def metricCacheFixture(s: SparkSession, dir: String): String =
-    dirFixture("mcache_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+    * this artifact exercises the delta-maintenance merge path. */
+  private def eventsMetricCache(s: SparkSession, dir: String): String =
+    Fixtures.dir("mcache", dir) { tmp =>
       import org.apache.spark.sql.{functions => F}
       val mc = graft.sources.MetricCache
       val ev = s.read.parquet(s"$dir/events.parquet")
@@ -569,28 +317,28 @@ object SparkEntry {
         mc.standardPartials("value"), tmp)
     }
 
-  /** File-stats manifest over [[zorderFixture]]'s 16 z-ordered files,
+  /** File-stats manifest over [[zorderedEvents]]'s 16 z-ordered files,
     * indexed on (user_id, value) — q_manifest_skip plans its box from
     * this instead of parquet footers. */
-  private def manifestFixture(s: SparkSession, dir: String): String =
-    dirFixture("zmanifest_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+  private def zorderManifest(s: SparkSession, dir: String): String =
+    Fixtures.dir("zmanifest", dir) { tmp =>
       graft.sources.StatsManifest.save(
-        s, zorderFixture(s, dir), Seq("user_id", "value"), tmp)
+        s, zorderedEvents(s, dir), Seq("user_id", "value"), tmp)
     }
 
-  /** Per-file Bloom index over [[zorderFixture]]'s files on event_id
+  /** Per-file Bloom index over [[zorderedEvents]]'s files on event_id
     * (bits=8192, k=2) — the point-lookup planner q_manifest_point uses. */
-  private def bloomFixture(s: SparkSession, dir: String): String =
-    dirFixture("zbloom_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+  private def zorderBloom(s: SparkSession, dir: String): String =
+    Fixtures.dir("zbloom", dir) { tmp =>
       graft.sources.StatsManifest.bloomSave(
-        s, zorderFixture(s, dir), "event_id", 8192, 2, tmp)
+        s, zorderedEvents(s, dir), "event_id", 8192, 2, tmp)
     }
 
   /** Occupied-bucket distinct sketch (linear counting) over events at
     * (event_type, day) grain, user_id keys, m=4096 — base saved,
-    * post-cutoff slice appended, like [[metricCacheFixture]]. */
-  private def distinctSketchFixture(s: SparkSession, dir: String): String =
-    dirFixture("mcsketch_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+    * post-cutoff slice appended, like [[eventsMetricCache]]. */
+  private def eventsDistinctSketch(s: SparkSession, dir: String): String =
+    Fixtures.dir("mcsketch", dir) { tmp =>
       import org.apache.spark.sql.{functions => F}
       val mc = graft.sources.MetricCache
       val ev = s.read.parquet(s"$dir/events.parquet")
@@ -601,17 +349,17 @@ object SparkEntry {
         Seq("event_type"), "ts", "user_id", 4096, tmp)
     }
 
-  /** [[metricCacheFixture]] with user 7 taken down (fresh versioned
+  /** [[eventsMetricCache]] with user 7 taken down (fresh versioned
     * rewrite — the right-to-be-forgotten path q_metric_cache_takedown
     * serves from). */
-  private def metricCacheTakedownFixture(s: SparkSession, dir: String): String =
-    dirFixture("mcachetd_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+  private def metricCacheTakedown(s: SparkSession, dir: String): String =
+    Fixtures.dir("mcachetd", dir) { tmp =>
       import org.apache.spark.sql.{functions => F}
       graft.sources.MetricCache.takedown(
-        s, metricCacheFixture(s, dir), F.col("user_id") === 7L, tmp)
+        s, eventsMetricCache(s, dir), F.col("user_id") === 7L, tmp)
     }
 
-  /** [[metricCacheFixture]]'s STREAMING-INGEST twin: the same events fed
+  /** [[eventsMetricCache]]'s STREAMING-INGEST twin: the same events fed
     * through a real MemoryStream in three micro-batches, the cache
     * maintained by [[graft.sources.MetricCache.streamAppend]]'s
     * per-batch partial appends. Serving it must be value-identical to
@@ -619,8 +367,8 @@ object SparkEntry {
     * q_metric_cache's oracle by reference on exactly that claim.
     * (MemoryStream is driver-fed by definition; this is fixture
     * plumbing, untimed, same as the RecallCheck streaming ladders.) */
-  private def streamMetricCacheFixture(s: SparkSession, dir: String): String =
-    dirFixture("mcache_stream_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { tmp =>
+  private def streamMetricCache(s: SparkSession, dir: String): String =
+    Fixtures.dir("mcache_stream", dir) { tmp =>
       import org.apache.spark.sql.{functions => F}
       val mc = graft.sources.MetricCache
       // ts rides as epoch micros (timestamp Row accessors differ with
@@ -649,6 +397,10 @@ object SparkEntry {
       } finally q.stop()
     }
 
+  /** Unicode fixture corpus for the tokenizer-path queries: decompose
+    * every 'e' into e + U+0301 (NFC must re-compose it) and swap 'a' for
+    * 'ä' (the `\p{L}` split must keep it). Built with Scala literals —
+    * Spark's chr() is ASCII-only; the DuckDB twin is [[UniDocsCte]]. */
   private def uniDocs(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.{functions => F}
@@ -1346,10 +1098,10 @@ object SparkEntry {
 
     // --- CSV file connector (round-trips region through CSV) ---
     "q_csv_source" -> ((s, dir) => {
-      val path = "/root/repo/target/fixtures/region_csv_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      s.read.parquet(s"$dir/region.parquet").coalesce(1)
-        .write.mode("overwrite").option("header", "true").csv(path)
+      val path = Fixtures.dir("region_csv", dir) { p =>
+        s.read.parquet(s"$dir/region.parquet").coalesce(1)
+          .write.option("header", "true").csv(p)
+      }
       Model.csv(path)
         .pick(col("r_regionkey"), col("r_name"))
         .sort(col("r_regionkey"))
@@ -1358,10 +1110,9 @@ object SparkEntry {
 
     // --- JSON file connector (round-trips region through JSON lines) ---
     "q_json_source" -> ((s, dir) => {
-      val path = "/root/repo/target/fixtures/region_json_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      s.read.parquet(s"$dir/region.parquet").coalesce(1)
-        .write.mode("overwrite").json(path)
+      val path = Fixtures.dir("region_json", dir) { p =>
+        s.read.parquet(s"$dir/region.parquet").coalesce(1).write.json(p)
+      }
       Model.json(path)
         .pick(cast(col("r_regionkey"), "int").named("r_regionkey"), col("r_name"))
         .sort(col("r_regionkey"))
@@ -1374,15 +1125,14 @@ object SparkEntry {
     //     read_excel). The 5-row collect is the fixture ENCODER, not the
     //     query: spreadsheets are driver-sized by construction. ---
     "q_xlsx_source" -> ((s, dir) => {
-      val fixDir = java.nio.file.Paths.get("/root/repo/target/fixtures")
-      java.nio.file.Files.createDirectories(fixDir)
-      val path = fixDir.resolve(
-        "region_" + dir.replaceAll("[^A-Za-z0-9]", "_") + ".xlsx").toString
-      val rows = s.read.parquet(s"$dir/region.parquet")
-        .select("r_regionkey", "r_name").na.drop()
-        .collect().sortBy(_.getInt(0))
-        .map(r => Seq[Any](r.getInt(0).toLong, r.getString(1))).toSeq
-      graft.sources.Xlsx.write(path, Seq("r_regionkey", "r_name"), rows)
+      val path = Fixtures.files("region_xlsx", dir, "region.xlsx") { p =>
+        val rows = s.read.parquet(s"$dir/region.parquet")
+          .select("r_regionkey", "r_name").na.drop()
+          .collect().sortBy(_.getInt(0))
+          .map(r => Seq[Any](r.getInt(0).toLong, r.getString(1))).toSeq
+        graft.sources.Xlsx.write(
+          s"$p/region.xlsx", Seq("r_regionkey", "r_name"), rows)
+      }
       Model.xlsx(path)
         .pick(cast(col("r_regionkey"), "int").named("r_regionkey"), col("r_name"))
         .sort(col("r_regionkey"))
@@ -1395,20 +1145,16 @@ object SparkEntry {
     //     and reads back through the Model API. Oracle replays on the
     //     parquet original: content-identical by construction. ---
     "q_warc_source" -> ((s, dir) => {
-      val fixDir = java.nio.file.Paths.get("/root/repo/target/fixtures")
-      java.nio.file.Files.createDirectories(fixDir)
-      val path = fixDir.resolve(
-        "docs_" + dir.replaceAll("[^A-Za-z0-9]", "_") + ".warc.gz").toString
-      // fixture is deterministic per data dir — memoize so the bench
+      // fixture is deterministic per data dir — memoized so the bench
       // times the READER, not driver-side fixture (re)construction
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
+      val path = Fixtures.files("docs_warc", dir, "docs.warc.gz") { p =>
         val rows = s.read.parquet(s"$dir/documents.parquet")
           .select("doc_id", "source", "text")
           .collect().sortBy(_.getLong(0)) // fixture-only driver collect
           .map(r => ("response",
             s"https://${r.getString(1)}.example/d/${r.getLong(0)}",
             "text/plain", r.getString(2).getBytes("UTF-8"))).toSeq
-        graft.sources.Warc.write(path, rows)
+        graft.sources.Warc.write(s"$p/docs.warc.gz", rows)
       }
       Model.warc(path)
         .pick(col("url"), col("content_length"))
@@ -1421,11 +1167,7 @@ object SparkEntry {
     //     registrable-domain rollup — crawl ingestion end to end through
     //     the Model API, no pre-flattened table anywhere ---
     "q_warc_pipeline" -> ((s, dir) => {
-      val fixDir = java.nio.file.Paths.get("/root/repo/target/fixtures")
-      java.nio.file.Files.createDirectories(fixDir)
-      val path = fixDir.resolve(
-        "pipe_" + dir.replaceAll("[^A-Za-z0-9]", "_") + ".warc.gz").toString
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
+      val path = Fixtures.files("pipe_warc", dir, "pipe.warc.gz") { p =>
         val rows = s.read.parquet(s"$dir/documents.parquet")
           .select("doc_id", "source", "text")
           .collect().sortBy(_.getLong(0)) // fixture-only driver collect
@@ -1440,7 +1182,7 @@ object SparkEntry {
             ("response", s"https://${r.getString(1)}.example/d/$id",
               "text/html", html.getBytes("UTF-8"))
           }.toSeq
-        graft.sources.Warc.write(path, rows)
+        graft.sources.Warc.write(s"$p/pipe.warc.gz", rows)
       }
       Model.warc(path)
         .native { df =>
@@ -1466,7 +1208,7 @@ object SparkEntry {
     //     gate + rollup on the parquet original (payloads are the
     //     documents' text verbatim). ---
     "q_wet_source" -> ((s, dir) =>
-      Model.wet(wetFixture(s, dir))
+      Model.wet(wetGlob(s, dir))
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           df.where(F.size(graft.llm.TextOps.tokens(F.col("text"))) >= 12)
@@ -1484,7 +1226,7 @@ object SparkEntry {
     //     (codegen'd from_json, no HTML fetch/parse), per-target-host
     //     in-link stats over the absolute targets ---
     "q_wat_source" -> ((s, dir) =>
-      Model.wat(watFixture(s, dir))
+      Model.wat(watGlob(s, dir))
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           df.where(F.col("dst_url").rlike("^https?://"))
@@ -1501,7 +1243,7 @@ object SparkEntry {
     //     never via HTML regex) — same edge set as q_pagerank_links by
     //     fixture construction, so the oracle is shared by reference ---
     "q_pagerank_wat" -> ((s, dir) =>
-      Model.wat(watFixture(s, dir))
+      Model.wat(watGlob(s, dir))
         .native { df =>
           val edges = graft.llm.Graph.linkEdges(df, "src_url", "dst_url")
           graft.llm.Graph.pageRankDomains(
@@ -1515,11 +1257,11 @@ object SparkEntry {
     //     write, not a driver-side encode). Oracle replays on the parquet
     //     original: content-identical by construction. ---
     "q_orc_source" -> ((s, dir) => {
-      val path = "/root/repo/target/fixtures/supplier_orc_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
-      s.read.parquet(s"$dir/supplier.parquet")
-        .select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
-        .write.mode("overwrite").orc(path)
+      val path = Fixtures.dir("supplier_orc", dir) { p =>
+        s.read.parquet(s"$dir/supplier.parquet")
+          .select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
+          .write.orc(p)
+      }
       Model.orc(path)
         .filter(col("s_acctbal") > lit(5000))
         .aggregate(
@@ -1949,7 +1691,7 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (_, tbl) = substrIndexFixture(s, dir)
+          val (_, tbl) = substrIndex(s, dir)
           val news = df
             .where(F.pmod(F.col("doc_id"), F.lit(9L)) === 3L)
             .select((F.col("doc_id") + 10000L).as("doc_id"), F.col("text"))
@@ -1973,7 +1715,7 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = substrIncrIndexFixture(s, dir)
+          val (idxDir, tbl) = substrIncrIndex(s, dir)
           val news = df
             .where(F.pmod(F.col("doc_id"), F.lit(9L)) === 3L)
             .select((F.col("doc_id") + 10000L).as("doc_id"), F.col("text"))
@@ -1994,7 +1736,7 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (_, tbl) = substrIndexFixture(s, dir)
+          val (_, tbl) = substrIndex(s, dir)
           val news = df
             .where(F.pmod(F.col("doc_id"), F.lit(9L)) === 3L)
             .select((F.col("doc_id") + 10000L).as("doc_id"), F.col("text"))
@@ -2227,12 +1969,7 @@ object SparkEntry {
           import org.apache.spark.sql.{functions => F}
           // memoized index fixture: production pays the index build at
           // ingest, so the timed body here is the serve join only
-          val tbl = indexFixture(s,
-            "minhash8x2_odd_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
-            graft.llm.Dedup.minhashIndex(
-              df.where(F.col("doc_id") % 2 === 1), "doc_id", "text")
-          }
+          val tbl = oddMinhashIndex(s, df, dir)
           graft.llm.Dedup.minhashJoinIndexed(
             df.where(F.col("doc_id") % 2 === 0), "doc_id", "text",
             df.sparkSession.table(tbl))
@@ -2249,12 +1986,7 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val tbl = indexFixture(s,
-            "minhash8x2_odd_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
-            graft.llm.Dedup.minhashIndex(
-              df.where(F.col("doc_id") % 2 === 1), "doc_id", "text")
-          }
+          val tbl = oddMinhashIndex(s, df, dir)
           graft.streaming.Streams.streamingMinhashNearDup(
             df.where(F.col("doc_id") % 2 === 0), "doc_id", "text",
             df.sparkSession.table(tbl))
@@ -2272,14 +2004,9 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val tbl = indexFixture(s,
-            "minhash8x2_odd_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
-            graft.llm.Dedup.minhashIndex(
-              df.where(F.col("doc_id") % 2 === 1), "doc_id", "text")
-          }
+          val tbl = oddMinhashIndex(s, df, dir)
           val dst = "minhash_takedown_" +
-            dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + runTag
+            Fixtures.dirKey(dir) + "_" + Fixtures.runTag
           graft.sources.ParquetIO.removeFromBucketed(
             s, tbl, "__id__",
             df.where(F.col("doc_id") % 2 === 1 && F.col("doc_id") % 3 === 0)
@@ -2304,17 +2031,12 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val tbl = indexFixture(s,
-            "minhash8x2_odd_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
-            graft.llm.Dedup.minhashIndex(
-              df.where(F.col("doc_id") % 2 === 1), "doc_id", "text")
-          }
+          val tbl = oddMinhashIndex(s, df, dir)
           // every maintenance pass writes GENUINELY NEW versions (the
           // per-call counter): re-using a version name would overwrite
           // files a cached relation may still reference — exactly the
           // stale-read the versioned-artifact contract exists to prevent
-          val tag = dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + runTag +
+          val tag = Fixtures.dirKey(dir) + "_" + Fixtures.runTag +
             "_v" + promoteSeq.incrementAndGet()
           val td = s"minhash_promo_td_$tag"
           graft.sources.ParquetIO.removeFromBucketed(
@@ -2326,7 +2048,7 @@ object SparkEntry {
           graft.sources.ParquetIO.compactBucketed(
             s, td, cp, s"/tmp/graft_promote/$cp", "__bkey__", 8)
           val serve = "minhash_promo_serve_" +
-            dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + runTag
+            Fixtures.dirKey(dir) + "_" + Fixtures.runTag
           val prev = graft.sources.ParquetIO.promoteVersion(s, serve, cp)
           graft.sources.ParquetIO.retireVersion(s, td)
           // GC the version this swap superseded (no in-flight readers
@@ -2490,7 +2212,7 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val idxDir = pageRankIndexFixture(s, dir)
+          val idxDir = pageRankIndex(s, dir)
           val n = df.count() // bounded model parameter (node-space modulus)
           val delta = df.select(F.col("doc_id"))
             .withColumn("j", F.explode(F.sequence(F.lit(3L), F.lit(4L))))
@@ -2535,7 +2257,7 @@ object SparkEntry {
     //     parquet original (content-identical by construction, the
     //     q_warc_pipeline pattern) + 3 unrolled integer rounds. ---
     "q_pagerank_links" -> ((s, dir) => {
-      val path = linksWarcFixture(s, dir)
+      val path = linksWarcGlob(s, dir)
       Model.warc(path)
         .native { df =>
           import org.apache.spark.sql.{functions => F}
@@ -2553,7 +2275,7 @@ object SparkEntry {
     //     memoized WARC fixture): hub/authority per registrable domain,
     //     the 2-D twin of q_pagerank_links ---
     "q_hits_links" -> ((s, dir) => {
-      val path = linksWarcFixture(s, dir)
+      val path = linksWarcGlob(s, dir)
       Model.warc(path)
         .native { df =>
           import org.apache.spark.sql.{functions => F}
@@ -2988,15 +2710,10 @@ object SparkEntry {
     "q_lm_kn_profile" -> ((s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // the profile is a property of the STORED model: read it from
           // the persisted level tables (vocabulary-bounded scans), never
           // by re-deriving the tables from the corpus
-          val modelDir = dirFixture(
-            "kn5v2_q4_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
-            graft.llm.LangModel.knNgramFit(
-              df.where(F.col("doc_id") % 4 === 0), "text", p, order = 5)
-          }
+          val modelDir = knModelQ4(df, dir)
           graft.llm.LangModel.knModelProfileFromDir(
             df.sparkSession, modelDir, order = 5)
         }
@@ -3012,11 +2729,7 @@ object SparkEntry {
           import org.apache.spark.sql.{functions => F}
           // gate through the PERSISTED model (production scores a crawl
           // with a pre-fit LM; values ≡ the inline trainer, spec-pinned)
-          val modelDir = dirFixture(
-            "kn5v2_q4_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
-            graft.llm.LangModel.knNgramFit(
-              df.where(F.col("doc_id") % 4 === 0), "text", p, order = 5)
-          }
+          val modelDir = knModelQ4(df, dir)
           val scored = graft.llm.LangModel.knNgramScoreWithModel(
             df, "doc_id", "text", modelDir, order = 5)
           scored
@@ -3055,8 +2768,7 @@ object SparkEntry {
           import org.apache.spark.sql.{functions => F}
           // pruned-model serving: the stored tables already dropped the
           // singleton tail; scoring reads them as-is
-          val modelDir = dirFixture(
-            "kn5p01111v2_q4_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
+          val modelDir = Fixtures.dir("kn5p01111v2_q4", dir) { p =>
             graft.llm.LangModel.knNgramFit(
               df.where(F.col("doc_id") % 4 === 0), "text", p, order = 5,
               prune = Seq(0L, 1L, 1L, 1L, 1L))
@@ -3077,11 +2789,7 @@ object SparkEntry {
           import org.apache.spark.sql.{functions => F}
           // memoized model fixture: the fit is ingest-time work; the
           // timed body is the score-many half of train-once/score-many
-          val modelDir = dirFixture(
-            "kn5v2_q4_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
-            graft.llm.LangModel.knNgramFit(
-              df.where(F.col("doc_id") % 4 === 0), "text", p, order = 5)
-          }
+          val modelDir = knModelQ4(df, dir)
           graft.llm.LangModel.knNgramScoreWithModel(
             df, "doc_id", "text", modelDir, order = 5)
         }
@@ -3103,12 +2811,11 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val baseDir = dirFixture(
-            "kn5v2_e8_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
+          val baseDir = Fixtures.dir("kn5v2_e8", dir) { p =>
             graft.llm.LangModel.knNgramFit(
               df.where(F.col("doc_id") % 8 === 0), "text", p, order = 5)
           }
-          val dstDir = s"/tmp/graft_kn_delta_$runTag"
+          val dstDir = s"/tmp/graft_kn_delta_${Fixtures.runTag}"
           graft.llm.LangModel.knNgramFitDelta(
             df.where(F.col("doc_id") % 8 === 4), "text", baseDir, dstDir,
             order = 5)
@@ -3747,7 +3454,7 @@ object SparkEntry {
           import org.apache.spark.sql.{functions => F}
           // memoized two-part fixture (centroids + bucketed postings):
           // ingest pays fit + assignment once; the timed body is serving
-          val (idxDir, tbl) = ivfIndexFixture(s, dir)
+          val (idxDir, tbl) = ivfIndex(s, dir)
           graft.llm.Embeddings.ivfTopKIndexed(
             df.where(F.col("vec_id") < 3), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), k = 5)
@@ -3765,7 +3472,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfIndexFixture(s, dir, attrs = Seq("label"))
+          val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           // a RANGE predicate (not arithmetic) so it reaches the parquet
           // reader as a pushed filter, not just a post-scan filter
           graft.llm.Embeddings.ivfTopKIndexed(
@@ -3786,7 +3493,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfIndexFixture(s, dir, attrs = Seq("label"))
+          val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           graft.llm.Embeddings.knnLabelIndexed(
             df.where(F.col("vec_id") < 20), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), "label", k = 5, nprobe = 2)
@@ -3802,7 +3509,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfIndexFixture(s, dir, attrs = Seq("label"))
+          val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           graft.llm.Embeddings.knnScoreIndexed(
             df.where(F.col("vec_id") < 20), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), "label", k = 5, nprobe = 2)
@@ -3820,7 +3527,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfIndexFixture(s, dir)
+          val (idxDir, tbl) = ivfIndex(s, dir)
           graft.llm.Embeddings.ivfNearDupJoinIndexed(
             df.where(F.col("vec_id") < 50)
               .select((F.col("vec_id") + 10000).as("vec_id"),
@@ -3839,7 +3546,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfIndexFixture(s, dir)
+          val (idxDir, tbl) = ivfIndex(s, dir)
           graft.streaming.Streams.streamingIvfNearDup(
             df.where(F.col("vec_id") < 50)
               .select((F.col("vec_id") + 10000).as("vec_id"),
@@ -3859,7 +3566,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfIndexFixture(s, dir, attrs = Seq("label"))
+          val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           graft.streaming.Streams.streamingKnnLabel(
             df.where(F.col("vec_id") < 20)
               .select((F.col("vec_id") + 10000).as("vec_id"),
@@ -3891,7 +3598,7 @@ object SparkEntry {
     "q_ivf_cell_profile" -> ((s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          val (_, tbl) = ivfIndexFixture(s, dir)
+          val (_, tbl) = ivfIndex(s, dir)
           graft.llm.Embeddings.ivfCellProfile(df.sparkSession.table(tbl))
         }
         .sort(col("cell"))
@@ -3905,7 +3612,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfIndexFixture(s, dir)
+          val (idxDir, tbl) = ivfIndex(s, dir)
           graft.streaming.Streams.streamingIvfTopK(
             df.where(F.col("vec_id") < 3), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), k = 5, nprobe = 2)
@@ -3962,8 +3669,7 @@ object SparkEntry {
           // serve through the PERSISTED rotation + codebooks (memoized
           // fixture — the fit is ingest-time work, like the other ANN
           // indexes); values ≡ the inline opqTopK fit+serve, spec-pinned
-          val modelDir = dirFixture(
-            "opqm2_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
+          val modelDir = Fixtures.dir("opqm2", dir) { p =>
             graft.llm.Embeddings.opqFitSave(df, "vec_id", "embedding",
               dim = 64, m = 2, initPred = F.col("vec_id") < 4, iters = 2,
               dir = p, minAbsRho = 0.0)
@@ -3997,7 +3703,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfSq8IndexFixture(s, dir)
+          val (idxDir, tbl) = ivfSq8Index(s, dir)
           graft.llm.Embeddings.ivfSq8TopKIndexed(
             df.where(F.col("vec_id") < 3), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), dim = 64, k = 5)
@@ -4013,7 +3719,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfSq8IndexFixture(s, dir)
+          val (idxDir, tbl) = ivfSq8Index(s, dir)
           graft.streaming.Streams.streamingIvfSq8TopK(
             df.where(F.col("vec_id") < 3), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), dim = 64, k = 5)
@@ -4031,7 +3737,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = sq8IndexFixture(s, dir)
+          val (idxDir, tbl) = sq8Index(s, dir)
           graft.llm.Embeddings.sq8TopKIndexed(
             df.where(F.col("vec_id") === 0), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), dim = 64, k = 10)
@@ -4083,7 +3789,7 @@ object SparkEntry {
       m(dir, "events")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val zdir = zorderFixture(s, dir)
+          val zdir = zorderedEvents(s, dir)
           df.sparkSession.read.parquet(zdir)
             .where(F.col("user_id").between(100L, 300L) &&
               F.col("value").between(10.0, 60.0))
@@ -4104,8 +3810,8 @@ object SparkEntry {
       m(dir, "events")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val zdir = zorderFixture(s, dir)
-          val mdir = manifestFixture(s, dir)
+          val zdir = zorderedEvents(s, dir)
+          val mdir = zorderManifest(s, dir)
           graft.sources.StatsManifest.prunedRead(df.sparkSession, zdir, mdir,
               Seq(("user_id", 100L, 300L), ("value", 10.0, 60.0)))
             .agg(F.count(F.lit(1)).as("n_rows"),
@@ -4124,8 +3830,8 @@ object SparkEntry {
       m(dir, "events")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val zdir = zorderFixture(s, dir)
-          val bdir = bloomFixture(s, dir)
+          val zdir = zorderedEvents(s, dir)
+          val bdir = zorderBloom(s, dir)
           graft.sources.StatsManifest.prunedReadEq(df.sparkSession, zdir,
               bdir, "event_id", 842L, 8192, 2)
             .agg(F.count(F.lit(1)).as("n_rows"),
@@ -4142,7 +3848,7 @@ object SparkEntry {
       m(dir, "events")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val zdir = zorder3Fixture(s, dir)
+          val zdir = zorderedEvents3(s, dir)
           df.sparkSession.read.parquet(zdir)
             .where(F.col("user_id").between(100L, 300L) &&
               F.col("value").between(10.0, 60.0) &&
@@ -4166,7 +3872,7 @@ object SparkEntry {
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
-          val cdir = metricCacheFixture(s, dir)
+          val cdir = eventsMetricCache(s, dir)
           mc.read(df.sparkSession, cdir)
             .where(F.col(mc.DayCol) >= F.lit("2024-01-15").cast("date") &&
               F.col(mc.DayCol) < F.lit("2024-01-25").cast("date") &&
@@ -4184,7 +3890,7 @@ object SparkEntry {
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
-          val cdir = streamMetricCacheFixture(s, dir)
+          val cdir = streamMetricCache(s, dir)
           mc.read(df.sparkSession, cdir)
             .where(F.col(mc.DayCol) >= F.lit("2024-01-15").cast("date") &&
               F.col(mc.DayCol) < F.lit("2024-01-25").cast("date") &&
@@ -4202,7 +3908,7 @@ object SparkEntry {
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
-          val cdir = metricCacheFixture(s, dir)
+          val cdir = eventsMetricCache(s, dir)
           mc.serveDenseDaily(
             mc.read(df.sparkSession, cdir).where(F.col("user_id") === 7L),
             Seq("event_type"), "2024-01-05", "2024-01-28")
@@ -4217,7 +3923,7 @@ object SparkEntry {
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
-          val cdir = metricCacheTakedownFixture(s, dir)
+          val cdir = metricCacheTakedown(s, dir)
           mc.read(df.sparkSession, cdir)
             .where(F.col("user_id") <= 74L)
             .groupBy(F.col("event_type"))
@@ -4232,7 +3938,7 @@ object SparkEntry {
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
-          val cdir = metricCacheFixture(s, dir)
+          val cdir = eventsMetricCache(s, dir)
           mc.read(df.sparkSession, cdir)
             .where(F.col("user_id") <= 74L)
             .groupBy(F.col("event_type"))
@@ -4251,7 +3957,7 @@ object SparkEntry {
         .native { df =>
           import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
-          val sdir = distinctSketchFixture(s, dir)
+          val sdir = eventsDistinctSketch(s, dir)
           mc.distinctEstimate(df.sparkSession, sdir, Seq("event_type"), 4096)
             .select(F.col("event_type"), F.col("occupied"),
               F.col("est_distinct").as("est_users"))
@@ -4266,7 +3972,7 @@ object SparkEntry {
       m(dir, "events")
         .native { df =>
           val mc = graft.sources.MetricCache
-          val sdir = distinctSketchFixture(s, dir)
+          val sdir = eventsDistinctSketch(s, dir)
           mc.distinctOverlapEstimate(df.sparkSession, sdir, "event_type",
             "click", "purchase", 4096)
         }
@@ -4300,7 +4006,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfPqIndexFixture(s, dir)
+          val (idxDir, tbl) = ivfPqIndex(s, dir)
           graft.llm.Embeddings.ivfPqTopKIndexed(
             df.where(F.col("vec_id") === 0), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), dim = 64, m = 2, k = 10,
@@ -4321,7 +4027,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfPqResidualIndexFixture(s, dir)
+          val (idxDir, tbl) = ivfPqResidualIndex(s, dir)
           graft.llm.Embeddings.ivfPqTopKIndexed(
             df.where(F.col("vec_id") < 2), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), dim = 64, m = 2, k = 10,
@@ -4338,7 +4044,7 @@ object SparkEntry {
       m(dir, "embeddings")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val (idxDir, tbl) = ivfPqResidualIndexFixture(s, dir)
+          val (idxDir, tbl) = ivfPqResidualIndex(s, dir)
           graft.llm.Embeddings.ivfPqTopKIndexed(
             df.where(F.col("vec_id") < 2), "vec_id", "embedding",
             idxDir, df.sparkSession.table(tbl), dim = 64, m = 2, k = 10,
@@ -4842,8 +4548,7 @@ object SparkEntry {
           // body is the op itself (scan + decode + hash + capped join).
           // The repartition before the encode buys full parallelism for
           // the one-time build AND a multi-file scan afterwards.
-          val payloadDir = dirFixture(
-            "imgcorpus_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
+          val payloadDir = Fixtures.dir("imgcorpus", dir) { p =>
             val ids = df.select(F.col("doc_id")).repartition(F.col("doc_id"))
             ids.mapPartitions { rows =>
               rows.map { r =>
@@ -4923,9 +4628,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "dhash_cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "dhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.dhashIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               maxPerBucketSide = 2)
@@ -4959,9 +4662,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "dhash_cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "dhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.dhashIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               maxPerBucketSide = 2)
@@ -5023,8 +4724,7 @@ object SparkEntry {
           // rationale): GIF-encoding the corpus is one-time fixture
           // construction; the timed body is scan + frame decode + hash +
           // the capped per-frame join
-          val payloadDir = dirFixture(
-            "vidcorpus_" + dir.replaceAll("[^A-Za-z0-9]", "_")) { p =>
+          val payloadDir = Fixtures.dir("vidcorpus", dir) { p =>
             val ids = df.select(F.col("doc_id")).repartition(F.col("doc_id"))
             ids.mapPartitions { rows =>
               rows.map { r =>
@@ -5109,9 +4809,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "vhash_e2cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "vhash_e2cap2", dir, "__bkey__") {
             graft.llm.Multimodal.videoDhashIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               every = 2, maxPerBucketSide = 2)
@@ -5149,9 +4847,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "vhash_e2cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "vhash_e2cap2", dir, "__bkey__") {
             graft.llm.Multimodal.videoDhashIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               every = 2, maxPerBucketSide = 2)
@@ -5266,9 +4962,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "isphash_cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "isphash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.imageSpectralIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               maxPerBucketSide = 2)
@@ -5311,9 +5005,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "isphash_cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "isphash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.imageSpectralIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               maxPerBucketSide = 2)
@@ -5445,9 +5137,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "adhash_cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "adhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.audioDhashIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               maxPerBucketSide = 2)
@@ -5484,9 +5174,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "sphash_cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "sphash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.audioSpectralIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               maxPerBucketSide = 2)
@@ -5520,9 +5208,7 @@ object SparkEntry {
             }
           }(Encoders.row(ids.schema.add("payload",
             org.apache.spark.sql.types.BinaryType)))
-          val tbl = indexFixture(s,
-            "adhash_cap2_" + dir.replaceAll("[^A-Za-z0-9]", "_"),
-            "__bkey__", 8) {
+          val tbl = Fixtures.index(s, "adhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.audioDhashIndex(
               withPayload.where(F.col("doc_id") >= 8), "doc_id", "payload",
               maxPerBucketSide = 2)
@@ -5692,7 +5378,7 @@ object SparkEntry {
     "q_unigram_segment_served" -> ((s, dir) =>
       m(dir, "documents")
         .native { df =>
-          val modelDir = s"/tmp/graft_unigram_model_$runTag"
+          val modelDir = s"/tmp/graft_unigram_model_${Fixtures.runTag}"
           graft.llm.Unigram.fitVocab(df, "text", vocabSize = 120,
               maxPieceLen = 4)
             .select(org.apache.spark.sql.functions.col("piece"),
@@ -5854,7 +5540,7 @@ object SparkEntry {
       m(dir, "documents")
         .native { df =>
           import org.apache.spark.sql.{functions => F}
-          val dirM = s"/tmp/graft_bpe_rules_$runTag"
+          val dirM = s"/tmp/graft_bpe_rules_${Fixtures.runTag}"
           graft.llm.TextOps.bpeFitBytesSave(
             df.where(F.col("doc_id") % 2 === 0), "text", merges = 4, dirM)
           graft.llm.TextOps.bpeSubwordCountsWithRules(

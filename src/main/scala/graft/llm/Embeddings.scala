@@ -2027,10 +2027,13 @@ object Embeddings {
   /** Serve OPQ top-k through a persisted [[opqFitSave]] model: read the
     * rotation and codebooks, rotate the corpus (a per-row projection),
     * and run the standard single-pass ADC — no fit stage in the serve.
-    * The 1-row rotation is RE-AGGREGATED on read so the broadcast build
-    * side is provably single-row in the plan (a bare file scan is not —
-    * the whole-suite BNLJ lint rejects it); max over one row IS the
-    * row. Values are identical to [[opqTopK]] (the fit is the same
+    * Both model frames are parameter-sized (1 rotation row, m·k codebook
+    * rows) and are PINNED driver-side on read, exactly as [[opqTopK]]'s
+    * fit pins them: the broadcast build sides are LocalRelations
+    * (provably single-row for the whole-suite BNLJ lint, where a bare
+    * file scan is not), and the serve plans the inline fit's 3
+    * exchanges, not the 6 a re-aggregate of the rotation and a codebook
+    * scan add. Values are identical to [[opqTopK]] (the fit is the same
     * computation, run once at save time). */
   def opqTopKWithModel(
       emb: DataFrame,
@@ -2045,11 +2048,13 @@ object Embeddings {
   ): DataFrame = {
     val spark = emb.sparkSession
     graft.GraftExtensions.install(spark)
-    val rot = spark.read.parquet(s"$dir/rot")
-      .agg(max(col("__rc__")).as("__rc__"), max(col("__rs__")).as("__rs__"))
-    val rotated = opqRotateFrame(emb, idCol, vecCol, rot, dim)
-    val cb = spark.read.parquet(s"$dir/cb")
-    pqTopK(rotated, idCol, vecCol, cb, dim, m, queryId, k, scope)
+    import scala.jdk.CollectionConverters._
+    def pinned(part: String): DataFrame = {
+      val stored = spark.read.parquet(s"$dir/$part")
+      spark.createDataFrame(stored.collect().toSeq.asJava, stored.schema)
+    }
+    val rotated = opqRotateFrame(emb, idCol, vecCol, pinned("rot"), dim)
+    pqTopK(rotated, idCol, vecCol, pinned("cb"), dim, m, queryId, k, scope)
   }
 
   // --------------------------------------------------------------------

@@ -94,6 +94,25 @@ object ParquetIO {
       .saveAsTable(table)
   }
 
+  /** Register files a [[writeBucketed]] call left at `path` as the
+    * external bucketed table `table` (same key, same bucket count):
+    * catalog metadata is per-session, the on-disk hash-on-key layout is
+    * not, and registration restores the metadata, so a join on `key`
+    * still plans zero exchanges on this side. Dropping the table later
+    * leaves the files in place. */
+  def registerBucketed(
+      spark: SparkSession,
+      table: String,
+      path: String,
+      key: String,
+      buckets: Int,
+  ): Unit = {
+    val ddl = spark.read.parquet(path).schema.toDDL
+    spark.sql(s"""CREATE TABLE $table ($ddl) USING parquet
+                  CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
+                  LOCATION '$path'""")
+  }
+
   /** APPEND rows into an existing [[writeBucketed]] table with the same
     * bucket spec — the maintenance write of an incremental index loop:
     * the hash-on-key CLUSTERING the downstream join rides is preserved

@@ -326,16 +326,18 @@ class CoreOpsSpec extends GraftSuite {
     val s = spark
     import s.implicits._
     val df = Seq((1, "x"), (2, "y")).toDF("k", "v")
-    val base = "/root/repo/target/fixtures/spec_roundtrip"
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$base.csvdir")
-    df.coalesce(1).write.mode("overwrite").json(s"$base.jsondir")
-    val fromCsv = Model.csv(s"$base.csvdir").sort(col("k")).run(spark).collect()
-    assert(fromCsv.map(r => (r.getInt(0), r.getString(1))).toSeq ===
-      Seq((1, "x"), (2, "y")))
-    val fromJson = Model.json(s"$base.jsondir")
-      .pick(col("k"), col("v")).sort(col("k")).run(spark).collect()
-    assert(fromJson.map(r => (r.getLong(0), r.getString(1))).toSeq ===
-      Seq((1L, "x"), (2L, "y")))
+    val base = java.nio.file.Files.createTempDirectory("spec_roundtrip")
+    try {
+      df.coalesce(1).write.option("header", "true").csv(s"$base/csvdir")
+      df.coalesce(1).write.json(s"$base/jsondir")
+      val fromCsv = Model.csv(s"$base/csvdir").sort(col("k")).run(spark).collect()
+      assert(fromCsv.map(r => (r.getInt(0), r.getString(1))).toSeq ===
+        Seq((1, "x"), (2, "y")))
+      val fromJson = Model.json(s"$base/jsondir")
+        .pick(col("k"), col("v")).sort(col("k")).run(spark).collect()
+      assert(fromJson.map(r => (r.getLong(0), r.getString(1))).toSeq ===
+        Seq((1L, "x"), (2L, "y")))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 
   test("nested join namespaces resolve without pre-materialization") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract smoke: entry() answers on sf0.001 (the t1 gate). */
 class EntrySpec extends GraftSuite {
   test("entry returns rows on sf0.001") {
@@ -9,6 +11,24 @@ class EntrySpec extends GraftSuite {
 
   test("every query has an oracle and every oracle has a query") {
     assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+  }
+
+  test("source lint: no file under src/ names the checkout's own path in a literal") {
+    // A literal path into the checkout (a fixture root, say) makes every
+    // copy of the repo read and write the original's files; derive such
+    // paths from the code location instead (Fixtures.root). Tests fork
+    // with the checkout as cwd.
+    val checkout = new java.io.File(".").getCanonicalPath
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    val offenders =
+      try files.iterator.asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .contains("\"" + checkout))
+        .map(_.toString).toList.sorted
+      finally files.close()
+    assert(offenders.isEmpty,
+      s"files with a \"$checkout... literal: ${offenders.mkString(", ")}")
   }
 
   test("plan lint: no cartesian product in any query's physical plan") {
