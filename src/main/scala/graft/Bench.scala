@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is fully materialized through a `noop`
@@ -65,37 +66,128 @@ object Bench {
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpu_s":$totalCpu%.3f,"n_reruns":$nRerun,"n_queries":$nQueries,"host_drift":$drift%.2f,"queries":$qs,"sf":$sfNum}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver parses the single JSON line out of the
-    // combined sbt capture, and late-relayed WARN lines (block-manager
-    // re-adds etc.) can interleave after it — silence them at the source
-    spark.sparkContext.setLogLevel("ERROR")
+  /** A sweep's outcome: per query (wall, cpu, nRuns, rawWallIfEscalated),
+    * the queries that threw, the canary walls and the host drift. */
+  final case class Sweep(
+      results: Seq[(String, (Double, Double, Int, Option[Double]))],
+      failed: Seq[String],
+      canaryWalls: Seq[Double],
+      drift: Double) {
+    def total: Double = results.map(_._2._1).sum
+    def totalCpu: Double = results.map(_._2._2).sum
+  }
 
-    /** One timed run: (wall seconds, process-CPU seconds). (-1, -1) on
-      * failure. CPU is the whole-JVM delta — all 32 local executor threads
-      * plus the driver — so cpu/wall ≈ effective parallelism when healthy
-      * and collapses toward 0 when the host stalls under the JVM. */
+  /** Times `queries` on `sfDir`, with stall protection against the
+    * recorded per-query `baseline` walls. */
+  final class Runner(
+      spark: SparkSession,
+      sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      baseline: Map[String, Double]) {
+    private val failedNames = scala.collection.mutable.LinkedHashSet[String]()
+    def failed: Seq[String] = failedNames.toSeq
+
+    /** One timed run: (wall seconds, process-CPU seconds). A query that
+      * throws is recorded in [[failed]] and still charged the time it ran,
+      * so a crash can never make a sweep look faster. CPU is the whole-JVM
+      * delta — all local executor threads plus the driver — so cpu/wall ≈
+      * effective parallelism when healthy and collapses toward 0 when the
+      * host stalls under the JVM. */
     def exec(name: String): (Double, Double) = {
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
+      try queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return (-1.0, -1.0)
+        failedNames += name
       }
       finally llm.CacheScope.global.release() // each query re-caches its own
                                               // frames inside its timed run
       ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
     }
+
+    /** A first measurement is suspect when the JVM was idle for most of
+      * the wall it was charged (host stall signature: even a fully skewed
+      * single-thread query keeps cpu ≈ wall), or simply extreme — the
+      * slowest legitimate steady-state query is ~5 s at sf0.1, so
+      * anything above gets a median-of-3 (this also smooths first-run
+      * JIT/GC churn on the heavy tail) — or 1.5× over its recorded
+      * steady-state baseline (with a 0.5 s floor so micro-query jitter
+      * does not triple-run the whole sweep). */
+    private def suspect(name: String, wall: Double, cpu: Double): Boolean =
+      (wall > 1.0 && cpu < 0.5 * wall) || wall > 5.0 ||
+        baseline.get(name).exists(b => wall > 1.5 * b && wall > 0.5)
+
+    /** Measure with stall protection: re-run suspect timings (two extra
+      * runs) and take the median wall with its paired cpu. Returns
+      * (wall, cpu, nRuns). A failed query keeps its first timing. */
+    private def measure(name: String): (Double, Double, Int) = {
+      val first = exec(name)
+      if (failedNames(name) || !suspect(name, first._1, first._2))
+        (first._1, first._2, 1)
+      else {
+        val runs = first +: Seq.fill(2)(exec(name))
+        if (failedNames(name)) (first._1, first._2, 3)
+        else { val (w, c) = runs.sortBy(_._1)(Ordering.Double.TotalOrdering)
+                 .apply(1); (w, c, 3) }
+      }
+    }
+
+    /** The full single-pass sweep over every query, sorted by name.
+      *
+      * CANARY drift normalization (r15 verdict #1): the driver sweep can
+      * ride a sustained host-stall window that survives the inline
+      * median-of-3 (r15 recorded 26×/22× rows that 3-pass steady-state
+      * disproved). A fixed trivial query — code-stable across rounds, one
+      * scan + filter — is re-measured every ~20 queries; its median ratio
+      * vs its OWN recorded baseline estimates how slow the HOST was during
+      * this sweep (the canary's code didn't change — the host did). Ratios
+      * are reported raw AND drift-normalized, and any row whose NORMALIZED
+      * ratio still exceeds 1.5× is escalated to a fresh min-of-3 remeasure
+      * at sweep end (min, not median: this path exists to discount stall
+      * inflation, never to amplify it). */
+    def sweep(canary: String): Sweep = {
+      val canaryWalls = scala.collection.mutable.ArrayBuffer[Double]()
+      val results0 = queries.keys.toSeq.sorted.zipWithIndex.map {
+        case (n, i) =>
+          if (i % 20 == 0 && n != canary && queries.contains(canary))
+            canaryWalls += exec(canary)._1
+          n -> measure(n)
+      }
+      // clamped at 1.0: a healthy (or faster-than-baseline) host must never
+      // normalize a real regression away
+      val drift = baseline.get(canary).filter(_ => canaryWalls.nonEmpty)
+        .map { b =>
+          val s = canaryWalls.sorted
+          math.max(1.0, s((s.size - 1) / 2) / b)
+        }.getOrElse(1.0)
+      // (wall, cpu, nRuns, rawWallIfEscalated): when the sweep-end min-of-3
+      // REPLACES a churned wall, the original survives as `wall_raw` in the
+      // artifacts so the adjudication is visible, not silent
+      val results = results0.map { case (n, (w, c, r)) =>
+        val suspectNorm = !failedNames(n) &&
+          baseline.get(n).exists(b => w / b / drift > 1.5 && w > 0.5)
+        if (!suspectNorm) n -> (w, c, r, None: Option[Double])
+        else {
+          val runs = Seq.fill(3)(exec(n))
+          val best = runs.minBy(_._1)(Ordering.Double.TotalOrdering)
+          if (!failedNames(n) && best._1 < w)
+            n -> (best._1, best._2, r + runs.size, Some(w))
+          else n -> (w, c, r + runs.size, None: Option[Double])
+        }
+      }
+      Sweep(results, failed, canaryWalls.toSeq, drift)
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // log level ERROR, not WARN: the driver parses the single JSON line
+    // out of the combined sbt capture, and late-relayed WARN lines
+    // (block-manager re-adds etc.) can interleave after it
+    val spark = SessionTuning.session(cpus)
 
     // Per-query steady-state WALL RATCHET (sf0.1 sweeps): wall > 1.5× the
     // recorded baseline is suspect even when cpu tracks wall — busy churn
@@ -112,35 +204,8 @@ object Bench {
         "\"([^\"]+)\":\\s*([0-9.]+)".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } else Map.empty
-
-    /** A first measurement is suspect when the JVM was idle for most of
-      * the wall it was charged (host stall signature: even a fully skewed
-      * single-thread query keeps cpu ≈ wall), or simply extreme — the
-      * slowest legitimate steady-state query is ~5 s at sf0.1, so
-      * anything above gets a median-of-3 (this also smooths first-run
-      * JIT/GC churn on the heavy tail) — or 1.5× over its recorded
-      * steady-state baseline (with a 0.5 s floor so micro-query jitter
-      * does not triple-run the whole sweep). */
-    def suspect(name: String, wall: Double, cpu: Double): Boolean =
-      wall >= 0 && ((wall > 1.0 && cpu < 0.5 * wall) || wall > 5.0 ||
-        baseline.get(name).exists(b => wall > 1.5 * b && wall > 0.5))
-
-    /** Measure with stall protection: re-run suspect timings (two extra
-      * runs) and take the median wall with its paired cpu. Returns
-      * (wall, cpu, nRuns). */
-    def measure(name: String): (Double, Double, Int) = {
-      val first = exec(name)
-      if (!suspect(name, first._1, first._2)) (first._1, first._2, 1)
-      else {
-        val runs = (first +: Seq.fill(2)(exec(name))).filter(_._1 >= 0)
-        if (runs.isEmpty) (-1.0, -1.0, 3)
-        // lower-middle on an even count: if a rerun failed, report the
-        // BETTER of the two survivors — this path exists to discount
-        // host-stall inflation, never to amplify it
-        else { val (w, c) = runs.sortBy(_._1)(Ordering.Double.TotalOrdering)
-                 .apply((runs.size - 1) / 2); (w, c, 3) }
-      }
-    }
+    val runner = new Runner(spark, sfDir, SparkEntry.queries, baseline)
+    import runner.exec
 
     // Warm-up, untimed: one query per codegen'd NATIVE family, so the
     // heavy tail stops paying JIT compilation inside its timed run. The
@@ -182,54 +247,14 @@ object Bench {
       return
     }
 
-    // CANARY drift normalization (r15 verdict #1): the driver sweep can
-    // ride a sustained host-stall window that survives the inline
-    // median-of-3 (r15 recorded 26×/22× rows that 3-pass steady-state
-    // disproved). A fixed trivial query — code-stable across rounds, one
-    // scan + filter — is re-measured every ~20 queries; its median ratio
-    // vs its OWN recorded baseline estimates how slow the HOST was during
-    // this sweep (the canary's code didn't change — the host did). Ratios
-    // are reported raw AND drift-normalized, and any row whose NORMALIZED
-    // ratio still exceeds 1.5× is escalated to a fresh min-of-3 remeasure
-    // at sweep end (min, not median: this path exists to discount stall
-    // inflation, never to amplify it).
     val canary = "q_contains_any"
-    val canaryWalls = scala.collection.mutable.ArrayBuffer[Double]()
-    val results0 = SparkEntry.queries.keys.toSeq.sorted.zipWithIndex.map {
-      case (n, i) =>
-        if (i % 20 == 0 && n != canary && SparkEntry.queries.contains(canary)) {
-          val w = exec(canary)._1
-          if (w >= 0) canaryWalls += w
-        }
-        n -> measure(n)
-    }
-    // clamped at 1.0: a healthy (or faster-than-baseline) host must never
-    // normalize a real regression away
-    val drift = baseline.get(canary).filter(_ => canaryWalls.nonEmpty)
-      .map { b =>
-        val s = canaryWalls.sorted
-        math.max(1.0, s((s.size - 1) / 2) / b)
-      }.getOrElse(1.0)
-    // (wall, cpu, nRuns, rawWallIfEscalated): when the sweep-end min-of-3
-    // REPLACES a churned wall, the original survives as `wall_raw` in the
-    // artifacts so the adjudication is visible, not silent
-    val results = results0.map { case (n, (w, c, r)) =>
-      val suspectNorm =
-        w >= 0 && baseline.get(n).exists(b => w / b / drift > 1.5 && w > 0.5)
-      if (!suspectNorm) n -> (w, c, r, None: Option[Double])
-      else {
-        val runs = Seq.fill(3)(exec(n)).filter(_._1 >= 0)
-        if (runs.isEmpty) n -> (w, c, r, None: Option[Double])
-        else {
-          val best = runs.minBy(_._1)(Ordering.Double.TotalOrdering)
-          if (best._1 < w) n -> (best._1, best._2, r + runs.size, Some(w))
-          else n -> (w, c, r + runs.size, None: Option[Double])
-        }
-      }
-    }
+    val sweep = runner.sweep(canary)
+    // warm-up failures count too: every query that threw fails the sweep
+    val failed = runner.failed
+    val Sweep(results, _, canaryWalls, drift) = sweep
     val byName = results.toMap
-    val total = results.map(_._2._1).filter(_ >= 0).sum
-    val totalCpu = results.map(_._2._2).filter(_ >= 0).sum
+    val total = sweep.total
+    val totalCpu = sweep.totalCpu
     val nRerun = results.count(_._2._3 > 1)
     val compact = renderCompact(
       total, totalCpu, nRerun, results.size, drift,
@@ -241,7 +266,7 @@ object Bench {
     // start out of the window (rounds 1-3 and 5 all came back
     // `parsed: null`). The file carries the compact headline line
     // (longitudinal grading), the per-query wall map, the per-query
-    // process-CPU map, and which queries needed median-of-3.
+    // process-CPU map, which queries needed median-of-3, and which threw.
     val detail = results
       .map { case (k, v) => f""""$k":${v._1}%.3f""" }.mkString("{", ",", "}")
     val cpuDetail = results
@@ -252,7 +277,7 @@ object Bench {
     // row: a ratio > 1.5 that SURVIVED its median-of-3 is a real
     // regression (or a baseline to re-record), not measurement churn
     val ratios = results.collect {
-      case (k, v) if v._1 >= 0 && baseline.contains(k) =>
+      case (k, v) if !failed.contains(k) && baseline.contains(k) =>
         f""""$k":${v._1 / baseline(k)}%.2f"""
     }.mkString("{", ",", "}")
     // drift-normalized ratios are the adjudication surface: raw ratio /
@@ -260,7 +285,7 @@ object Bench {
     // median-of-3 and the sweep-end min-of-3 — that is a real regression
     // (or a baseline to row-level re-record), not host churn.
     val normRatios = results.collect {
-      case (k, v) if v._1 >= 0 && baseline.contains(k) =>
+      case (k, v) if !failed.contains(k) && baseline.contains(k) =>
         f""""$k":${v._1 / baseline(k) / drift}%.2f"""
     }.mkString("{", ",", "}")
     val canaryJson = canaryWalls
@@ -274,9 +299,10 @@ object Bench {
     val rawWalls = results.collect {
       case (k, (_, _, _, Some(raw))) => f""""$k":$raw%.3f"""
     }.mkString("{", ",", "}")
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      s"""{"compact":$compact,"detail":$detail,"cpu":$cpuDetail,"reruns":$reruns,"wall_raw":$rawWalls,"baseline_ratio":$ratios,"norm_ratio":$normRatios,"host_drift":$drift,"canary":{"name":"$canary","walls":$canaryJson,"ratios":$canaryRatioJson}}"""
+      s"""{"compact":$compact,"failed":$failedJson,"detail":$detail,"cpu":$cpuDetail,"reruns":$reruns,"wall_raw":$rawWalls,"baseline_ratio":$ratios,"norm_ratio":$normRatios,"host_drift":$drift,"canary":{"name":"$canary","walls":$canaryJson,"ratios":$canaryRatioJson}}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // seed/refresh the ratchet: record this sweep's stall-protected walls
     // as the new baseline when none is checked in, and APPEND rows for
@@ -286,13 +312,14 @@ object Bench {
     // file to re-record after intentional perf changes)
     if (sfDir.endsWith("sf0.1") &&
         (baseline.isEmpty || results.exists { case (k, v) =>
-          v._1 >= 0 && !baseline.contains(k) })) {
+          !failed.contains(k) && !baseline.contains(k) })) {
       // new rows are recorded drift-DIVIDED: the canary measured how slow
       // the host ran during this sweep, so wall/drift is the steady-state
       // estimate — recording the raw wall would bake this sweep's host
       // churn into the ratchet a healthy future sweep then "beats"
       val merged = baseline ++ results.collect {
-        case (k, v) if v._1 >= 0 && !baseline.contains(k) => k -> v._1 / drift
+        case (k, v) if !failed.contains(k) && !baseline.contains(k) =>
+          k -> v._1 / drift
       }
       java.nio.file.Files.write(baselinePath,
         merged.toSeq.sortBy(_._1)
@@ -303,10 +330,14 @@ object Bench {
     // give sbt's async stderr relay (any residual ERROR lines) time to
     // drain so nothing interleaves after the JSON line in the combined
     // capture; raisable without recompiling via SPARK_GRAFT_DRAIN_MS
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] failed queries: ${failed.mkString(" ")}")
     System.err.flush()
     Thread.sleep(sys.env.getOrElse("SPARK_GRAFT_DRAIN_MS", "3000").toLong)
     println(compact)
     System.out.flush()
     spark.stop()
+    // the compact line stays parseable; the exit status carries the failure
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

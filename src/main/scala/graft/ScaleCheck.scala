@@ -50,13 +50,7 @@ object ScaleCheck {
     val workDir = args.lift(1).getOrElse("/tmp/graft_scale")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionTuning.session(cpus)
     val scaledDir = s"$workDir/sf_x$factor"
     generate(spark, srcDir, scaledDir, factor)
 

@@ -1,7 +1,7 @@
 package graft
 
-/** Session-level I/O tuning shared by the driver mains (Bench / Verify /
-  * Explain / ScaleCheck / RecallCheck).
+/** The one local SparkSession factory ([[session]]) every main and the
+  * test suites run on, and the I/O tuning it applies.
   *
   * Shuffle block files are the measured bottleneck of the small-shuffle
   * queries on this host (guide §2.1: "Local disk bandwidth for shuffle
@@ -53,4 +53,17 @@ object SessionTuning {
         b.config("spark.local.dir", d)
       case None => b
     }
+
+  /** The local session: `local[cpus]`, shuffle partitions = cpus, UTC,
+    * UI off, the fast local dir and log level ERROR. */
+  def session(cpus: String): org.apache.spark.sql.SparkSession = {
+    val s = apply(org.apache.spark.sql.SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
 }

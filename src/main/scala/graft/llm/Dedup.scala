@@ -194,7 +194,7 @@ object Dedup {
     // pipeline, applied per (band, hash) key via one windowed count under
     // the same partitioning the join needs anyway. Driver-gated queries
     // that set a cap must use the equally-parameterized oracle
-    // (SparkEntry.minhashPairsCtes(maxBucketSize)) — it replays this exact
+    // (ops.Shared.minhashPairsCtes(maxBucketSize)) — it replays this exact
     // windowed count, so query and oracle can't desynchronize.
     val banded =
       if (maxBucketSize <= 0) bandedAll

@@ -2830,7 +2830,7 @@ object Embeddings {
     * than the cap — a dense mode the centroid count can't split — is
     * excluded from pair generation entirely, so its members are KEPT, not
     * compared O(cell²). A documented recall tradeoff, identical on the
-    * oracle side (SparkEntry parameterizes both from one constant). */
+    * oracle side (ops.AnnOps parameterizes both from one constant). */
   /** Semantic (embedding-space) benchmark decontamination — the
     * similarity-space twin of the n-gram `Dedup.contamination` detector:
     * flag corpus vectors whose MAX cosine against the eval suite's

@@ -1990,6 +1990,79 @@ object Multimodal {
     encodeWav(8000, 1, samples, junkBytes = 5)
   }
 
+  /** Near-duplicate JPEG of group `g`, variant `j`: a 72×64 image of
+    * constant 8×8 blocks whose variants differ only in the top-left
+    * block. 72 = 9·8 and 64 = 8·8, so every dHash box is exactly one
+    * constant block: the hash is a closed form of the block values and
+    * the oracle needs no pixel grid at all. */
+  def groupJpeg(g: Int, j: Int): Array[Byte] =
+    Jpeg.encode(72, 64, (x, y) => {
+      val bx = x / 8; val byy = y / 8
+      (((37 + 11 * g) * bx + (23 + 7 * g) * byy + 13 * g) % 97) + 28 +
+        (if (bx == 0 && byy == 0) j else 0)
+    })
+
+  /** [[groupJpeg]]'s video twin: an `nf`-frame 72×64 animated GIF whose
+    * block values also step by 29 per frame. */
+  def groupGif(g: Int, j: Int, nf: Int): Array[Byte] =
+    encodeAnimatedGif(72, 64, nf,
+      (f, x, y) => {
+        val bx = x / 8; val byy = y / 8
+        (((37 + 11 * g) * bx + (23 + 7 * g) * byy + 29 * f +
+          13 * g) % 97) +
+          (if (bx == 0 && byy == 0) j else 0)
+      })
+
+  /** [[groupJpeg]]'s audio twin: mono 8 kHz, `240 + 40·(g mod 7)`
+    * samples of `((7g + 13i) mod 2048) − 1024`, variant `j` added to the
+    * first four samples. */
+  def groupWav(g: Int, j: Int): Array[Byte] = {
+    val n = (240 + (g % 7) * 40).toInt
+    val samples = Array.tabulate(n)(i =>
+      ((((7L * g + 13L * i) % 2048L) - 1024L) +
+        (if (i < 4) j else 0)).toShort)
+    encodeWav(8000, 1, samples)
+  }
+
+  /** Spectral near-duplicate PNG of group `g`: variant 0 is the base
+    * grayscale raster, 1 the same raster upscaled 2× and brightened by 3,
+    * 2 a contrast stretch (2v − 5). */
+  def spectralPng(g: Int, j: Int): Array[Byte] = {
+    val w0 = (24 + (g % 5) * 4).toInt
+    val h0 = (18 + (g % 3) * 6).toInt
+    def f(x: Int, y: Int): Int =
+      ((7L * x + 13L * y + 3L * g) % 97L + 20L).toInt
+    j match {
+      case 0 => encodePng(w0, h0, 1,
+        (x, y, _) => f(x, y))
+      case 1 => encodePng(2 * w0, 2 * h0, 1,
+        (x, y, _) => f(x / 2, y / 2) + 3)
+      case _ => encodePng(w0, h0, 1,
+        (x, y, _) => 2 * f(x, y) - 5)
+    }
+  }
+
+  /** [[spectralPng]]'s audio twin: variant 1 is the base clip resampled
+    * 2× and offset by 3, variant 2 a gain stretch (2s − 5). */
+  def spectralWav(g: Int, j: Int): Array[Byte] = {
+    val n0 = (240 + (g % 7) * 40).toInt
+    def f(i: Int): Long = ((7L * g + 13L * i) % 2048L) - 1024L
+    val samples = j match {
+      case 0 => Array.tabulate(n0)(i => f(i).toShort)
+      case 1 => Array.tabulate(2 * n0)(i => (f(i / 2) + 3L).toShort)
+      case _ => Array.tabulate(n0)(i => (2L * f(i) - 5L).toShort)
+    }
+    encodeWav(8000, 1, samples)
+  }
+
+  /** `ids` (one doc_id column) plus a `payload` column of
+    * `fixture(doc_id)`, encoded one partition at a time: the binary
+    * corpus the multimodal driver queries decode. */
+  def payloadCorpus(ids: DataFrame, fixture: Long => Array[Byte]): DataFrame =
+    ids.mapPartitions { rows =>
+      rows.map(r => Row(r.getLong(0), fixture(r.getLong(0))))
+    }(Encoders.row(ids.schema.add("payload", BinaryType)))
+
   /** Per-frame features produced by [[audioFrameFeatures]]: 0-based frame
     * index, sample count (last frame may be partial), exact integer
     * energy (Σ s²), strict zero-crossing count (s[i−1]·s[i] < 0 within

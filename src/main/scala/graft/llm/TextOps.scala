@@ -209,7 +209,7 @@ object TextOps {
     *
     * The DuckDB oracle engine (RE2) has NO lookahead, so oracles replay
     * the same token MULTISET with an RE2-safe three-part construction
-    * (see SparkEntry.Gpt2WordsSql): ` ?\S+` word pieces re-tokenized by
+    * (see ops.TokenizerOps.Gpt2WordsSql): ` ?\S+` word pieces re-tokenized by
     * [[Gpt2PretokPatternNoLookahead]] (within a piece the two patterns
     * agree — no interior whitespace), plus for each interior whitespace
     * run `(\s+)\S` its n−1 prefix and, when the last character is not a

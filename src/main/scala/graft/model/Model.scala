@@ -439,7 +439,7 @@ final case class Model(
     * pass over the data. NOTE on `sum`/`avg` over double values: plain
     * double summation is order-dependent in the last ulps; when an
     * engine-exact result matters (oracle comparisons), sum integer-valued
-    * or decimal-cast columns (see the money-cents pattern in SparkEntry). */
+    * or decimal-cast columns (see the money cents in ops.Shared.moneySum). */
   def pivot(
       groups: Seq[Expr],
       keyCol: Expr,

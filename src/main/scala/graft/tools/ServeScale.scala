@@ -48,12 +48,7 @@ object ServeScale {
     val srcDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SessionTuning.session(cpus)
     graft.GraftExtensions.install(spark)
     val (w1, wN) = mode match {
       case "minhash" => minhash(spark, srcDir, factor)

@@ -2,8 +2,28 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.types.StructType
+
 /** Driver-contract smoke: entry() answers on sf0.001 (the t1 gate). */
 class EntrySpec extends GraftSuite {
+  /** Every query's output schema and physical plan, planned ONCE at
+    * sf0.001 (plan shape is SF-independent) and shared by the whole-suite
+    * lints below; each query's cached frames are released as soon as it
+    * has planned. */
+  private lazy val planned: Seq[(String, StructType, SparkPlan)] = {
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+      try {
+        val df = q(spark, dir)
+        (name, df.schema, df.queryExecution.executedPlan)
+      }
+      catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
+      finally llm.CacheScope.global.release()
+    }
+  }
+
   test("entry returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
@@ -11,6 +31,14 @@ class EntrySpec extends GraftSuite {
 
   test("every query has an oracle and every oracle has a query") {
     assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+  }
+
+  test("the op registry rejects a repeated op name") {
+    val q: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val e = intercept[IllegalArgumentException](ops.Op.index(Seq(
+      ops.Op("q_a", q, "SELECT 1"), ops.Op("q_b", q, "SELECT 1"),
+      ops.Op("q_a", q, "SELECT 2"))))
+    assert(e.getMessage.contains("q_a"))
   }
 
   test("source lint: no file under src/ names the checkout's own path in a literal") {
@@ -37,14 +65,9 @@ class EntrySpec extends GraftSuite {
     // the single worst 100TB failure mode. BroadcastNestedLoopJoin is
     // allowed: every intentional crossJoin here broadcasts a 1-row/k-row
     // frame. Runs at sf0.001 (plan shape is SF-independent).
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      val plan =
-        try q(spark, dir).queryExecution.executedPlan.toString
-        catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
-      if (plan.contains("CartesianProduct")) Some(name) else None
+    val offenders = planned.collect {
+      case (name, _, plan) if plan.toString.contains("CartesianProduct") => name
     }
-    llm.CacheScope.global.release()
     assert(offenders.isEmpty,
       s"queries with cartesian products: ${offenders.mkString(", ")}")
   }
@@ -88,13 +111,10 @@ class EntrySpec extends GraftSuite {
       case st: StructType => st.fields.forall(f => stable(f.dataType))
       case _ => false // Float, Decimal, Byte, Short, Map, CalendarInterval…
     }
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      val bad = q(spark, dir).schema.fields
+    val offenders = planned.flatMap { case (name, schema, _) =>
+      schema.fields
         .filterNot(f => stable(f.dataType))
         .map(f => s"$name.${f.name}: ${f.dataType.simpleString}")
-      llm.CacheScope.global.release()
-      bad
     }
     assert(offenders.isEmpty,
       s"oracle-unstable output columns: ${offenders.mkString(", ")}")
@@ -155,10 +175,7 @@ class EntrySpec extends GraftSuite {
       case _ => false
     }
 
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      val plan = q(spark, dir).queryExecution.executedPlan
-      llm.CacheScope.global.release()
+    val offenders = planned.flatMap { case (name, _, plan) =>
       flatten(plan).collect {
         case j: BroadcastNestedLoopJoinExec
             if !oneRowish(if (j.buildSide == BuildLeft) j.left else j.right) =>
@@ -194,10 +211,7 @@ class EntrySpec extends GraftSuite {
         case _ => Seq.empty
       })).flatMap(flatten)
 
-    val dir = "/root/testdata/sf0.001"
-    val counts = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
-      val plan = q(spark, dir).queryExecution.executedPlan
-      llm.CacheScope.global.release()
+    val counts = planned.map { case (name, _, plan) =>
       name -> flatten(plan).count(_.isInstanceOf[ShuffleExchangeExec])
     }
     val budgetFile = new java.io.File("src/test/resources/shuffle_budget.json")
