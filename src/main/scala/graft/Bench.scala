@@ -249,9 +249,8 @@ object Bench {
 
     val canary = "q_contains_any"
     val sweep = runner.sweep(canary)
-    // warm-up failures count too: every query that threw fails the sweep
-    val failed = runner.failed
-    val Sweep(results, _, canaryWalls, drift) = sweep
+    // `failed` holds every query that threw in this runner, warm-up included
+    val Sweep(results, failed, canaryWalls, drift) = sweep
     val byName = results.toMap
     val total = sweep.total
     val totalCpu = sweep.totalCpu

@@ -28,9 +28,8 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = queryMap
-
-  private lazy val queryMap = ops.Op.registry.map { case (n, o) => n -> o.query }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ops.Op.registry.map { case (n, o) => n -> o.query }
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Column names match the query's exactly. */

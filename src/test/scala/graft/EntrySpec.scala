@@ -41,6 +41,16 @@ class EntrySpec extends GraftSuite {
     assert(e.getMessage.contains("q_a"))
   }
 
+  test("an op builds its oracle only when asked, and only once") {
+    var built = 0
+    val op = ops.Op("q_a", (s, _) => s.range(1).toDF(),
+      { built += 1; "SELECT 1" })
+    ops.Op.index(Seq(op))
+    assert(built === 0)
+    assert(op.oracle === "SELECT 1" && op.oracle === "SELECT 1")
+    assert(built === 1)
+  }
+
   test("source lint: no file under src/ names the checkout's own path in a literal") {
     // A literal path into the checkout (a fixture root, say) makes every
     // copy of the repo read and write the original's files; derive such
