@@ -1,7 +1,7 @@
 package graft
 package ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions => F}
 
 import graft.funcs._
 import Shared._
@@ -46,7 +46,6 @@ object AnnOps {
     Op("q_split_by_cluster", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val pairs = graft.llm.Dedup.minhashPairs(df, "doc_id", "text")
           val clusters = graft.llm.Dedup.clusterPairs(pairs, "doc_a", "doc_b")
           graft.llm.Dedup.splitByCluster(df, "doc_id", clusters,
@@ -100,7 +99,6 @@ object AnnOps {
     Op("q_semdedup", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val cents = graft.llm.Embeddings.kmeansFitSqrtK(
             df, "vec_id", "embedding", iters = 2)
           graft.llm.Embeddings.semDedup(df, "vec_id", "embedding", cents,
@@ -133,7 +131,6 @@ object AnnOps {
     Op("q_embed_quant", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.Embeddings.quantize8(df, "embedding", "q8")
             .groupBy(F.col("label"))
             .agg(
@@ -542,7 +539,6 @@ object AnnOps {
     Op("q_ann_ivf_trained", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val cents = graft.llm.Embeddings.kmeansFitSqrtK(
             df, "vec_id", "embedding", iters = 2)
           graft.llm.Embeddings.ivfTopKTrained(df, "vec_id", "embedding", cents,
@@ -573,7 +569,6 @@ object AnnOps {
     Op("q_ann_ivf_sampled_fit", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val cents = graft.llm.Embeddings.kmeansFitSampled(
             df, "vec_id", "embedding", k = 8, iters = 2, samplePct = 25.0)
           graft.llm.Embeddings.ivfTopKTrained(df, "vec_id", "embedding",
@@ -622,7 +617,6 @@ object AnnOps {
     Op("q_ann_ivf_indexed", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // memoized two-part fixture (centroids + bucketed postings):
           // ingest pays fit + assignment once; the timed body is serving
           val (idxDir, tbl) = ivfIndex(s, dir)
@@ -645,7 +639,6 @@ object AnnOps {
     Op("q_ann_ivf_filtered", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           // a RANGE predicate (not arithmetic) so it reaches the parquet
           // reader as a pushed filter, not just a post-scan filter
@@ -684,7 +677,6 @@ object AnnOps {
     Op("q_knn_label", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           graft.llm.Embeddings.knnLabelIndexed(
             df.where(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -730,7 +722,6 @@ object AnnOps {
     Op("q_knn_score", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           graft.llm.Embeddings.knnScoreIndexed(
             df.where(F.col("vec_id") < 20), "vec_id", "embedding",
@@ -786,7 +777,6 @@ object AnnOps {
     Op("q_ann_ivf_admit", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfIndex(s, dir)
           graft.llm.Embeddings.ivfNearDupJoinIndexed(
             df.where(F.col("vec_id") < 50)
@@ -828,7 +818,6 @@ object AnnOps {
     Op("q_stream_ivf_neardup", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfIndex(s, dir)
           graft.streaming.Streams.streamingIvfNearDup(
             df.where(F.col("vec_id") < 50)
@@ -851,7 +840,6 @@ object AnnOps {
     Op("q_stream_knn_label", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfIndex(s, dir, attrs = Seq("label"))
           graft.streaming.Streams.streamingKnnLabel(
             df.where(F.col("vec_id") < 20)
@@ -902,7 +890,6 @@ object AnnOps {
     Op("q_ann_ivf_probe", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val cents = graft.llm.Embeddings.kmeansFitSqrtK(
             df, "vec_id", "embedding", iters = 2)
           graft.llm.Embeddings.ivfTopKTrained(df, "vec_id", "embedding", cents,
@@ -963,7 +950,6 @@ object AnnOps {
     Op("q_stream_ann_probe", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfIndex(s, dir)
           graft.streaming.Streams.streamingIvfTopK(
             df.where(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -985,7 +971,6 @@ object AnnOps {
     Op("q_ann_pq", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val cb = graft.llm.Embeddings.pqCodebooks(df, "vec_id", "embedding",
             dim = 64, m = 2, initPred = F.col("vec_id") < 4, iters = 2)
           graft.llm.Embeddings.pqTopK(df, "vec_id", "embedding", cb,
@@ -1103,7 +1088,6 @@ object AnnOps {
     Op("q_ann_opq", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // serve through the PERSISTED rotation + codebooks (memoized
           // fixture — the fit is ingest-time work, like the other ANN
           // indexes); values ≡ the inline opqTopK fit+serve, spec-pinned
@@ -1244,7 +1228,6 @@ object AnnOps {
     Op("q_ann_ivfsq8", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfSq8Index(s, dir)
           graft.llm.Embeddings.ivfSq8TopKIndexed(
             df.where(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -1303,7 +1286,6 @@ object AnnOps {
     Op("q_stream_ann_sq8", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfSq8Index(s, dir)
           graft.streaming.Streams.streamingIvfSq8TopK(
             df.where(F.col("vec_id") < 3), "vec_id", "embedding",
@@ -1325,7 +1307,6 @@ object AnnOps {
     Op("q_ann_sq8_indexed", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = sq8Index(s, dir)
           graft.llm.Embeddings.sq8TopKIndexed(
             df.where(F.col("vec_id") === 0), "vec_id", "embedding",
@@ -1347,7 +1328,6 @@ object AnnOps {
     Op("q_ann_ivfpq", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
             df, "vec_id", "embedding", iters = 2)
           val cb = graft.llm.Embeddings.pqCodebooks(df, "vec_id", "embedding",
@@ -1397,7 +1377,6 @@ object AnnOps {
     Op("q_ann_ivfpq_indexed", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfPqIndex(s, dir)
           graft.llm.Embeddings.ivfPqTopKIndexed(
             df.where(F.col("vec_id") === 0), "vec_id", "embedding",
@@ -1461,7 +1440,6 @@ object AnnOps {
     Op("q_ann_ivfpq_residual", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfPqResidualIndex(s, dir)
           graft.llm.Embeddings.ivfPqTopKIndexed(
             df.where(F.col("vec_id") < 2), "vec_id", "embedding",
@@ -1492,7 +1470,6 @@ object AnnOps {
     Op("q_ann_ivfpq_residual_rerank", (s, dir) =>
       m(dir, "embeddings")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = ivfPqResidualIndex(s, dir)
           graft.llm.Embeddings.ivfPqTopKIndexed(
             df.where(F.col("vec_id") < 2), "vec_id", "embedding",

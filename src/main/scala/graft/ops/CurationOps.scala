@@ -1,6 +1,8 @@
 package graft
 package ops
 
+import org.apache.spark.sql.{functions => F}
+
 import graft.funcs._
 import graft.model.Model
 import Shared._
@@ -16,7 +18,6 @@ object CurationOps {
     Op("q_hashed_tf", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.Search.hashedTfVectors(
             df.where(F.col("doc_id") < 300), "doc_id", "text", dims = 64)
             .select(F.col("doc_id"),
@@ -49,7 +50,6 @@ object CurationOps {
     Op("q_dsir_weights", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // hash the gram buckets ONCE into a cached feature frame; the
           // target counts, raw counts, serving fold, and n_grams all
           // read it (n_grams = the bucket array's size — free)
@@ -228,7 +228,6 @@ object CurationOps {
     Op("q_pii_scrub", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.where(F.col("doc_id") < 100)
             .withColumn("__pii__", F.expr(
               """concat(text, ' contact user', cast(doc_id AS string),
@@ -262,7 +261,6 @@ object CurationOps {
     Op("q_html_strip", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.where(F.col("doc_id") < 100)
             .withColumn("__html__", F.expr(
               """concat('<html><head><title>Doc ', cast(doc_id AS string),
@@ -311,7 +309,6 @@ object CurationOps {
     Op("q_keyword_hits", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.GraftExtensions.install(df.sparkSession)
           df.withColumn("__hits__", graft.llm.TextOps.keywordHits("text",
               Seq("table", "value fast", "part value", "spark", "a a", "row")))
@@ -347,7 +344,6 @@ object CurationOps {
     Op("q_text_nfc", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.GraftExtensions.install(df.sparkSession)
           // NOTE: built with a Scala literal, not Spark chr(769) — Spark's
           // chr() is ASCII-only (wraps mod 256), DuckDB's is full Unicode
@@ -386,7 +382,6 @@ object CurationOps {
     Op("q_hll_distinct", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val sk = graft.llm.Sketch.hllDistinct(df, Seq("lang"), F.col("text"))
           df.groupBy(F.col("lang"))
             .agg(F.countDistinct(F.col("text")).as("n_exact"))
@@ -428,7 +423,6 @@ object CurationOps {
     Op("q_hll_overlap", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val a = df.where(F.col("doc_id") % 3 =!= 0)
           val b = df.where(F.col("doc_id") % 2 === 0)
           val est = graft.llm.Sketch.hllOverlap(a, b, F.col("text"))
@@ -497,7 +491,6 @@ object CurationOps {
     Op("q_cms_freq", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // cached: the token frame feeds BOTH the sketch build and the
           // exact top-20 anchor (Spark does not share uncached subplans)
           val toks = graft.llm.CacheScope.global.cache(df
@@ -554,7 +547,6 @@ object CurationOps {
     Op("q_hll_rollup", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val fine = df.withColumn("slice", F.pmod(F.col("doc_id"), F.lit(4L)))
           val regs = graft.llm.Sketch.hllRegisters(
             fine, Seq("lang", "slice"), F.col("text"), 8)
@@ -619,7 +611,6 @@ object CurationOps {
     Op("q_quantile_sample", (s, dir) =>
       m(dir, "lineitem")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val sampled = graft.llm.Sketch.sampledQuantiles(
             df, Seq("l_returnflag"),
             F.col("l_orderkey") * F.lit(8L) + F.col("l_linenumber"),
@@ -671,7 +662,6 @@ object CurationOps {
     Op("q_stratified_sample", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.where(graft.llm.TextOps.stratifiedSample(F.col("text"), F.col("lang"),
               Map("en" -> 10.0, "de" -> 50.0, "zh" -> 100.0),
               defaultPercent = 25.0))
@@ -692,7 +682,6 @@ object CurationOps {
     Op("q_quality_gates", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.withColumn("__toks__", graft.llm.TextOps.tokens(F.col("text")))
             .withColumn("__g__", graft.llm.TextOps.gopherGates("__toks__"))
             .select(F.col("doc_id"), F.col("__g__.word_count_ok"),
@@ -812,7 +801,6 @@ object CurationOps {
     Op("q_classifier_score", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val words = Seq("sql", "query", "join", "hash", "table",
             "vector", "stream")
           val w = graft.llm.Classifier.fitWeights(
@@ -893,7 +881,6 @@ object CurationOps {
     Op("q_langid_margin", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.withColumn("__toks__", graft.llm.TextOps.tokens(F.col("text")))
             .withColumn("__m__", graft.llm.TextOps.langIdMargin("__toks__"))
             .groupBy(F.col("lang"))
@@ -1013,7 +1000,6 @@ object CurationOps {
     Op("q_drift_terms", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.TextOps.driftTerms(
             df.where(F.col("lang") === "en"),
             df.where(F.col("lang") === "de"), "text", k = 15)
@@ -1059,7 +1045,6 @@ object CurationOps {
     Op("q_markdown_strip", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val nl = F.lit("\n")
           val md = F.concat(
             F.lit("# "), F.expr("substring(text, 1, 20)"), nl,
@@ -1122,7 +1107,6 @@ object CurationOps {
     Op("q_corpus_profile", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.withColumn("__toks__", graft.llm.TextOps.tokens(F.col("text")))
             .withColumn("__q__", graft.llm.TextOps.qualityScore("__toks__"))
             .withColumn("__p__",
@@ -1178,7 +1162,6 @@ object CurationOps {
     Op("q_classifier_auc", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val scored = df
             .withColumn("__toks__", graft.llm.TextOps.tokens(F.col("text")))
             .select(
@@ -1281,7 +1264,6 @@ object CurationOps {
     Op("q_text_entropy", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.GraftExtensions.install(df.sparkSession)
           df.where(F.col("doc_id") < 100)
             .select(F.col("doc_id"),
@@ -1311,7 +1293,6 @@ object CurationOps {
     Op("q_repetition", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.where(F.col("doc_id") < 100)
             .withColumn("__toks__", graft.llm.TextOps.tokens(F.col("text")))
             .select(F.col("doc_id"),
@@ -1381,7 +1362,6 @@ object CurationOps {
     Op("q_url_parse", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val url = fixtureUrl
           val p = graft.llm.TextOps.urlParts(url)
           df.select(F.col("doc_id"), url.as("url"),
@@ -1430,7 +1410,6 @@ object CurationOps {
     Op("q_url_canonical", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val url = F.concat(
             F.lit("https://WWW."), F.col("source"), F.lit(".com"),
             F.when(F.col("doc_id") % 2 === 0, F.lit(":443"))
@@ -1497,7 +1476,6 @@ object CurationOps {
     Op("q_domain_blocklist", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val urls = df.select(F.col("doc_id"), fixtureUrl.as("url"))
           val blocklist = urls.where(F.col("doc_id") % 10 === 0)
             .select(graft.llm.TextOps.urlParts(F.col("url"))
@@ -1587,7 +1565,6 @@ object CurationOps {
     Op("q_stream_domain_cap", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val domain = F.concat(F.col("source"), F.lit("."),
             F.element_at(
               F.array(F.lit("com"), F.lit("co.uk"), F.lit("org"), F.lit("io")),
@@ -1640,7 +1617,6 @@ object CurationOps {
     Op("q_sample_hash", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.where(graft.llm.TextOps.hashSample(F.col("text"), 25.0))
             .groupBy(F.col("lang"))
             .agg(F.count(F.lit(1)).as("n"))
@@ -1680,7 +1656,6 @@ object CurationOps {
     Op("q_weighted_sample_group", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.TextOps.weightedSamplePerGroup(
               df, "lang", "doc_id", "n_chars", k = 5)
             .select(F.col("lang"), F.col("doc_id"), F.col("priority"))
@@ -1711,7 +1686,6 @@ object CurationOps {
     Op("q_lang_mix", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.TextOps.temperatureMix(df, "lang", "text",
               alpha = 0.5, keepFrac = 0.5)
             .groupBy(F.col("lang"))
@@ -1851,7 +1825,6 @@ object CurationOps {
     Op("q_pipeline_clean", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           import org.apache.spark.sql.expressions.Window
           import graft.llm.TextOps
           df.withColumn("__toks__", TextOps.tokens(F.col("text")))
@@ -1897,7 +1870,6 @@ object CurationOps {
     Op("q_text_stats", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.withColumn("__toks__", graft.llm.TextOps.tokens(F.col("text")))
             .withColumn("__nre__", graft.llm.TextOps.regexTokenCount("text"))
             .groupBy(F.col("source"))
@@ -1925,7 +1897,6 @@ object CurationOps {
     Op("q_text_langid", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.withColumn("__toks__", graft.llm.TextOps.tokens(F.col("text")))
             .groupBy(F.col("lang"),
               graft.llm.TextOps.langId("__toks__").as("predicted"))
@@ -1943,7 +1914,6 @@ object CurationOps {
     Op("q_text_quality", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           import graft.llm.TextOps
           df.where(F.col("doc_id") < 100)
             .withColumn("__toks__", TextOps.tokens(F.col("text")))
@@ -1974,7 +1944,6 @@ object CurationOps {
     Op("q_text_fingerprint", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.GraftExtensions.install(df.sparkSession)
           df.where(F.col("doc_id") < 50)
             .select(F.col("doc_id"),
@@ -2120,7 +2089,6 @@ object CurationOps {
     * IS a 3-label public suffix (s3.amazonaws.com) — the host-is-suffix
     * rule's fixture. */
   private def fixtureUrl: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.{functions => F}
     val url0 = F.concat(
       F.lit("https://"),
       F.when(F.col("doc_id") % 7 === 0, F.lit("user@")).otherwise(F.lit("")),

@@ -1,7 +1,7 @@
 package graft
 package ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 import graft.funcs._
 import Shared._
@@ -51,7 +51,6 @@ object DedupOps {
     Op("q_stream_decontam", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val docs = graft.llm.CacheScope.global.cache(
             df.where(F.col("doc_id").isNotNull))
           val eval = docs.where(F.col("doc_id") < 5)
@@ -138,7 +137,6 @@ object DedupOps {
     Op("q_line_dedup_corpus", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val built = df.where(F.col("doc_id") < 200)
             .withColumn("__doc__", F.concat_ws("\n",
               F.lit("SITE NAV | Home | About"),
@@ -223,7 +221,6 @@ object DedupOps {
     Op("q_substr_admit", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (_, tbl) = substrIndex(s, dir)
           val news = df
             .where(F.pmod(F.col("doc_id"), F.lit(9L)) === 3L)
@@ -286,7 +283,6 @@ object DedupOps {
     Op("q_substr_admit_incr", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (idxDir, tbl) = substrIncrIndex(s, dir)
           val news = df
             .where(F.pmod(F.col("doc_id"), F.lit(9L)) === 3L)
@@ -311,7 +307,6 @@ object DedupOps {
     Op("q_stream_substr_admit", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val (_, tbl) = substrIndex(s, dir)
           val news = df
             .where(F.pmod(F.col("doc_id"), F.lit(9L)) === 3L)
@@ -444,7 +439,6 @@ object DedupOps {
     Op("q_contamination", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.Dedup.contamination(
             df.where(F.col("doc_id") >= 20), "doc_id", "text",
             df.where(F.col("doc_id") < 20), "doc_id", "text")
@@ -508,7 +502,6 @@ object DedupOps {
     Op("q_dedup_containment", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val base = df.where(F.col("doc_id") < 150)
           val corpus = base
             .select((F.col("doc_id") * 2).as("doc_id"), F.col("text"))
@@ -563,7 +556,6 @@ object DedupOps {
     Op("q_dedup_boilerplate_skew", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val corpus = df.withColumn("text",
             F.when(F.col("doc_id") % 10 === 0, F.lit(BoilerplateText))
               .otherwise(F.col("text")))
@@ -583,7 +575,6 @@ object DedupOps {
     Op("q_dedup_cross", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.Dedup.minhashJoin(
             df.where(F.col("doc_id") % 2 === 0), "doc_id", "text",
             df.where(F.col("doc_id") % 2 === 1), "doc_id", "text")
@@ -614,7 +605,6 @@ object DedupOps {
     Op("q_dedup_incremental", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // memoized index fixture: production pays the index build at
           // ingest, so the timed body here is the serve join only
           val tbl = oddMinhashIndex(s, df, dir)
@@ -634,7 +624,6 @@ object DedupOps {
     Op("q_stream_minhash_neardup", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val tbl = oddMinhashIndex(s, df, dir)
           graft.streaming.Streams.streamingMinhashNearDup(
             df.where(F.col("doc_id") % 2 === 0), "doc_id", "text",
@@ -656,7 +645,6 @@ object DedupOps {
     Op("q_dedup_takedown", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val tbl = oddMinhashIndex(s, df, dir)
           val dst = "minhash_takedown_" +
             Fixtures.dirKey(dir) + "_" + Fixtures.runTag
@@ -698,7 +686,6 @@ object DedupOps {
     Op("q_dedup_promote", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val tbl = oddMinhashIndex(s, df, dir)
           // every maintenance pass writes GENUINELY NEW versions (the
           // per-call counter): re-using a version name would overwrite
@@ -781,7 +768,6 @@ object DedupOps {
     Op("q_stream_corpus_diff", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.streaming.Streams.streamingCorpusDiff(
             df.where(F.col("doc_id") % 5 =!= 0)
               .select(F.col("doc_id"),
@@ -856,7 +842,6 @@ object DedupOps {
     Op("q_dedup_paragraph", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val base = df.where(F.col("doc_id") < 100)
           val paras = base.select((F.col("doc_id") * 4).as("para_id"),
               F.concat(F.lit("Shared banner text for source "),
@@ -993,7 +978,6 @@ object DedupOps {
     Op("q_dedup_canonical", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // dedup on a 5-word prefix so hash groups actually collide at
           // sf0.01 (full texts are all distinct there) while the quality
           // priority still ranks the FULL documents
@@ -1036,7 +1020,6 @@ object DedupOps {
     Op("q_dedup_lines", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val built = df.where(F.col("doc_id") < 200)
             .withColumn("__doc__", F.concat_ws("\n",
               F.expr("substring(text, 1, 60)"), F.expr("substring(text, 30, 50)"),
@@ -1077,7 +1060,6 @@ object DedupOps {
     Op("q_dedup_apply", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val pairs = graft.llm.Dedup.minhashPairs(df, "doc_id", "text")
           val clusters = graft.llm.Dedup.clusterPairs(pairs, "doc_a", "doc_b")
           val drop = clusters.where(F.col("doc_id") =!= F.col("cluster_id"))
@@ -1100,7 +1082,6 @@ object DedupOps {
     Op("q_cdc_dedup", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.Search.cdcChunks(df, "doc_id", "text", k = 4, modulus = 16)
             .groupBy(F.col("chunk_md5"))
             .agg(F.count(F.lit(1)).as("__cnt__"),
@@ -1170,7 +1151,6 @@ object DedupOps {
       s: SparkSession, dir: String): (String, String) =
     Fixtures.bucketed(s, "substri", dir, "__gh__", sub = "postings") {
       (tbl, path) =>
-        import org.apache.spark.sql.{functions => F}
         val docs = s.read.parquet(s"$dir/documents.parquet")
         val half = F.pmod(F.col("doc_id"), F.lit(2L))
         graft.llm.Dedup.substringIndexSave(docs.where(half === 0L),

@@ -1,7 +1,7 @@
 package graft
 package ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions => F}
 
 import graft.funcs._
 import graft.model.Model
@@ -38,7 +38,6 @@ object GraphOps {
     Op("q_pagerank", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val n = df.count() // bounded model parameter (node-space modulus)
           val edges = df.select(F.col("doc_id"))
             .withColumn("j", F.explode(F.sequence(F.lit(1L), F.lit(4L))))
@@ -61,7 +60,6 @@ object GraphOps {
     Op("q_pagerank_incr", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val idxDir = pageRankIndex(s, dir)
           val n = df.count() // bounded model parameter (node-space modulus)
           val delta = df.select(F.col("doc_id"))
@@ -85,7 +83,6 @@ object GraphOps {
     Op("q_hits", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val n = df.count() // bounded model parameter (node-space modulus)
           val edges = df.select(F.col("doc_id"))
             .withColumn("j", F.explode(F.sequence(F.lit(1L), F.lit(4L))))
@@ -112,7 +109,6 @@ object GraphOps {
       val path = linksWarcGlob(s, dir)
       Model.warc(path)
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val pages = df.where(F.col("warc_type") === F.lit("response"))
             .withColumn("__html__", F.col("payload").cast("string"))
           val edges = graft.llm.Graph.extractLinks(pages, "url", "__html__")
@@ -131,7 +127,6 @@ object GraphOps {
       val path = linksWarcGlob(s, dir)
       Model.warc(path)
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val pages = df.where(F.col("warc_type") === F.lit("response"))
             .withColumn("__html__", F.col("payload").cast("string"))
           val edges = graft.llm.Graph.extractLinks(pages, "url", "__html__")
@@ -186,7 +181,6 @@ object GraphOps {
     * path only: append-shaped delta + 2 warm rounds. */
   private def pageRankIndex(s: SparkSession, dir: String): String =
     Fixtures.dir("pridx", dir) { tmp =>
-      import org.apache.spark.sql.{functions => F}
       val df = s.read.parquet(s"$dir/documents.parquet")
       val n = df.count()
       val base = df.select(F.col("doc_id"))
@@ -271,32 +265,13 @@ object GraphOps {
       doms AS (SELECT src_domain AS domain FROM edges_d
                UNION SELECT dst_domain FROM edges_d)"""
 
-  /** q_hits_links oracle: [[HitsSql]]'s 3 unrolled hub/authority rounds
+  /** q_hits_links oracle: the 3 unrolled hub/authority [[HitsRounds]]
     * over the extracted-link domain graph ([[LinksEdgeCtes]]), ranks
     * joined back to the domain dictionary. */
   private lazy val HitsLinksSql: String = {
-    val rounds = (1 to 3).map { i =>
-      s"""ar$i AS MATERIALIZED (
-        SELECT e.dst AS node, sum(h.h) AS ar
-        FROM edges e JOIN h${i - 1} h ON h.node = e.src
-        GROUP BY 1),
-      a$i AS MATERIALIZED (
-        SELECT ar$i.node,
-               (ar$i.ar * 1000000) // (SELECT max(ar) FROM ar$i) AS a
-        FROM ar$i),
-      hr$i AS MATERIALIZED (
-        SELECT e.src AS node, sum(a$i.a) AS hr
-        FROM edges e JOIN a$i ON a$i.node = e.dst
-        GROUP BY 1),
-      h$i AS MATERIALIZED (
-        SELECT n2.node,
-               coalesce((hr$i.hr * 1000000) // (SELECT max(hr) FROM hr$i),
-                 0) AS h
-        FROM nodes n2 LEFT JOIN hr$i ON hr$i.node = n2.node)"""
-    }.mkString(",\n")
     s"""WITH $LinksEdgeCtes,
       h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes),
-      $rounds
+      $HitsRounds
       SELECT m.domain,
              CAST(coalesce(h3.h, 0) AS BIGINT) AS hub_micro,
              CAST(coalesce(a3.a, 0) AS BIGINT) AS auth_micro
@@ -382,13 +357,27 @@ object GraphOps {
       SELECT node, CAST(r AS BIGINT) AS rank_micro FROM r5 ORDER BY node"""
   }
 
-  /** q_hits oracle: 3 hub/authority rounds unrolled (AS MATERIALIZED —
-    * each raw frame feeds both its max subquery and the scaled select).
-    * `//` floor division on positive operands replays Graph.hits' exact
-    * pmod form; DuckDB sums go through HUGEINT, hence the final BIGINT
-    * casts. */
+  /** q_hits oracle: [[HitsRounds]] over the synthetic link fixture. */
   private lazy val HitsSql: String = {
-    val rounds = (1 to 3).map { i =>
+    s"""WITH $LinkFixtureCtes,
+      h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes),
+      $HitsRounds
+      SELECT n.node,
+             CAST(coalesce(h3.h, 0) AS BIGINT) AS hub_micro,
+             CAST(coalesce(a3.a, 0) AS BIGINT) AS auth_micro
+      FROM nodes n
+      LEFT JOIN h3 ON h3.node = n.node
+      LEFT JOIN a3 ON a3.node = n.node
+      ORDER BY n.node"""
+  }
+
+  /** The 3 hub/authority rounds of the HITS oracles, unrolled as CTEs
+    * over `edges`/`nodes` (AS MATERIALIZED — each raw frame feeds both
+    * its max subquery and the scaled select). `//` floor division on
+    * positive operands replays Graph.hits' exact pmod form; DuckDB sums
+    * go through HUGEINT, hence the final BIGINT casts. */
+  private def HitsRounds: String =
+    (1 to 3).map { i =>
       s"""ar$i AS MATERIALIZED (
         SELECT e.dst AS node, sum(h.h) AS ar
         FROM edges e JOIN h${i - 1} h ON h.node = e.src
@@ -407,15 +396,4 @@ object GraphOps {
                  0) AS h
         FROM nodes n2 LEFT JOIN hr$i ON hr$i.node = n2.node)"""
     }.mkString(",\n")
-    s"""WITH $LinkFixtureCtes,
-      h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes),
-      $rounds
-      SELECT n.node,
-             CAST(coalesce(h3.h, 0) AS BIGINT) AS hub_micro,
-             CAST(coalesce(a3.a, 0) AS BIGINT) AS auth_micro
-      FROM nodes n
-      LEFT JOIN h3 ON h3.node = n.node
-      LEFT JOIN a3 ON a3.node = n.node
-      ORDER BY n.node"""
-  }
 }

@@ -1,7 +1,7 @@
 package graft
 package ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.funcs._
 import Shared._
@@ -20,7 +20,6 @@ object LmOps {
     Op("q_lm_kn", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.LangModel.knBigramScore(
             df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text")
         }
@@ -82,7 +81,6 @@ object LmOps {
     Op("q_lm_kn3", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.LangModel.knTrigramScore(
             df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text")
         }
@@ -169,7 +167,6 @@ object LmOps {
     Op("q_lm_kn5", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.LangModel.knNgramScore(
             df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text",
             order = 5)
@@ -212,7 +209,6 @@ object LmOps {
     Op("q_lm_kn_gate", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // gate through the PERSISTED model (production scores a crawl
           // with a pre-fit LM; values ≡ the inline trainer, spec-pinned)
           val modelDir = knModelQ4(df, dir)
@@ -242,7 +238,6 @@ object LmOps {
     Op("q_lm_sb5", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.LangModel.sbNgramScore(
             df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text",
             order = 5)
@@ -262,7 +257,6 @@ object LmOps {
     Op("q_lm_kn5_pruned", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // pruned-model serving: the stored tables already dropped the
           // singleton tail; scoring reads them as-is
           val modelDir = Fixtures.dir("kn5p01111v2_q4", dir) { p =>
@@ -311,7 +305,6 @@ object LmOps {
     Op("q_lm_kn5_delta", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val baseDir = Fixtures.dir("kn5v2_e8", dir) { p =>
             graft.llm.LangModel.knNgramFit(
               df.where(F.col("doc_id") % 8 === 0), "text", p, order = 5)
@@ -339,7 +332,6 @@ object LmOps {
     Op("q_lm_perplexity", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val model = graft.llm.LangModel.fitBigramLm(
             df.where(F.col("doc_id") % 10 < 8), "text")
           df.select(F.col("doc_id"),
@@ -393,7 +385,6 @@ object LmOps {
     Op("q_lm_ppl_buckets", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           import org.apache.spark.sql.expressions.Window
           val model = graft.llm.LangModel.fitBigramLm(
             df.where(F.col("doc_id") % 10 < 8), "text")

@@ -1,7 +1,7 @@
 package graft
 package ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.funcs._
 import graft.llm.Multimodal
@@ -20,7 +20,6 @@ object MultimodalOps {
     Op("q_multimodal_meta", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = df
             .where(F.col("lang") === "en" && F.col("doc_id") < 100)
             .withColumn("payload", F.expr(
@@ -62,7 +61,6 @@ object MultimodalOps {
     Op("q_multimodal_audio", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           def le16(e: String) =
             s"substr(lpad(hex($e), 4, '0'), 3, 2) || substr(lpad(hex($e), 4, '0'), 1, 2)"
           def le32(e: String) =
@@ -104,7 +102,6 @@ object MultimodalOps {
     Op("q_multimodal_audio_frames", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 16, Multimodal.wavFixture)
           graft.llm.Multimodal.audioFrameFeatures(withPayload, "payload",
               frameSamples = 64)
@@ -149,7 +146,6 @@ object MultimodalOps {
     Op("q_multimodal_pixels", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, Multimodal.pngFixture)
           graft.llm.Multimodal.decodePixels(withPayload, "payload")
             .select(F.col("doc_id"), F.col("px.n_px").as("n_px"),
@@ -192,7 +188,6 @@ object MultimodalOps {
     Op("q_multimodal_patches", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, Multimodal.pngFixture)
           graft.llm.Multimodal.patchMeans(withPayload, "payload", patch = 4)
             .select(F.col("doc_id"), F.explode(F.col("patches")).as("pt"))
@@ -234,7 +229,6 @@ object MultimodalOps {
     Op("q_multimodal_gif", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, Multimodal.gifFixture)
           graft.llm.Multimodal.decodePixels(withPayload, "payload")
             .select(F.col("doc_id"), F.col("px.n_px").as("n_px"),
@@ -276,7 +270,6 @@ object MultimodalOps {
     Op("q_multimodal_frames", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, Multimodal.gifAnimFixture)
           graft.llm.Multimodal.frameSample(withPayload, "payload", every = 2)
             .select(F.col("doc_id"), F.explode(F.col("frames")).as("fr"))
@@ -323,7 +316,6 @@ object MultimodalOps {
     Op("q_multimodal_resize", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, Multimodal.pngFixture)
           val resized = graft.llm.Multimodal.resizePng(withPayload, "payload",
             factor = 2)
@@ -370,7 +362,6 @@ object MultimodalOps {
     Op("q_multimodal_resample", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 14, Multimodal.wavFixture)
           val res = graft.llm.Multimodal.resampleWav(withPayload, "payload",
             factor = 2)
@@ -414,7 +405,6 @@ object MultimodalOps {
     Op("q_multimodal_scenecut", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, Multimodal.gifSceneFixture)
           graft.llm.Multimodal.sceneDiffFrames(withPayload, "payload")
             .select(F.col("doc_id"), F.explode(F.col("scenes")).as("sc"))
@@ -459,7 +449,6 @@ object MultimodalOps {
     Op("q_multimodal_jpeg", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, graft.llm.Jpeg.fixture)
           graft.llm.Multimodal.decodePixels(withPayload, "payload")
             .select(F.col("doc_id"),
@@ -499,7 +488,6 @@ object MultimodalOps {
     Op("q_multimodal_jpeg_prog", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 12, graft.llm.Jpeg.fixtureProgressive)
           graft.llm.Multimodal.decodePixels(withPayload, "payload")
             .select(F.col("doc_id"),
@@ -564,7 +552,6 @@ object MultimodalOps {
     Op("q_image_neardup_corpus", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // memoized PAYLOAD fixture: a real crawl's image bytes live in
           // storage — synthesizing (JPEG-encoding) the corpus is fixture
           // construction, so it is built once per data dir and the timed
@@ -661,7 +648,6 @@ object MultimodalOps {
     Op("q_image_neardup_incr", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.groupJpeg))
           val tbl = Fixtures.index(s, "dhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.dhashIndex(
@@ -706,7 +692,6 @@ object MultimodalOps {
     Op("q_stream_image_neardup", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.groupJpeg))
           val tbl = Fixtures.index(s, "dhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.dhashIndex(
@@ -760,7 +745,6 @@ object MultimodalOps {
     Op("q_video_neardup_corpus", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // memoized payload fixture (the q_image_neardup_corpus
           // rationale): GIF-encoding the corpus is one-time fixture
           // construction; the timed body is scan + frame decode + hash +
@@ -818,7 +802,6 @@ object MultimodalOps {
     Op("q_video_neardup_incr", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24,
             grouped((g, j) => Multimodal.groupGif(g, j, 4 + g % 3)))
           val tbl = Fixtures.index(s, "vhash_e2cap2", dir, "__bkey__") {
@@ -878,7 +861,6 @@ object MultimodalOps {
     Op("q_stream_video_neardup", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24,
             grouped((g, j) => Multimodal.groupGif(g, j, 4 + g % 3)))
           val tbl = Fixtures.index(s, "vhash_e2cap2", dir, "__bkey__") {
@@ -984,7 +966,6 @@ object MultimodalOps {
     Op("q_stream_image_spectral", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.spectralPng))
           val tbl = Fixtures.index(s, "isphash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.imageSpectralIndex(
@@ -1008,7 +989,6 @@ object MultimodalOps {
     Op("q_image_spectral_incr", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.spectralPng))
           val tbl = Fixtures.index(s, "isphash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.imageSpectralIndex(
@@ -1172,7 +1152,6 @@ object MultimodalOps {
     Op("q_audio_neardup_incr", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.groupWav))
           val tbl = Fixtures.index(s, "adhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.audioDhashIndex(
@@ -1217,7 +1196,6 @@ object MultimodalOps {
     Op("q_audio_spectral_incr", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.spectralWav))
           val tbl = Fixtures.index(s, "sphash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.audioSpectralIndex(
@@ -1261,7 +1239,6 @@ object MultimodalOps {
     Op("q_stream_audio_neardup", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.groupWav))
           val tbl = Fixtures.index(s, "adhash_cap2", dir, "__bkey__") {
             graft.llm.Multimodal.audioDhashIndex(
@@ -1286,7 +1263,6 @@ object MultimodalOps {
     Op("q_stream_image_dedup", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val withPayload = payloads(df, 24, grouped(Multimodal.groupJpeg))
           graft.streaming.Streams
             .streamingImageDedup(withPayload, "doc_id", "payload")
@@ -1574,7 +1550,6 @@ object MultimodalOps {
   /** The first `n` doc_ids with a `payload` column of `fixture(doc_id)`. */
   private def payloads(df: DataFrame, n: Int,
       fixture: Long => Array[Byte]): DataFrame = {
-    import org.apache.spark.sql.{functions => F}
     Multimodal.payloadCorpus(
       df.where(F.col("doc_id") < n).select(F.col("doc_id")), fixture)
   }

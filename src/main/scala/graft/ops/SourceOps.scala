@@ -1,7 +1,7 @@
 package graft
 package ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions => F}
 
 import graft.funcs._
 import graft.model.Model
@@ -111,7 +111,6 @@ object SourceOps {
       }
       Model.warc(path)
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.withColumn("__clean__",
               graft.llm.TextOps.stripHtml(F.col("payload").cast("string")))
             .where(F.size(graft.llm.TextOps.tokens(F.col("__clean__"))) >= 12)
@@ -168,7 +167,6 @@ object SourceOps {
     Op("q_wet_source", (s, dir) =>
       Model.wet(wetGlob(s, dir))
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.where(F.size(graft.llm.TextOps.tokens(F.col("text"))) >= 12)
             .withColumn("__dom__",
               graft.llm.TextOps.urlParts(F.col("url")).getField("domain"))
@@ -195,7 +193,6 @@ object SourceOps {
     Op("q_wat_source", (s, dir) =>
       Model.wat(watGlob(s, dir))
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           df.where(F.col("dst_url").rlike("^https?://"))
             .groupBy(F.regexp_extract(F.col("dst_url"), "^https://([^/]+)/", 1)
               .as("dst_host"))
@@ -261,7 +258,6 @@ object SourceOps {
     Op("q_zorder_key", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.sources.Layout.withZKey(df, "user_id", "value", "zkey")
             .where(F.col("event_id") % 97L === 0L)
             .select(F.col("event_id"), F.col("zkey"))
@@ -295,7 +291,6 @@ object SourceOps {
     Op("q_zorder3_key", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.sources.Layout.withZKey3(
             // ts is TIMESTAMP_NTZ; the session is pinned UTC, so the
             // cast's wall-clock micros equal DuckDB's epoch_us(ts)
@@ -335,7 +330,6 @@ object SourceOps {
     Op("q_zorder_skip", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val zdir = zorderedEvents(s, dir)
           df.sparkSession.read.parquet(zdir)
             .where(F.col("user_id").between(100L, 300L) &&
@@ -366,7 +360,6 @@ object SourceOps {
     Op("q_manifest_skip", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val zdir = zorderedEvents(s, dir)
           val mdir = zorderManifest(s, dir)
           graft.sources.StatsManifest.prunedRead(df.sparkSession, zdir, mdir,
@@ -389,7 +382,6 @@ object SourceOps {
     Op("q_manifest_point", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val zdir = zorderedEvents(s, dir)
           val bdir = zorderBloom(s, dir)
           graft.sources.StatsManifest.prunedReadEq(df.sparkSession, zdir,
@@ -413,7 +405,6 @@ object SourceOps {
     Op("q_zorder3_skip", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val zdir = zorderedEvents3(s, dir)
           df.sparkSession.read.parquet(zdir)
             .where(F.col("user_id").between(100L, 300L) &&
@@ -446,7 +437,6 @@ object SourceOps {
     Op("q_metric_cache", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
           val cdir = eventsMetricCache(s, dir)
           mc.read(df.sparkSession, cdir)
@@ -477,7 +467,6 @@ object SourceOps {
     Op("q_stream_metric_cache", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
           val cdir = streamMetricCache(s, dir)
           mc.read(df.sparkSession, cdir)
@@ -499,7 +488,6 @@ object SourceOps {
     Op("q_metric_cache_dense", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
           val cdir = eventsMetricCache(s, dir)
           mc.serveDenseDaily(
@@ -544,7 +532,6 @@ object SourceOps {
     Op("q_metric_cache_takedown", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
           val cdir = metricCacheTakedown(s, dir)
           mc.read(df.sparkSession, cdir)
@@ -568,7 +555,6 @@ object SourceOps {
     Op("q_metric_cache_rollup", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
           val cdir = eventsMetricCache(s, dir)
           mc.read(df.sparkSession, cdir)
@@ -594,7 +580,6 @@ object SourceOps {
     Op("q_metric_cache_distinct", (s, dir) =>
       m(dir, "events")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val mc = graft.sources.MetricCache
           val sdir = eventsDistinctSketch(s, dir)
           mc.distinctEstimate(df.sparkSession, sdir, Seq("event_type"), 4096)
@@ -701,7 +686,6 @@ object SourceOps {
     * — the triple-predicate layout q_zorder3_skip serves from. */
   private def zorderedEvents3(s: SparkSession, dir: String): String =
     Fixtures.dir("zord3", dir) { tmp =>
-      import org.apache.spark.sql.{functions => F}
       graft.sources.Layout.writeZOrdered3(
         s.read.parquet(s"$dir/events.parquet")
           .withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp"))),
@@ -713,7 +697,6 @@ object SourceOps {
     * this artifact exercises the delta-maintenance merge path. */
   private def eventsMetricCache(s: SparkSession, dir: String): String =
     Fixtures.dir("mcache", dir) { tmp =>
-      import org.apache.spark.sql.{functions => F}
       val mc = graft.sources.MetricCache
       val ev = s.read.parquet(s"$dir/events.parquet")
       val cut = F.lit("2024-01-20").cast("timestamp")
@@ -746,7 +729,6 @@ object SourceOps {
     * post-cutoff slice appended, like [[eventsMetricCache]]. */
   private def eventsDistinctSketch(s: SparkSession, dir: String): String =
     Fixtures.dir("mcsketch", dir) { tmp =>
-      import org.apache.spark.sql.{functions => F}
       val mc = graft.sources.MetricCache
       val ev = s.read.parquet(s"$dir/events.parquet")
       val cut = F.lit("2024-01-20").cast("timestamp")
@@ -761,7 +743,6 @@ object SourceOps {
     * serves from). */
   private def metricCacheTakedown(s: SparkSession, dir: String): String =
     Fixtures.dir("mcachetd", dir) { tmp =>
-      import org.apache.spark.sql.{functions => F}
       graft.sources.MetricCache.takedown(
         s, eventsMetricCache(s, dir), F.col("user_id") === 7L, tmp)
     }
@@ -776,7 +757,6 @@ object SourceOps {
     * plumbing, untimed, same as the RecallCheck streaming ladders.) */
   private def streamMetricCache(s: SparkSession, dir: String): String =
     Fixtures.dir("mcache_stream", dir) { tmp =>
-      import org.apache.spark.sql.{functions => F}
       val mc = graft.sources.MetricCache
       // ts rides as epoch micros (timestamp Row accessors differ with
       // spark.sql.datetime.java8API between sessions; longs don't)

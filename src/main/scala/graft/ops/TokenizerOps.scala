@@ -1,6 +1,8 @@
 package graft
 package ops
 
+import org.apache.spark.sql.{functions => F}
+
 import graft.funcs._
 import Shared._
 
@@ -60,7 +62,6 @@ object TokenizerOps {
     Op("q_unigram_byte_fallback", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // bounded model parameter: <= vocabSize + |alphabet| rows
           val vocab = graft.llm.Unigram.fitVocab(
             df, "text", vocabSize = 120, maxPieceLen = 4)
@@ -518,7 +519,6 @@ object TokenizerOps {
     Op("q_bpe_bytes_served", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           val dirM = s"/tmp/graft_bpe_rules_${Fixtures.runTag}"
           graft.llm.TextOps.bpeFitBytesSave(
             df.where(F.col("doc_id") % 2 === 0), "text", merges = 4, dirM)
@@ -695,7 +695,6 @@ object TokenizerOps {
     Op("q_wordpiece_byte_fallback", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           // bounded model parameter: the trained vocab (alphabet + 4 merges)
           val vocab = graft.llm.Wordpiece.wordpieceVocab(df, "text", merges = 4)
             .collect().map(_.getString(0)).toSeq
@@ -744,7 +743,6 @@ object TokenizerOps {
     Op("q_tokenizer_compare", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.GraftExtensions.install(df.sparkSession)
           val chars = df
             .select(F.explode(graft.llm.TextOps.letterWords("text")).as("w"))
@@ -823,7 +821,6 @@ object TokenizerOps {
     Op("q_tokenizer_fertility", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.GraftExtensions.install(df.sparkSession)
           val perDoc = graft.llm.TextOps
             .bpeSubwordCounts(df, "doc_id", "text", merges = 4)
@@ -882,7 +879,6 @@ object TokenizerOps {
     Op("q_chunk_docs", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          import org.apache.spark.sql.{functions => F}
           graft.llm.Search.chunkWords(
             df.where(F.col("doc_id") < 100), "doc_id", "text",
             chunkSize = 32, stride = 24)
@@ -988,7 +984,6 @@ object TokenizerOps {
     * Spark's chr() is ASCII-only; the DuckDB twin is [[UniDocsCte]]. */
   private def uniDocs(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.{functions => F}
     df.withColumn("text",
       F.replace(F.replace(F.col("text"), F.lit("e"), F.lit("e\u0301")),
         F.lit("a"), F.lit("\u00e4")))
