@@ -2107,7 +2107,6 @@ object CurationOps {
         F.col("doc_id").cast("string"))).otherwise(url0)
   }
 
-
   /** Registrable-domain CASE, GENERATED from TextOps' PSL snapshot lists
     * (single source of truth — query and oracle cannot desynchronize).
     * Expects `ls` (label list), `k` (label count), `host` in scope. */

@@ -520,24 +520,8 @@ object MultimodalOps {
       // degenerates to v_l > v_r under equal counts); byte bands,
       // popcount hamming — all exact integers.
       (s"""WITH $ImageDhashCtes,
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $CappedCandCtes
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -575,24 +559,8 @@ object MultimodalOps {
       (s"""WITH ${imageDhashCtes(
         """SELECT doc_id AS id, (doc_id // 3) % 97 AS g, doc_id % 3 AS j
            FROM main.documents""")},
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $CappedCandCtes
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -614,24 +582,8 @@ object MultimodalOps {
       // image pair replay + the SAME recursive closure every text-dedup
       // cluster oracle uses: pairs feed nodes/edges/reach/clusters.
       (s"""WITH RECURSIVE $ImageDhashCtes,
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2),
+         $CappedCandCtes
+         $HammingCtes,
          pairs AS (
            SELECT a_id AS doc_a, b_id AS doc_b FROM ham WHERE hamming <= 6)""" +
         ClosureCtes +
@@ -675,13 +627,7 @@ object MultimodalOps {
          cand AS (
            SELECT DISTINCT n.id AS a_id, i.id AS b_id
            FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -898,24 +844,8 @@ object MultimodalOps {
       // energy boxes, HUGEINT cross-multiplied bits, 8 bytes, the shared
       // band-candidate + popcount tail.
       (s"""WITH $AudioDhashCtes,
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $CappedCandCtes
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -939,24 +869,8 @@ object MultimodalOps {
         .sort(col("a_id")).sort(col("b_id"))
         .run(s),
       (s"""WITH $ImageSpectralCtes,
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $CappedCandCtes
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -1015,13 +929,7 @@ object MultimodalOps {
          cand AS (
            SELECT DISTINCT n.id AS a_id, i.id AS b_id
            FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -1045,24 +953,8 @@ object MultimodalOps {
         .sort(col("a_id")).sort(col("b_id"))
         .run(s),
       (s"""WITH $AudioSpectralCtes,
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $CappedCandCtes
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -1084,24 +976,8 @@ object MultimodalOps {
       // spectral clusters: the capped band join + popcount tail over the
       // SPECTRAL closed-form bytes, closed transitively
       (s"""WITH RECURSIVE $AudioSpectralCtes,
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2),
+         $CappedCandCtes
+         $HammingCtes,
          pairs AS (
            SELECT a_id AS doc_a, b_id AS doc_b FROM ham WHERE hamming <= 6)""" +
         ClosureCtes +
@@ -1123,24 +999,8 @@ object MultimodalOps {
         .run(s),
       // audio pair replay + the shared recursive closure
       (s"""WITH RECURSIVE $AudioDhashCtes,
-         capped AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes)
-           WHERE br <= 2),
-         cand AS (
-           SELECT DISTINCT a.id AS a_id, b.id AS b_id
-           FROM capped a JOIN capped b
-             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2),
+         $CappedCandCtes
+         $HammingCtes,
          pairs AS (
            SELECT a_id AS doc_a, b_id AS doc_b FROM ham WHERE hamming <= 6)""" +
         ClosureCtes +
@@ -1179,13 +1039,7 @@ object MultimodalOps {
          cand AS (
            SELECT DISTINCT n.id AS a_id, i.id AS b_id
            FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -1222,13 +1076,7 @@ object MultimodalOps {
          cand AS (
            SELECT DISTINCT n.id AS a_id, i.id AS b_id
            FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
-         ham AS (
-           SELECT c.a_id, c.b_id,
-                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
-           FROM cand c
-           JOIN bytes x ON x.id = c.a_id
-           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
-           GROUP BY 1, 2)
+         $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
 
@@ -1282,6 +1130,34 @@ object MultimodalOps {
          SELECT min(id) AS doc_id, hash_key
          FROM keys GROUP BY hash_key ORDER BY doc_id""")),
   )
+
+  /** The capped band join of the near-dup oracles, after a CTE chain
+    * ending in `bytes(id, byy, bv)`: each (band, byte value) bucket keeps
+    * its 2 lowest ids (maxPerBucketSide = 2), and candidate pairs share a
+    * kept bucket. */
+  private val CappedCandCtes: String =
+    """capped AS (
+           SELECT id, byy, bv
+           FROM (SELECT id, byy, bv,
+                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
+                          AS br
+                 FROM bytes)
+           WHERE br <= 2),
+         cand AS (
+           SELECT DISTINCT a.id AS a_id, b.id AS b_id
+           FROM capped a JOIN capped b
+             ON a.byy = b.byy AND a.bv = b.bv AND a.id < b.id),"""
+
+  /** Popcount Hamming distance of each `cand` pair over its per-band
+    * hash bytes (`bytes`). */
+  private val HammingCtes: String =
+    """ham AS (
+           SELECT c.a_id, c.b_id,
+                  CAST(sum(bit_count(xor(x.bv, y.bv))) AS BIGINT) AS hamming
+           FROM cand c
+           JOIN bytes x ON x.id = c.a_id
+           JOIN bytes y ON y.id = c.b_id AND y.byy = x.byy
+           GROUP BY 1, 2)"""
 
   /** Shared image-dHash replay CTEs (q_image_neardup /
     * q_stream_image_dedup): the 24 closed-form fixtures reduce to

@@ -1379,7 +1379,6 @@ object RelationalOps {
       .sort(col("nation_name"))
   }
 
-
   /** Order-independent mean: exact decimal sum divided by count, identical
     * on the oracle side as CAST(sum(CAST(x AS DECIMAL(18,9))) AS DOUBLE)/count(*). */
   private def exactAvg(e: graft.ir.Expr): graft.ir.Expr =
