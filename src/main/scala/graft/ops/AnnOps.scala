@@ -227,29 +227,7 @@ object AnnOps {
                FROM e WHERE label < 5),
          b AS (SELECT vec_id AS b_id, embedding AS bv, bkt, nn AS bn
                FROM e WHERE label >= 5),
-         pairs AS (
-           SELECT a_id, b_id,
-                  round(${dotSql("av", "bv")} / (an * bn), 6) AS cosine
-           FROM a JOIN b USING (bkt)),
-         ax AS (
-           SELECT a_id,
-                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
-                    / count(*) AS axv
-           FROM (SELECT a_id, cosine, row_number() OVER
-                   (PARTITION BY a_id ORDER BY cosine DESC, b_id) AS r
-                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
-         ay AS (
-           SELECT b_id,
-                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
-                    / count(*) AS ayv
-           FROM (SELECT b_id, cosine, row_number() OVER
-                   (PARTITION BY b_id ORDER BY cosine DESC, a_id) AS r
-                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
-         mg AS (
-           SELECT p.a_id, p.b_id, p.cosine,
-                  round(p.cosine / ((ax.axv + ay.ayv) / CAST(2.0 AS DOUBLE)), 6)
-                    AS margin
-           FROM pairs p JOIN ax USING (a_id) JOIN ay USING (b_id))
+         $BitextMarginCtes
          SELECT a_id, b_id, cosine, margin FROM (
            SELECT mg.*, row_number() OVER
              (PARTITION BY a_id ORDER BY margin DESC, b_id) AS pick
@@ -285,29 +263,7 @@ object AnnOps {
                  SELECT b0.*, row_number() OVER
                    (PARTITION BY bkt ORDER BY b_id) AS br FROM b0) t
                WHERE br <= 24),
-         pairs AS (
-           SELECT a_id, b_id,
-                  round(${dotSql("av", "bv")} / (an * bn), 6) AS cosine
-           FROM a JOIN b USING (bkt)),
-         ax AS (
-           SELECT a_id,
-                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
-                    / count(*) AS axv
-           FROM (SELECT a_id, cosine, row_number() OVER
-                   (PARTITION BY a_id ORDER BY cosine DESC, b_id) AS r
-                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
-         ay AS (
-           SELECT b_id,
-                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
-                    / count(*) AS ayv
-           FROM (SELECT b_id, cosine, row_number() OVER
-                   (PARTITION BY b_id ORDER BY cosine DESC, a_id) AS r
-                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
-         mg AS (
-           SELECT p.a_id, p.b_id, p.cosine,
-                  round(p.cosine / ((ax.axv + ay.ayv) / CAST(2.0 AS DOUBLE)), 6)
-                    AS margin
-           FROM pairs p JOIN ax USING (a_id) JOIN ay USING (b_id))
+         $BitextMarginCtes
          SELECT a_id, b_id, cosine, margin FROM (
            SELECT mg.*, row_number() OVER
              (PARTITION BY a_id ORDER BY margin DESC, b_id) AS pick
@@ -347,29 +303,7 @@ object AnnOps {
                  SELECT b0.*, row_number() OVER
                    (PARTITION BY bkt ORDER BY b_id) AS br FROM b0) t
                WHERE br <= 24),
-         pairs AS (
-           SELECT a_id, b_id,
-                  round(${dotSql("av", "bv")} / (an * bn), 6) AS cosine
-           FROM a JOIN b USING (bkt)),
-         ax AS (
-           SELECT a_id,
-                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
-                    / count(*) AS axv
-           FROM (SELECT a_id, cosine, row_number() OVER
-                   (PARTITION BY a_id ORDER BY cosine DESC, b_id) AS r
-                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
-         ay AS (
-           SELECT b_id,
-                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
-                    / count(*) AS ayv
-           FROM (SELECT b_id, cosine, row_number() OVER
-                   (PARTITION BY b_id ORDER BY cosine DESC, a_id) AS r
-                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
-         mg AS (
-           SELECT p.a_id, p.b_id, p.cosine,
-                  round(p.cosine / ((ax.axv + ay.ayv) / CAST(2.0 AS DOUBLE)), 6)
-                    AS margin
-           FROM pairs p JOIN ax USING (a_id) JOIN ay USING (b_id))
+         $BitextMarginCtes
          SELECT a_id, b_id, cosine, margin FROM (
            SELECT mg.*, row_number() OVER
              (PARTITION BY a_id ORDER BY margin DESC, b_id) AS pick
@@ -1552,6 +1486,34 @@ object AnnOps {
           FROM embeddings CROSS JOIN range(1, $EmbDim + 1) AS r(d)
           GROUP BY 1, 2 ORDER BY 1, 2""")),
   )
+
+  /** The bitext oracles' ratio-margin scoring over `a`/`b` sides sharing
+    * a `bkt` bucket: pair cosines, each side's mean top-4 cosine, and
+    * margin = cosine / mean of the two sides' means. */
+  private val BitextMarginCtes: String =
+    s"""pairs AS (
+           SELECT a_id, b_id,
+                  round(${dotSql("av", "bv")} / (an * bn), 6) AS cosine
+           FROM a JOIN b USING (bkt)),
+         ax AS (
+           SELECT a_id,
+                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
+                    / count(*) AS axv
+           FROM (SELECT a_id, cosine, row_number() OVER
+                   (PARTITION BY a_id ORDER BY cosine DESC, b_id) AS r
+                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
+         ay AS (
+           SELECT b_id,
+                  CAST(sum(CAST(cosine AS DECIMAL(18,9))) AS DOUBLE)
+                    / count(*) AS ayv
+           FROM (SELECT b_id, cosine, row_number() OVER
+                   (PARTITION BY b_id ORDER BY cosine DESC, a_id) AS r
+                 FROM pairs) t WHERE r <= 4 GROUP BY 1),
+         mg AS (
+           SELECT p.a_id, p.b_id, p.cosine,
+                  round(p.cosine / ((ax.axv + ay.ayv) / CAST(2.0 AS DOUBLE)), 6)
+                    AS margin
+           FROM pairs p JOIN ax USING (a_id) JOIN ay USING (b_id))"""
 
   /** Persisted two-part IVF artifact (`centroids/` plain parquet +
     * `postings/` bucketed on `__cell__`) the `q_ann_ivf*` serve queries

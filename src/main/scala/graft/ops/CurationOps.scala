@@ -731,7 +731,7 @@ object CurationOps {
       // order (left-assoc), sigmoid rounds 6dp, per-doc micro-gradients are
       // floor(v*1000000.0 + 0.5) BIGINTs summed exactly, weights re-round
       // 6dp — every intermediate matches the Spark driver loop.
-      """WITH f AS (
+      raw"""WITH f AS (
            SELECT CAST(list_contains(w, 'spark') AS INT) AS y,
                   CAST(list_contains(w, 'sql') AS INT) AS x0,
                   CAST(list_contains(w, 'query') AS INT) AS x1,
@@ -742,49 +742,7 @@ object CurationOps {
                   CAST(list_contains(w, 'stream') AS INT) AS x6
            FROM (SELECT regexp_split_to_array(trim(text), '\s+') AS w
                  FROM documents)),
-         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f),
-         s1 AS (SELECT f.*, nn.n,
-                       round(1.0 / (1.0 + exp(-(0.0 + 0.0*x0 + 0.0*x1 + 0.0*x2
-                         + 0.0*x3 + 0.0*x4 + 0.0*x5 + 0.0*x6))), 6) AS s
-                FROM f, nn),
-         w1 AS (SELECT
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
-           FROM s1),
-         s2 AS (SELECT f.*, nn.n, w.*,
-                       round(1.0 / (1.0 + exp(-(w.wb + w.w0*x0 + w.w1*x1 + w.w2*x2
-                         + w.w3*x3 + w.w4*x4 + w.w5*x5 + w.w6*x6))), 6) AS s
-                FROM f, nn, w1 w),
-         w2 AS (SELECT
-             round(any_value(wb) - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
-             round(any_value(w0) - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
-             round(any_value(w1) - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
-             round(any_value(w2) - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
-             round(any_value(w3) - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
-             round(any_value(w4) - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
-             round(any_value(w5) - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
-             round(any_value(w6) - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
-           FROM s2),
-         s3 AS (SELECT f.*, nn.n, w.*,
-                       round(1.0 / (1.0 + exp(-(w.wb + w.w0*x0 + w.w1*x1 + w.w2*x2
-                         + w.w3*x3 + w.w4*x4 + w.w5*x5 + w.w6*x6))), 6) AS s
-                FROM f, nn, w2 w),
-         w3 AS (SELECT
-             round(any_value(wb) - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
-             round(any_value(w0) - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
-             round(any_value(w1) - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
-             round(any_value(w2) - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
-             round(any_value(w3) - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
-             round(any_value(w4) - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
-             round(any_value(w5) - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
-             round(any_value(w6) - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
-           FROM s3)
+         $GdIterationCtes
          SELECT feature, weight FROM (
            SELECT 'bias' AS feature, wb AS weight FROM w3
            UNION ALL SELECT 'sql', w0 FROM w3
@@ -813,7 +771,7 @@ object CurationOps {
         .run(s),
       // Same three training iterations, then per-doc sigmoid scoring with
       // the final weights (identical literal fold order).
-      """WITH f AS (
+      raw"""WITH f AS (
            SELECT doc_id,
                   CAST(list_contains(w, 'spark') AS INT) AS y,
                   CAST(list_contains(w, 'sql') AS INT) AS x0,
@@ -825,49 +783,7 @@ object CurationOps {
                   CAST(list_contains(w, 'stream') AS INT) AS x6
            FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
                  FROM documents)),
-         nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f),
-         s1 AS (SELECT f.*, nn.n,
-                       round(1.0 / (1.0 + exp(-(0.0 + 0.0*x0 + 0.0*x1 + 0.0*x2
-                         + 0.0*x3 + 0.0*x4 + 0.0*x5 + 0.0*x6))), 6) AS s
-                FROM f, nn),
-         w1 AS (SELECT
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
-             round(0.0 - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
-           FROM s1),
-         s2 AS (SELECT f.*, nn.n, w.*,
-                       round(1.0 / (1.0 + exp(-(w.wb + w.w0*x0 + w.w1*x1 + w.w2*x2
-                         + w.w3*x3 + w.w4*x4 + w.w5*x5 + w.w6*x6))), 6) AS s
-                FROM f, nn, w1 w),
-         w2 AS (SELECT
-             round(any_value(wb) - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
-             round(any_value(w0) - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
-             round(any_value(w1) - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
-             round(any_value(w2) - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
-             round(any_value(w3) - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
-             round(any_value(w4) - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
-             round(any_value(w5) - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
-             round(any_value(w6) - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
-           FROM s2),
-         s3 AS (SELECT f.*, nn.n, w.*,
-                       round(1.0 / (1.0 + exp(-(w.wb + w.w0*x0 + w.w1*x1 + w.w2*x2
-                         + w.w3*x3 + w.w4*x4 + w.w5*x5 + w.w6*x6))), 6) AS s
-                FROM f, nn, w2 w),
-         w3 AS (SELECT
-             round(any_value(wb) - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
-             round(any_value(w0) - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
-             round(any_value(w1) - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
-             round(any_value(w2) - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
-             round(any_value(w3) - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
-             round(any_value(w4) - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
-             round(any_value(w5) - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
-             round(any_value(w6) - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
-           FROM s3)
+         $GdIterationCtes
          SELECT doc_id, p, p >= 0.5 AS pred FROM (
            SELECT f.doc_id,
                   round(1.0 / (1.0 + exp(-(w.wb + w.w0*x0 + w.w1*x1 + w.w2*x2
@@ -2083,6 +1999,55 @@ object CurationOps {
          SELECT lang, token, n, rank FROM r WHERE rank <= 5
          ORDER BY lang, rank"""),
   )
+
+  /** The classifier oracles' three unrolled gradient-descent iterations
+    * over the feature rows `f(y, x0..x6)`: logits folded in a fixed
+    * feature order, 6-dp sigmoids, exact integer micro-gradient sums,
+    * weights `w1`..`w3` re-rounded to 6 dp. */
+  private val GdIterationCtes: String =
+    """nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f),
+         s1 AS (SELECT f.*, nn.n,
+                       round(1.0 / (1.0 + exp(-(0.0 + 0.0*x0 + 0.0*x1 + 0.0*x2
+                         + 0.0*x3 + 0.0*x4 + 0.0*x5 + 0.0*x6))), 6) AS s
+                FROM f, nn),
+         w1 AS (SELECT
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
+             round(0.0 - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
+           FROM s1),
+         s2 AS (SELECT f.*, nn.n, w.*,
+                       round(1.0 / (1.0 + exp(-(w.wb + w.w0*x0 + w.w1*x1 + w.w2*x2
+                         + w.w3*x3 + w.w4*x4 + w.w5*x5 + w.w6*x6))), 6) AS s
+                FROM f, nn, w1 w),
+         w2 AS (SELECT
+             round(any_value(wb) - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
+             round(any_value(w0) - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
+             round(any_value(w1) - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
+             round(any_value(w2) - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
+             round(any_value(w3) - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
+             round(any_value(w4) - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
+             round(any_value(w5) - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
+             round(any_value(w6) - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
+           FROM s2),
+         s3 AS (SELECT f.*, nn.n, w.*,
+                       round(1.0 / (1.0 + exp(-(w.wb + w.w0*x0 + w.w1*x1 + w.w2*x2
+                         + w.w3*x3 + w.w4*x4 + w.w5*x5 + w.w6*x6))), 6) AS s
+                FROM f, nn, w2 w),
+         w3 AS (SELECT
+             round(any_value(wb) - (CAST(sum(CAST(floor((s - y) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS wb,
+             round(any_value(w0) - (CAST(sum(CAST(floor((s - y) * x0 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w0,
+             round(any_value(w1) - (CAST(sum(CAST(floor((s - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w1,
+             round(any_value(w2) - (CAST(sum(CAST(floor((s - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w2,
+             round(any_value(w3) - (CAST(sum(CAST(floor((s - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w3,
+             round(any_value(w4) - (CAST(sum(CAST(floor((s - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w4,
+             round(any_value(w5) - (CAST(sum(CAST(floor((s - y) * x5 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w5,
+             round(any_value(w6) - (CAST(sum(CAST(floor((s - y) * x6 * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0) / any_value(n) + 0.0, 6) AS w6
+           FROM s3)"""
   /** The q_url_parse fixture url per document: userinfo, ports,
     * multi-label ccTLD suffixes and query strings, a closed form of
     * (doc_id, source, lang). doc_id % 13 == 11 rows get a bare host that

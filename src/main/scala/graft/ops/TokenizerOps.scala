@@ -319,7 +319,7 @@ object TokenizerOps {
       // counts from the current symbol encoding, argmaxes with the same
       // (n DESC, pair) tie-break, and applies the merge with the same
       // boundary-exact string replace over the ';a;;b;' encoding.
-      """WITH w AS (
+      raw"""WITH w AS (
            SELECT unnest(regexp_split_to_array(
                     trim(regexp_replace(lower(nfc_normalize(text)), '[^\p{L}]+', ' ', 'g')),
                     '\s+')) AS w
@@ -330,35 +330,7 @@ object TokenizerOps {
          e0 AS (
            SELECT ';' || regexp_replace(w, '(.)', '\1;;', 'g') || '_;' AS e, f
            FROM wf),
-         s1 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e0),
-         p1 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s1),
-         b1 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p1
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
-         e1 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e0, b1 b),
-         s2 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e1),
-         p2 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s2),
-         b2 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p2
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
-         e2 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e1, b2 b),
-         s3 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e2),
-         p3 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s3),
-         b3 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p3
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
-         e3 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e2, b3 b),
-         s4 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e3),
-         p4 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s4),
-         b4 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p4
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1)
+         $BpeTrainMerges
          SELECT merge_ix, pair, n FROM (
            SELECT 1 AS merge_ix, pair, n FROM b1
            UNION ALL SELECT 2, pair, n FROM b2
@@ -379,7 +351,7 @@ object TokenizerOps {
       // Byte-level BPE replay: raw whitespace words (no norm, no letter
       // filter), UTF-8 bytes as lowercase hex-pair symbols, then the SAME
       // four unrolled merge iterations as q_bpe_train.
-      """WITH w AS (
+      raw"""WITH w AS (
            SELECT unnest(regexp_split_to_array(text, '\s+')) AS w
            FROM documents),
          wf AS (
@@ -390,35 +362,7 @@ object TokenizerOps {
                     regexp_extract_all(lower(hex(encode(w))), '[0-9a-f]{2}'),
                     ';;') || ';;_;' AS e, f
            FROM wf),
-         s1 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e0),
-         p1 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s1),
-         b1 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p1
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
-         e1 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e0, b1 b),
-         s2 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e1),
-         p2 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s2),
-         b2 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p2
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
-         e2 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e1, b2 b),
-         s3 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e2),
-         p3 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s3),
-         b3 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p3
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
-         e3 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e2, b3 b),
-         s4 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e3),
-         p4 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s4),
-         b4 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p4
-                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1)
+         $BpeTrainMerges
          SELECT merge_ix, pair, n FROM (
            SELECT 1 AS merge_ix, pair, n FROM b1
            UNION ALL SELECT 2, pair, n FROM b2
@@ -437,7 +381,7 @@ object TokenizerOps {
       // Byte-level encoding: the q_bpe_subwords chain (word carried
       // through, final per-word symbol counts joined to per-doc words)
       // over the byte-hex seed and raw whitespace words.
-      """WITH w AS (
+      raw"""WITH w AS (
            SELECT unnest(regexp_split_to_array(text, '\s+')) AS w
            FROM documents),
          wf AS (
@@ -448,40 +392,7 @@ object TokenizerOps {
                     regexp_extract_all(lower(hex(encode(w))), '[0-9a-f]{2}'),
                     ';;') || ';;_;' AS e, f
            FROM wf),
-         s1 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e0),
-         p1 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s1),
-         b1 AS (SELECT pair FROM p1 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e1 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e0, b1 b),
-         s2 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e1),
-         p2 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s2),
-         b2 AS (SELECT pair FROM p2 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e2 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e1, b2 b),
-         s3 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e2),
-         p3 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s3),
-         b3 AS (SELECT pair FROM p3 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e3 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e2, b3 b),
-         s4 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e3),
-         p4 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s4),
-         b4 AS (SELECT pair FROM p4 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e4 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e3, b4 b),
-         vs AS (SELECT w, CAST(len(string_split(trim(e, ';'), ';;')) AS BIGINT) AS ns
-                FROM e4),
+         $BpeEncodeMerges
          dw AS (
            SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS w
            FROM documents)
@@ -553,7 +464,7 @@ object TokenizerOps {
         .run(s),
       // Same four training iterations (word column carried through), then
       // per-word merged-symbol counts joined back to per-document words.
-      """WITH w AS (
+      raw"""WITH w AS (
            SELECT unnest(regexp_split_to_array(
                     trim(regexp_replace(lower(nfc_normalize(text)), '[^\p{L}]+', ' ', 'g')),
                     '\s+')) AS w
@@ -564,40 +475,7 @@ object TokenizerOps {
          e0 AS (
            SELECT w, ';' || regexp_replace(w, '(.)', '\1;;', 'g') || '_;' AS e, f
            FROM wf),
-         s1 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e0),
-         p1 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s1),
-         b1 AS (SELECT pair FROM p1 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e1 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e0, b1 b),
-         s2 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e1),
-         p2 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s2),
-         b2 AS (SELECT pair FROM p2 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e2 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e1, b2 b),
-         s3 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e2),
-         p3 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s3),
-         b3 AS (SELECT pair FROM p3 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e3 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e2, b3 b),
-         s4 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e3),
-         p4 AS (SELECT unnest(list_transform(range(1, len(s)),
-                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s4),
-         b4 AS (SELECT pair FROM p4 GROUP BY 1
-                ORDER BY sum(f) DESC, pair LIMIT 1),
-         e4 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
-                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
-                FROM e3, b4 b),
-         vs AS (SELECT w, CAST(len(string_split(trim(e, ';'), ';;')) AS BIGINT) AS ns
-                FROM e4),
+         $BpeEncodeMerges
          dw AS (
            SELECT doc_id, unnest(regexp_split_to_array(
                     trim(regexp_replace(lower(nfc_normalize(text)), '[^\p{L}]+', ' ', 'g')),
@@ -977,6 +855,78 @@ object TokenizerOps {
                      AS BIGINT) AS n_tokens
          FROM sl ORDER BY shard, seq_id, doc_id"""),
   )
+
+  /** The BPE encoding oracles' four unrolled merges over `e0(w, e, f)`,
+    * ending in `vs(w, ns)`: each distinct word's final symbol count. */
+  private val BpeEncodeMerges: String =
+    """s1 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e0),
+         p1 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s1),
+         b1 AS (SELECT pair FROM p1 GROUP BY 1
+                ORDER BY sum(f) DESC, pair LIMIT 1),
+         e1 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
+                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
+                FROM e0, b1 b),
+         s2 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e1),
+         p2 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s2),
+         b2 AS (SELECT pair FROM p2 GROUP BY 1
+                ORDER BY sum(f) DESC, pair LIMIT 1),
+         e2 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
+                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
+                FROM e1, b2 b),
+         s3 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e2),
+         p3 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s3),
+         b3 AS (SELECT pair FROM p3 GROUP BY 1
+                ORDER BY sum(f) DESC, pair LIMIT 1),
+         e3 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
+                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
+                FROM e2, b3 b),
+         s4 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e3),
+         p4 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s4),
+         b4 AS (SELECT pair FROM p4 GROUP BY 1
+                ORDER BY sum(f) DESC, pair LIMIT 1),
+         e4 AS (SELECT w, replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
+                                  ';' || replace(b.pair, ' ', '') || ';') AS e, f
+                FROM e3, b4 b),
+         vs AS (SELECT w, CAST(len(string_split(trim(e, ';'), ';;')) AS BIGINT) AS ns
+                FROM e4),"""
+
+  /** The BPE training oracles' four unrolled merge iterations over the
+    * `;sym;;sym;` word encoding `e0(e, f)`: pair counts, the best pair
+    * (count desc, pair asc) as `b1`..`b4`, and a boundary-exact replace. */
+  private val BpeTrainMerges: String =
+    """s1 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e0),
+         p1 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s1),
+         b1 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p1
+                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
+         e1 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
+                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
+                FROM e0, b1 b),
+         s2 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e1),
+         p2 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s2),
+         b2 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p2
+                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
+         e2 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
+                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
+                FROM e1, b2 b),
+         s3 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e2),
+         p3 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s3),
+         b3 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p3
+                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1),
+         e3 AS (SELECT replace(e, ';' || replace(b.pair, ' ', ';;') || ';',
+                               ';' || replace(b.pair, ' ', '') || ';') AS e, f
+                FROM e2, b3 b),
+         s4 AS (SELECT string_split(trim(e, ';'), ';;') AS s, f FROM e3),
+         p4 AS (SELECT unnest(list_transform(range(1, len(s)),
+                        j -> s[j] || ' ' || s[j+1])) AS pair, f FROM s4),
+         b4 AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM p4
+                GROUP BY 1 ORDER BY n DESC, pair LIMIT 1)"""
 
   /** Unicode fixture corpus for the tokenizer-path queries: decompose
     * every 'e' into e + U+0301 (NFC must re-compose it) and swap 'a' for
