@@ -344,33 +344,7 @@ object LmOps {
       // rounded via round(log2(x), 6), per-doc fold over `ORDER BY b` =
       // the native's ascending-slot order, first-element-equivalent 0.0
       // seed (all terms strictly negative), same final 6-dp round.
-      """WITH norm AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '[^a-z]+', ' ', 'g')) AS t
-           FROM documents),
-         tpos AS (
-           SELECT doc_id, t, unnest(range(1, length(t))) AS i FROM norm),
-         tg AS (
-           SELECT substring(t, i, 2) AS b, CAST(count(*) AS BIGINT) AS n
-           FROM tpos WHERE doc_id % 10 < 8 GROUP BY 1),
-         mg AS (
-           SELECT substring(b, 1, 1) AS c1, sum(n) AS m FROM tg GROUP BY 1),
-         model AS (
-           SELECT b, round(log2((n + 0.5) / (m + 13.5)) + 0.0, 6) AS term
-           FROM tg JOIN mg ON substring(tg.b, 1, 1) = mg.c1),
-         fb AS (
-           SELECT c1, round(log2(0.5 / (m + 13.5)) + 0.0, 6) AS fterm FROM mg),
-         dg AS (
-           SELECT doc_id, substring(t, i, 2) AS b, count(*) AS n
-           FROM tpos GROUP BY 1, 2),
-         terms AS (
-           SELECT dg.doc_id, dg.b,
-                  dg.n * coalesce(model.term, fb.fterm,
-                                  round(log2(0.5 / 13.5) + 0.0, 6)) AS v
-           FROM dg LEFT JOIN model ON dg.b = model.b
-                   LEFT JOIN fb ON substring(dg.b, 1, 1) = fb.c1),
-         sc AS (
-           SELECT doc_id, list_reduce(list(v ORDER BY b), (a, x) -> a + x) AS sm
-           FROM terms GROUP BY doc_id)
+      raw"""WITH $CharBigramCtes
          SELECT n2.doc_id,
                 CASE WHEN length(n2.t) < 2 THEN 0.0
                      ELSE round(-(sc.sm) / CAST(length(n2.t) - 1 AS DOUBLE) + 0.0, 6)
@@ -416,7 +390,30 @@ object LmOps {
       // Same scored CTE, then CCNet head/middle/tail by cutoffs from the
       // 6-dp-quantized value histogram (integer ceil-division targets, so
       // the bucket SETS match bit-for-bit, not just the proportions).
-      """WITH norm AS (
+      raw"""WITH $CharBigramCtes,
+         scored AS (
+           SELECT n2.doc_id,
+                  CASE WHEN length(n2.t) < 2 THEN 0.0
+                       ELSE round(-(sc.sm) / CAST(length(n2.t) - 1 AS DOUBLE) + 0.0, 6)
+                  END AS bits
+           FROM norm n2 LEFT JOIN sc USING (doc_id)),
+         hist AS (SELECT bits, CAST(count(*) AS BIGINT) AS cnt FROM scored GROUP BY 1),
+         cum AS (SELECT bits, cnt, sum(cnt) OVER (ORDER BY bits) AS cum,
+                        sum(cnt) OVER () AS tot FROM hist),
+         cuts AS (SELECT min(CASE WHEN cum >= (tot + 2) // 3 THEN bits END) AS c1,
+                         min(CASE WHEN cum >= (tot * 2 + 2) // 3 THEN bits END) AS c2
+                  FROM cum)
+         SELECT CASE WHEN bits <= c1 THEN 1 WHEN bits <= c2 THEN 2 ELSE 3 END AS bucket,
+                count(*) AS n, min(bits) AS min_bits, max(bits) AS max_bits
+         FROM scored, cuts GROUP BY 1 ORDER BY 1"""),
+  )
+
+  /** The char-bigram perplexity oracles' model and per-doc sums: letters
+    * normalized, an add-0.5 bigram model trained on the doc_id % 10 < 8
+    * slice with a per-first-letter fallback, and each doc's term sum
+    * folded in ascending bigram order as `sc(doc_id, sm)`. */
+  private val CharBigramCtes: String =
+    """norm AS (
            SELECT doc_id, trim(regexp_replace(lower(text), '[^a-z]+', ' ', 'g')) AS t
            FROM documents),
          tpos AS (
@@ -442,23 +439,7 @@ object LmOps {
                    LEFT JOIN fb ON substring(dg.b, 1, 1) = fb.c1),
          sc AS (
            SELECT doc_id, list_reduce(list(v ORDER BY b), (a, x) -> a + x) AS sm
-           FROM terms GROUP BY doc_id),
-         scored AS (
-           SELECT n2.doc_id,
-                  CASE WHEN length(n2.t) < 2 THEN 0.0
-                       ELSE round(-(sc.sm) / CAST(length(n2.t) - 1 AS DOUBLE) + 0.0, 6)
-                  END AS bits
-           FROM norm n2 LEFT JOIN sc USING (doc_id)),
-         hist AS (SELECT bits, CAST(count(*) AS BIGINT) AS cnt FROM scored GROUP BY 1),
-         cum AS (SELECT bits, cnt, sum(cnt) OVER (ORDER BY bits) AS cum,
-                        sum(cnt) OVER () AS tot FROM hist),
-         cuts AS (SELECT min(CASE WHEN cum >= (tot + 2) // 3 THEN bits END) AS c1,
-                         min(CASE WHEN cum >= (tot * 2 + 2) // 3 THEN bits END) AS c2
-                  FROM cum)
-         SELECT CASE WHEN bits <= c1 THEN 1 WHEN bits <= c2 THEN 2 ELSE 3 END AS bucket,
-                count(*) AS n, min(bits) AS min_bits, max(bits) AS max_bits
-         FROM scored, cuts GROUP BY 1 ORDER BY 1"""),
-  )
+           FROM terms GROUP BY doc_id)"""
 
   /** Persisted order-5 Kneser-Ney model fit on the doc_id % 4 == 0
     * quarter: the train-once model the KN serve queries score and

@@ -616,17 +616,7 @@ object MultimodalOps {
       // (row_number per bucket over index rows only), new side = ids 0..7
       // uncapped; pairs = new × index band candidates, popcount verify.
       (s"""WITH $ImageDhashCtes,
-         idx AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes WHERE id >= 8)
-           WHERE br <= 2),
-         neu AS (SELECT id, byy, bv FROM bytes WHERE id < 8),
-         cand AS (
-           SELECT DISTINCT n.id AS a_id, i.id AS b_id
-           FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
+         $IndexedCandCtes
          $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
@@ -918,17 +908,7 @@ object MultimodalOps {
       // image spectral incremental twin: same new x capped-index
       // candidate + popcount tail over the IMAGE spectral closed-form bytes
       (s"""WITH $ImageSpectralCtes,
-         idx AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes WHERE id >= 8)
-           WHERE br <= 2),
-         neu AS (SELECT id, byy, bv FROM bytes WHERE id < 8),
-         cand AS (
-           SELECT DISTINCT n.id AS a_id, i.id AS b_id
-           FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
+         $IndexedCandCtes
          $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
@@ -1028,17 +1008,7 @@ object MultimodalOps {
       // new = ids 0..7, same new x index candidate + popcount tail as
       // q_image_neardup_incr over the audio closed-form bytes.
       (s"""WITH $AudioDhashCtes,
-         idx AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes WHERE id >= 8)
-           WHERE br <= 2),
-         neu AS (SELECT id, byy, bv FROM bytes WHERE id < 8),
-         cand AS (
-           SELECT DISTINCT n.id AS a_id, i.id AS b_id
-           FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
+         $IndexedCandCtes
          $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
@@ -1065,17 +1035,7 @@ object MultimodalOps {
       // spectral incremental twin: same new x capped-index candidate +
       // popcount tail over the SPECTRAL closed-form bytes
       (s"""WITH $AudioSpectralCtes,
-         idx AS (
-           SELECT id, byy, bv
-           FROM (SELECT id, byy, bv,
-                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
-                          AS br
-                 FROM bytes WHERE id >= 8)
-           WHERE br <= 2),
-         neu AS (SELECT id, byy, bv FROM bytes WHERE id < 8),
-         cand AS (
-           SELECT DISTINCT n.id AS a_id, i.id AS b_id
-           FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),
+         $IndexedCandCtes
          $HammingCtes
          SELECT a_id, b_id, hamming FROM ham
          WHERE hamming <= 6 ORDER BY a_id, b_id""")),
@@ -1130,6 +1090,23 @@ object MultimodalOps {
          SELECT min(id) AS doc_id, hash_key
          FROM keys GROUP BY hash_key ORDER BY doc_id""")),
   )
+
+  /** [[CappedCandCtes]]'s incremental twin: the index side (ids 8..23)
+    * keeps its 2 lowest ids per bucket at build time, the new side (ids
+    * 0..7) is uncapped, and candidates are new × index pairs sharing a
+    * bucket. */
+  private val IndexedCandCtes: String =
+    """idx AS (
+           SELECT id, byy, bv
+           FROM (SELECT id, byy, bv,
+                        row_number() OVER (PARTITION BY byy, bv ORDER BY id)
+                          AS br
+                 FROM bytes WHERE id >= 8)
+           WHERE br <= 2),
+         neu AS (SELECT id, byy, bv FROM bytes WHERE id < 8),
+         cand AS (
+           SELECT DISTINCT n.id AS a_id, i.id AS b_id
+           FROM neu n JOIN idx i ON n.byy = i.byy AND n.bv = i.bv),"""
 
   /** The capped band join of the near-dup oracles, after a CTE chain
     * ending in `bytes(id, byy, bv)`: each (band, byte value) bucket keeps
