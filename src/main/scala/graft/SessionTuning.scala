@@ -28,7 +28,7 @@ package graft
   */
 object SessionTuning {
   /** The spark.local.dir value to configure, if any. */
-  def fastLocalDir: Option[String] =
+  private def fastLocalDir: Option[String] =
     if (sys.env.contains("SPARK_LOCAL_DIRS")) None
     else sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
       val shm = new java.io.File("/dev/shm")
@@ -44,7 +44,7 @@ object SessionTuning {
     * is attributable — SPARK_GRAFT_LOCAL_DIR / SPARK_LOCAL_DIRS are the
     * escape hatches for spill-heavy runs (e.g. ScaleCheck at large
     * factors). */
-  def apply(b: org.apache.spark.sql.SparkSession.Builder)
+  private def apply(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder =
     fastLocalDir match {
       case Some(d) =>

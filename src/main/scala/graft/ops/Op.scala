@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class Op(
     val name: String,
     val query: (SparkSession, String) => DataFrame,
-    oracleSql: => String) {
-  lazy val oracle: String = oracleSql
+    sql: => String) {
+  lazy val oracle: String = sql
 }
 
 object Op {
