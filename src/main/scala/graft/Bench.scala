@@ -66,127 +66,12 @@ object Bench {
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpu_s":$totalCpu%.3f,"n_reruns":$nRerun,"n_queries":$nQueries,"host_drift":$drift%.2f,"queries":$qs,"sf":$sfNum}"""
   }
 
-  /** A sweep's outcome: per query (wall, cpu, nRuns, rawWallIfEscalated),
-    * the queries that threw, the canary walls and the host drift. */
-  final case class Sweep(
-      results: Seq[(String, (Double, Double, Int, Option[Double]))],
-      failed: Seq[String],
-      canaryWalls: Seq[Double],
-      drift: Double) {
-    def total: Double = results.map(_._2._1).sum
-    def totalCpu: Double = results.map(_._2._2).sum
-  }
-
-  /** Times `queries` on `sfDir`, with stall protection against the
-    * recorded per-query `baseline` walls. */
-  final class Runner(
-      spark: SparkSession,
-      sfDir: String,
-      queries: Map[String, (SparkSession, String) => DataFrame],
-      baseline: Map[String, Double]) {
-    private val failedNames = scala.collection.mutable.LinkedHashSet[String]()
-    def failed: Seq[String] = failedNames.toSeq
-
-    /** One timed run: (wall seconds, process-CPU seconds). A query that
-      * throws is recorded in [[failed]] and still charged the time it ran,
-      * so a crash can never make a sweep look faster. CPU is the whole-JVM
-      * delta — all local executor threads plus the driver — so cpu/wall ≈
-      * effective parallelism when healthy and collapses toward 0 when the
-      * host stalls under the JVM. */
-    def exec(name: String): (Double, Double) = {
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      try queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failedNames += name
-      }
-      finally llm.CacheScope.global.release() // each query re-caches its own
-                                              // frames inside its timed run
-      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
-    }
-
-    /** A first measurement is suspect when the JVM was idle for most of
-      * the wall it was charged (host stall signature: even a fully skewed
-      * single-thread query keeps cpu ≈ wall), or simply extreme — the
-      * slowest legitimate steady-state query is ~5 s at sf0.1, so
-      * anything above gets a median-of-3 (this also smooths first-run
-      * JIT/GC churn on the heavy tail) — or 1.5× over its recorded
-      * steady-state baseline (with a 0.5 s floor so micro-query jitter
-      * does not triple-run the whole sweep). */
-    private def suspect(name: String, wall: Double, cpu: Double): Boolean =
-      (wall > 1.0 && cpu < 0.5 * wall) || wall > 5.0 ||
-        baseline.get(name).exists(b => wall > 1.5 * b && wall > 0.5)
-
-    /** Measure with stall protection: re-run suspect timings (two extra
-      * runs) and take the median wall with its paired cpu. Returns
-      * (wall, cpu, nRuns). A failed query keeps its first timing. */
-    private def measure(name: String): (Double, Double, Int) = {
-      val first = exec(name)
-      if (failedNames(name) || !suspect(name, first._1, first._2))
-        (first._1, first._2, 1)
-      else {
-        val runs = first +: Seq.fill(2)(exec(name))
-        if (failedNames(name)) (first._1, first._2, 3)
-        else { val (w, c) = runs.sortBy(_._1)(Ordering.Double.TotalOrdering)
-                 .apply(1); (w, c, 3) }
-      }
-    }
-
-    /** The full single-pass sweep over every query, sorted by name.
-      *
-      * CANARY drift normalization (r15 verdict #1): the driver sweep can
-      * ride a sustained host-stall window that survives the inline
-      * median-of-3 (r15 recorded 26×/22× rows that 3-pass steady-state
-      * disproved). A fixed trivial query — code-stable across rounds, one
-      * scan + filter — is re-measured every ~20 queries; its median ratio
-      * vs its OWN recorded baseline estimates how slow the HOST was during
-      * this sweep (the canary's code didn't change — the host did). Ratios
-      * are reported raw AND drift-normalized, and any row whose NORMALIZED
-      * ratio still exceeds 1.5× is escalated to a fresh min-of-3 remeasure
-      * at sweep end (min, not median: this path exists to discount stall
-      * inflation, never to amplify it). */
-    def sweep(canary: String): Sweep = {
-      val canaryWalls = scala.collection.mutable.ArrayBuffer[Double]()
-      val results0 = queries.keys.toSeq.sorted.zipWithIndex.map {
-        case (n, i) =>
-          if (i % 20 == 0 && n != canary && queries.contains(canary))
-            canaryWalls += exec(canary)._1
-          n -> measure(n)
-      }
-      // clamped at 1.0: a healthy (or faster-than-baseline) host must never
-      // normalize a real regression away
-      val drift = baseline.get(canary).filter(_ => canaryWalls.nonEmpty)
-        .map { b =>
-          val s = canaryWalls.sorted
-          math.max(1.0, s((s.size - 1) / 2) / b)
-        }.getOrElse(1.0)
-      // (wall, cpu, nRuns, rawWallIfEscalated): when the sweep-end min-of-3
-      // REPLACES a churned wall, the original survives as `wall_raw` in the
-      // artifacts so the adjudication is visible, not silent
-      val results = results0.map { case (n, (w, c, r)) =>
-        val suspectNorm = !failedNames(n) &&
-          baseline.get(n).exists(b => w / b / drift > 1.5 && w > 0.5)
-        if (!suspectNorm) n -> (w, c, r, None: Option[Double])
-        else {
-          val runs = Seq.fill(3)(exec(n))
-          val best = runs.minBy(_._1)(Ordering.Double.TotalOrdering)
-          if (!failedNames(n) && best._1 < w)
-            n -> (best._1, best._2, r + runs.size, Some(w))
-          else n -> (w, c, r + runs.size, None: Option[Double])
-        }
-      }
-      Sweep(results, failed, canaryWalls.toSeq, drift)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // log level ERROR, not WARN: the driver parses the single JSON line
-    // out of the combined sbt capture, and late-relayed WARN lines
-    // (block-manager re-adds etc.) can interleave after it
+    // ERROR, not WARN: the driver parses the single JSON line out of the
+    // combined sbt capture, and late-relayed WARN lines (block-manager
+    // re-adds etc.) can interleave after it — silence them at the source
     val spark = SessionTuning.session(cpus)
 
     // Per-query steady-state WALL RATCHET (sf0.1 sweeps): wall > 1.5× the
@@ -247,6 +132,17 @@ object Bench {
       return
     }
 
+    // CANARY drift normalization (r15 verdict #1): the driver sweep can
+    // ride a sustained host-stall window that survives the inline
+    // median-of-3 (r15 recorded 26×/22× rows that 3-pass steady-state
+    // disproved). A fixed trivial query — code-stable across rounds, one
+    // scan + filter — is re-measured every ~20 queries; its median ratio
+    // vs its OWN recorded baseline estimates how slow the HOST was during
+    // this sweep (the canary's code didn't change — the host did). Ratios
+    // are reported raw AND drift-normalized, and any row whose NORMALIZED
+    // ratio still exceeds 1.5× is escalated to a fresh min-of-3 remeasure
+    // at sweep end (min, not median: this path exists to discount stall
+    // inflation, never to amplify it).
     val canary = "q_contains_any"
     val sweep = runner.sweep(canary)
     // `failed` holds every query that threw in this runner, warm-up included
@@ -338,5 +234,109 @@ object Bench {
     spark.stop()
     // the compact line stays parseable; the exit status carries the failure
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** A sweep's outcome: per query (wall, cpu, nRuns, rawWallIfEscalated),
+    * the queries that threw, the canary walls and the host drift. */
+  final case class Sweep(
+      results: Seq[(String, (Double, Double, Int, Option[Double]))],
+      failed: Seq[String],
+      canaryWalls: Seq[Double],
+      drift: Double) {
+    def total: Double = results.map(_._2._1).sum
+    def totalCpu: Double = results.map(_._2._2).sum
+  }
+
+  /** Times `queries` on `sfDir`, with stall protection against the
+    * recorded per-query `baseline` walls. */
+  final class Runner(
+      spark: SparkSession,
+      sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      baseline: Map[String, Double]) {
+    private val failedNames = scala.collection.mutable.LinkedHashSet[String]()
+    def failed: Seq[String] = failedNames.toSeq
+
+    /** One timed run: (wall seconds, process-CPU seconds), still charged on
+      * failure. CPU is the whole-JVM delta — all 32 local executor threads
+      * plus the driver — so cpu/wall ≈ effective parallelism when healthy
+      * and collapses toward 0 when the host stalls under the JVM. A query
+      * that throws is recorded in [[failed]]: a crash never makes a sweep
+      * look faster. */
+    def exec(name: String): (Double, Double) = {
+      val c0 = osBean.getProcessCpuTime
+      val t0 = System.nanoTime()
+      try queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failedNames += name
+      }
+      finally llm.CacheScope.global.release() // each query re-caches its own
+                                              // frames inside its timed run
+      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
+    }
+
+    /** A first measurement is suspect when the JVM was idle for most of
+      * the wall it was charged (host stall signature: even a fully skewed
+      * single-thread query keeps cpu ≈ wall), or simply extreme — the
+      * slowest legitimate steady-state query is ~5 s at sf0.1, so
+      * anything above gets a median-of-3 (this also smooths first-run
+      * JIT/GC churn on the heavy tail) — or 1.5× over its recorded
+      * steady-state baseline (with a 0.5 s floor so micro-query jitter
+      * does not triple-run the whole sweep). */
+    private def suspect(name: String, wall: Double, cpu: Double): Boolean =
+      (wall > 1.0 && cpu < 0.5 * wall) || wall > 5.0 ||
+        baseline.get(name).exists(b => wall > 1.5 * b && wall > 0.5)
+
+    /** Measure with stall protection: re-run suspect timings (two extra
+      * runs) and take the median wall with its paired cpu. Returns
+      * (wall, cpu, nRuns). A failed query keeps its first timing. */
+    private def measure(name: String): (Double, Double, Int) = {
+      val first = exec(name)
+      if (failedNames(name) || !suspect(name, first._1, first._2))
+        (first._1, first._2, 1)
+      else {
+        val runs = first +: Seq.fill(2)(exec(name))
+        if (failedNames(name)) (first._1, first._2, 3)
+        else { val (w, c) = runs.sortBy(_._1)(Ordering.Double.TotalOrdering)
+                 .apply(1); (w, c, 3) }
+      }
+    }
+
+    /** The full single-pass sweep over every query, sorted by name, with
+      * the `canary` query re-measured every 20 queries (see `main`). */
+    def sweep(canary: String): Sweep = {
+      val canaryWalls = scala.collection.mutable.ArrayBuffer[Double]()
+      val results0 = queries.keys.toSeq.sorted.zipWithIndex.map {
+        case (n, i) =>
+          if (i % 20 == 0 && n != canary && queries.contains(canary))
+            canaryWalls += exec(canary)._1
+          n -> measure(n)
+      }
+      // clamped at 1.0: a healthy (or faster-than-baseline) host must never
+      // normalize a real regression away
+      val drift = baseline.get(canary).filter(_ => canaryWalls.nonEmpty)
+        .map { b =>
+          val s = canaryWalls.sorted
+          math.max(1.0, s((s.size - 1) / 2) / b)
+        }.getOrElse(1.0)
+      // (wall, cpu, nRuns, rawWallIfEscalated): when the sweep-end min-of-3
+      // REPLACES a churned wall, the original survives as `wall_raw` in the
+      // artifacts so the adjudication is visible, not silent
+      val results = results0.map { case (n, (w, c, r)) =>
+        val suspectNorm = !failedNames(n) &&
+          baseline.get(n).exists(b => w / b / drift > 1.5 && w > 0.5)
+        if (!suspectNorm) n -> (w, c, r, None: Option[Double])
+        else {
+          val runs = Seq.fill(3)(exec(n))
+          val best = runs.minBy(_._1)(Ordering.Double.TotalOrdering)
+          if (!failedNames(n) && best._1 < w)
+            n -> (best._1, best._2, r + runs.size, Some(w))
+          else n -> (w, c, r + runs.size, None: Option[Double])
+        }
+      }
+      Sweep(results, failed, canaryWalls.toSeq, drift)
+    }
   }
 }

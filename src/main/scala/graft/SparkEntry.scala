@@ -8,9 +8,10 @@ import graft.model.Model
 /** Driver contract — see SURVEY.md §7.
   * Each `queries` entry exercises one operator from SURVEY.md §2 through the
   * graft Model API; `oracleSql` holds the DuckDB-equivalent ANSI SQL the
-  * driver checks against at sf0.01. Both derive from the op registry
-  * ([[ops.Op.registry]]), one `Op` per query with its oracle beside it,
-  * grouped by family under `graft.ops`.
+  * driver checks against at sf0.01. Every persisted artifact a query
+  * serves from is memoized through [[Fixtures]]. Both maps derive from
+  * the op registry ([[ops.Op.registry]]): one `Op` per query with its
+  * oracle beside it, grouped by family under `graft.ops`.
   */
 object SparkEntry {
 

@@ -2057,7 +2057,7 @@ object Multimodal {
 
   /** `ids` (one doc_id column) plus a `payload` column of
     * `fixture(doc_id)`, encoded one partition at a time: the binary
-    * corpus the multimodal driver queries decode. */
+    * corpus the multimodal queries decode. */
   def payloadCorpus(ids: DataFrame, fixture: Long => Array[Byte]): DataFrame =
     ids.mapPartitions { rows =>
       rows.map(r => Row(r.getLong(0), fixture(r.getLong(0))))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{SparkSession, functions => F}
 import graft.funcs._
 import Shared._
 
-/** Embedding driver queries: brute-force and approximate nearest
+/** Embedding queries: brute-force and approximate nearest
   * neighbours (LSH, IVF, PQ, OPQ, SQ8), semantic dedup, bitext mining
   * and kNN labelling. */
 object AnnOps {

@@ -7,7 +7,7 @@ import graft.funcs._
 import graft.model.Model
 import Shared._
 
-/** Corpus-curation driver queries: text filters and cleaners,
+/** Corpus-curation queries: text filters and cleaners,
   * sketches, samplers, mixers, classifiers, language id, drift and
   * search. */
 object CurationOps {

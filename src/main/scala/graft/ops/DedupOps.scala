@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import graft.funcs._
 import Shared._
 
-/** Deduplication driver queries: exact, line, substring, MinHash,
+/** Deduplication queries: exact, line, substring, MinHash,
   * SimHash and n-gram near-dup detection, their persisted indexes,
   * cluster closure and the streaming admission gates. */
 object DedupOps {

@@ -7,7 +7,7 @@ import graft.funcs._
 import graft.model.Model
 import Shared._
 
-/** Link-graph driver queries: PageRank and HITS over synthetic, WARC
+/** Link-graph queries: PageRank and HITS over synthetic, WARC
   * and WAT link graphs, plus incremental PageRank. */
 object GraphOps {
   val ops: Seq[Op] = Seq(

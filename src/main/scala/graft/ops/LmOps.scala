@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.funcs._
 import Shared._
 
-/** Language-model driver queries: Kneser-Ney and Stupid Backoff
+/** Language-model queries: Kneser-Ney and Stupid Backoff
   * n-gram models, their persisted and delta-maintained forms, and
   * perplexity scoring. */
 object LmOps {

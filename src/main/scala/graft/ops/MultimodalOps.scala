@@ -7,7 +7,7 @@ import graft.funcs._
 import graft.llm.Multimodal
 import Shared._
 
-/** Multimodal driver queries: image, GIF, video and audio decoding,
+/** Multimodal queries: image, GIF, video and audio decoding,
   * resampling, and perceptual / spectral near-duplicate detection. */
 object MultimodalOps {
   val ops: Seq[Op] = Seq(

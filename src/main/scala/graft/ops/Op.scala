@@ -3,8 +3,8 @@ package ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One driver query: its name, the Spark query over a data dir, and the
-  * DuckDB SQL the driver checks it against. The oracle sits beside its
+/** One query: its name, the Spark query over a data dir, and the DuckDB
+  * SQL its result is checked against. The oracle sits beside its
   * query with identical column aliases; it is held lazily, so planning a
   * query never builds an oracle string. */
 final class Op(
@@ -30,7 +30,7 @@ object Op {
     ops.map(o => o.name -> o).toMap
   }
 
-  /** Every driver query, by family. */
+  /** Every query, by family. */
   lazy val registry: Map[String, Op] = index(
     RelationalOps.ops ++ SourceOps.ops ++ DedupOps.ops ++ CurationOps.ops ++
       AnnOps.ops ++ LmOps.ops ++ TokenizerOps.ops ++ MultimodalOps.ops ++

@@ -6,7 +6,7 @@ import graft.ir.Expr.{Op => _, _}
 import graft.model.Model
 import Shared._
 
-/** Semantic-layer driver queries: scans, filters, aggregates, joins,
+/** Semantic-layer queries: scans, filters, aggregates, joins,
   * windows, grouping sets, date grains, SQL text, retention, sessions,
   * match-steps and funnels (SURVEY.md §2). */
 object RelationalOps {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import graft.funcs._
 import graft.model.Model
 
-/** Helpers the driver-query families share: the parquet model
+/** Helpers the query families share: the parquet model
   * constructor, money sums, and the fixtures and oracle CTE chains more
   * than one family serves from. */
 private[ops] object Shared {

@@ -7,7 +7,7 @@ import graft.funcs._
 import graft.model.Model
 import Shared._
 
-/** File-source, layout and metric-cache driver queries: CSV/JSON/ORC/
+/** File-source, layout and metric-cache queries: CSV/JSON/ORC/
   * XLSX/WARC readers, z-ordered skipping, stats manifests and the
   * maintained metric caches. */
 object SourceOps {

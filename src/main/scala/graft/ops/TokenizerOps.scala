@@ -6,7 +6,7 @@ import org.apache.spark.sql.{functions => F}
 import graft.funcs._
 import Shared._
 
-/** Tokenizer driver queries: BPE (word and byte level), WordPiece
+/** Tokenizer queries: BPE (word and byte level), WordPiece
   * and unigram training and encoding, tokenizer reports, chunking and
   * sequence packing. */
 object TokenizerOps {
@@ -953,7 +953,7 @@ object TokenizerOps {
     * arithmetic), picks (score DESC, pair ASC), and applies the merge via
     * the `;sym;` delimiter replace (the q_bpe_train encoding, first char
     * plain / continuations `##`-prefixed, no end marker). `e*`/`s*`/`y*`/
-    * `b*` are diamond-referenced → AS MATERIALIZED (CLAUDE.md CTE rule). */
+    * `b*` are diamond-referenced → AS MATERIALIZED (the diamond-CTE rule). */
   private def wpTrainCtes(iters: Int): String = {
     val sb = new StringBuilder
     sb ++= s"""w0 AS (

@@ -8,21 +8,21 @@ import org.apache.spark.sql.types.StructType
 
 /** Driver-contract smoke: entry() answers on sf0.001 (the t1 gate). */
 class EntrySpec extends GraftSuite {
-  /** Every query's output schema and physical plan, planned ONCE at
-    * sf0.001 (plan shape is SF-independent) and shared by the whole-suite
-    * lints below; each query's cached frames are released as soon as it
-    * has planned. */
-  private lazy val planned: Seq[(String, StructType, SparkPlan)] = {
-    val dir = "/root/testdata/sf0.001"
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
-      try {
-        val df = q(spark, dir)
-        (name, df.schema, df.queryExecution.executedPlan)
-      }
-      catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
-      finally llm.CacheScope.global.release()
-    }
-  }
+  /** Every query's output schema and physical plan on `dir`, planned
+    * ONCE and shared by the whole-suite lints below; each query's cached
+    * frames are released as soon as it has planned. */
+  private val plannedOn =
+    scala.collection.mutable.Map[String, Seq[(String, StructType, SparkPlan)]]()
+  private def planned(dir: String): Seq[(String, StructType, SparkPlan)] =
+    plannedOn.getOrElseUpdate(dir,
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+        try {
+          val df = q(spark, dir)
+          (name, df.schema, df.queryExecution.executedPlan)
+        }
+        catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
+        finally llm.CacheScope.global.release()
+      })
 
   test("entry returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
@@ -75,7 +75,8 @@ class EntrySpec extends GraftSuite {
     // the single worst 100TB failure mode. BroadcastNestedLoopJoin is
     // allowed: every intentional crossJoin here broadcasts a 1-row/k-row
     // frame. Runs at sf0.001 (plan shape is SF-independent).
-    val offenders = planned.collect {
+    val dir = "/root/testdata/sf0.001"
+    val offenders = planned(dir).collect {
       case (name, _, plan) if plan.toString.contains("CartesianProduct") => name
     }
     assert(offenders.isEmpty,
@@ -121,7 +122,8 @@ class EntrySpec extends GraftSuite {
       case st: StructType => st.fields.forall(f => stable(f.dataType))
       case _ => false // Float, Decimal, Byte, Short, Map, CalendarInterval…
     }
-    val offenders = planned.flatMap { case (name, schema, _) =>
+    val dir = "/root/testdata/sf0.001"
+    val offenders = planned(dir).flatMap { case (name, schema, _) =>
       schema.fields
         .filterNot(f => stable(f.dataType))
         .map(f => s"$name.${f.name}: ${f.dataType.simpleString}")
@@ -185,7 +187,8 @@ class EntrySpec extends GraftSuite {
       case _ => false
     }
 
-    val offenders = planned.flatMap { case (name, _, plan) =>
+    val dir = "/root/testdata/sf0.001"
+    val offenders = planned(dir).flatMap { case (name, _, plan) =>
       flatten(plan).collect {
         case j: BroadcastNestedLoopJoinExec
             if !oneRowish(if (j.buildSide == BuildLeft) j.left else j.right) =>
@@ -221,7 +224,8 @@ class EntrySpec extends GraftSuite {
         case _ => Seq.empty
       })).flatMap(flatten)
 
-    val counts = planned.map { case (name, _, plan) =>
+    val dir = "/root/testdata/sf0.001"
+    val counts = planned(dir).map { case (name, _, plan) =>
       name -> flatten(plan).count(_.isInstanceOf[ShuffleExchangeExec])
     }
     val budgetFile = new java.io.File("src/test/resources/shuffle_budget.json")
