@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.ir._
 import graft.ir.Expr._
 import graft.model.Model
+import graft.sources.ParquetIO
 
 /** Lowers the graft IR to DataFrame transformations. Catalyst does the real
   * optimization (predicate pushdown, column pruning, join selection, AQE) —
@@ -827,25 +828,21 @@ object Compiler {
       // file connectors by extension (reference duckdb_connection.py:96-117
       // registers csv/json/parquet paths as tables); bare names are
       // registered tables/temp views
-      val df =
-        if (name.endsWith(".csv"))
-          spark.read.option("header", "true").option("inferSchema", "true").csv(name)
-        else if (name.endsWith(".json"))
-          spark.read.json(name)
-        else if (name.endsWith(".orc"))
-          spark.read.orc(name)
-        else if (name.contains("/") || name.endsWith(".parquet"))
-          graft.sources.ParquetIO.read(spark, name)
-        else spark.table(name)
-      new Frame(df)
+      if (name.endsWith(".csv")) compileSource(Source.CsvFile(name), spark)
+      else if (name.endsWith(".json")) compileSource(Source.JsonFile(name), spark)
+      else if (name.endsWith(".orc")) compileSource(Source.OrcFile(name), spark)
+      else if (name.contains("/") || name.endsWith(".parquet"))
+        new Frame(ParquetIO.read(spark, name))
+      else new Frame(spark.table(name))
 
     case Source.SqlQuery(q) => new Frame(spark.sql(q))
     case Source.FromDF(df)  => new Frame(df)
+    // file sources resolve their schema once per file version (ParquetIO)
     case Source.CsvFile(p) =>
-      new Frame(spark.read.option("header", "true")
-        .option("inferSchema", "true").csv(p))
-    case Source.JsonFile(p) => new Frame(spark.read.json(p))
-    case Source.OrcFile(p)  => new Frame(spark.read.orc(p))
+      new Frame(ParquetIO.load(spark, "csv", p,
+        Map("header" -> "true", "inferSchema" -> "true")))
+    case Source.JsonFile(p) => new Frame(ParquetIO.load(spark, "json", p))
+    case Source.OrcFile(p)  => new Frame(ParquetIO.load(spark, "orc", p))
     case Source.XlsxFile(p, sheet) =>
       // pure-JDK codec (ZIP + SAX): header row + pandas-style type
       // inference; yields a LocalRelation that downstream joins broadcast

@@ -1524,7 +1524,7 @@ object AnnOps {
       : (String, String) =
     Fixtures.bucketed(s, "ivf" + attrs.map("_" + _).mkString, dir,
         "__cell__", sub = "postings") { (tbl, path) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = table(s, dir, "embeddings")
       val cents = graft.llm.Embeddings.kmeansFitSqrtK(
         emb, "vec_id", "embedding", iters = 2)
       graft.llm.Embeddings.ivfIndexSave(
@@ -1539,7 +1539,7 @@ object AnnOps {
   private def ivfPqIndex(s: SparkSession, dir: String): (String, String) =
     Fixtures.bucketed(s, "ivfpq", dir, "__cell__", sub = "postings") {
       (tbl, path) =>
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = table(s, dir, "embeddings")
         val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
           emb, "vec_id", "embedding", iters = 2)
         val cb = graft.llm.Embeddings.pqCodebooks(
@@ -1559,7 +1559,7 @@ object AnnOps {
     Fixtures.bucketed(s, "sq8", dir, "vec_id", sub = "postings") {
       (tbl, path) =>
         graft.llm.Embeddings.sq8IndexSave(
-          s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+          table(s, dir, "embeddings"), "vec_id", "embedding",
           dim = 64, tbl, path)
     }
 
@@ -1570,7 +1570,7 @@ object AnnOps {
   private def ivfSq8Index(s: SparkSession, dir: String): (String, String) =
     Fixtures.bucketed(s, "ivfsq8", dir, "__cell__", sub = "postings") {
       (tbl, path) =>
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = table(s, dir, "embeddings")
         val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
           emb, "vec_id", "embedding", iters = 2)
         graft.llm.Embeddings.ivfSq8IndexSave(
@@ -1590,7 +1590,7 @@ object AnnOps {
     // forcing a rebuild of every OTHER memoized fixture
     Fixtures.bucketed(s, "ivfpqr2", dir, "__cell__", sub = "postings") {
       (tbl, path) =>
-        val emb = s.read.parquet(s"$dir/embeddings.parquet")
+        val emb = table(s, dir, "embeddings")
         val coarse = graft.llm.Embeddings.kmeansFitSqrtK(
           emb, "vec_id", "embedding", iters = 2)
         val cb = graft.llm.Embeddings.pqResidualCodebooks(

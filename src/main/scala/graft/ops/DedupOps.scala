@@ -1137,7 +1137,7 @@ object DedupOps {
     Fixtures.bucketed(s, "substr", dir, "__gh__", sub = "postings") {
       (tbl, path) =>
         graft.llm.Dedup.substringIndexSave(
-          s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+          table(s, dir, "documents"), "doc_id", "text",
           minMatchWords = 8, tbl, path)
     }
 
@@ -1151,7 +1151,7 @@ object DedupOps {
       s: SparkSession, dir: String): (String, String) =
     Fixtures.bucketed(s, "substri", dir, "__gh__", sub = "postings") {
       (tbl, path) =>
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = table(s, dir, "documents")
         val half = F.pmod(F.col("doc_id"), F.lit(2L))
         graft.llm.Dedup.substringIndexSave(docs.where(half === 0L),
           "doc_id", "text", minMatchWords = 8, tbl, path)

@@ -149,7 +149,7 @@ object GraphOps {
     * serializes extraction behind one task). */
   private def linksWarcGlob(s: SparkSession, dir: String): String =
     Fixtures.files("links", dir, "*.warc.gz") { tmp =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = table(s, dir, "documents")
         .select("doc_id", "source")
       // fixture-only driver collects: 20 sources, |docs| rows
       val srcs = docs.select("source").distinct()
@@ -181,7 +181,7 @@ object GraphOps {
     * path only: append-shaped delta + 2 warm rounds. */
   private def pageRankIndex(s: SparkSession, dir: String): String =
     Fixtures.dir("pridx", dir) { tmp =>
-      val df = s.read.parquet(s"$dir/documents.parquet")
+      val df = table(s, dir, "documents")
       val n = df.count()
       val base = df.select(F.col("doc_id"))
         .withColumn("j", F.explode(F.sequence(F.lit(1L), F.lit(2L))))

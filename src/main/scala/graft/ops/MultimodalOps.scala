@@ -549,7 +549,7 @@ object MultimodalOps {
               .write.parquet(p)
           }
           graft.llm.Multimodal.imageNearDupPairs(
-            s.read.parquet(payloadDir), "doc_id", "payload", maxHamming = 6,
+            graft.sources.ParquetIO.read(s, payloadDir), "doc_id", "payload", maxHamming = 6,
             maxPerBucketSide = 2)
         }
         .sort(col("a_id")).sort(col("b_id"))
@@ -692,7 +692,7 @@ object MultimodalOps {
               .write.parquet(p)
           }
           graft.llm.Multimodal.videoNearDupPairs(
-            s.read.parquet(payloadDir), "doc_id", "payload", every = 2,
+            graft.sources.ParquetIO.read(s, payloadDir), "doc_id", "payload", every = 2,
             maxHamming = 6, maxPerBucketSide = 2)
         }
         .sort(col("a_id")).sort(col("b_id"))

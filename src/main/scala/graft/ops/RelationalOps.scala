@@ -190,7 +190,7 @@ object RelationalOps {
 
     // --- SqlTextSource (raw-SQL scan) ---
     Op("q_sql_text", (s, dir) => {
-      s.read.parquet(s"$dir/supplier.parquet").createOrReplaceTempView("supplier_v")
+      table(s, dir, "supplier").createOrReplaceTempView("supplier_v")
       Model.sqlQuery(
         "SELECT s_nationkey, s_acctbal FROM supplier_v WHERE s_acctbal > 5000")
         .aggregate(

@@ -1,7 +1,7 @@
 package graft
 package ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.funcs._
 import graft.model.Model
@@ -11,6 +11,11 @@ import graft.model.Model
   * than one family serves from. */
 private[ops] object Shared {
   def m(dir: String, table: String): Model = Model.parquet(dir, table)
+
+  /** Input table `name` of the data dir, read through
+    * [[graft.sources.ParquetIO]] (schema resolved once per file version). */
+  def table(s: SparkSession, dir: String, name: String): DataFrame =
+    graft.sources.ParquetIO.read(s, s"$dir/$name.parquet")
 
   /** MULTI-SHARD WAT fixture — the link-METADATA member of the crawl
     * trio: 8 `.warc.wat.gz` shards, one `metadata` record per doc whose
@@ -23,7 +28,7 @@ private[ops] object Shared {
     * q_pagerank_wat shares q_pagerank_links' oracle. */
   def watGlob(s: SparkSession, dir: String): String =
     Fixtures.files("wat", dir, "*.warc.wat.gz") { tmp =>
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = table(s, dir, "documents")
         .select("doc_id", "source")
       // fixture-only driver collects: 20 sources, |docs| rows
       val srcs = docs.select("source").distinct()

@@ -15,7 +15,7 @@ object SourceOps {
     // --- CSV file connector (round-trips region through CSV) ---
     Op("q_csv_source", (s, dir) => {
       val path = Fixtures.dir("region_csv", dir) { p =>
-        s.read.parquet(s"$dir/region.parquet").coalesce(1)
+        table(s, dir, "region").coalesce(1)
           .write.option("header", "true").csv(p)
       }
       Model.csv(path)
@@ -28,7 +28,7 @@ object SourceOps {
     // --- JSON file connector (round-trips region through JSON lines) ---
     Op("q_json_source", (s, dir) => {
       val path = Fixtures.dir("region_json", dir) { p =>
-        s.read.parquet(s"$dir/region.parquet").coalesce(1).write.json(p)
+        table(s, dir, "region").coalesce(1).write.json(p)
       }
       Model.json(path)
         .pick(cast(col("r_regionkey"), "int").named("r_regionkey"), col("r_name"))
@@ -44,7 +44,7 @@ object SourceOps {
     //     query: spreadsheets are driver-sized by construction. ---
     Op("q_xlsx_source", (s, dir) => {
       val path = Fixtures.files("region_xlsx", dir, "region.xlsx") { p =>
-        val rows = s.read.parquet(s"$dir/region.parquet")
+        val rows = table(s, dir, "region")
           .select("r_regionkey", "r_name").na.drop()
           .collect().sortBy(_.getInt(0))
           .map(r => Seq[Any](r.getInt(0).toLong, r.getString(1))).toSeq
@@ -67,7 +67,7 @@ object SourceOps {
       // fixture is deterministic per data dir — memoized so the bench
       // times the READER, not driver-side fixture (re)construction
       val path = Fixtures.files("docs_warc", dir, "docs.warc.gz") { p =>
-        val rows = s.read.parquet(s"$dir/documents.parquet")
+        val rows = table(s, dir, "documents")
           .select("doc_id", "source", "text")
           .collect().sortBy(_.getLong(0)) // fixture-only driver collect
           .map(r => ("response",
@@ -93,7 +93,7 @@ object SourceOps {
     //     the Model API, no pre-flattened table anywhere ---
     Op("q_warc_pipeline", (s, dir) => {
       val path = Fixtures.files("pipe_warc", dir, "pipe.warc.gz") { p =>
-        val rows = s.read.parquet(s"$dir/documents.parquet")
+        val rows = table(s, dir, "documents")
           .select("doc_id", "source", "text")
           .collect().sortBy(_.getLong(0)) // fixture-only driver collect
           .map { r =>
@@ -228,7 +228,7 @@ object SourceOps {
     //     original: content-identical by construction. ---
     Op("q_orc_source", (s, dir) => {
       val path = Fixtures.dir("supplier_orc", dir) { p =>
-        s.read.parquet(s"$dir/supplier.parquet")
+        table(s, dir, "supplier")
           .select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
           .write.orc(p)
       }
@@ -331,7 +331,7 @@ object SourceOps {
       m(dir, "events")
         .native { df =>
           val zdir = zorderedEvents(s, dir)
-          df.sparkSession.read.parquet(zdir)
+          graft.sources.ParquetIO.read(df.sparkSession, zdir)
             .where(F.col("user_id").between(100L, 300L) &&
               F.col("value").between(10.0, 60.0))
             .agg(F.count(F.lit(1)).as("n_rows"),
@@ -406,7 +406,7 @@ object SourceOps {
       m(dir, "events")
         .native { df =>
           val zdir = zorderedEvents3(s, dir)
-          df.sparkSession.read.parquet(zdir)
+          graft.sources.ParquetIO.read(df.sparkSession, zdir)
             .where(F.col("user_id").between(100L, 300L) &&
               F.col("value").between(10.0, 60.0) &&
               F.col("ts_us") >= 1704672000000000L &&
@@ -656,7 +656,7 @@ object SourceOps {
     * operator. */
   private def wetGlob(s: SparkSession, dir: String): String =
     Fixtures.files("wet", dir, "*.warc.wet.gz") { tmp =>
-      val rows = s.read.parquet(s"$dir/documents.parquet")
+      val rows = table(s, dir, "documents")
         .select("doc_id", "source", "text")
         .collect().sortBy(_.getLong(0)) // fixture-only driver collect
       (0 until 8).foreach { k =>
@@ -679,7 +679,7 @@ object SourceOps {
   private def zorderedEvents(s: SparkSession, dir: String): String =
     Fixtures.dir("zord", dir) { tmp =>
       graft.sources.Layout.writeZOrdered(
-        s.read.parquet(s"$dir/events.parquet"), "user_id", "value", tmp, 16)
+        table(s, dir, "events"), "user_id", "value", tmp, 16)
     }
 
   /** 3-column twin: events z-ordered on (user_id, value, epoch micros)
@@ -687,7 +687,7 @@ object SourceOps {
   private def zorderedEvents3(s: SparkSession, dir: String): String =
     Fixtures.dir("zord3", dir) { tmp =>
       graft.sources.Layout.writeZOrdered3(
-        s.read.parquet(s"$dir/events.parquet")
+        table(s, dir, "events")
           .withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp"))),
         "user_id", "value", "ts_us", tmp, 16)
     }
@@ -698,7 +698,7 @@ object SourceOps {
   private def eventsMetricCache(s: SparkSession, dir: String): String =
     Fixtures.dir("mcache", dir) { tmp =>
       val mc = graft.sources.MetricCache
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = table(s, dir, "events")
       val cut = F.lit("2024-01-20").cast("timestamp")
       val dims = Seq("user_id", "event_type")
       mc.save(ev.where(F.col("ts") < cut), dims, "ts",
@@ -730,7 +730,7 @@ object SourceOps {
   private def eventsDistinctSketch(s: SparkSession, dir: String): String =
     Fixtures.dir("mcsketch", dir) { tmp =>
       val mc = graft.sources.MetricCache
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = table(s, dir, "events")
       val cut = F.lit("2024-01-20").cast("timestamp")
       mc.distinctSketchSave(ev.where(F.col("ts") < cut),
         Seq("event_type"), "ts", "user_id", 4096, tmp)
@@ -760,7 +760,7 @@ object SourceOps {
       val mc = graft.sources.MetricCache
       // ts rides as epoch micros (timestamp Row accessors differ with
       // spark.sql.datetime.java8API between sessions; longs don't)
-      val rows = s.read.parquet(s"$dir/events.parquet")
+      val rows = table(s, dir, "events")
         .select(F.col("event_id"),
           F.unix_micros(F.col("ts").cast("timestamp")).as("ts_us"),
           F.col("user_id"), F.col("event_type"), F.col("value"))

@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -9,6 +13,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet scan that tolerates TIMESTAMP(NANOS) columns, which Spark 4
   * cannot read natively ([PARQUET_TYPE_ILLEGAL]). Strategy: flip the
@@ -20,22 +25,124 @@ import org.apache.spark.sql.functions._
   * This keeps filter pushdown and column pruning intact: the conversion is
   * a projection on top of the scan, and pruning still reaches the parquet
   * reader for untouched columns.
+  *
+  * A schemaless `spark.read.parquet` runs a Spark job to infer the schema
+  * (and csv/json scan their input to infer theirs), so [[load]] resolves
+  * each path once per file version: the inferred schema and nano columns
+  * are memoized, and every later read pins the schema — no inference job,
+  * no footer open.
   */
 object ParquetIO {
 
   private val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val nanoCols = nanoTimestampCols(spark, path)
-    if (nanoCols.isEmpty) spark.read.parquet(path)
-    else {
-      spark.conf.set(NanosConf, "true")
-      val df = spark.read.parquet(path)
-      nanoCols.foldLeft(df) { (d, c) =>
-        d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
-      }
+  /** Session confs outside `spark.sql.<format>.*` that change what
+    * schema inference returns for some format. */
+  private val InferenceConfs = Set(NanosConf, "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.session.timeZone", "spark.sql.timestampType",
+    "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.columnNameOfCorruptRecord")
+
+  /** Everything a resolve's result depends on: a resolve under an equal
+    * key infers the same schema. `files` is the path's version — (name
+    * relative to the path, length, mtime) of the file, or of every file
+    * under the directory, sorted. */
+  private final case class ResolveKey(
+      format: String,
+      options: Map[String, String],
+      files: Seq[(String, Long, Long)],
+      confs: Map[String, String])
+
+  private final case class Resolved(
+      key: ResolveKey, schema: StructType, nanoCols: Seq[String])
+
+  /** One entry per path, overwritten when its key no longer matches. */
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
+
+  def read(spark: SparkSession, path: String): DataFrame =
+    load(spark, "parquet", path)
+
+  /** Read a parquet/csv/json/orc path with `options`, inferring its
+    * schema only when this file version, format, options and inference
+    * confs have not been resolved before. A path that cannot be stat'ed
+    * (a glob) reads uncached, and only a resolve whose footer probe and
+    * inference both succeeded is stored. */
+  def load(
+      spark: SparkSession,
+      format: String,
+      path: String,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val files = fileVersion(hadoopConf, path)
+    def key(f: Seq[(String, Long, Long)]) =
+      ResolveKey(format, options, f, inferenceConfs(spark, format))
+    val hit = files.flatMap { f =>
+      Option(resolved.get(path)).filter(_.key == key(f))
+    }
+    val (nanoCols, df) = hit match {
+      case Some(r) =>
+        (r.nanoCols, scan(spark, format, options, path, r.nanoCols, Some(r.schema)))
+      case None =>
+        val probe =
+          if (format != "parquet") files.map(_ => Seq.empty[String])
+          else files.flatMap(nanoTimestampCols(hadoopConf, path, _))
+        val cols = probe.getOrElse(Seq.empty)
+        val raw = scan(spark, format, options, path, cols, None)
+        for (f <- files; c <- probe)
+          resolved.put(path, Resolved(key(f), raw.schema, c))
+        (cols, raw)
+    }
+    nanoCols.foldLeft(df) { (d, c) =>
+      d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
     }
   }
+
+  /** The raw scan: nano columns come back as longs, `schema` (if given)
+    * replaces inference. */
+  private def scan(
+      spark: SparkSession,
+      format: String,
+      options: Map[String, String],
+      path: String,
+      nanoCols: Seq[String],
+      schema: Option[StructType]): DataFrame = {
+    if (nanoCols.nonEmpty) spark.conf.set(NanosConf, "true")
+    val reader = spark.read.format(format).options(options)
+    schema.fold(reader)(reader.schema).load(path)
+  }
+
+  private def inferenceConfs(
+      spark: SparkSession, format: String): Map[String, String] = {
+    val prefix = s"spark.sql.$format."
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith(prefix) || InferenceConfs(k)
+    }
+  }
+
+  /** The path's version, or None when it cannot be stat'ed. */
+  private def fileVersion(
+      conf: Configuration, path: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val root = fs.getFileStatus(p)
+      if (!root.isDirectory)
+        Some(Seq(("", root.getLen, root.getModificationTime)))
+      else {
+        val base = root.getPath.toString
+        val out = ArrayBuffer.empty[(String, Long, Long)]
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val st = it.next()
+          out += ((st.getPath.toString.stripPrefix(base),
+            st.getLen, st.getModificationTime))
+        }
+        Some(out.sorted.toSeq)
+      }
+    } catch {
+      case _: java.io.IOException | _: IllegalArgumentException => None
+    }
 
   /** Corpus-scale partitioned parquet sink: directory-partition by the
     * given columns (e.g. language/source — enables partition PRUNING on
@@ -279,18 +386,20 @@ object ParquetIO {
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }
 
-  /** Top-level TIMESTAMP(NANOS) column names, from the first footer found. */
-  private def nanoTimestampCols(spark: SparkSession, path: String): Seq[String] = {
-    try {
-      val conf = spark.sessionState.newHadoopConf()
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
+  /** Top-level TIMESTAMP(NANOS) column names, from the footer of the
+    * first visible `.parquet` file of `files` (none found: no nano
+    * columns); None when the footer cannot be read. */
+  private def nanoTimestampCols(
+      conf: Configuration,
+      path: String,
+      files: Seq[(String, Long, Long)]): Option[Seq[String]] = {
+    val footer = files.map(_._1).find { rel =>
+      (rel.isEmpty || rel.endsWith(".parquet")) &&
+        !rel.split('/').exists(n => n.startsWith("_") || n.startsWith("."))
+    }
+    try Some(footer.fold(Seq.empty[String]) { rel =>
       val file =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath)
-            .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-            .getOrElse(return Seq.empty)
-        else p
+        if (rel.isEmpty) new Path(path) else new Path(path, rel.stripPrefix("/"))
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
       try {
         reader.getFileMetaData.getSchema.getFields.asScala.collect {
@@ -302,8 +411,9 @@ object ParquetIO {
             }) => f.getName
         }.toSeq
       } finally reader.close()
-    } catch {
-      case _: Exception => Seq.empty // fall back to plain read
+    })
+    catch {
+      case _: Exception => None // read uncached, as if no nano columns
     }
   }
 }
