@@ -549,8 +549,8 @@ object MultimodalOps {
               .write.parquet(p)
           }
           graft.llm.Multimodal.imageNearDupPairs(
-            graft.sources.ParquetIO.read(s, payloadDir), "doc_id", "payload", maxHamming = 6,
-            maxPerBucketSide = 2)
+            graft.sources.ParquetIO.read(s, payloadDir), "doc_id", "payload",
+            maxHamming = 6, maxPerBucketSide = 2)
         }
         .sort(col("a_id")).sort(col("b_id"))
         .run(s),
@@ -692,8 +692,8 @@ object MultimodalOps {
               .write.parquet(p)
           }
           graft.llm.Multimodal.videoNearDupPairs(
-            graft.sources.ParquetIO.read(s, payloadDir), "doc_id", "payload", every = 2,
-            maxHamming = 6, maxPerBucketSide = 2)
+            graft.sources.ParquetIO.read(s, payloadDir), "doc_id", "payload",
+            every = 2, maxHamming = 6, maxPerBucketSide = 2)
         }
         .sort(col("a_id")).sort(col("b_id"))
         .run(s),

@@ -82,13 +82,16 @@ object ParquetIO {
     }
     val (nanoCols, df) = hit match {
       case Some(r) =>
-        (r.nanoCols, scan(spark, format, options, path, r.nanoCols, Some(r.schema)))
+        val pinned = scan(spark, format, options, path, r.nanoCols, Some(r.schema))
+        (r.nanoCols, pinned)
       case None =>
-        val probe =
-          if (format != "parquet") files.map(_ => Seq.empty[String])
-          else files.flatMap(nanoTimestampCols(hadoopConf, path, _))
+        val probe = files.flatMap { f =>
+          if (format == "parquet") nanoTimestampCols(hadoopConf, path, f)
+          else Some(Seq.empty)
+        }
         val cols = probe.getOrElse(Seq.empty)
         val raw = scan(spark, format, options, path, cols, None)
+        // keyed after the scan, which may have set the nanos conf
         for (f <- files; c <- probe)
           resolved.put(path, Resolved(key(f), raw.schema, c))
         (cols, raw)
