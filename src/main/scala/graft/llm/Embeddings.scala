@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Similarity search over an embedding column (`array<float>`) —
   * beyond-reference surface (SURVEY.md §2.7).
@@ -179,38 +180,52 @@ object Embeddings {
     // k-bounded cut (the ivfScoreTail move): per-query bucket populations
     // grow with the corpus; the aggregate combines map-side where the
     // window would shuffle + sort all of them
-    topKCut(scored, "query_id", idCol, k, emb.schema(idCol).dataType)
+    topKCut(scored, Seq("query_id"), idCol, k)
   }
 
-  /** The shared k-bounded (cosine desc, id asc) cut over a scored
-    * candidate frame carrying `groupCol` + idCol + `cosine`: the
-    * `topk_by` hash aggregate for integral id types (map-side combine —
-    * each mapper ships ≤k entries per group), the row_number window
-    * otherwise. Emits (groupCol, neighbor_id, cosine, rank). */
+  /** The id (and tag) types that ride `topk_by`'s BIGINT slots
+    * exactly; other types take the row_number window instead. */
+  private[graft] val IntegralTypes: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** The shared k-bounded (score desc, id asc) cut over a scored
+    * candidate frame carrying `groupCols` + idCol + `score` (+ `tag`):
+    * the `topk_by` hash aggregate when the id and tag are integral
+    * (map-side combine — each mapper ships ≤k entries per group, where
+    * the window would shuffle and sort every candidate), emitted by a
+    * posexplode PROJECTION after the aggregate, which also runs on a
+    * stream; the [[ivfScoreTailWindow]] anchor otherwise. The aggregate's
+    * array is already in rank order. Value identity with the window is
+    * spec-pinned, including NULL scores and the k boundary. No group
+    * columns cuts globally. Emits groupCols ++ (neighbor_id, score,
+    * rank) ++ tag. */
   private def topKCut(
-      joined: DataFrame, groupCol: String, idCol: String, k: Int,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-    if (integral.contains(idType))
-      joined
-        .groupBy(col(groupCol))
-        .agg(expr(
-          s"topk_by(cosine, CAST($idCol AS BIGINT), CAST(NULL AS BIGINT), $k)")
-          .as("__tk__"))
-        .select(col(groupCol), posexplode(col("__tk__")).as(Seq("__p__", "__e__")))
-        .select(col(groupCol), col("__e__.id").cast(idType).as("neighbor_id"),
-          col("__e__.score").as("cosine"),
-          (col("__p__") + 1).cast("int").as("rank"))
-    else
-      joined
-        .withColumn("rank",
-          row_number().over(Window.partitionBy(col(groupCol))
-            .orderBy(col("cosine").desc, col(idCol))))
-        .where(col("rank") <= k)
-        .select(col(groupCol), col(idCol).as("neighbor_id"), col("cosine"),
-          col("rank"))
+      scored: DataFrame, groupCols: Seq[String], idCol: String, k: Int,
+      score: String = "cosine", tag: Option[String] = None): DataFrame = {
+    val idType = scored.schema(idCol).dataType
+    val tagTypes = tag.map(t => t -> scored.schema(t).dataType)
+    val groups = groupCols.map(col)
+    if (IntegralTypes(idType) && tagTypes.forall(t => IntegralTypes(t._2)))
+      topKArrays(scored, groupCols, idCol, k, score, tag)
+        .select(groups :+ posexplode(col("__tk__")).as(Seq("__p__", "__e__")): _*)
+        .select((groups ++ Seq(
+          col("__e__.id").cast(idType).as("neighbor_id"),
+          col("__e__.score").as(score),
+          (col("__p__") + 1).cast("int").as("rank")) ++
+          tagTypes.map { case (t, tt) => col("__e__.tag").cast(tt).as(t) }): _*)
+    else ivfScoreTailWindow(scored, idCol, k, tag.toSeq, groupCols, score)
+  }
+
+  /** The `topk_by` aggregate behind [[topKCut]]: one rank-ordered
+    * `__tk__` array of (score, id, tag) per group. Callers that consume
+    * the array in a projection (the streaming kNN vote) stop here. */
+  private[graft] def topKArrays(
+      scored: DataFrame, groupCols: Seq[String], idCol: String, k: Int,
+      score: String = "cosine", tag: Option[String] = None): DataFrame = {
+    val tagExpr = tag.fold("CAST(NULL AS BIGINT)")(t => s"CAST($t AS BIGINT)")
+    scored.groupBy(groupCols.map(col): _*)
+      .agg(expr(s"topk_by($score, CAST($idCol AS BIGINT), $tagExpr, $k)")
+        .as("__tk__"))
   }
 
   /** HARD-NEGATIVE mining for contrastive / dense-retrieval training —
@@ -255,7 +270,7 @@ object Embeddings {
       .withColumn("cosine",
         round(dot(vecCol, "__q__") / (col("__n__") * col("__qn__")), 6))
       .where(col("cosine") >= bandLo && col("cosine") < bandHi)
-    topKCut(banded, "anchor_id", idCol, k, emb.schema(idCol).dataType)
+    topKCut(banded, Seq("anchor_id"), idCol, k)
       .withColumnRenamed("neighbor_id", "negative_id")
   }
 
@@ -295,9 +310,8 @@ object Embeddings {
     * (float_vec_dot accepts either side). `nprobe` > 1 searches each
     * query's best-nprobe CELLS (the standard IVF recall knob): candidates
     * still live in exactly one cell each, so probing P distinct cells
-    * never duplicates a neighbor; the P-cell ranking joins the tiny query
-    * side against the broadcast centroid table — a deliberate q×k
-    * expansion on the small side only, never on the corpus. */
+    * never duplicates a neighbor; the P-cell ranking is [[ivfProbe]]'s
+    * projection on the tiny query side, never a corpus expansion. */
   def ivfTopKTrained(
       emb: DataFrame,
       idCol: String,
@@ -314,115 +328,127 @@ object Embeddings {
       withCell(emb.withColumn("__n__", sqrt(dot(vecCol, vecCol))),
         vecCol, centroids)
         .select(col(idCol), col(vecCol), col("__n__"), col("__cell__")))
-    val queries = ivfQueryCells(
-      assigned.where(queryPred)
-        .select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
-          col("__n__").as("__qn__"), col("__cell__")),
-      centroids, nprobe)
+    val asked = assigned.where(queryPred)
+    // the queries come out of the assigned corpus, so at nprobe = 1
+    // their own cell is already there — no second centroid fold
+    val queries =
+      if (nprobe == 1)
+        asked.select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
+          col("__n__").as("__qn__"), col("__cell__").as("__qcell__"))
+      else ivfProbe(asked, idCol, vecCol, centroids, nprobe)
     ivfScoreTail(queries, assigned, idCol, vecCol, k)
   }
 
-  /** Per-query probe cells from an already-assigned query frame
-    * (query_id, __q__, __qn__, __cell__): nprobe = 1 uses the carried
-    * cell; nprobe > 1 ranks each query's best-nprobe centroids (the q×k
-    * expansion stays on the tiny query side). */
-  private def ivfQueryCells(
-      q: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
-    if (nprobe == 1) q.withColumnRenamed("__cell__", "__qcell__")
-    else {
-      // centroids fold into ONE row (global agg → provably-1-row build
-      // side for the BNLJ lint — a read-back centroid TABLE would not
-      // be) and re-expand per query via posexplode: the q×k expansion
-      // stays on the tiny query side, and the (rounded sim desc, cid)
-      // window is unchanged, so values are identical to the old
-      // table-crossJoin formulation
-      val centArr = centroids.select(col("cid").as("__pcid__"),
-        col("cv").as("__pcv__"), sqrt(dot("cv", "cv")).as("__pcn__"))
-        .agg(collect_list(struct(col("__pcid__"), col("__pcv__"),
-          col("__pcn__"))).as("__pcents__"))
-      q.drop("__cell__")
-        .crossJoin(broadcast(centArr)) // 1-row build side
-        .select(col("query_id"), col("__q__"), col("__qn__"),
-          posexplode(col("__pcents__")).as(Seq("__pi__", "__pc__")))
-        .select(col("query_id"), col("__q__"), col("__qn__"),
-          col("__pc__.__pcid__").as("__pcid__"),
-          col("__pc__.__pcv__").as("__pcv__"),
-          col("__pc__.__pcn__").as("__pcn__"))
-        .withColumn("__csim__",
-          round(dot("__q__", "__pcv__") / (col("__qn__") * col("__pcn__")), 6))
-        .withColumn("__crk__",
-          row_number().over(Window.partitionBy(col("query_id"))
-            .orderBy(col("__csim__").desc, col("__pcid__"))))
-        .where(col("__crk__") <= nprobe)
-        .select(col("query_id"), col("__q__"), col("__qn__"),
-          col("__pcid__").as("__qcell__"))
-    }
+  /** The persisted index's centroid table, read through the schema memo
+    * (a warm serve runs no inference job). */
+  private[graft] def storedCentroids(
+      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.sources.ParquetIO.read(spark, s"$dir/centroids")
 
-  /** The shared IVF scoring tail: probe-cell equi-join against the
-    * assigned corpus (`__cell__`, idCol, vecCol, `__n__`), exact cosine
-    * within the cell, (cosine desc, id) top-k per query. `extra` carries
-    * additional posting columns (e.g. a denormalized label) through the
-    * cut — zero extra scans or joins, the columns ride the same rows.
-    *
-    * The top-k cut runs as the K-BOUNDED `topk_by` hash aggregate, not a
-    * row_number window: the window formulation shuffles AND SORTS every
-    * query's full candidate set (the probed cells' postings — the thing
-    * that grows with the corpus) on the reducer, while the aggregate
-    * combines map-side, so each mapper ships at most k entries per query
-    * and nothing ever sorts more than 2k rows. Value-identity with the
-    * window cut is spec-pinned (including NULL cosines and the k
-    * boundary); non-integral id/extra types fall back to the window
-    * formulation (the tag slot is bigint). */
+  /** All centroids folded into ONE row: `__cents__` =
+    * array<struct<__cid__, __cv__, __cn__>> (k centroids × dim values — a
+    * few MB even at IVF-scale k), the operand `vec_argmax_cell` takes. A
+    * global aggregate, so attaching it is a provably-1-row build side for
+    * the BNLJ lint — a read-back centroid TABLE would not be. L2 mode
+    * (residual quantizers) carries ‖cv‖² in the third field. */
+  private def centroidArray(
+      centroids: DataFrame, l2: Boolean = false): DataFrame =
+    centroids
+      .select(col("cid").as("__cid__"), col("cv").as("__cv__"),
+        (if (l2) dot("cv", "cv") else sqrt(dot("cv", "cv"))).as("__cn__"))
+      .agg(collect_list(
+        struct(col("__cid__"), col("__cv__"), col("__cn__"))).as("__cents__"))
+
+  /** Attach a provably-1-row frame to every row of `df`: a broadcast
+    * cross join in batch; on a stream an equi-join on a literal key,
+    * because a stream-static cross join is the unsupported shape. */
+  private def attachOne(df: DataFrame, one: DataFrame): DataFrame =
+    if (!df.isStreaming) df.crossJoin(broadcast(one))
+    else df.withColumn("__one__", lit(1))
+      .join(one.withColumn("__one__", lit(1)), Seq("__one__"))
+      .drop("__one__")
+
+  /** The IVF probe front-end every serve shares, batch and streaming:
+    * `queries` (idCol, vecCol) become (query_id, __q__, __qn__,
+    * __qcell__), one row per probed cell. The centroids fold once into
+    * the 1-row [[centroidArray]]. nprobe = 1 is the codegen'd
+    * `vec_argmax_cell` assignment. nprobe > 1 ranks the probe cells in a
+    * PROJECTION over the same array: sort the per-centroid (rounded
+    * cosine, cid) structs with NULL sims last, NaN sims first (Spark's
+    * desc total order), then sim desc via negation, then cid asc; slice
+    * the first nprobe; explode. That is the (sim desc, cid) row_number
+    * window's order (LlmSpec pins it against a window reference), and
+    * being window-free it runs on a stream. The HOF sort is
+    * CodegenFallback, fine on the tiny query side. */
+  private[graft] def ivfProbe(
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      centroids: DataFrame,
+      nprobe: Int): DataFrame = {
+    require(nprobe >= 1, "nprobe must be at least 1")
+    val cells =
+      if (nprobe == 1) expr("vec_argmax_cell(__q__, __qn__, __cents__)")
+      else explode(expr(
+        s"""transform(slice(array_sort(transform(
+              transform(__cents__, c -> named_struct(
+                's', round(float_vec_dot(__q__, c.__cv__)
+                           / (__qn__ * c.__cn__), 6),
+                'cid', c.__cid__)),
+              p -> named_struct(
+                'sn', p.s IS NULL,
+                'nf', coalesce(NOT isnan(p.s), true),
+                'ns', -p.s,
+                'cid', p.cid))), 1, $nprobe), s -> s.cid)"""))
+    attachOne(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
+        sqrt(dot(vecCol, vecCol)).as("__qn__")),
+      centroidArray(centroids))
+      .select(col("query_id"), col("__q__"), col("__qn__"),
+        cells.as("__qcell__"))
+  }
+
+  /** The probe-cell equi-join against the assigned corpus (`__cell__`,
+    * idCol, vecCol, `__n__`) with the exact cosine inside the cell —
+    * the candidates every IVF top-k serve ranks. */
+  private[graft] def ivfScored(
+      probed: DataFrame, postings: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    probed
+      .join(postings,
+        col("__qcell__") === col("__cell__") && col(idCol) =!= col("query_id"))
+      .withColumn("cosine",
+        round(dot(vecCol, "__q__") / (col("__n__") * col("__qn__")), 6))
+
+  /** The shared IVF scoring tail: [[ivfScored]] candidates cut to the
+    * (cosine desc, id) top-k per query by [[topKCut]]. `tag` carries
+    * one more posting column (e.g. a denormalized label) through the
+    * cut — zero extra scans or joins, the column rides the same rows. */
   private def ivfScoreTail(
       queries: DataFrame,
       assigned: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
-      extra: Seq[String] = Seq.empty): DataFrame = {
-    val joined = queries
-      .join(assigned,
-        col("__qcell__") === col("__cell__") && col(idCol) =!= col("query_id"))
-      .withColumn("cosine",
-        round(dot(vecCol, "__q__") / (col("__n__") * col("__qn__")), 6))
-    val integral: Set[org.apache.spark.sql.types.DataType] = Set(
-      org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-    val idType = assigned.schema(idCol).dataType
-    val extraTypes = extra.map(c => assigned.schema(c).dataType)
-    if (integral.contains(idType) && extra.size <= 1 &&
-        extraTypes.forall(integral.contains)) {
-      val tagExpr = extra.headOption.map(c => s"CAST($c AS BIGINT)")
-        .getOrElse("CAST(NULL AS BIGINT)")
-      joined
-        .groupBy(col("query_id"))
-        .agg(expr(s"topk_by(cosine, CAST($idCol AS BIGINT), $tagExpr, $k)")
-          .as("__tk__"))
-        .select(col("query_id"),
-          posexplode(col("__tk__")).as(Seq("__p__", "__e__")))
-        .select((Seq(col("query_id"),
-          col("__e__.id").cast(idType).as("neighbor_id"),
-          col("__e__.score").as("cosine"),
-          (col("__p__") + 1).cast("int").as("rank")) ++
-          extra.zip(extraTypes).map { case (c, t) =>
-            col("__e__.tag").cast(t).as(c) }): _*)
-    } else
-      ivfScoreTailWindow(joined, idCol, k, extra)
-  }
+      tag: Option[String] = None): DataFrame =
+    topKCut(ivfScored(queries, assigned, idCol, vecCol), Seq("query_id"),
+      idCol, k, tag = tag)
 
   /** The row_number-window formulation of the top-k cut — the
-    * value-identity ANCHOR [[ivfScoreTail]]'s `topk_by` aggregate is
+    * value-identity ANCHOR [[topKCut]]'s `topk_by` aggregate is
     * spec-pinned against, and the fallback for non-integral id types. */
   private[graft] def ivfScoreTailWindow(
       joined: DataFrame, idCol: String, k: Int,
-      extra: Seq[String] = Seq.empty): DataFrame =
+      extra: Seq[String] = Seq.empty,
+      groupCols: Seq[String] = Seq("query_id"),
+      score: String = "cosine"): DataFrame =
     joined
       .withColumn("rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col(idCol))))
+        row_number().over(Window.partitionBy(groupCols.map(col): _*)
+          .orderBy(col(score).desc, col(idCol))))
       .where(col("rank") <= k)
-      .select((Seq(col("query_id"), col(idCol).as("neighbor_id"),
-        col("cosine"), col("rank")) ++ extra.map(col)): _*)
+      .select((groupCols.map(col) ++ Seq(col(idCol).as("neighbor_id"),
+        col(score), col("rank")) ++ extra.map(col)): _*)
 
   /** PERSIST the IVF index — the ANN family's train-once artifact next
     * to the MinHash / dHash / video-hash indexes: the centroid table as
@@ -479,10 +505,9 @@ object Embeddings {
       table: String,
       buckets: Int = 8): Unit = {
     graft.GraftExtensions.install(newEmb.sparkSession)
-    val centroids = newEmb.sparkSession.read.parquet(s"$dir/centroids")
     val assigned =
       withCell(newEmb.withColumn("__n__", sqrt(dot(vecCol, vecCol))),
-        vecCol, centroids)
+        vecCol, storedCentroids(newEmb.sparkSession, dir))
         .select(col(idCol), col(vecCol), col("__n__"), col("__cell__"))
     graft.sources.ParquetIO.appendBucketed(assigned, table, "__cell__", buckets)
   }
@@ -586,14 +611,10 @@ object Embeddings {
     graft.GraftExtensions.install(spark)
     require(maxCell >= 2, "maxCell must be at least 2")
     val postings = spark.read.parquet(s"$srcDir/postings")
-    val centroids = spark.read.parquet(s"$srcDir/centroids")
-    locally {
-      import org.apache.spark.sql.types._
-      val idType = postings.schema(idCol).dataType
-      require(Set[DataType](ByteType, ShortType, IntegerType, LongType)
-        .contains(idType),
-        s"ivfHotCellSplit needs an integral '$idCol' (got $idType)")
-    }
+    val centroids = storedCentroids(spark, srcDir)
+    val idType = postings.schema(idCol).dataType
+    require(IntegralTypes(idType),
+      s"ivfHotCellSplit needs an integral '$idCol' (got $idType)")
     val attrs = postings.columns
       .filterNot(Set(idCol, vecCol, "__n__", "__cell__")).toSeq
     // hot set + id offset: two bounded collects (cells are
@@ -745,20 +766,14 @@ object Embeddings {
       filter: Option[Column] = None,
       pushCells: Boolean = true): DataFrame = {
     graft.GraftExtensions.install(newQueries.sparkSession)
-    require(nprobe >= 1, "nprobe must be at least 1")
-    val centroids = newQueries.sparkSession.read.parquet(s"$dir/centroids")
-    val qAssigned =
-      withCell(newQueries.withColumn("__n__", sqrt(dot(vecCol, vecCol))),
-        vecCol, centroids)
-        .select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
-          col("__n__").as("__qn__"), col("__cell__"))
+    val probed = ivfProbe(newQueries, idCol, vecCol,
+      storedCentroids(newQueries.sparkSession, dir), nprobe)
     // FILTERED search (the production "top-k among license-clean docs in
     // my language" shape): the predicate applies to the POSTINGS SCAN —
     // with attributes denormalized at ingest ([[ivfIndexSave]] `attrs`)
     // it pushes into parquet, never a corpus-side join; candidates rank
     // AFTER filtering, so every query still returns k survivors when
     // the probed cell holds that many
-    val probed = ivfQueryCells(qAssigned, centroids, nprobe)
     val cand = prunedPostings(
       filter.fold(postings)(postings.where(_)), probed, pushCells)
     ivfScoreTail(probed, cand, idCol, vecCol, k)
@@ -784,14 +799,8 @@ object Embeddings {
       nprobe: Int = 1,
       pushCells: Boolean = true): DataFrame = {
     graft.GraftExtensions.install(newEmb.sparkSession)
-    require(nprobe >= 1, "nprobe must be at least 1")
-    val centroids = newEmb.sparkSession.read.parquet(s"$dir/centroids")
-    val qAssigned =
-      withCell(newEmb.withColumn("__n__", sqrt(dot(vecCol, vecCol))),
-        vecCol, centroids)
-        .select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
-          col("__n__").as("__qn__"), col("__cell__"))
-    val probed = ivfQueryCells(qAssigned, centroids, nprobe)
+    val probed = ivfProbe(newEmb, idCol, vecCol,
+      storedCentroids(newEmb.sparkSession, dir), nprobe)
     probed
       .join(prunedPostings(postings, probed, pushCells),
         col("__qcell__") === col("__cell__"))
@@ -824,20 +833,14 @@ object Embeddings {
       nprobe: Int = 1,
       pushCells: Boolean = true): DataFrame = {
     graft.GraftExtensions.install(queries.sparkSession)
-    require(nprobe >= 1, "nprobe must be at least 1")
     require(postings.columns.contains(labelCol),
       s"postings carry no '$labelCol' column — save the index with " +
         s"attrs = Seq(\"$labelCol\") so the label rides the posting rows")
-    val centroids = queries.sparkSession.read.parquet(s"$dir/centroids")
-    val qAssigned =
-      withCell(queries.withColumn("__n__", sqrt(dot(vecCol, vecCol))),
-        vecCol, centroids)
-        .select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
-          col("__n__").as("__qn__"), col("__cell__"))
-    val probed = ivfQueryCells(qAssigned, centroids, nprobe)
+    val probed = ivfProbe(queries, idCol, vecCol,
+      storedCentroids(queries.sparkSession, dir), nprobe)
     val topk = ivfScoreTail(probed,
       prunedPostings(postings, probed, pushCells),
-      idCol, vecCol, k, extra = Seq(labelCol))
+      idCol, vecCol, k, tag = Some(labelCol))
     topk
       .groupBy(col("query_id"), col(labelCol))
       .agg(count(lit(1)).as("votes"))
@@ -876,20 +879,14 @@ object Embeddings {
       nprobe: Int = 1,
       pushCells: Boolean = true): DataFrame = {
     graft.GraftExtensions.install(queries.sparkSession)
-    require(nprobe >= 1, "nprobe must be at least 1")
     require(postings.columns.contains(valueCol),
       s"postings carry no '$valueCol' column — save the index with " +
         s"attrs = Seq(\"$valueCol\") so the value rides the posting rows")
-    val centroids = queries.sparkSession.read.parquet(s"$dir/centroids")
-    val qAssigned =
-      withCell(queries.withColumn("__n__", sqrt(dot(vecCol, vecCol))),
-        vecCol, centroids)
-        .select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
-          col("__n__").as("__qn__"), col("__cell__"))
-    val probed = ivfQueryCells(qAssigned, centroids, nprobe)
+    val probed = ivfProbe(queries, idCol, vecCol,
+      storedCentroids(queries.sparkSession, dir), nprobe)
     val topk = ivfScoreTail(probed,
       prunedPostings(postings, probed, pushCells),
-      idCol, vecCol, k, extra = Seq(valueCol))
+      idCol, vecCol, k, tag = Some(valueCol))
     val num = sum(round(col("cosine") * col(valueCol).cast("double"), 6)
       .cast("decimal(27,8)")).cast("double")
     val den = sum(col("cosine").cast("decimal(27,8)")).cast("double")
@@ -1147,8 +1144,8 @@ object Embeddings {
       attrs: Seq[String] = Seq.empty): Unit = {
     graft.GraftExtensions.install(newEmb.sparkSession)
     val spark = newEmb.sparkSession
-    val coarse = spark.read.parquet(s"$dir/centroids")
-    val codebooks = spark.read.parquet(s"$dir/codebooks")
+    val coarse = storedCentroids(spark, dir)
+    val codebooks = graft.sources.ParquetIO.read(spark, s"$dir/codebooks")
     // the artifact self-describes its encoding — appended rows encode
     // exactly as the save did (residual or raw), against the same
     // frozen coarse centroids and codebooks
@@ -1274,12 +1271,11 @@ object Embeddings {
       filter: Option[Column] = None): DataFrame = {
     graft.GraftExtensions.install(queries.sparkSession)
     require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal segments")
-    require(nprobe >= 1, "nprobe must be at least 1")
     require(candFactor >= 1, "candFactor must be at least 1")
     val spark = queries.sparkSession
     val segLen = dim / m
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val codebooks = spark.read.parquet(s"$dir/codebooks")
+    val centroids = storedCentroids(spark, dir)
+    val codebooks = graft.sources.ParquetIO.read(spark, s"$dir/codebooks")
     validateCodebookShape(codebooks, m, segLen)
     // the artifact self-describes its encoding (the save's marker):
     // residual postings score as q·(c + r̂) against the STORED
@@ -1289,11 +1285,7 @@ object Embeddings {
       s"$dir is marked residual-coded but the postings frame has no " +
         "__xn__ column — was a different table passed than the one " +
         "ivfPqIndexSave wrote?")
-    val qAssigned = withCell(
-      queries.withColumn("__n__", sqrt(dot(vecCol, vecCol))), vecCol, centroids)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
-        col("__n__").as("__qn__"), col("__cell__"))
-    val probed0 = ivfQueryCells(qAssigned, centroids, nprobe)
+    val probed0 = ivfProbe(queries, idCol, vecCol, centroids, nprobe)
     // residual numerator term q·c per (query, probed cell): a projection
     // against the 1-row coarse map — tiny (query×nprobe rows), and the
     // lookup vector is the PROBED cell's centroid, not the query's own
@@ -1359,52 +1351,26 @@ object Embeddings {
             s"element_at(element_at(__tabs__, $s), element_at(__codes__, ${s + 1}))"))
           .foldLeft(col("__qc__"))(_ + _) / (col("__qn__") * col("__xn__")), 6)
       else round(qdotSum / (col("__qn__") * sqrt(cn2Sum)), 6)
-    // the ADC cut runs as the k-bounded topk_by hash aggregate (the
-    // [[ivfScoreTail]] move): the candidate set is the probed cells'
-    // CODED postings — corpus-sized growth — and the aggregate combines
-    // map-side where the row_number window would shuffle and sort all of
+    // the ADC cut is [[topKCut]]: the candidate set is the probed
+    // cells' CODED postings — corpus-sized growth — and the aggregate
+    // combines map-side where the window would shuffle and sort all of
     // it per query. __q__/__qn__ ride as grouping keys (constant per
-    // query), so the rerank tail needs no re-join. Non-integral id
-    // types fall back to the window formulation.
+    // query), so the rerank tail needs no re-join.
     // the cap guards the actual topk_by cut, which is candFactor*k only
     // when a rerank shortlist is requested — rerank=None cuts at k, so a
     // large candFactor must not spuriously throw there
     val cut = if (rerank.isEmpty) k else candFactor * k
     require(cut.toLong <= 1000000L,
       s"topk_by cut = $cut exceeds the 1e6 cap (candFactor*k too large)")
-    val idType = postings.schema(idCol).dataType
-    val integralId = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-      .contains(idType)
-    val adc =
-      if (integralId)
-        scored.withColumn("score", score)
-          .groupBy(col("query_id"), col("__q__"), col("__qn__"))
-          .agg(expr(
-            s"topk_by(score, CAST($idCol AS BIGINT), CAST(NULL AS BIGINT), $cut)")
-            .as("__tk__"))
-          .select(col("query_id"), col("__q__"), col("__qn__"),
-            posexplode(col("__tk__")).as(Seq("__p__", "__e__")))
-          .select(col("query_id"), col("__q__"), col("__qn__"),
-            col("__e__.id").cast(idType).as(idCol),
-            col("__e__.score").as("score"),
-            (col("__p__") + 1).cast("int").as("__crk__"))
-      else
-        scored.withColumn("score", score)
-          .withColumn("__crk__", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("score").desc, col(idCol))))
-          .where(col("__crk__") <= cut)
+    val adc = topKCut(scored.withColumn("score", score),
+      Seq("query_id", "__q__", "__qn__"), idCol, cut, score = "score")
     rerank match {
       case None =>
-        adc
-          .select(col("query_id"), col(idCol).as("neighbor_id"),
-            col("score"), col("__crk__").as("rank"))
+        adc.select(col("query_id"), col("neighbor_id"), col("score"),
+          col("rank"))
       case Some(raw) =>
-        val shortlist = adc
-          .select(col("query_id"), col(idCol).as("neighbor_id"),
-            col("score"), col("__q__"), col("__qn__"))
+        val shortlist = adc.select(col("query_id"), col("neighbor_id"),
+          col("score"), col("__q__"), col("__qn__"))
         val rawSel = raw.select(col(idCol).as("neighbor_id"),
           col(vecCol).as("__rv__"))
         // POINT-LOOKUP pushdown for the rerank fetch (the [[prunedPostings]]
@@ -1465,14 +1431,8 @@ object Embeddings {
     // L2 mode (residual quantizers): the struct's third field carries
     // ‖cv‖² (not ‖cv‖) and assignment maximizes round(v·cv − ‖cv‖²/2, 6)
     // — the argmin-distance equivalent after dropping the constant ‖v‖²
-    val third = if (l2) dot("cv", "cv") else sqrt(dot("cv", "cv"))
     val fn = if (l2) "vec_argmax_cell_l2" else "vec_argmax_cell"
-    val centArr = centroids
-      .select(col("cid").as("__cid__"), col("cv").as("__cv__"),
-        third.as("__cn__"))
-      .agg(collect_list(
-        struct(col("__cid__"), col("__cv__"), col("__cn__"))).as("__cents__"))
-    df.crossJoin(broadcast(centArr)) // 1-row broadcast, not a row expansion
+    attachOne(df, centroidArray(centroids, l2)) // 1-row, not a row expansion
       .withColumn("__cell__", expr(s"$fn($vecCol, __n__, __cents__)"))
       .drop("__cents__")
   }
@@ -2151,26 +2111,8 @@ object Embeddings {
         expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
           (col("__qn__") *
             sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6))
-    val vidType = emb.schema(idCol).dataType
-    val integralVid = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-      .contains(vidType)
-    if (integralVid)
-      scoredAll
-        .agg(expr(
-          s"topk_by(score, CAST(__vid__ AS BIGINT), CAST(NULL AS BIGINT), $k)")
-          .as("__tk__"))
-        .select(posexplode(col("__tk__")).as(Seq("__p__", "__e__")))
-        .select(col("__e__.id").cast(vidType).as("vec_id"),
-          col("__e__.score").as("score"),
-          (col("__p__") + 1).cast("int").as("rank"))
-    else
-      scoredAll
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("__vid__"))))
-        .where(col("rank") <= k)
-        .select(col("__vid__").as("vec_id"), col("score"), col("rank"))
+    topKCut(scoredAll, Seq.empty, "__vid__", k, score = "score")
+      .withColumnRenamed("neighbor_id", "vec_id")
   }
 
   /** Persisted SQ8 serving artifact — encode once, store the codes, serve
@@ -2203,7 +2145,7 @@ object Embeddings {
     * on read (max over one row is the identity). */
   private[graft] def sq8StoredParams(
       spark: org.apache.spark.sql.SparkSession, dir: String, dim: Int): DataFrame = {
-    val p = spark.read.parquet(s"$dir/params")
+    val p = graft.sources.ParquetIO.read(spark, s"$dir/params")
       .agg(max(col("__mins__")).as("__mins__"),
         max(col("__scales__")).as("__scales__"))
     // model-parameter-sized shape check: a dim drift between save and
@@ -2269,7 +2211,7 @@ object Embeddings {
         expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
           (col("__qn__") *
             sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6))
-    topKCut(scored, "query_id", idCol, k, postings.schema(idCol).dataType)
+    topKCut(scored, Seq("query_id"), idCol, k)
   }
 
   /** IVF-SQ8 (the FAISS IndexIVFScalarQuantizer composition): coarse
@@ -2320,10 +2262,9 @@ object Embeddings {
       buckets: Int = 8): Unit = {
     graft.GraftExtensions.install(newEmb.sparkSession)
     val spark = newEmb.sparkSession
-    val centroids = spark.read.parquet(s"$dir/centroids")
     val params = sq8StoredParams(spark, dir, dim)
-    val assigned = withCell(
-      newEmb.withColumn("__n__", sqrt(dot(vecCol, vecCol))), vecCol, centroids)
+    val assigned = withCell(newEmb.withColumn("__n__", sqrt(dot(vecCol, vecCol))),
+      vecCol, storedCentroids(spark, dir))
       .select(col(idCol), col("__cell__"), col(vecCol))
     val coded = sq8Encode(assigned, vecCol, params).drop(vecCol)
     graft.sources.ParquetIO.appendBucketed(coded, table, "__cell__", buckets)
@@ -2348,24 +2289,18 @@ object Embeddings {
       pushCells: Boolean = true,
   ): DataFrame = {
     graft.GraftExtensions.install(queries.sparkSession)
-    require(nprobe >= 1, "nprobe must be at least 1")
     val spark = queries.sparkSession
-    val centroids = spark.read.parquet(s"$dir/centroids")
     val params = sq8StoredParams(spark, dir, dim)
-    val qAssigned = withCell(
-      queries.withColumn("__n__", sqrt(dot(vecCol, vecCol))), vecCol, centroids)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__q__"),
-        col("__n__").as("__qn__"), col("__cell__"))
-    val probed = ivfQueryCells(qAssigned, centroids, nprobe)
-    val scored = probed
-      .crossJoin(broadcast(params)) // provably 1-row build (global agg)
+    val probed = ivfProbe(queries, idCol, vecCol, storedCentroids(spark, dir),
+      nprobe)
+    val scored = attachOne(probed, params) // provably 1-row (global agg)
       .join(prunedPostings(postings, probed, pushCells),
         col("__qcell__") === col("__cell__") && col(idCol) =!= col("query_id"))
       .withColumn("cosine", round(
         expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
           (col("__qn__") *
             sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6))
-    topKCut(scored, "query_id", idCol, k, postings.schema(idCol).dataType)
+    topKCut(scored, Seq("query_id"), idCol, k)
   }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: encode every corpus
@@ -2481,26 +2416,8 @@ object Embeddings {
     // every scored candidate into ONE partition and sorted it — at corpus
     // scale that single reducer IS the wall; the global topk_by aggregate
     // combines map-side (each partition ships ≤k entries)
-    val vidType = cands.schema("__vid__").dataType
-    val integralVid = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-      .contains(vidType)
-    if (integralVid)
-      scoredAll
-        .agg(expr(
-          s"topk_by(score, CAST(__vid__ AS BIGINT), CAST(NULL AS BIGINT), $k)")
-          .as("__tk__"))
-        .select(posexplode(col("__tk__")).as(Seq("__p__", "__e__")))
-        .select(col("__e__.id").cast(vidType).as("vec_id"),
-          col("__e__.score").as("score"),
-          (col("__p__") + 1).cast("int").as("rank"))
-    else
-      scoredAll
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("__vid__"))))
-        .where(col("rank") <= k)
-        .select(col("__vid__").as("vec_id"), col("score"), col("rank"))
+    topKCut(scoredAll, Seq.empty, "__vid__", k, score = "score")
+      .withColumnRenamed("neighbor_id", "vec_id")
   }
 
   /** Codebooks are model-parameter-sized: validating shape is one tiny

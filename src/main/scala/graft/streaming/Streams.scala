@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.llm.TextOps
+import graft.llm.{Embeddings, TextOps}
 
 /** Structured-Streaming operators for continuous training-data ingestion
   * (beyond-reference surface: the reference is batch-only — zero streaming
@@ -631,52 +631,40 @@ object Streams {
       dedupePairs = true)
   }
 
+  /** An IVF serve's stream side: (idCol cast to `idType`, vecCol), with
+    * NULL ids dropped — a NULL id cannot carry state. */
+  private def servedIds(
+      docs: DataFrame, idCol: String, vecCol: String,
+      idType: org.apache.spark.sql.types.DataType): DataFrame =
+    docs.select(col(idCol).cast(idType).as(idCol), col(vecCol))
+      .where(col(idCol).isNotNull)
+
+  /** Ids and labels ride `topk_by`'s BIGINT slots, and the batch serve's
+    * window fallback for other types does not run on a stream, so a
+    * non-integral column is refused loudly. */
+  private def requireIntegral(
+      postings: DataFrame, c: String, op: String,
+      hint: String = ""): org.apache.spark.sql.types.DataType = {
+    val t = postings.schema(c).dataType
+    require(Embeddings.IntegralTypes(t),
+      s"$op needs an integral '$c' (got $t)$hint")
+    t
+  }
+
   /** STREAMING embedding near-dup admission — the EMBEDDING modality of
     * the streaming near-dup matrix (text MinHash / image / audio /
     * video dHash+spectral are the siblings): each arriving vector is
     * adjudicated against the PERSISTED IVF index
-    * ([[graft.llm.Embeddings.ivfIndexSave]]) — assign to its nearest
-    * frozen centroid (1-row broadcast of the centroid array, codegen'd
-    * argmax; joined on a literal key, not a cross join — stream-static
-    * cross joins are the unsupported shape), stream-static-join the
-    * probed cell's postings, exact cosine ≥ `threshold` verifies
-    * inline; keyed state only de-duplicates re-sent ids (a neighbor
-    * lives in one cell, so pairs never duplicate). Emits
-    * (left_id, right_id, cosine) — [[graft.llm.Embeddings
-    * .ivfNearDupJoinIndexed]]'s contract, so single-batch backfill
-    * parity is spec-gated and the driver query shares its oracle. */
-  /** Per-query probe cells as a PROJECTION over the folded centroid
-    * array — the window-free formulation that makes streaming nprobe>1
-    * possible (the batch [[graft.llm.Embeddings]] rank is a per-query
-    * row_number window, unsupported on streams): sort the per-centroid
-    * (rounded cosine, cid) structs by the batch window's exact order —
-    * NULL sims last, NaN sims first (Spark's desc total order), then
-    * sim desc via negation, then cid asc — slice the first `nprobe`,
-    * explode. Each posting lives in exactly one cell, so probing P
-    * cells never duplicates a candidate. Input must carry `__q__`,
-    * `__qn__`, `__cents__`; output replaces them with one `__qcell__`
-    * row per probed cell. nprobe=1 keeps the codegen'd argmax native
-    * (the HOF sort is CodegenFallback — fine on the tiny query side,
-    * not the hot single-probe path). */
-  private def withProbeCells(df: DataFrame, nprobe: Int): DataFrame =
-    if (nprobe == 1)
-      df.withColumn("__qcell__",
-          expr("vec_argmax_cell(__q__, __qn__, __cents__)"))
-        .drop("__cents__", "__one__")
-    else
-      df.withColumn("__qcell__", explode(expr(
-          s"""transform(slice(array_sort(transform(
-                transform(__cents__, c -> named_struct(
-                  's', round(float_vec_dot(__q__, c.__cv__)
-                             / (__qn__ * c.__cn__), 6),
-                  'cid', c.__cid__)),
-                p -> named_struct(
-                  'sn', p.s IS NULL,
-                  'nf', coalesce(NOT isnan(p.s), true),
-                  'ns', -p.s,
-                  'cid', p.cid))), 1, $nprobe), s -> s.cid)""")))
-        .drop("__cents__", "__one__")
-
+    * ([[graft.llm.Embeddings.ivfIndexSave]]) through the batch
+    * [[graft.llm.Embeddings.ivfNearDupJoinIndexed]] itself — its probe
+    * front-end attaches the folded centroids on a literal key (a
+    * stream-static cross join is the unsupported shape), the probed
+    * cells' postings join stream-static, exact cosine ≥ `threshold`
+    * verifies inline; keyed state only de-duplicates re-sent ids (a
+    * neighbor lives in one cell, so pairs never duplicate). Emits
+    * (left_id, right_id, cosine), the batch contract, so single-batch
+    * backfill parity is spec-gated and the driver query shares its
+    * oracle. */
   def streamingIvfNearDup(
       docs: DataFrame,
       idCol: String,
@@ -686,33 +674,12 @@ object Streams {
       threshold: Double,
       nprobe: Int = 1,
   ): DataFrame = {
-    graft.GraftExtensions.install(docs.sparkSession)
     import org.apache.spark.sql.types._
-    val spark = docs.sparkSession
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val centArr = centroids
-      .select(col("cid").as("__cid__"), col("cv").as("__cv__"),
-        sqrt(expr("float_vec_dot(cv, cv)")).as("__cn__"))
-      .agg(collect_list(struct(col("__cid__"), col("__cv__"),
-        col("__cn__"))).as("__cents__"))
-      .withColumn("__one__", lit(1))
-    require(nprobe >= 1, "nprobe must be at least 1")
-    val cand = withProbeCells(docs
-      .select(col(idCol).cast("long").as("__nid__"), col(vecCol).as("__q__"))
-      // NULL ids cannot carry adjudication state — dropped honestly
-      .where(col("__nid__").isNotNull)
-      .withColumn("__qn__",
-        sqrt(expr("float_vec_dot(__q__, __q__)")))
-      .withColumn("__one__", lit(1))
-      .join(centArr, Seq("__one__")), // 1-row static side, equi-keyed
-      nprobe)
-      .join(postings, col("__qcell__") === col("__cell__"))
-      .withColumn("cosine",
-        round(expr(s"float_vec_dot($vecCol, __q__)")
-          / (col("__n__") * col("__qn__")), 6))
-      .where(col("cosine") >= threshold)
-      .select(col("__nid__"), col(idCol).cast("long").as("__bid__"),
-        col("cosine"))
+    val cand = Embeddings.ivfNearDupJoinIndexed(
+        servedIds(docs, idCol, vecCol, LongType), idCol, vecCol, dir,
+        postings, threshold, nprobe, pushCells = false)
+      .select(col("left_id").as("__nid__"),
+        col("right_id").cast("long").as("__bid__"), col("cosine"))
     // no per-pair dedupe: a neighbor lives in exactly one cell
     adjudicateFirstSeen(cand,
       StructType(Seq(StructField("left_id", LongType),
@@ -724,23 +691,20 @@ object Streams {
   /** STREAMING kNN LABEL PROPAGATION — [[graft.llm.Embeddings
     * .knnLabelIndexed]]'s continuous twin: each arriving vector gets the
     * MAJORITY label of its k nearest neighbors in the PERSISTED
-    * label-attributed IVF index. Assignment is the streaming admission
-    * shape (1-row centroid broadcast joined on a literal key, codegen'd
-    * argmax), candidates are the cell's postings via one stream-static
-    * join, and the top-k cut is the K-BOUNDED `topk_by` aggregate — the
-    * piece that makes a streaming top-k possible at all (row_number
-    * windows are unsupported on streams) and keeps per-key state k-sized
-    * rather than cell-sized. The vote then runs in a PROJECTION over the
-    * k-element array (array_sort by (votes desc, label asc) — a
-    * per-verdict loop over k elements, never per candidate), so no
-    * per-row work ever reaches a keyed sequential path. nprobe>1 probes
-    * each query's best-P cells via [[withProbeCells]] — the window-free
-    * per-row centroid rank that removed the old "wider probes are
-    * batch-only" constraint. Re-sent ids just update their aggregate
-    * and re-emit the same verdict. Emits (idCol, <labelCol>, votes) —
-    * the batch contract, so single-batch backfill parity is spec-gated.
-    * The candidate with id equal to the arriving id is excluded (the
-    * batch self-exclusion), compared as long. */
+    * label-attributed IVF index. Probe cells come from the batch serve's
+    * [[graft.llm.Embeddings.ivfProbe]] front-end (nprobe ≥ 1,
+    * window-free), candidates from one stream-static join, and the cut
+    * is the K-BOUNDED `topk_by` aggregate — the piece that makes a
+    * streaming top-k possible at all (row_number windows are unsupported
+    * on streams) and keeps per-key state k-sized rather than cell-sized.
+    * The vote then runs in a PROJECTION over the k-element array
+    * (array_sort by (votes desc, label asc) — a per-verdict loop over k
+    * elements, never per candidate), so no per-row work ever reaches a
+    * keyed sequential path. Re-sent ids just update their aggregate and
+    * re-emit the same verdict. Emits (idCol, <labelCol>, votes) — the
+    * batch contract, so single-batch backfill parity is spec-gated. The
+    * candidate with id equal to the arriving id is excluded (the batch
+    * self-exclusion). */
   def streamingKnnLabel(
       docs: DataFrame,
       idCol: String,
@@ -753,46 +717,17 @@ object Streams {
   ): DataFrame = {
     graft.GraftExtensions.install(docs.sparkSession)
     require(k >= 1, "k must be at least 1")
-    require(nprobe >= 1, "nprobe must be at least 1")
     require(postings.columns.contains(labelCol),
       s"postings carry no '$labelCol' column — save the index with " +
         s"attrs = Seq(\"$labelCol\")")
-    // same type gate as the batch twin: the label rides topk_by's BIGINT
-    // tag slot, and a non-integral label would otherwise pass the
-    // existence check only to fail at runtime under ANSI (or silently
-    // null every tag). The batch path falls back to a window for
-    // non-integral types; a stream has no such fallback, so refuse loudly.
-    locally {
-      import org.apache.spark.sql.types._
-      val lt = postings.schema(labelCol).dataType
-      require(Set[DataType](ByteType, ShortType, IntegerType, LongType)
-        .contains(lt),
-        s"streamingKnnLabel needs an integral '$labelCol' (got $lt) — " +
-          "labels ride topk_by's BIGINT tag; encode string labels first")
-    }
-    val spark = docs.sparkSession
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val centArr = centroids
-      .select(col("cid").as("__cid__"), col("cv").as("__cv__"),
-        sqrt(expr("float_vec_dot(cv, cv)")).as("__cn__"))
-      .agg(collect_list(struct(col("__cid__"), col("__cv__"),
-        col("__cn__"))).as("__cents__"))
-      .withColumn("__one__", lit(1))
-    withProbeCells(docs
-      .select(col(idCol).cast("long").as("__nid__"), col(vecCol).as("__q__"))
-      .where(col("__nid__").isNotNull)
-      .withColumn("__qn__", sqrt(expr("float_vec_dot(__q__, __q__)")))
-      .withColumn("__one__", lit(1))
-      .join(centArr, Seq("__one__")), // 1-row static side, equi-keyed
+    requireIntegral(postings, labelCol, "streamingKnnLabel",
+      " — labels ride topk_by's BIGINT tag; encode string labels first")
+    val probed = Embeddings.ivfProbe(
+      servedIds(docs, idCol, vecCol, org.apache.spark.sql.types.LongType),
+      idCol, vecCol, Embeddings.storedCentroids(docs.sparkSession, dir),
       nprobe)
-      .join(postings, col("__qcell__") === col("__cell__") &&
-        col(idCol).cast("long") =!= col("__nid__"))
-      .withColumn("__cos__",
-        round(expr(s"float_vec_dot($vecCol, __q__)")
-          / (col("__n__") * col("__qn__")), 6))
-      .groupBy(col("__nid__"))
-      .agg(expr(s"topk_by(__cos__, CAST($idCol AS BIGINT), " +
-        s"CAST($labelCol AS BIGINT), $k)").as("__tk__"))
+    Embeddings.topKArrays(Embeddings.ivfScored(probed, postings, idCol, vecCol),
+        Seq("query_id"), idCol, k, tag = Some(labelCol))
       // majority vote over the k-element array: candidates per distinct
       // label counted null-safely, sorted by (votes desc, label asc
       // NULLS LAST) via the negated-count struct order — deterministic,
@@ -807,24 +742,21 @@ object Streams {
                'ln', l IS NULL,
                'l', l))), 1)"""))
       .where(col("__win__").isNotNull)
-      .select(col("__nid__").as(idCol), col("__win__.l").as(labelCol),
+      .select(col("query_id").as(idCol), col("__win__.l").as(labelCol),
         (-col("__win__.nv")).cast("long").as("votes"))
   }
 
   /** STREAMING IVF top-k serving — [[graft.llm.Embeddings
-    * .ivfTopKIndexed]]'s continuous twin: each arriving query vector
-    * gets its ranked top-k neighbors from the PERSISTED index. The
-    * probe set comes from [[withProbeCells]] (nprobe ≥ 1, window-free),
-    * candidates from one stream-static join on the probed cells, and
-    * the cut is the k-bounded `topk_by` aggregate whose output array is
-    * already IN RANK ORDER — so rank/cosine/neighbor emit from a plain
-    * posexplode PROJECTION after the aggregate, never a window. State
-    * per query id is k-sized. Update/complete mode; a re-sent query
-    * re-emits its (identical) rows. Emits (query_id, neighbor_id,
-    * cosine, rank) — [[graft.llm.Embeddings.ivfTopKTrained]]'s exact
-    * contract over the same centroids, so single-batch backfill parity
-    * shares `q_ann_ivf_probe`'s oracle. Self-matches are excluded by id
-    * (compared as long), mirroring the batch serve. */
+    * .ivfTopKIndexed]] itself over a stream: probe front-end, one
+    * stream-static join on the probed cells, and the k-bounded `topk_by`
+    * cut emitted by a posexplode PROJECTION after the aggregate, never a
+    * window. State per query id is k-sized. Update/complete mode; a
+    * re-sent query re-emits its (identical) rows. Emits (query_id,
+    * neighbor_id, cosine, rank) — [[graft.llm.Embeddings
+    * .ivfTopKTrained]]'s exact contract over the same centroids, so
+    * single-batch backfill parity shares `q_ann_ivf_probe`'s oracle.
+    * `pushCells = false`: the probed-cell set of a stream (or of a
+    * backfill batch) is not collected at plan time. */
   def streamingIvfTopK(
       docs: DataFrame,
       idCol: String,
@@ -834,58 +766,16 @@ object Streams {
       k: Int,
       nprobe: Int = 1,
   ): DataFrame = {
-    graft.GraftExtensions.install(docs.sparkSession)
     require(k >= 1, "k must be at least 1")
-    require(nprobe >= 1, "nprobe must be at least 1")
-    val spark = docs.sparkSession
-    val idType = postings.schema(idCol).dataType
-    // ids ride topk_by's BIGINT slots — same gate as streamingKnnLabel
-    // (the batch twin's window fallback has no streaming equivalent)
-    locally {
-      import org.apache.spark.sql.types._
-      require(Set[DataType](ByteType, ShortType, IntegerType, LongType)
-        .contains(idType),
-        s"streamingIvfTopK needs an integral '$idCol' (got $idType)")
-    }
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val centArr = centroids
-      .select(col("cid").as("__cid__"), col("cv").as("__cv__"),
-        sqrt(expr("float_vec_dot(cv, cv)")).as("__cn__"))
-      .agg(collect_list(struct(col("__cid__"), col("__cv__"),
-        col("__cn__"))).as("__cents__"))
-      .withColumn("__one__", lit(1))
-    withProbeCells(docs
-      .select(col(idCol).cast("long").as("__nid__"), col(vecCol).as("__q__"))
-      .where(col("__nid__").isNotNull)
-      .withColumn("__qn__", sqrt(expr("float_vec_dot(__q__, __q__)")))
-      .withColumn("__one__", lit(1))
-      .join(centArr, Seq("__one__")), // 1-row static side, equi-keyed
-      nprobe)
-      .join(postings, col("__qcell__") === col("__cell__") &&
-        col(idCol).cast("long") =!= col("__nid__"))
-      .withColumn("__cos__",
-        round(expr(s"float_vec_dot($vecCol, __q__)")
-          / (col("__n__") * col("__qn__")), 6))
-      .groupBy(col("__nid__"))
-      .agg(expr(s"topk_by(__cos__, CAST($idCol AS BIGINT), " +
-        s"CAST(NULL AS BIGINT), $k)").as("__tk__"))
-      .select(col("__nid__").cast(idType).as("query_id"),
-        posexplode(col("__tk__")).as(Seq("__p__", "__e__")))
-      .select(col("query_id"),
-        col("__e__.id").cast(idType).as("neighbor_id"),
-        col("__e__.score").as("cosine"),
-        (col("__p__") + 1).cast("int").as("rank"))
+    val idType = requireIntegral(postings, idCol, "streamingIvfTopK")
+    Embeddings.ivfTopKIndexed(servedIds(docs, idCol, vecCol, idType),
+      idCol, vecCol, dir, postings, k, nprobe, pushCells = false)
   }
 
-  /** STREAMING IVF-SQ8 serving — [[streamingIvfTopK]]'s quantized twin
-    * over a persisted [[graft.llm.Embeddings.ivfSq8IndexSave]] artifact:
-    * the coarse assignment and (for nprobe > 1) the probe ranking run as
-    * PROJECTIONS against 1-row static joins (windows are unsupported on
-    * streams — the array_sort rank is the spec-pinned equivalent), the
-    * stream-static equi-join pulls only the probed cells' CODED
-    * postings, the dequantized cosine scores in one codegen'd
-    * projection, and the per-query k cut is the `topk_by` aggregate in
-    * update mode. Raw vectors never load — the static side the stream
+  /** STREAMING IVF-SQ8 serving — [[streamingIvfTopK]]'s quantized twin:
+    * [[graft.llm.Embeddings.ivfSq8TopKIndexed]] itself over a stream,
+    * the stream-static equi-join pulling only the probed cells' CODED
+    * postings, so raw vectors never load — the static side the stream
     * scans is the 4×-smaller coded representation. */
   def streamingIvfSq8TopK(
       docs: DataFrame,
@@ -897,49 +787,10 @@ object Streams {
       k: Int,
       nprobe: Int = 1,
   ): DataFrame = {
-    graft.GraftExtensions.install(docs.sparkSession)
     require(k >= 1, "k must be at least 1")
-    require(nprobe >= 1, "nprobe must be at least 1")
-    val spark = docs.sparkSession
-    val idType = postings.schema(idCol).dataType
-    locally {
-      import org.apache.spark.sql.types._
-      require(Set[DataType](ByteType, ShortType, IntegerType, LongType)
-        .contains(idType),
-        s"streamingIvfSq8TopK needs an integral '$idCol' (got $idType)")
-    }
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val centArr = centroids
-      .select(col("cid").as("__cid__"), col("cv").as("__cv__"),
-        sqrt(expr("float_vec_dot(cv, cv)")).as("__cn__"))
-      .agg(collect_list(struct(col("__cid__"), col("__cv__"),
-        col("__cn__"))).as("__cents__"))
-      .withColumn("__one__", lit(1))
-    val params = graft.llm.Embeddings.sq8StoredParams(spark, dir, dim)
-      .withColumn("__onep__", lit(1))
-    withProbeCells(docs
-      .select(col(idCol).cast("long").as("__nid__"), col(vecCol).as("__q__"))
-      .where(col("__nid__").isNotNull)
-      .withColumn("__qn__", sqrt(expr("float_vec_dot(__q__, __q__)")))
-      .withColumn("__one__", lit(1))
-      .join(centArr, Seq("__one__")), nprobe)
-      .withColumn("__onep__", lit(1))
-      .join(params, Seq("__onep__")) // 1-row static side, equi-keyed
-      .join(postings, col("__qcell__") === col("__cell__") &&
-        col(idCol).cast("long") =!= col("__nid__"))
-      .withColumn("__cos__", round(
-        expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
-          (col("__qn__") *
-            sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6))
-      .groupBy(col("__nid__"))
-      .agg(expr(s"topk_by(__cos__, CAST($idCol AS BIGINT), " +
-        s"CAST(NULL AS BIGINT), $k)").as("__tk__"))
-      .select(col("__nid__").cast(idType).as("query_id"),
-        posexplode(col("__tk__")).as(Seq("__p__", "__e__")))
-      .select(col("query_id"),
-        col("__e__.id").cast(idType).as("neighbor_id"),
-        col("__e__.score").as("cosine"),
-        (col("__p__") + 1).cast("int").as("rank"))
+    val idType = requireIntegral(postings, idCol, "streamingIvfSq8TopK")
+    Embeddings.ivfSq8TopKIndexed(servedIds(docs, idCol, vecCol, idType),
+      idCol, vecCol, dir, postings, dim, k, nprobe, pushCells = false)
   }
 
   /** STREAMING maximal-substring admission — the exact-span TEXT

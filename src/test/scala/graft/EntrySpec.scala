@@ -51,22 +51,35 @@ class EntrySpec extends GraftSuite {
     assert(built === 1)
   }
 
+  /** The files under `root` whose text satisfies `bad`, sorted. Tests
+    * fork with the checkout as cwd. */
+  private def sourcesWhere(root: String)(bad: String => Boolean): List[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try files.iterator.asScala
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .filter(p => bad(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+      .map(_.toString).toList.sorted
+    finally files.close()
+  }
+
   test("source lint: no file under src/ names the checkout's own path in a literal") {
     // A literal path into the checkout (a fixture root, say) makes every
     // copy of the repo read and write the original's files; derive such
-    // paths from the code location instead (Fixtures.root). Tests fork
-    // with the checkout as cwd.
+    // paths from the code location instead (Fixtures.root).
     val checkout = new java.io.File(".").getCanonicalPath
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
-    val offenders =
-      try files.iterator.asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .contains("\"" + checkout))
-        .map(_.toString).toList.sorted
-      finally files.close()
+    val offenders = sourcesWhere("src")(_.contains("\"" + checkout))
     assert(offenders.isEmpty,
       s"files with a \"$checkout... literal: ${offenders.mkString(", ")}")
+  }
+
+  test("source lint: no file under src/main reads a centroid table with a bare read.parquet") {
+    // A schemaless read runs a schema-inference job on every call; the
+    // IVF serves read `centroids` through ParquetIO.read
+    // (Embeddings.storedCentroids), which resolves it once per version.
+    val bare = "read\\.parquet\\(s\"\\$[^\"]*/centroids\"\\)".r
+    val offenders = sourcesWhere("src/main")(bare.findFirstIn(_).isDefined)
+    assert(offenders.isEmpty,
+      s"bare read.parquet of a centroid table: ${offenders.mkString(", ")}")
   }
 
   test("plan lint: no cartesian product in any query's physical plan") {

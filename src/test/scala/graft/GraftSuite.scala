@@ -5,6 +5,24 @@ import org.scalatest.funsuite.AnyFunSuite
 
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSuite.spark
+
+  /** `body`'s result and the Spark jobs it submits on this thread. Job
+    * events reach the status tracker asynchronously, in order, so a
+    * marker job run after `body` is awaited before counting. */
+  protected def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val out = try body finally sc.clearJobGroup()
+    val marker = group + "-marker"
+    sc.setJobGroup(marker, marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }
 
 object GraftSuite {

@@ -4038,6 +4038,82 @@ class LlmSpec extends GraftSuite {
     graft.llm.CacheScope.global.release()
   }
 
+  test("ivfProbe ranks probe cells in the (sim desc, cid) row_number window's order") {
+    // the reference is the window the batch serve ranked with before the
+    // projection replaced it: ties, NULL vector elements, nprobe at and
+    // past the centroid count, and nprobe = 1 against the argmax
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{expr, row_number}
+    graft.GraftExtensions.install(s)
+    // cids 3 and 5 hold equal vectors, so their cosines tie for every
+    // query; cid 6 carries a NULL element
+    val cents = s.sql("""SELECT cid, CAST(cv AS ARRAY<FLOAT>) AS cv FROM VALUES
+        (1L, array(1, 0, 0)), (2L, array(0, 1, 0)), (5L, array(1, 1, 0)),
+        (3L, array(1, 1, 0)), (4L, array(0, 0, 1)), (6L, array(NULL, 1, 1))
+        AS t(cid, cv)""")
+    val queries = s.sql("""SELECT id, CAST(vec AS ARRAY<FLOAT>) AS vec FROM VALUES
+        (0L, array(1, 1, 0)), (1L, array(1, 0.5, 0.2)), (2L, array(0, 0, -1)),
+        (3L, array(1, NULL, 0)), (4L, array(0.3, 0.3, 0.3)),
+        (5L, array(NULL, 2, 1)) AS t(id, vec)""")
+    val ranked = queries.crossJoin(cents)
+      .withColumn("sim", expr("round(float_vec_dot(vec, cv) / " +
+        "(sqrt(float_vec_dot(vec, vec)) * sqrt(float_vec_dot(cv, cv))), 6)"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(sc("id")).orderBy(sc("sim").desc, sc("cid"))))
+    def window(nprobe: Int): Seq[(Long, Long)] = ranked
+      .where(sc("rk") <= nprobe).select("id", "cid").as[(Long, Long)]
+      .collect().toSeq.sorted
+    def probed(nprobe: Int): Seq[(Long, Long)] = Embeddings
+      .ivfProbe(queries, "id", "vec", cents, nprobe)
+      .select("query_id", "__qcell__").as[(Long, Long)].collect().toSeq.sorted
+    // the tie sits on the nprobe = 2 and 3 boundaries of queries 0 and 4
+    assert(window(2).filter(_._1 == 0L).map(_._2) === Seq(3L, 5L))
+    for (nprobe <- Seq(1, 2, 3, 6, 9))
+      assert(probed(nprobe) === window(nprobe), s"nprobe=$nprobe")
+    assert(probed(9).length === 6 * 6, "each cell probed once")
+    val argmax = Embeddings
+      .withCell(queries.withColumn("__n__", expr("sqrt(float_vec_dot(vec, vec))")),
+        "vec", cents)
+      .select("id", "__cell__").as[(Long, Long)].collect().toSeq.sorted
+    assert(probed(1) === argmax)
+  }
+
+  test("a warm persisted IVF serve builds with no Spark job and ranks probe cells without a window") {
+    val s = spark
+    val emb = s.range(60).selectExpr("id AS vec_id",
+      "transform(sequence(0, 7), d -> CAST(sin(id * 7 + d) AS FLOAT)) AS embedding")
+    val dir = "/tmp/graft_ivf_idx/warm"
+    graft.llm.Embeddings.ivfIndexSave(emb, "vec_id", "embedding",
+      emb.where(sc("vec_id") < 6).select(sc("vec_id").as("cid"),
+        sc("embedding").as("cv")),
+      "ivf_idx_warm", dir, buckets = 4)
+    try {
+      def serve(nprobe: Int) = graft.llm.Embeddings.ivfTopKIndexed(
+        emb.where(sc("vec_id") < 3), "vec_id", "embedding", dir,
+        s.table("ivf_idx_warm"), k = 5, nprobe = nprobe, pushCells = false)
+      val cold = serve(1) // resolves the centroid table's schema
+      val (warm, jobs) = withJobs(serve(1))
+      assert(jobs === 0, "a warm serve re-read the centroids' schema")
+      val rows = warm.collect().map(_.toString).toSet
+      assert(rows.nonEmpty && rows === cold.collect().map(_.toString).toSet)
+      import org.apache.spark.sql.execution._
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.window.WindowExec
+      def flatten(p: SparkPlan): Seq[SparkPlan] =
+        p +: (p.children ++ (p match {
+          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+          case w: WholeStageCodegenExec => Seq(w.child)
+          case _ => Seq.empty
+        })).flatMap(flatten)
+      val plan = serve(2).queryExecution.executedPlan
+      assert(!flatten(plan).exists(_.isInstanceOf[WindowExec]),
+        s"nprobe = 2 serve ranks with a window:\n$plan")
+    } finally s.sql("DROP TABLE IF EXISTS ivf_idx_warm")
+    graft.llm.CacheScope.global.release()
+  }
+
   test("minhashIndexAppend: query-after-append equals query-against-rebuilt-index") {
     val s = spark
     val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")

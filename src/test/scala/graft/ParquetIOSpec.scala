@@ -26,24 +26,6 @@ class ParquetIOSpec extends GraftSuite {
     finally FileUtils.deleteQuietly(d.toFile)
   }
 
-  /** `body`'s result and the Spark jobs it submits on this thread. Job
-    * events reach the status tracker asynchronously, in order, so a
-    * marker job run after `body` is awaited before counting. */
-  private def withJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"parquetio-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, group)
-    val out = try body finally sc.clearJobGroup()
-    val marker = group + "-marker"
-    sc.setJobGroup(marker, marker)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   /** A parquet file written without Spark's schema metadata, so
     * inference reads the parquet types themselves. */
   private def writeExample(file: String, schema: String)(
