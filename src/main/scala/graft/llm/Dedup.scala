@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -140,6 +140,122 @@ object Dedup {
         countDistinct(md5(TextOps.normalize(col(textCol)).cast("binary")))
           .as("n_unique"))
 
+  /** The (`id`, `toks`) token rows of `docs`: each document's id and
+    * whitespace tokens, documents with fewer than `minTokens` tokens
+    * dropped (they hold no shingle). */
+  private def tokenRows(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      minTokens: Int,
+      id: String = "__id__",
+      toks: String = "__toks__"): DataFrame =
+    docs
+      .select(col(idCol).as(id), col(textCol).as("__text__"))
+      .withColumn(toks, TextOps.tokens(col("__text__")))
+      .where(size(col(toks)) >= minTokens)
+
+  /** The one MinHash LSH band-row builder: one row per band of each row
+    * of `tokens` — its `keep` columns plus (`__band__`, `__bh__`), the
+    * band's hash over the MinHash signature of the tokens in `toks`. The
+    * signature is the fused native graft.expr.MinHashSigWords
+    * (value-identical to the CodegenFallback HOF chain). */
+  private def bandRows(
+      tokens: DataFrame,
+      toks: String,
+      keep: Seq[String],
+      shingleSize: Int,
+      numHashes: Int,
+      rowsPerBand: Int): DataFrame = {
+    require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
+      "numHashes must be a multiple of rowsPerBand")
+    graft.GraftExtensions.install(tokens.sparkSession)
+    tokens
+      .withColumn("__sig__",
+        expr(s"minhash_sig_words($toks, $shingleSize, $numHashes)"))
+      .select(keep.map(col) :+
+        posexplode(TextOps.bandHashes("__sig__", numHashes / rowsPerBand,
+          rowsPerBand)).as(Seq("__band__", "__bh__")): _*)
+  }
+
+  /** The band-posting key `__bkey__`: the `parts` joined by ':' — equal
+    * iff every part is equal, as no part (an int or an md5 hex) holds a
+    * ':'. Every persisted band-posting index is keyed by it. */
+  private[llm] def bandKey(parts: String*): Column =
+    concat(parts.map(col).flatMap(c => Seq(lit(":"), c)).tail: _*)
+      .as("__bkey__")
+
+  /** The 6-dp word-`shingleSize`-gram Jaccard every candidate verifies. */
+  private def jaccard(a: String, b: String, shingleSize: Int): Column =
+    round(expr(s"word_ngram_jaccard($a, $b, $shingleSize)"), 6)
+
+  /** One corpus side of the MinHash band join: the cached (`__id__`,
+    * `__toks__`) token rows the verification reads back, and the id-only
+    * band rows (`__id__`, `__band__`, `__bh__`) the band join shuffles.
+    *
+    * Hot-bucket guard (off by default, maxBucketSize <= 0): a degenerate
+    * bucket — every near-empty doc hashing to one band value — makes the
+    * band join quadratic IN THAT BUCKET. Production corpora cap or drop
+    * such buckets (the docs inside are boilerplate, not near-dups of
+    * interest); this is the skew fix for the one O(n²) risk in the
+    * pipeline, applied per (band, hash) key via one windowed count under
+    * the same partitioning the join needs anyway. Driver-gated queries
+    * that set a cap must use the equally-parameterized oracle
+    * (ops.Shared.minhashPairsCtes(maxBucketSize)) — it replays this exact
+    * windowed count, so query and oracle can't desynchronize. */
+  private def bandSide(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleSize: Int,
+      numHashes: Int,
+      rowsPerBand: Int,
+      scope: CacheScope,
+      maxBucketSize: Int): (DataFrame, DataFrame) = {
+    // persisted: tokenization runs once for the band join AND the
+    // verification joins (the materialize-features-first phase)
+    val base = scope.cache(tokenRows(docs, idCol, textCol, shingleSize)
+      .select(col("__id__"), col("__toks__")))
+    val bandedAll = bandRows(base, "__toks__", Seq("__id__"), shingleSize,
+      numHashes, rowsPerBand)
+    val banded =
+      if (maxBucketSize <= 0) bandedAll
+      else bandedAll
+        .withColumn("__bn__",
+          count(lit(1)).over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("__band__"), col("__bh__"))))
+        .where(col("__bn__") <= maxBucketSize)
+        .drop("__bn__")
+    (base, banded)
+  }
+
+  /** The band join of two [[bandSide]]s on (band, hash) — a self-join
+    * keeps a < b — as distinct (`aName`, `bName`) id pairs, with both
+    * token sets joined back and the pairs at Jaccard ≥ `threshold`
+    * kept: (`aName`, `bName`, jaccard). */
+  private def verifiedBandJoin(
+      l: (DataFrame, DataFrame),
+      r: (DataFrame, DataFrame),
+      aName: String,
+      bName: String,
+      shingleSize: Int,
+      threshold: Double,
+      selfJoin: Boolean): DataFrame = {
+    val ((lBase, lBanded), (rBase, rBanded)) = (l, r)
+    val onBand = col("a.__band__") === col("b.__band__") &&
+      col("a.__bh__") === col("b.__bh__")
+    lBanded.as("a")
+      .join(rBanded.as("b"),
+        if (selfJoin) onBand && col("a.__id__") < col("b.__id__") else onBand)
+      .select(col("a.__id__").as(aName), col("b.__id__").as(bName))
+      .distinct()
+      .join(lBase.as("x"), col(aName) === col("x.__id__"))
+      .join(rBase.as("y"), col(bName) === col("y.__id__"))
+      .withColumn("jaccard", jaccard("x.__toks__", "y.__toks__", shingleSize))
+      .where(col("jaccard") >= threshold)
+      .select(col(aName), col(bName), col("jaccard"))
+  }
+
   /** MinHash + LSH near-duplicate pairs.
     *
     * Pipeline: tokenize → distinct word n-gram shingles → MinHash signature
@@ -148,7 +264,7 @@ object Dedup {
     * verification WITHIN candidates only. Pairs with Jaccard ≥ threshold
     * survive. Candidate pairs carry only ids through the band join; shingle
     * sets are joined back for verification, keeping band-join shuffle rows
-    * narrow.
+    * narrow ([[bandSide]], which also holds the `maxBucketSize` cap).
     *
     * With rowsPerBand=r, numBands=b, a pair of true Jaccard j collides in
     * ≥1 band with probability 1-(1-j^r)^b (e.g. j=0.9, r=2, b=4 → 99.87%).
@@ -164,60 +280,10 @@ object Dedup {
       scope: CacheScope = CacheScope.global,
       maxBucketSize: Int = 0,
   ): DataFrame = {
-    require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
-      "numHashes must be a multiple of rowsPerBand")
-    graft.GraftExtensions.install(docs.sparkSession)
-    val numBands = numHashes / rowsPerBand
-    // the token frame feeds both band-join sides AND the verification
-    // joins — persist so tokenization runs once (the materialize-features-
-    // first phase a production pipeline would write to storage). Shingling
-    // + signatures run as fused native expressions (graft.expr
-    // .MinHashSigWords / WordNgramJaccard — value-identical to the
-    // wordShingles/array_distinct/minhashSignature HOF chain, which is
-    // CodegenFallback and interpreted per element).
-    val base = scope.cache(docs
-      .select(col(idCol).as("__id__"), col(textCol).as("__text__"))
-      .withColumn("__toks__", TextOps.tokens(col("__text__")))
-      .where(size(col("__toks__")) >= shingleSize)
-      .select(col("__id__"), col("__toks__")))
-    val bandedAll = base
-      .withColumn("__sig__",
-        expr(s"minhash_sig_words(__toks__, $shingleSize, $numHashes)"))
-      .select(col("__id__"),
-        posexplode(TextOps.bandHashes("__sig__", numBands, rowsPerBand))
-          .as(Seq("__band__", "__bh__")))
-    // hot-bucket guard (off by default, maxBucketSize <= 0): a degenerate
-    // bucket — every near-empty doc hashing to one band value — makes the
-    // self-join quadratic IN THAT BUCKET. Production corpora cap or drop
-    // such buckets (the docs inside are boilerplate, not near-dups of
-    // interest); this is the skew fix for the one O(n²) risk in the
-    // pipeline, applied per (band, hash) key via one windowed count under
-    // the same partitioning the join needs anyway. Driver-gated queries
-    // that set a cap must use the equally-parameterized oracle
-    // (ops.Shared.minhashPairsCtes(maxBucketSize)) — it replays this exact
-    // windowed count, so query and oracle can't desynchronize.
-    val banded =
-      if (maxBucketSize <= 0) bandedAll
-      else bandedAll
-        .withColumn("__bn__",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("__band__"), col("__bh__"))))
-        .where(col("__bn__") <= maxBucketSize)
-        .drop("__bn__")
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.__band__") === col("b.__band__") &&
-          col("a.__bh__") === col("b.__bh__") &&
-          col("a.__id__") < col("b.__id__"))
-      .select(col("a.__id__").as("doc_a"), col("b.__id__").as("doc_b"))
-      .distinct()
-    cand
-      .join(base.as("x"), col("doc_a") === col("x.__id__"))
-      .join(base.as("y"), col("doc_b") === col("y.__id__"))
-      .withColumn("jaccard",
-        round(expr(s"word_ngram_jaccard(x.__toks__, y.__toks__, $shingleSize)"), 6))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val side = bandSide(docs, idCol, textCol, shingleSize, numHashes,
+      rowsPerBand, scope, maxBucketSize)
+    verifiedBandJoin(side, side, "doc_a", "doc_b", shingleSize, threshold,
+      selfJoin = true)
   }
 
   /** Cross-corpus MinHash near-dup JOIN — the "dedupe the new crawl
@@ -247,60 +313,24 @@ object Dedup {
       scope: CacheScope = CacheScope.global,
       maxBucketSize: Int = 0,
   ): DataFrame = {
-    require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
-      "numHashes must be a multiple of rowsPerBand")
-    graft.GraftExtensions.install(left.sparkSession)
-    val numBands = numHashes / rowsPerBand
-    def side(df: DataFrame, id: String, text: String): (DataFrame, DataFrame) = {
-      val base = scope.cache(df
-        .select(col(id).as("__id__"), col(text).as("__text__"))
-        .withColumn("__toks__", TextOps.tokens(col("__text__")))
-        .where(size(col("__toks__")) >= shingleSize)
-        .select(col("__id__"), col("__toks__")))
-      val bandedAll = base
-        .withColumn("__sig__",
-          expr(s"minhash_sig_words(__toks__, $shingleSize, $numHashes)"))
-        .select(col("__id__"),
-          posexplode(TextOps.bandHashes("__sig__", numBands, rowsPerBand))
-            .as(Seq("__band__", "__bh__")))
-      val banded =
-        if (maxBucketSize <= 0) bandedAll
-        else bandedAll
-          .withColumn("__bn__",
-            count(lit(1)).over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col("__band__"), col("__bh__"))))
-          .where(col("__bn__") <= maxBucketSize)
-          .drop("__bn__")
-      (base, banded)
-    }
-    val (lBase, lBanded) = side(left, leftId, leftText)
-    val (rBase, rBanded) = side(right, rightId, rightText)
-    val cand = lBanded.as("a")
-      .join(rBanded.as("b"),
-        col("a.__band__") === col("b.__band__") &&
-          col("a.__bh__") === col("b.__bh__"))
-      .select(col("a.__id__").as("left_id"), col("b.__id__").as("right_id"))
-      .distinct()
-    cand
-      .join(lBase.as("x"), col("left_id") === col("x.__id__"))
-      .join(rBase.as("y"), col("right_id") === col("y.__id__"))
-      .withColumn("jaccard",
-        round(expr(s"word_ngram_jaccard(x.__toks__, y.__toks__, $shingleSize)"), 6))
-      .where(col("jaccard") >= threshold)
-      .select(col("left_id"), col("right_id"), col("jaccard"))
+    def side(df: DataFrame, id: String, text: String) =
+      bandSide(df, id, text, shingleSize, numHashes, rowsPerBand, scope,
+        maxBucketSize)
+    verifiedBandJoin(side(left, leftId, leftText),
+      side(right, rightId, rightText), "left_id", "right_id", shingleSize,
+      threshold, selfJoin = false)
   }
 
   /** Persistable MinHash INDEX of a cleaned corpus — the artifact the
     * production 100 TB dedup loop builds ONCE per corpus snapshot and
     * then queries with every new crawl slice, instead of re-hashing
     * yesterday's petabytes per crawl: one row per band posting, keyed by
-    * the SINGLE composite `__bkey__` = "<band>:<band-hash>" (equality on
-    * it ⟺ the (band, hash) pair equality the band join needs — band is
-    * an int and ':' never appears in an md5 hex), with the verification
-    * token set DENORMALIZED onto the posting (bands are few — default
-    * 4 — and carrying tokens here means querying needs NO second join
-    * back to the corpus: a candidate row already holds both token
-    * sets). Columns: (`__id__`, `__bkey__`, `__toks__`).
+    * the SINGLE composite [[bandKey]] "<band>:<band-hash>" (equality on
+    * it ⟺ the (band, hash) pair equality the band join needs), with the
+    * verification token set DENORMALIZED onto the posting (bands are
+    * few — default 4 — and carrying tokens here means querying needs NO
+    * second join back to the corpus: a candidate row already holds both
+    * token sets). Columns: (`__id__`, `__bkey__`, `__toks__`).
     *
     * Persist with `ParquetIO.writeBucketed(index, table, path,
     * "__bkey__", buckets)`: the saved hash-on-join-key layout satisfies
@@ -314,24 +344,10 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 8,
       rowsPerBand: Int = 2,
-  ): DataFrame = {
-    require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
-      "numHashes must be a multiple of rowsPerBand")
-    graft.GraftExtensions.install(docs.sparkSession)
-    val numBands = numHashes / rowsPerBand
-    docs
-      .select(col(idCol).as("__id__"), col(textCol).as("__text__"))
-      .withColumn("__toks__", TextOps.tokens(col("__text__")))
-      .where(size(col("__toks__")) >= shingleSize)
-      .withColumn("__sig__",
-        expr(s"minhash_sig_words(__toks__, $shingleSize, $numHashes)"))
-      .select(col("__id__"), col("__toks__"),
-        posexplode(TextOps.bandHashes("__sig__", numBands, rowsPerBand))
-          .as(Seq("__band__", "__bh__")))
-      .select(col("__id__"),
-        concat(col("__band__"), lit(":"), col("__bh__")).as("__bkey__"),
-        col("__toks__"))
-  }
+  ): DataFrame =
+    bandRows(tokenRows(docs, idCol, textCol, shingleSize), "__toks__",
+        Seq("__id__", "__toks__"), shingleSize, numHashes, rowsPerBand)
+      .select(col("__id__"), bandKey("__band__", "__bh__"), col("__toks__"))
 
   /** Index MAINTENANCE — append a new slice's band postings into a
     * persisted [[minhashIndex]] bucketed table, closing the incremental
@@ -357,6 +373,32 @@ object Dedup {
         rowsPerBand),
       table, "__bkey__", buckets)
 
+  /** The candidate frame of an indexed MinHash join, batch or streaming:
+    * `newDocs`' keyed band rows (`__nid__`, `__ntoks__`, `__bkey__`),
+    * wrapped by `persist`, joined to a [[minhashIndex]] on `__bkey__`,
+    * Jaccard-verified inline, rows ≥ `threshold`. A pair colliding in
+    * several bands repeats: the batch join adds a distinct, the streaming
+    * gate dedupes in keyed state. */
+  private[graft] def minhashIndexedCandidates(
+      newDocs: DataFrame,
+      idCol: String,
+      textCol: String,
+      index: DataFrame,
+      shingleSize: Int,
+      numHashes: Int,
+      rowsPerBand: Int,
+      threshold: Double,
+      persist: DataFrame => DataFrame = identity): DataFrame = {
+    val tokens = tokenRows(newDocs, idCol, textCol, shingleSize,
+      "__nid__", "__ntoks__")
+    persist(bandRows(tokens, "__ntoks__", Seq("__nid__", "__ntoks__"),
+        shingleSize, numHashes, rowsPerBand)
+      .select(col("__nid__"), col("__ntoks__"), bandKey("__band__", "__bh__")))
+      .join(index, Seq("__bkey__"))
+      .withColumn("jaccard", jaccard("__ntoks__", "__toks__", shingleSize))
+      .where(col("jaccard") >= threshold)
+  }
+
   /** INCREMENTAL cross-corpus near-dup join: [[minhashJoin]]'s output
     * with the right side a pre-built [[minhashIndex]] frame (typically
     * read back from its bucketed table). Signatures are computed ONLY
@@ -365,7 +407,9 @@ object Dedup {
     * hashing and no shuffle, so growing the index does not grow the
     * per-crawl shuffle. Verification runs inline on the candidate rows
     * (both token sets are already present — no join back), de-duplicated
-    * across bands by a distinct on the scored pair. Returns
+    * across bands by a distinct on the scored pair. The new-slice band
+    * rows are cached, so the slice is hashed once even when a caller
+    * materializes the result more than once. Returns
     * (left_id, right_id, jaccard) — [[minhashJoin]]'s exact contract,
     * so the q_dedup_cross oracle transfers. */
   def minhashJoinIndexed(
@@ -378,35 +422,12 @@ object Dedup {
       rowsPerBand: Int = 2,
       threshold: Double = 0.8,
       scope: CacheScope = CacheScope.global,
-  ): DataFrame = {
-    require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
-      "numHashes must be a multiple of rowsPerBand")
-    graft.GraftExtensions.install(newDocs.sparkSession)
-    val numBands = numHashes / rowsPerBand
-    val banded = newDocs
-      .select(col(idCol).as("__nid__"), col(textCol).as("__text__"))
-      .withColumn("__ntoks__", TextOps.tokens(col("__text__")))
-      .where(size(col("__ntoks__")) >= shingleSize)
-      .withColumn("__sig__",
-        expr(s"minhash_sig_words(__ntoks__, $shingleSize, $numHashes)"))
-      .select(col("__nid__"), col("__ntoks__"),
-        posexplode(TextOps.bandHashes("__sig__", numBands, rowsPerBand))
-          .as(Seq("__band__", "__bh__")))
-      .select(col("__nid__"), col("__ntoks__"),
-        concat(col("__band__"), lit(":"), col("__bh__")).as("__bkey__"))
-    // cache the new-slice band rows: the slice is hashed once even when a
-    // caller materializes the result more than once (the sibling joins'
-    // scope contract — previously the parameter was accepted but unused)
-    val bandedCached = scope.cache(banded)
-    bandedCached
-      .join(index, Seq("__bkey__"))
-      .withColumn("jaccard",
-        round(expr(s"word_ngram_jaccard(__ntoks__, __toks__, $shingleSize)"), 6))
-      .where(col("jaccard") >= threshold)
+  ): DataFrame =
+    minhashIndexedCandidates(newDocs, idCol, textCol, index, shingleSize,
+        numHashes, rowsPerBand, threshold, scope.cache)
       .select(col("__nid__").as("left_id"), col("__id__").as("right_id"),
         col("jaccard"))
       .distinct()
-  }
 
   /** EXACT Jaccard-threshold self-join via prefix filtering (public
     * AllPairs / PPJoin family: Bayardo et al. WWW'07, Xiao et al. WWW'08):
@@ -439,10 +460,7 @@ object Dedup {
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     graft.GraftExtensions.install(docs.sparkSession)
-    val grams = docs
-      .select(col(idCol).as("__id__"), col(textCol).as("__text__"))
-      .withColumn("__toks__", TextOps.tokens(col("__text__")))
-      .where(size(col("__toks__")) >= shingleSize)
+    val grams = tokenRows(docs, idCol, textCol, shingleSize)
       .withColumn("__grams__",
         array_distinct(expr(s"word_ngrams(__toks__, $shingleSize)")))
       .withColumn("__sz__", size(col("__grams__")))
@@ -528,10 +546,7 @@ object Dedup {
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     graft.GraftExtensions.install(docs.sparkSession)
-    val grams = docs
-      .select(col(idCol).as("__id__"), col(textCol).as("__text__"))
-      .withColumn("__toks__", TextOps.tokens(col("__text__")))
-      .where(size(col("__toks__")) >= shingleSize)
+    val grams = tokenRows(docs, idCol, textCol, shingleSize)
       .withColumn("__grams__",
         array_distinct(expr(s"word_ngrams(__toks__, $shingleSize)")))
       .withColumn("__sz__", size(col("__grams__")))
@@ -588,10 +603,7 @@ object Dedup {
       scope: CacheScope = CacheScope.global,
   ): DataFrame = {
     graft.GraftExtensions.install(docs.sparkSession)
-    val base = scope.cache(docs
-      .select(col(idCol).as("__id__"), col(textCol).as("__text__"))
-      .withColumn("__toks__", TextOps.tokens(col("__text__")))
-      .where(size(col("__toks__")) >= 2)
+    val base = scope.cache(tokenRows(docs, idCol, textCol, 2)
       // native fused bigram-simhash (graft.expr.SimhashBigrams) — value-
       // identical to the wordShingles→hashedTokens→simhash32 HOF chain
       .withColumn("__fp__", expr("simhash_bigrams(__toks__)"))

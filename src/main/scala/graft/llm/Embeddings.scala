@@ -1989,7 +1989,9 @@ object Embeddings {
     * and run the standard single-pass ADC — no fit stage in the serve.
     * Both model frames are parameter-sized (1 rotation row, m·k codebook
     * rows) and are PINNED driver-side on read, exactly as [[opqTopK]]'s
-    * fit pins them: the broadcast build sides are LocalRelations
+    * fit pins them (each read through `ParquetIO.read`, so a warm serve's
+    * only jobs are the two collects): the broadcast build sides are
+    * LocalRelations
     * (provably single-row for the whole-suite BNLJ lint, where a bare
     * file scan is not), and the serve plans the inline fit's 3
     * exchanges, not the 6 a re-aggregate of the rotation and a codebook
@@ -2010,7 +2012,7 @@ object Embeddings {
     graft.GraftExtensions.install(spark)
     import scala.jdk.CollectionConverters._
     def pinned(part: String): DataFrame = {
-      val stored = spark.read.parquet(s"$dir/$part")
+      val stored = graft.sources.ParquetIO.read(spark, s"$dir/$part")
       spark.createDataFrame(stored.collect().toSeq.asJava, stored.schema)
     }
     val rotated = opqRotateFrame(emb, idCol, vecCol, pinned("rot"), dim)

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 /** Multimodal column support (beyond-reference surface; SURVEY.md §2.7):
@@ -261,58 +261,149 @@ object Multimodal {
     bandedHammingPairs(dhash(df, idCol, payloadCol), idCol, maxHamming, scope,
       maxPerBucketSide)
 
-  /** Shared band-blocked Hamming join over an (idCol, `dhash` 8-byte
-    * array) frame — the candidate generator both perceptual hashes
-    * (image [[dhash]], audio [[audioDhash]]) feed: equi-join on any
-    * shared band byte (EXACT for hamming ≤ 7 by pigeonhole), inline
-    * popcount verify over the carried arrays, distinct pairs.
-    *
-    * THE QUADRATIC GUARD (`maxPerBucketSide`): unlike the md5-wide
-    * MinHash/simhash band keys, a dHash band value lives in a FIXED
-    * 256-value domain — per-(band, value) population grows ∝ n/256 (worse
-    * on real corpora, where near-constant regions pile into few byte
-    * values), so the uncapped self-join is O(n²/256) at scale. The cap is
-    * the repo's standard deterministic skew guard (bitext
-    * `maxPerBucketSide` / MinHash `maxBucketSize`): each (band, value)
-    * bucket keeps only its `cap` lowest-id members for PAIRING — a
-    * documented recall trade-off, row_number-replayable in a SQL oracle —
-    * bounding candidates at 8·256·cap² regardless of corpus size. */
+  /** The one perceptual band-row builder: each non-NULL 8-byte `dhash`
+    * becomes 8 rows — the id as `id`, the `prefix` and `keep` columns,
+    * and (`__band__`, `__bv__`). The band joins match (`prefix`…, band,
+    * value), so the video `frame_ix` prefix only meets aligned frames. */
+  private def hashBands(
+      hashFrame: DataFrame,
+      idCol: String,
+      id: String,
+      prefix: Seq[String],
+      keep: Seq[Column]): DataFrame = {
+    import org.apache.spark.sql.functions._
+    hashFrame.where(col("dhash").isNotNull)
+      .select((col(idCol).as(id) +: prefix.map(col)) ++ keep :+
+        posexplode(col("dhash")).as(Seq("__band__", "__bv__")): _*)
+  }
+
+  /** The lowest-id bucket cap over [[hashBands]] rows — THE QUADRATIC
+    * GUARD (`maxPerBucketSide`): unlike the md5-wide MinHash/simhash band
+    * keys, a dHash band value lives in a FIXED 256-value domain —
+    * per-(band, value) population grows ∝ n/256 (worse on real corpora,
+    * where near-constant regions pile into few byte values), so an
+    * uncapped self-join is O(n²/256) at scale. The cap is the repo's
+    * standard deterministic skew guard (bitext `maxPerBucketSide` /
+    * MinHash `maxBucketSize`): each (`prefix`…, band, value) bucket keeps
+    * only its `cap` lowest-`__id__` members — a documented recall
+    * trade-off, row_number-replayable in a SQL oracle — bounding
+    * candidates at 8·256·cap² regardless of corpus size. `persist` wraps
+    * the capped frame (Spark does not share an uncached window subplan
+    * between a self-join's sides); Int.MaxValue leaves the rows as is. */
+  private def capBuckets(
+      banded: DataFrame,
+      prefix: Seq[String],
+      cap: Int,
+      persist: DataFrame => DataFrame = identity): DataFrame = {
+    import org.apache.spark.sql.functions._
+    require(cap >= 1, "maxPerBucketSide must be positive")
+    if (cap == Int.MaxValue) banded
+    else persist(banded
+      .withColumn("__br__",
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy((prefix :+ "__band__" :+ "__bv__").map(col): _*)
+          .orderBy(col("__id__"))))
+      .where(col("__br__") <= cap)
+      .drop("__br__"))
+  }
+
+  /** Hamming distance of two hash arrays: popcount of the XOR, BIGINT. */
+  private def hamming(a: String, b: String): Column =
+    org.apache.spark.sql.functions.expr(s"""CAST(aggregate(zip_with($a, $b,
+      (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v) AS BIGINT)""")
+
+  private def requireExact(maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 7,
+      "byte-band blocking is exact only for hamming <= 7")
+
+  /** The banded self-join of the single-hash and video pairs: capped
+    * [[hashBands]] of the cached hash frame, sides `a` and `b` equi-joined
+    * on the bucket with `a.__id__` < `b.__id__` (EXACT for hamming ≤ 7 by
+    * pigeonhole), rows within `maxHamming` with the distance as
+    * `__ham__` — one per shared band, so callers de-duplicate. */
+  private def hammingSelfJoin(
+      hashFrame: DataFrame,
+      idCol: String,
+      maxHamming: Int,
+      scope: CacheScope,
+      maxPerBucketSide: Int,
+      prefix: Seq[String] = Nil,
+      keep: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.functions._
+    requireExact(maxHamming)
+    val banded = capBuckets(
+      hashBands(scope.cache(hashFrame), idCol, "__id__", prefix,
+        (keep :+ "dhash").map(col)),
+      prefix, maxPerBucketSide, scope.cache)
+    banded.as("a")
+      .join(banded.as("b"),
+        (prefix :+ "__band__" :+ "__bv__")
+          .map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _) &&
+          col("a.__id__") < col("b.__id__"))
+      .withColumn("__ham__", hamming("a.dhash", "b.dhash"))
+      .where(col("__ham__") <= maxHamming)
+  }
+
+  /** The near-dup pairs of every single-hash modality (image, audio,
+    * spectral): distinct (a_id, b_id, hamming) of [[hammingSelfJoin]]. */
   private def bandedHammingPairs(
       hashFrame: DataFrame,
       idCol: String,
       maxHamming: Int,
       scope: CacheScope,
       maxPerBucketSide: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "byte-band blocking is exact only for hamming <= 7")
-    require(maxPerBucketSide >= 1, "maxPerBucketSide must be positive")
     import org.apache.spark.sql.functions._
-    val hashes = scope.cache(hashFrame.where(col("dhash").isNotNull))
-    val bandedAll = hashes.select(col(idCol).as("__id__"), col("dhash"),
-      posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-    // the capped frame is cached: it feeds BOTH self-join sides, and an
-    // uncached window subplan would rank every bucket twice (Spark does
-    // not share uncached subplans across branches)
-    val banded =
-      if (maxPerBucketSide == Int.MaxValue) bandedAll
-      else scope.cache(bandedAll
-        .withColumn("__br__",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("__band__"), col("__bv__"))
-            .orderBy(col("__id__"))))
-        .where(col("__br__") <= maxPerBucketSide)
-        .drop("__br__"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.__band__") === col("b.__band__") &&
-          col("a.__bv__") === col("b.__bv__") &&
-          col("a.__id__") < col("b.__id__"))
+    hammingSelfJoin(hashFrame, idCol, maxHamming, scope, maxPerBucketSide)
       .select(col("a.__id__").as("a_id"), col("b.__id__").as("b_id"),
-        expr("""CAST(aggregate(zip_with(a.dhash, b.dhash,
-                  (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)
-                AS BIGINT)""").as("hamming"))
-      .where(col("hamming") <= maxHamming)
+        col("__ham__").as("hamming"))
       .distinct()
+  }
+
+  /** The band-posting index of a hash frame: [[hashBands]] with the full
+    * hash as `__dhash__` and the `keep` columns, capped at build time by
+    * [[capBuckets]], keyed by [[Dedup.bandKey]] over (`prefix`…, band,
+    * value). Columns: (`__id__`, `__bkey__`, `__dhash__`, `keep`…). */
+  private def hashIndexOf(
+      hashFrame: DataFrame,
+      idCol: String,
+      maxPerBucketSide: Int,
+      prefix: Seq[String] = Nil,
+      keep: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.functions._
+    capBuckets(
+        hashBands(hashFrame, idCol, "__id__", prefix,
+          col("dhash").as("__dhash__") +: keep.map(col)),
+        prefix, maxPerBucketSide)
+      .select(Seq(col("__id__"),
+        Dedup.bandKey(prefix :+ "__band__" :+ "__bv__": _*),
+        col("__dhash__")) ++ keep.map(col): _*)
+  }
+
+  /** The candidate frame of an indexed near-dup join, batch or
+    * streaming: the new items' [[hashBands]] (`__nid__`, `prefix`…,
+    * `keep`…, `dhash`) keyed by [[Dedup.bandKey]], wrapped by `persist`,
+    * joined to a [[hashIndexOf]] index on `__bkey__`, rows within
+    * `maxHamming` of the posting's `__dhash__` with the distance as
+    * `__ham__`. A pair colliding in several bands repeats: the batch
+    * joins add a distinct, the streaming gates dedupe in keyed state. */
+  private[graft] def hashIndexedCandidates(
+      hashFrame: DataFrame,
+      idCol: String,
+      index: DataFrame,
+      maxHamming: Int,
+      prefix: Seq[String] = Nil,
+      keep: Seq[String] = Nil,
+      persist: DataFrame => DataFrame = identity): DataFrame = {
+    import org.apache.spark.sql.functions._
+    requireExact(maxHamming)
+    val carried = prefix ++ keep :+ "dhash"
+    persist(hashBands(hashFrame, idCol, "__nid__", prefix,
+        (keep :+ "dhash").map(col))
+      .select(col("__nid__") +: carried.map(col) :+
+        Dedup.bandKey(prefix :+ "__band__" :+ "__bv__": _*): _*))
+      .join(index, Seq("__bkey__"))
+      .withColumn("__ham__", hamming("dhash", "__dhash__"))
+      .where(col("__ham__") <= maxHamming)
   }
 
   /** Persistable dHash INDEX of an image corpus — the batch artifact
@@ -326,7 +417,7 @@ object Multimodal {
     * two carried arrays — no join back to the corpus).
     *
     * `maxPerBucketSide` caps postings per bucket AT BUILD time (the
-    * lowest-id rule of [[bandedHammingPairs]]): dHash band values live
+    * lowest-id rule of [[capBuckets]]): dHash band values live
     * in a FIXED 256-value domain, so uncapped bucket population — and
     * with it every future query's candidate count — grows ∝ n/256 with
     * the corpus. Capping at build bounds all downstream query cost once,
@@ -351,29 +442,6 @@ object Multimodal {
       payloadCol: String,
       maxPerBucketSide: Int = Int.MaxValue): DataFrame =
     hashIndexOf(audioDhash(df, idCol, payloadCol), idCol, maxPerBucketSide)
-
-  private def hashIndexOf(
-      hashFrame: DataFrame,
-      idCol: String,
-      maxPerBucketSide: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(maxPerBucketSide >= 1, "maxPerBucketSide must be positive")
-    val banded = hashFrame.where(col("dhash").isNotNull)
-      .select(col(idCol).as("__id__"), col("dhash").as("__dhash__"),
-        posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-    val capped =
-      if (maxPerBucketSide == Int.MaxValue) banded
-      else banded
-        .withColumn("__br__",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("__band__"), col("__bv__"))
-            .orderBy(col("__id__"))))
-        .where(col("__br__") <= maxPerBucketSide)
-        .drop("__br__")
-    capped.select(col("__id__"),
-      concat(col("__band__"), lit(":"), col("__bv__")).as("__bkey__"),
-      col("__dhash__"))
-  }
 
   /** INCREMENTAL perceptual near-dup join: the new slice's images are
     * decoded + hashed, band-joined against a pre-built [[dhashIndex]]
@@ -431,6 +499,9 @@ object Multimodal {
     hashJoinIndexed(audioSpectralHash(newDocs, idCol, payloadCol), idCol,
       index, maxHamming, scope)
 
+  /** The batch indexed join of every single-hash modality:
+    * [[hashIndexedCandidates]] over cached new-slice band rows, distinct
+    * (a_id = new id, b_id = index id, hamming). */
   private def hashJoinIndexed(
       hashFrame: DataFrame,
       idCol: String,
@@ -438,20 +509,10 @@ object Multimodal {
       maxHamming: Int,
       scope: CacheScope): DataFrame = {
     import org.apache.spark.sql.functions._
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "byte-band blocking is exact only for hamming <= 7")
-    val newBanded = scope.cache(hashFrame.where(col("dhash").isNotNull)
-      .select(col(idCol).as("__nid__"), col("dhash"),
-        posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-      .select(col("__nid__"), col("dhash"),
-        concat(col("__band__"), lit(":"), col("__bv__")).as("__bkey__")))
-    newBanded
-      .join(index, Seq("__bkey__"))
+    hashIndexedCandidates(hashFrame, idCol, index, maxHamming,
+        persist = scope.cache)
       .select(col("__nid__").as("a_id"), col("__id__").as("b_id"),
-        expr("""CAST(aggregate(zip_with(dhash, __dhash__,
-                  (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)
-                AS BIGINT)""").as("hamming"))
-      .where(col("hamming") <= maxHamming)
+        col("__ham__").as("hamming"))
       .distinct()
   }
 
@@ -1425,9 +1486,10 @@ object Multimodal {
 
   /** Video hash frame: one row per (idCol, `frame_ix`, `dhash`) sampled
     * frame via one narrow mapPartitions, with the clip's total sampled
-    * count denormalized as `n_frames` (the all-frames pairing rule needs
-    * it, and here it is free — no stateful per-clip aggregation in a
-    * stream). Undecodable payloads drop. */
+    * count denormalized as `n_frames` — the frame count every all-frames
+    * pairing rule reads, batch and streaming (no per-clip aggregation).
+    * It counts the clip ROW's frames: a per-id count only while ids are
+    * unique. Undecodable payloads drop. */
   def videoDhash(
       df: DataFrame,
       idCol: String,
@@ -1450,6 +1512,22 @@ object Multimodal {
     }(Encoders.row(outSchema))
   }
 
+  /** The all-aligned-frames pairing rule over verified frame pairs
+    * (a_id, b_id, `__f__` frame, `__nfa__`/`__nfb__` the two clips'
+    * sampled-frame counts, `__ham__`): de-duplicated across the up-to-8
+    * bands that agreed, two clips pair iff the matched frames number
+    * both clips' frame counts. Output (a_id, b_id, max_hamming). */
+  private def allFramesMatched(perFrame: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    perFrame
+      .distinct()
+      .groupBy(col("a_id"), col("b_id"), col("__nfa__"), col("__nfb__"))
+      .agg(count(lit(1)).as("__m__"), max(col("__ham__")).as("max_hamming"))
+      .where(col("__m__") === col("__nfa__") &&
+        col("__nfa__") === col("__nfb__"))
+      .select(col("a_id"), col("b_id"), col("max_hamming"))
+  }
+
   /** Perceptual near-duplicate VIDEO pairs — the third modality next to
     * [[imageNearDupPairs]] / [[audioNearDupPairs]]: fingerprint = the
     * dHash of every `every`-th frame; two clips pair iff they have the
@@ -1457,7 +1535,8 @@ object Multimodal {
     * `maxHamming` (candidates come from a per-frame byte-band equi-join
     * — exact for hamming ≤ 7 by pigeonhole, so a frame pair inside the
     * threshold can never be missed — and a frame pair outside it keeps
-    * the clips apart by the matched-frame-count check). Output
+    * the clips apart by the matched-frame-count check). Frame counts are
+    * [[videoDhash]]'s `n_frames`, so ids must be unique. Output
     * (a_id, b_id, max_hamming). `maxPerBucketSide` is the standard
     * lowest-id cap, per (frame, band, value) bucket. */
   def videoNearDupPairs(
@@ -1468,49 +1547,15 @@ object Multimodal {
       maxHamming: Int = 6,
       scope: CacheScope = CacheScope.global,
       maxPerBucketSide: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "byte-band blocking is exact only for hamming <= 7")
-    require(maxPerBucketSide >= 1, "maxPerBucketSide must be positive")
-    val frameEvery = every
+    val frameEvery = every // `functions.every` shadows the param below
     import org.apache.spark.sql.functions._
-    val frames = scope.cache(
-      videoDhash(df, idCol, payloadCol, frameEvery)
-        .where(col("dhash").isNotNull))
-    val nf = frames.groupBy(col(idCol).as("__vid__"))
-      .agg(count(lit(1)).as("__nf__"))
-    val bandedAll = frames.select(col(idCol).as("__id__"), col("frame_ix"),
-      col("dhash"), posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-    val banded =
-      if (maxPerBucketSide == Int.MaxValue) bandedAll
-      else scope.cache(bandedAll
-        .withColumn("__br__",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("frame_ix"), col("__band__"), col("__bv__"))
-            .orderBy(col("__id__"))))
-        .where(col("__br__") <= maxPerBucketSide)
-        .drop("__br__"))
-    val perFrame = banded.as("a")
-      .join(banded.as("b"),
-        col("a.frame_ix") === col("b.frame_ix") &&
-          col("a.__band__") === col("b.__band__") &&
-          col("a.__bv__") === col("b.__bv__") &&
-          col("a.__id__") < col("b.__id__"))
-      .select(col("a.__id__").as("a_id"), col("b.__id__").as("b_id"),
-        col("a.frame_ix").as("__f__"),
-        expr("""CAST(aggregate(zip_with(a.dhash, b.dhash,
-                  (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)
-                AS BIGINT)""").as("__ham__"))
-      .where(col("__ham__") <= maxHamming)
-      .distinct()
-    perFrame
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("__m__"), max(col("__ham__")).as("max_hamming"))
-      .join(nf.withColumnRenamed("__vid__", "a_id")
-        .withColumnRenamed("__nf__", "__nfa__"), Seq("a_id"))
-      .join(nf.withColumnRenamed("__vid__", "b_id")
-        .withColumnRenamed("__nf__", "__nfb__"), Seq("b_id"))
-      .where(col("__m__") === col("__nfa__") && col("__nfa__") === col("__nfb__"))
-      .select(col("a_id"), col("b_id"), col("max_hamming"))
+    allFramesMatched(
+      hammingSelfJoin(videoDhash(df, idCol, payloadCol, frameEvery), idCol,
+          maxHamming, scope, maxPerBucketSide, Seq("frame_ix"),
+          Seq("n_frames"))
+        .select(col("a.__id__").as("a_id"), col("b.__id__").as("b_id"),
+          col("a.frame_ix").as("__f__"), col("a.n_frames").as("__nfa__"),
+          col("b.n_frames").as("__nfb__"), col("__ham__")))
   }
 
   /** Persistable per-frame dHash INDEX of a video corpus — the third
@@ -1518,8 +1563,9 @@ object Multimodal {
     * keyed `__bkey__` = "<frame>:<band>:<byte-value>" (frame alignment
     * rides IN the key, so an indexed query only ever joins aligned
     * frames), with the frame's full 8-byte hash (`__dhash__`) AND the
-    * clip's sampled-frame count (`__nf__`) denormalized onto the posting
-    * — a query verifies candidates inline (popcount) and applies the
+    * clip's sampled-frame count (`__nf__`, [[videoDhash]]'s `n_frames`,
+    * so ids must be unique) denormalized onto the posting — a query
+    * verifies candidates inline (popcount) and applies the
     * all-frames-aligned pairing rule with no join back to the corpus.
     * `maxPerBucketSide` caps postings per (frame, band, value) bucket AT
     * BUILD time, lowest-id first — same fixed-256-value-domain argument
@@ -1532,33 +1578,11 @@ object Multimodal {
       idCol: String,
       payloadCol: String,
       every: Int = 2,
-      maxPerBucketSide: Int = Int.MaxValue): DataFrame = {
-    val frameEvery = every // `functions.every` shadows the param below
-    import org.apache.spark.sql.functions._
-    require(maxPerBucketSide >= 1, "maxPerBucketSide must be positive")
-    val frames = videoDhash(df, idCol, payloadCol, frameEvery)
-      .where(col("dhash").isNotNull)
-    val nf = frames.groupBy(col(idCol).as("__vid__"))
-      .agg(count(lit(1)).as("__nf__"))
-    val banded = frames
-      .join(nf, frames(idCol) === nf("__vid__"))
-      .select(col(idCol).as("__id__"), col("frame_ix"),
-        col("dhash").as("__dhash__"), col("__nf__"),
-        posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-    val capped =
-      if (maxPerBucketSide == Int.MaxValue) banded
-      else banded
-        .withColumn("__br__",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("frame_ix"), col("__band__"), col("__bv__"))
-            .orderBy(col("__id__"))))
-        .where(col("__br__") <= maxPerBucketSide)
-        .drop("__br__")
-    capped.select(col("__id__"),
-      concat(col("frame_ix"), lit(":"), col("__band__"), lit(":"),
-        col("__bv__")).as("__bkey__"),
-      col("__dhash__"), col("__nf__"))
-  }
+      maxPerBucketSide: Int = Int.MaxValue): DataFrame =
+    hashIndexOf(
+      videoDhash(df, idCol, payloadCol, every)
+        .withColumnRenamed("n_frames", "__nf__"),
+      idCol, maxPerBucketSide, Seq("frame_ix"), Seq("__nf__"))
 
   /** INCREMENTAL video near-dup join against a pre-built
     * [[videoDhashIndex]]: the new slice decodes + hashes ONLY itself,
@@ -1567,10 +1591,10 @@ object Multimodal {
     * candidate frame pair verifies inline by popcount, and two clips
     * pair iff EVERY sampled frame on both sides matched within
     * `maxHamming` (the [[videoNearDupPairs]] rule; the new side's frame
-    * count comes from its own hash pass, the index side's rides on the
-    * posting). Exact-by-pigeonhole at hamming ≤ 7 relative to the
-    * (possibly build-capped) index postings. Returns (a_id = new id,
-    * b_id = index id, max_hamming). */
+    * count is its [[videoDhash]] `n_frames`, so ids must be unique, the
+    * index side's rides on the posting). Exact-by-pigeonhole at hamming
+    * ≤ 7 relative to the (possibly build-capped) index postings. Returns
+    * (a_id = new id, b_id = index id, max_hamming). */
   def videoNearDupJoinIndexed(
       newDocs: DataFrame,
       idCol: String,
@@ -1581,41 +1605,13 @@ object Multimodal {
       scope: CacheScope = CacheScope.global): DataFrame = {
     val frameEvery = every // `functions.every` shadows the param below
     import org.apache.spark.sql.functions._
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "byte-band blocking is exact only for hamming <= 7")
-    val frames = scope.cache(
-      videoDhash(newDocs, idCol, payloadCol, frameEvery)
-        .where(col("dhash").isNotNull))
-    val nfNew = frames.groupBy(col(idCol).as("__vid__"))
-      .agg(count(lit(1)).as("__nfa__"))
-    val newBanded = frames
-      .select(col(idCol).as("__nid__"), col("frame_ix"), col("dhash"),
-        posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-      .select(col("__nid__"), col("dhash"),
-        concat(col("frame_ix"), lit(":"), col("__band__"), lit(":"),
-          col("__bv__")).as("__bkey__"))
-    val perFrame = newBanded
-      .join(index, Seq("__bkey__"))
-      .select(col("__nid__").as("a_id"), col("__id__").as("b_id"),
-        col("__bkey__"), col("__nf__").as("__nfb__"),
-        expr("""CAST(aggregate(zip_with(dhash, __dhash__,
-                  (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)
-                AS BIGINT)""").as("__ham__"))
-      .where(col("__ham__") <= maxHamming)
-      // one row per verified aligned FRAME pair (key prefix = frame):
-      // dedupe across the up-to-8 bands that agreed
-      .select(col("a_id"), col("b_id"),
-        substring_index(col("__bkey__"), ":", 1).as("__f__"),
-        col("__nfb__"), col("__ham__"))
-      .distinct()
-    perFrame
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("__m__"), max(col("__ham__")).as("max_hamming"),
-        max(col("__nfb__")).as("__nfb__"))
-      .join(nfNew.withColumnRenamed("__vid__", "a_id"), Seq("a_id"))
-      .where(col("__m__") === col("__nfa__") &&
-        col("__nfa__") === col("__nfb__"))
-      .select(col("a_id"), col("b_id"), col("max_hamming"))
+    allFramesMatched(
+      hashIndexedCandidates(videoDhash(newDocs, idCol, payloadCol, frameEvery),
+          idCol, index, maxHamming, Seq("frame_ix"), Seq("n_frames"),
+          scope.cache)
+        .select(col("__nid__").as("a_id"), col("__id__").as("b_id"),
+          col("frame_ix").as("__f__"), col("n_frames").as("__nfa__"),
+          col("__nf__").as("__nfb__"), col("__ham__")))
   }
 
   /** LZW-decode one frame's code stream to its palette-INDEX raster

@@ -363,10 +363,9 @@ object Streams {
       payloadCol: String,
   ): DataFrame = {
     import org.apache.spark.sql.types._
-    val hashed = graft.llm.Multimodal.dhash(
-        docs.select(col(idCol).cast("long").as(idCol), col(payloadCol)),
-        idCol, payloadCol)
-      .where(col("dhash").isNotNull && col(idCol).isNotNull)
+    val hashed = graft.llm.Multimodal
+      .dhash(servedIds(docs, idCol, payloadCol), idCol, payloadCol)
+      .where(col("dhash").isNotNull)
     val outSchema = StructType(Seq(StructField(idCol, LongType),
       StructField("dhash", ArrayType(IntegerType, containsNull = false))))
     implicit val rowEnc = Encoders.row(outSchema)
@@ -412,11 +411,8 @@ object Streams {
       index: DataFrame,
       maxHamming: Int = 6,
   ): DataFrame =
-    streamingHashNearDup(
-      graft.llm.Multimodal.dhash(
-        docs.select(col(idCol).cast("long").as(idCol), col(payloadCol)),
-        idCol, payloadCol),
-      idCol, index, maxHamming)
+    streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
+      graft.llm.Multimodal.dhash)
 
   /** [[streamingImageNearDup]] for AUDIO clips — the energy-delta hash
     * against a persisted [[graft.llm.Multimodal.audioDhashIndex]]; the
@@ -429,11 +425,8 @@ object Streams {
       index: DataFrame,
       maxHamming: Int = 6,
   ): DataFrame =
-    streamingHashNearDup(
-      graft.llm.Multimodal.audioDhash(
-        docs.select(col(idCol).cast("long").as(idCol), col(payloadCol)),
-        idCol, payloadCol),
-      idCol, index, maxHamming)
+    streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
+      graft.llm.Multimodal.audioDhash)
 
   /** [[streamingImageNearDup]] through the SPECTRAL image hash against
     * a persisted [[graft.llm.Multimodal.imageSpectralIndex]] — the
@@ -447,11 +440,8 @@ object Streams {
       index: DataFrame,
       maxHamming: Int = 6,
   ): DataFrame =
-    streamingHashNearDup(
-      graft.llm.Multimodal.imageSpectralHash(
-        docs.select(col(idCol).cast("long").as(idCol), col(payloadCol)),
-        idCol, payloadCol),
-      idCol, index, maxHamming)
+    streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
+      graft.llm.Multimodal.imageSpectralHash)
 
   /** [[streamingAudioNearDup]] through the SPECTRAL hash against a
     * persisted [[graft.llm.Multimodal.audioSpectralIndex]] — the
@@ -465,40 +455,29 @@ object Streams {
       index: DataFrame,
       maxHamming: Int = 6,
   ): DataFrame =
-    streamingHashNearDup(
-      graft.llm.Multimodal.audioSpectralHash(
-        docs.select(col(idCol).cast("long").as(idCol), col(payloadCol)),
-        idCol, payloadCol),
-      idCol, index, maxHamming)
+    streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
+      graft.llm.Multimodal.audioSpectralHash)
 
-  /** The shared single-fingerprint streaming gate: band-explode the
-    * hashed stream, stream-static join the persisted capped index,
-    * verify inline by popcount, and dedupe one item's ≤ 8·cap candidate
-    * rows in keyed state (also suppressing re-sent ids). */
+  /** The shared single-fingerprint streaming gate: the batch indexed
+    * join's candidate frame ([[graft.llm.Multimodal
+    * .hashIndexedCandidates]] — band-explode, stream-static join of the
+    * persisted capped index, inline popcount) over the stream hashed by
+    * `hash`, with one item's ≤ 8·cap candidate rows deduped in keyed
+    * state (also suppressing re-sent ids). */
   private def streamingHashNearDup(
-      hashedIn: DataFrame,
+      docs: DataFrame,
       idCol: String,
+      payloadCol: String,
       index: DataFrame,
       maxHamming: Int,
+      hash: (DataFrame, String, String) => DataFrame,
   ): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "byte-band blocking is exact only for hamming <= 7")
     import org.apache.spark.sql.types._
-    // NULL ids cannot carry adjudication state (and would NPE the keyed
-    // extractor) — dropped like undecodable payloads
-    val hashed = hashedIn.where(col("dhash").isNotNull &&
-      col(idCol).isNotNull)
-    val cand = hashed
-      .select(col(idCol).as("__nid__"), col("dhash"),
-        posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-      .select(col("__nid__"), col("dhash"),
-        concat(col("__band__"), lit(":"), col("__bv__")).as("__bkey__"))
-      .join(index, Seq("__bkey__"))
+    val cand = graft.llm.Multimodal
+      .hashIndexedCandidates(hash(servedIds(docs, idCol, payloadCol), idCol,
+        payloadCol), idCol, index, maxHamming)
       .select(col("__nid__"), col("__id__").cast("long").as("__bid__"),
-        expr("""CAST(aggregate(zip_with(dhash, __dhash__,
-                  (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)
-                AS BIGINT)""").as("__ham__"))
-      .where(col("__ham__") <= maxHamming)
+        col("__ham__"))
     adjudicateFirstSeen(cand,
       StructType(Seq(StructField(idCol, LongType),
         StructField("b_id", LongType), StructField("hamming", LongType))),
@@ -598,30 +577,10 @@ object Streams {
       rowsPerBand: Int = 2,
       threshold: Double = 0.8,
   ): DataFrame = {
-    require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
-      "numHashes must be a multiple of rowsPerBand")
-    graft.GraftExtensions.install(docs.sparkSession)
     import org.apache.spark.sql.types._
-    val numBands = numHashes / rowsPerBand
-    val cand = docs
-      .select(col(idCol).cast("long").as("__nid__"),
-        col(textCol).as("__text__"))
-      // a NULL id cannot carry adjudication state (and would NPE the
-      // keyed extractor) — dropped honestly, like undecodable payloads
-      .where(col("__nid__").isNotNull)
-      .withColumn("__ntoks__", TextOps.tokens(col("__text__")))
-      .where(size(col("__ntoks__")) >= shingleSize)
-      .withColumn("__sig__",
-        expr(s"minhash_sig_words(__ntoks__, $shingleSize, $numHashes)"))
-      .select(col("__nid__"), col("__ntoks__"),
-        posexplode(TextOps.bandHashes("__sig__", numBands, rowsPerBand))
-          .as(Seq("__band__", "__bh__")))
-      .select(col("__nid__"), col("__ntoks__"),
-        concat(col("__band__"), lit(":"), col("__bh__")).as("__bkey__"))
-      .join(index, Seq("__bkey__"))
-      .withColumn("jaccard",
-        round(expr(s"word_ngram_jaccard(__ntoks__, __toks__, $shingleSize)"), 6))
-      .where(col("jaccard") >= threshold)
+    val cand = graft.llm.Dedup
+      .minhashIndexedCandidates(servedIds(docs, idCol, textCol), idCol,
+        textCol, index, shingleSize, numHashes, rowsPerBand, threshold)
       .select(col("__nid__"), col("__id__").cast("long").as("__bid__"),
         col("jaccard"))
     adjudicateFirstSeen(cand,
@@ -631,12 +590,15 @@ object Streams {
       dedupePairs = true)
   }
 
-  /** An IVF serve's stream side: (idCol cast to `idType`, vecCol), with
-    * NULL ids dropped — a NULL id cannot carry state. */
+  /** A gate's stream side: (idCol cast to `idType`, payloadCol), with
+    * NULL ids dropped — a NULL id cannot carry adjudication state (and
+    * would NPE the keyed extractor), so it drops like an undecodable
+    * payload. */
   private def servedIds(
-      docs: DataFrame, idCol: String, vecCol: String,
-      idType: org.apache.spark.sql.types.DataType): DataFrame =
-    docs.select(col(idCol).cast(idType).as(idCol), col(vecCol))
+      docs: DataFrame, idCol: String, payloadCol: String,
+      idType: org.apache.spark.sql.types.DataType =
+        org.apache.spark.sql.types.LongType): DataFrame =
+    docs.select(col(idCol).cast(idType).as(idCol), col(payloadCol))
       .where(col(idCol).isNotNull)
 
   /** Ids and labels ride `topk_by`'s BIGINT slots, and the batch serve's
@@ -676,7 +638,7 @@ object Streams {
   ): DataFrame = {
     import org.apache.spark.sql.types._
     val cand = Embeddings.ivfNearDupJoinIndexed(
-        servedIds(docs, idCol, vecCol, LongType), idCol, vecCol, dir,
+        servedIds(docs, idCol, vecCol), idCol, vecCol, dir,
         postings, threshold, nprobe, pushCells = false)
       .select(col("left_id").as("__nid__"),
         col("right_id").cast("long").as("__bid__"), col("cosine"))
@@ -723,7 +685,7 @@ object Streams {
     requireIntegral(postings, labelCol, "streamingKnnLabel",
       " — labels ride topk_by's BIGINT tag; encode string labels first")
     val probed = Embeddings.ivfProbe(
-      servedIds(docs, idCol, vecCol, org.apache.spark.sql.types.LongType),
+      servedIds(docs, idCol, vecCol),
       idCol, vecCol, Embeddings.storedCentroids(docs.sparkSession, dir),
       nprobe)
     Embeddings.topKArrays(Embeddings.ivfScored(probed, postings, idCol, vecCol),
@@ -907,7 +869,9 @@ object Streams {
     * per-frame postings stream-static-join the persisted
     * [[graft.llm.Multimodal.videoDhashIndex]] on the composite
     * "<frame>:<band>:<value>" key, and candidates verify inline by
-    * popcount. Keyed state per clip only applies the all-aligned-frames
+    * popcount — the candidate frame of the batch
+    * [[graft.llm.Multimodal.videoNearDupJoinIndexed]], run as is. Keyed
+    * state per clip only applies the all-aligned-frames
     * pairing rule over that clip's ≤ nf·8·cap candidate rows (count
     * distinct matched frames per index clip, require = both frame
     * counts) and suppresses re-sent ids. Emits (idCol, b_id,
@@ -920,29 +884,15 @@ object Streams {
       every: Int = 2,
       maxHamming: Int = 6,
   ): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "byte-band blocking is exact only for hamming <= 7")
     import org.apache.spark.sql.types._
-    val hashed = graft.llm.Multimodal.videoDhash(
-        docs.select(col(idCol).cast("long").as(idCol), col(payloadCol)),
-        idCol, payloadCol, every)
-      .where(col("dhash").isNotNull && col(idCol).isNotNull)
-    val cand = hashed
-      .select(col(idCol).as("__nid__"), col("n_frames").as("__nfa__"),
-        col("frame_ix"), col("dhash"),
-        posexplode(col("dhash")).as(Seq("__band__", "__bv__")))
-      .select(col("__nid__"), col("__nfa__"), col("dhash"),
-        concat(col("frame_ix"), lit(":"), col("__band__"), lit(":"),
-          col("__bv__")).as("__bkey__"),
-        col("frame_ix"))
-      .join(index, Seq("__bkey__"))
-      .select(col("__nid__"), col("__nfa__"), col("frame_ix"),
+    val cand = graft.llm.Multimodal
+      .hashIndexedCandidates(
+        graft.llm.Multimodal.videoDhash(servedIds(docs, idCol, payloadCol),
+          idCol, payloadCol, every),
+        idCol, index, maxHamming, Seq("frame_ix"), Seq("n_frames"))
+      .select(col("__nid__"), col("n_frames").as("__nfa__"), col("frame_ix"),
         col("__id__").cast("long").as("__bid__"),
-        col("__nf__").cast("long").as("__nfb__"),
-        expr("""CAST(aggregate(zip_with(dhash, __dhash__,
-                  (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)
-                AS BIGINT)""").as("__ham__"))
-      .where(col("__ham__") <= maxHamming)
+        col("__nf__").cast("long").as("__nfb__"), col("__ham__"))
     val outSchema = StructType(Seq(StructField(idCol, LongType),
       StructField("b_id", LongType), StructField("max_hamming", LongType)))
     implicit val rowEnc = Encoders.row(outSchema)

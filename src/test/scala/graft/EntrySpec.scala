@@ -51,16 +51,21 @@ class EntrySpec extends GraftSuite {
     assert(built === 1)
   }
 
-  /** The files under `root` whose text satisfies `bad`, sorted. Tests
-    * fork with the checkout as cwd. */
-  private def sourcesWhere(root: String)(bad: String => Boolean): List[String] = {
+  /** Every file under `root` with its text, sorted by path. Tests fork
+    * with the checkout as cwd. */
+  private def sources(root: String): List[(String, String)] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try files.iterator.asScala
       .filter(java.nio.file.Files.isRegularFile(_))
-      .filter(p => bad(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
-      .map(_.toString).toList.sorted
+      .map(p => (p.toString,
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+      .toList.sortBy(_._1)
     finally files.close()
   }
+
+  /** The files under `root` whose text satisfies `bad`, sorted. */
+  private def sourcesWhere(root: String)(bad: String => Boolean): List[String] =
+    sources(root).collect { case (path, text) if bad(text) => path }
 
   test("source lint: no file under src/ names the checkout's own path in a literal") {
     // A literal path into the checkout (a fixture root, say) makes every
@@ -80,6 +85,25 @@ class EntrySpec extends GraftSuite {
     val offenders = sourcesWhere("src/main")(bare.findFirstIn(_).isDefined)
     assert(offenders.isEmpty,
       s"bare read.parquet of a centroid table: ${offenders.mkString(", ")}")
+  }
+
+  test("source lint: each near-dup band formulation is written once under graft.llm and graft.streaming") {
+    // MinHash banding (Dedup.bandRows), the perceptual band explode
+    // (Multimodal.hashBands) and the popcount verify (Multimodal.hamming)
+    // each have one builder that the batch joins and the streaming gates
+    // share; a second copy is a fork that can drift from the oracles the
+    // first one replays.
+    val texts = Seq("src/main/scala/graft/llm", "src/main/scala/graft/streaming")
+      .flatMap(sources)
+    for (formulation <- Seq("bit_count(x ^ y)", "minhash_sig_words(",
+        "posexplode(col(\"dhash\"))")) {
+      val quoted = java.util.regex.Pattern.quote(formulation).r
+      val hits = texts.map { case (path, text) =>
+        (path, quoted.findAllMatchIn(text).size)
+      }.filter(_._2 > 0)
+      assert(hits.map(_._2).sum <= 1,
+        s"$formulation written ${hits.map(_._2).sum} times: ${hits.mkString(", ")}")
+    }
   }
 
   test("plan lint: no cartesian product in any query's physical plan") {

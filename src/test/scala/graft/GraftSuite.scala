@@ -10,6 +10,13 @@ abstract class GraftSuite extends AnyFunSuite {
     * events reach the status tracker asynchronously, in order, so a
     * marker job run after `body` is awaited before counting. */
   protected def withJobs[T](body: => T): (T, Int) = {
+    val (out, ids) = withJobIds(body)
+    (out, ids.length)
+  }
+
+  /** `body`'s result and the ids of the Spark jobs it submits on this
+    * thread ([[withJobs]]). */
+  protected def withJobIds[T](body: => T): (T, Seq[Int]) = {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
     sc.setJobGroup(group, group)
@@ -21,7 +28,7 @@ abstract class GraftSuite extends AnyFunSuite {
     while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
       System.nanoTime() < deadline) Thread.sleep(10)
     assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+    (out, sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted)
   }
 }
 

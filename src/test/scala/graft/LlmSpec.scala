@@ -4114,6 +4114,64 @@ class LlmSpec extends GraftSuite {
     graft.llm.CacheScope.global.release()
   }
 
+  test("a warm persisted OPQ serve runs no schema-inference job") {
+    val s = spark
+    import s.implicits._
+    val emb = (0L until 40L).map { i =>
+      val x0 = (i % 7).toFloat * 0.125f + 0.25f
+      val x1 = (i % 5).toFloat * 0.25f - 0.5f
+      (i, Array(x0, x1, x0 * 0.75f + 0.125f * (i % 3), x1 * 0.5f - 0.25f))
+    }.toDF("vec_id", "embedding")
+    val dir = "/tmp/graft_opq_model/warm"
+    Embeddings.opqFitSave(emb, "vec_id", "embedding", dim = 4, m = 2,
+      initPred = sc("vec_id") < 2, iters = 1, dir = dir, minAbsRho = 0.0)
+    def serve() = Embeddings.opqTopKWithModel(emb, "vec_id", "embedding",
+      dir, dim = 4, m = 2, queryId = 1L, k = 5)
+    // a job's stages are named after the call that submitted it: a
+    // schema inference is "parquet at …" for a bare read and "load at
+    // ParquetIO…" for a resolve through ParquetIO
+    val tracker = s.sparkContext.statusTracker
+    def schemaReads(ids: Seq[Int]): Seq[String] = ids
+      .flatMap(tracker.getJobInfo(_)).flatMap(_.stageIds.toSeq)
+      .flatMap(tracker.getStageInfo(_)).map(_.name)
+      .filter(n => n.startsWith("parquet at ") || n.startsWith("load at "))
+    val (cold, coldIds) = withJobIds(serve())
+    assert(schemaReads(coldIds).length === 2,
+      "the cold serve resolves the rotation's and codebooks' schemas once each")
+    val (warm, warmIds) = withJobIds(serve())
+    assert(schemaReads(warmIds).isEmpty, "a warm serve re-read a model table's schema")
+    assert(warm.collect().toSeq === cold.collect().toSeq)
+    graft.llm.CacheScope.global.release()
+  }
+
+  test("band-posting index schemas: names, order and types of every persisted index") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.types._
+    val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e g")).toDF("doc_id", "text")
+    val images = Seq((1L, Multimodal.spectralPng(0, 0))).toDF("doc_id", "payload")
+    val clips = Seq((1L, Multimodal.spectralWav(0, 0))).toDF("doc_id", "payload")
+    val video = Seq((1L, Multimodal.encodeAnimatedGif(72, 64, 4,
+      (f, x, y) => (3 * x + 5 * y + 7 * f) % 97))).toDF("doc_id", "payload")
+    def fields(df: org.apache.spark.sql.DataFrame): Seq[(String, DataType)] =
+      df.schema.fields.toSeq.map(f => (f.name, f.dataType))
+    val hash = ArrayType(IntegerType, containsNull = false)
+    val posting = Seq("__id__" -> LongType, "__bkey__" -> StringType,
+      "__dhash__" -> hash)
+    assert(fields(Dedup.minhashIndex(docs, "doc_id", "text")) === Seq(
+      "__id__" -> LongType, "__bkey__" -> StringType,
+      "__toks__" -> ArrayType(StringType, containsNull = false)))
+    assert(fields(Multimodal.dhashIndex(images, "doc_id", "payload")) === posting)
+    assert(fields(Multimodal.imageSpectralIndex(images, "doc_id", "payload")) ===
+      posting)
+    assert(fields(Multimodal.audioDhashIndex(clips, "doc_id", "payload")) ===
+      posting)
+    assert(fields(Multimodal.audioSpectralIndex(clips, "doc_id", "payload",
+      maxPerBucketSide = 2)) === posting)
+    assert(fields(Multimodal.videoDhashIndex(video, "doc_id", "payload",
+      maxPerBucketSide = 2)) === posting :+ ("__nf__" -> LongType))
+  }
+
   test("minhashIndexAppend: query-after-append equals query-against-rebuilt-index") {
     val s = spark
     val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")

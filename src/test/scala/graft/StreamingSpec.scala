@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col => sc}
 
@@ -764,54 +765,69 @@ class StreamingSpec extends GraftSuite {
     } finally s.sql("DROP TABLE IF EXISTS adhash_idx_stream")
   }
 
-  test("streaming SPECTRAL audio gate: re-encodes collide vs the persisted index, batch parity") {
+  /** One spectral modality of the streaming gate: its closed-form
+    * payloads (variant 0 the base, 1 a 2x repeat-upscale offset by 3, 2 a
+    * gain/contrast stretch 2v - 5), index builder, streaming gate and
+    * batch indexed join. */
+  private case class SpectralCase(
+      kind: String,
+      payload: (Int, Int) => Array[Byte],
+      index: (DataFrame, String, String, Int) => DataFrame,
+      gate: (DataFrame, String, String, DataFrame, Int) => DataFrame,
+      batch: (DataFrame, String, String, DataFrame, Int) => DataFrame)
+
+  for (c <- Seq(
+    SpectralCase("audio", graft.llm.Multimodal.spectralWav,
+      graft.llm.Multimodal.audioSpectralIndex,
+      Streams.streamingAudioSpectralNearDup,
+      graft.llm.Multimodal.audioSpectralNearDupJoinIndexed(_, _, _, _, _)),
+    SpectralCase("image", graft.llm.Multimodal.spectralPng,
+      graft.llm.Multimodal.imageSpectralIndex,
+      Streams.streamingImageSpectralNearDup,
+      graft.llm.Multimodal.imageSpectralNearDupJoinIndexed(_, _, _, _, _))))
+  test(s"streaming SPECTRAL ${c.kind} gate: re-encodes collide vs the persisted index, batch parity") {
     val s = spark
     import s.implicits._
-    def base(g: Int): Array[Short] = {
-      val n = 240 + (g % 7) * 40
-      Array.tabulate(n)(i => ((7L * g + 13L * i) % 2048L - 1024L).toShort)
-    }
-    def wav(sm: Array[Short]): Array[Byte] =
-      graft.llm.Multimodal.encodeWav(8000, 1, sm)
-    val corpus = (0 until 4).map(g => (100L + g, wav(base(g))))
+    val table = s"sphash_idx_stream_${c.kind}"
+    val corpus = (0 until 4).map(g => (100L + g, c.payload(g, 0)))
       .toDF("doc_id", "payload")
     graft.sources.ParquetIO.writeBucketed(
-      graft.llm.Multimodal.audioSpectralIndex(corpus, "doc_id", "payload",
-        maxPerBucketSide = 2),
-      "sphash_idx_stream", "/tmp/graft_dhash_idx/spstream", "__bkey__", 4)
+      c.index(corpus, "doc_id", "payload", 2),
+      table, s"/tmp/graft_dhash_idx/spstream_${c.kind}", "__bkey__", 4)
     try {
-      val idx = s.table("sphash_idx_stream")
+      val idx = s.table(table)
       val ms = MemoryStream[(Long, Array[Byte])](s)
-      val flagged = Streams.streamingAudioSpectralNearDup(
-        ms.toDF.toDF("doc_id", "payload"), "doc_id", "payload", idx,
-        maxHamming = 6)
-      val q = flagged.writeStream.format("memory").queryName("spneardup_out")
-        .outputMode("append").start()
+      val flagged = c.gate(ms.toDF.toDF("doc_id", "payload"), "doc_id",
+        "payload", idx, 6)
+      val q = flagged.writeStream.format("memory")
+        .queryName(s"spneardup_out_${c.kind}").outputMode("append").start()
       try {
-        // batch 1: a gain+DC re-encode of pattern 0 (the case the energy
-        // gate misses), a novel pattern, garbage
-        val reenc0 = wav(base(0).map(v => (2L * v - 5L).toShort))
-        ms.addData((1L, reenc0), (2L, wav(base(6))), (3L, Array[Byte](9)))
+        // batch 1: a gain/contrast + offset re-encode of pattern 0 (the
+        // case the box/energy gate misses), a novel pattern, garbage
+        val reenc0 = c.payload(0, 2)
+        ms.addData((1L, reenc0), (2L, c.payload(6, 0)), (3L, Array[Byte](9)))
         q.processAllAvailable()
-        // batch 2: a 2x-repeat upsample of pattern 2, and a RE-SENT id 1
-        val up2 = wav(Array.tabulate(2 * base(2).length)(i =>
-          (base(2)(i / 2) + 3L).toShort))
+        // batch 2: a 2x-repeat upscale of pattern 2, and a RE-SENT id 1
+        val up2 = c.payload(2, 1)
         ms.addData((4L, up2), (1L, reenc0))
         q.processAllAvailable()
-        val rows = spark.sql("SELECT doc_id, b_id, hamming FROM spneardup_out")
+        val rows = spark
+          .sql(s"SELECT doc_id, b_id, hamming FROM spneardup_out_${c.kind}")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        // re-encodes collide EXACTLY (hamming 0) with their indexed source
+        // re-encodes collide EXACTLY (hamming 0) with their indexed
+        // source, and the re-sent id emits nothing more
         assert(rows.map(t => (t._1, t._2)).toSet ===
           Set((1L, 100L), (4L, 102L)))
+        assert(rows.length === 2)
         assert(rows.forall(_._3 === 0L))
-        val batch = graft.llm.Multimodal.audioSpectralNearDupJoinIndexed(
-            Seq((1L, reenc0), (2L, wav(base(6))), (4L, up2))
+        val batch = c.batch(
+            Seq((1L, reenc0), (2L, c.payload(6, 0)), (4L, up2))
               .toDF("doc_id", "payload"),
-            "doc_id", "payload", idx, maxHamming = 6)
+            "doc_id", "payload", idx, 6)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(rows.toSet === batch)
       } finally q.stop()
-    } finally s.sql("DROP TABLE IF EXISTS sphash_idx_stream")
+    } finally s.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("streaming VIDEO near-dup gate: per-frame stream-static join vs the persisted index, batch parity") {
