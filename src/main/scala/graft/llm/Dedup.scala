@@ -144,12 +144,8 @@ object Dedup {
     * whitespace tokens, documents with fewer than `minTokens` tokens
     * dropped (they hold no shingle). */
   private def tokenRows(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      minTokens: Int,
-      id: String = "__id__",
-      toks: String = "__toks__"): DataFrame =
+      docs: DataFrame, idCol: String, textCol: String, minTokens: Int,
+      id: String = "__id__", toks: String = "__toks__"): DataFrame =
     docs
       .select(col(idCol).as(id), col(textCol).as("__text__"))
       .withColumn(toks, TextOps.tokens(col("__text__")))
@@ -161,12 +157,8 @@ object Dedup {
     * signature is the fused native graft.expr.MinHashSigWords
     * (value-identical to the CodegenFallback HOF chain). */
   private def bandRows(
-      tokens: DataFrame,
-      toks: String,
-      keep: Seq[String],
-      shingleSize: Int,
-      numHashes: Int,
-      rowsPerBand: Int): DataFrame = {
+      tokens: DataFrame, toks: String, keep: Seq[String],
+      shingleSize: Int, numHashes: Int, rowsPerBand: Int): DataFrame = {
     require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
       "numHashes must be a multiple of rowsPerBand")
     graft.GraftExtensions.install(tokens.sparkSession)
@@ -204,13 +196,8 @@ object Dedup {
     * (ops.Shared.minhashPairsCtes(maxBucketSize)) — it replays this exact
     * windowed count, so query and oracle can't desynchronize. */
   private def bandSide(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int,
-      numHashes: Int,
-      rowsPerBand: Int,
-      scope: CacheScope,
+      docs: DataFrame, idCol: String, textCol: String, shingleSize: Int,
+      numHashes: Int, rowsPerBand: Int, scope: CacheScope,
       maxBucketSize: Int): (DataFrame, DataFrame) = {
     // persisted: tokenization runs once for the band join AND the
     // verification joins (the materialize-features-first phase)
@@ -234,12 +221,8 @@ object Dedup {
     * token sets joined back and the pairs at Jaccard ≥ `threshold`
     * kept: (`aName`, `bName`, jaccard). */
   private def verifiedBandJoin(
-      l: (DataFrame, DataFrame),
-      r: (DataFrame, DataFrame),
-      aName: String,
-      bName: String,
-      shingleSize: Int,
-      threshold: Double,
+      l: (DataFrame, DataFrame), r: (DataFrame, DataFrame), aName: String,
+      bName: String, shingleSize: Int, threshold: Double,
       selfJoin: Boolean): DataFrame = {
     val ((lBase, lBanded), (rBase, rBanded)) = (l, r)
     val onBand = col("a.__band__") === col("b.__band__") &&
@@ -380,14 +363,8 @@ object Dedup {
     * several bands repeats: the batch join adds a distinct, the streaming
     * gate dedupes in keyed state. */
   private[graft] def minhashIndexedCandidates(
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      index: DataFrame,
-      shingleSize: Int,
-      numHashes: Int,
-      rowsPerBand: Int,
-      threshold: Double,
+      newDocs: DataFrame, idCol: String, textCol: String, index: DataFrame,
+      shingleSize: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
       persist: DataFrame => DataFrame = identity): DataFrame = {
     val tokens = tokenRows(newDocs, idCol, textCol, shingleSize,
       "__nid__", "__ntoks__")

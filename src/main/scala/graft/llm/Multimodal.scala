@@ -266,10 +266,7 @@ object Multimodal {
     * and (`__band__`, `__bv__`). The band joins match (`prefix`…, band,
     * value), so the video `frame_ix` prefix only meets aligned frames. */
   private def hashBands(
-      hashFrame: DataFrame,
-      idCol: String,
-      id: String,
-      prefix: Seq[String],
+      hashFrame: DataFrame, idCol: String, id: String, prefix: Seq[String],
       keep: Seq[Column]): DataFrame = {
     import org.apache.spark.sql.functions._
     hashFrame.where(col("dhash").isNotNull)
@@ -291,9 +288,7 @@ object Multimodal {
     * the capped frame (Spark does not share an uncached window subplan
     * between a self-join's sides); Int.MaxValue leaves the rows as is. */
   private def capBuckets(
-      banded: DataFrame,
-      prefix: Seq[String],
-      cap: Int,
+      banded: DataFrame, prefix: Seq[String], cap: Int,
       persist: DataFrame => DataFrame = identity): DataFrame = {
     import org.apache.spark.sql.functions._
     require(cap >= 1, "maxPerBucketSide must be positive")
@@ -322,12 +317,8 @@ object Multimodal {
     * pigeonhole), rows within `maxHamming` with the distance as
     * `__ham__` — one per shared band, so callers de-duplicate. */
   private def hammingSelfJoin(
-      hashFrame: DataFrame,
-      idCol: String,
-      maxHamming: Int,
-      scope: CacheScope,
-      maxPerBucketSide: Int,
-      prefix: Seq[String] = Nil,
+      hashFrame: DataFrame, idCol: String, maxHamming: Int, scope: CacheScope,
+      maxPerBucketSide: Int, prefix: Seq[String] = Nil,
       keep: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
     requireExact(maxHamming)
@@ -364,11 +355,8 @@ object Multimodal {
     * [[capBuckets]], keyed by [[Dedup.bandKey]] over (`prefix`…, band,
     * value). Columns: (`__id__`, `__bkey__`, `__dhash__`, `keep`…). */
   private def hashIndexOf(
-      hashFrame: DataFrame,
-      idCol: String,
-      maxPerBucketSide: Int,
-      prefix: Seq[String] = Nil,
-      keep: Seq[String] = Nil): DataFrame = {
+      hashFrame: DataFrame, idCol: String, maxPerBucketSide: Int,
+      prefix: Seq[String] = Nil, keep: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
     capBuckets(
         hashBands(hashFrame, idCol, "__id__", prefix,
@@ -387,19 +375,14 @@ object Multimodal {
     * `__ham__`. A pair colliding in several bands repeats: the batch
     * joins add a distinct, the streaming gates dedupe in keyed state. */
   private[graft] def hashIndexedCandidates(
-      hashFrame: DataFrame,
-      idCol: String,
-      index: DataFrame,
-      maxHamming: Int,
-      prefix: Seq[String] = Nil,
-      keep: Seq[String] = Nil,
+      hashFrame: DataFrame, idCol: String, index: DataFrame, maxHamming: Int,
+      prefix: Seq[String] = Nil, keep: Seq[String] = Nil,
       persist: DataFrame => DataFrame = identity): DataFrame = {
     import org.apache.spark.sql.functions._
     requireExact(maxHamming)
-    val carried = prefix ++ keep :+ "dhash"
     persist(hashBands(hashFrame, idCol, "__nid__", prefix,
         (keep :+ "dhash").map(col))
-      .select(col("__nid__") +: carried.map(col) :+
+      .select(col("__nid__") +: (prefix ++ keep :+ "dhash").map(col) :+
         Dedup.bandKey(prefix :+ "__band__" :+ "__bv__": _*): _*))
       .join(index, Seq("__bkey__"))
       .withColumn("__ham__", hamming("dhash", "__dhash__"))
@@ -1516,13 +1499,17 @@ object Multimodal {
     * (a_id, b_id, `__f__` frame, `__nfa__`/`__nfb__` the two clips'
     * sampled-frame counts, `__ham__`): de-duplicated across the up-to-8
     * bands that agreed, two clips pair iff the matched frames number
-    * both clips' frame counts. Output (a_id, b_id, max_hamming). */
+    * both clips' frame counts. Output (a_id, b_id, max_hamming). The
+    * counts are aggregated, not grouped on: a filter on grouping keys
+    * would be pushed into the band join as an extra equi-key, and an
+    * index join would then re-shuffle its `__bkey__`-bucketed side. */
   private def allFramesMatched(perFrame: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     perFrame
       .distinct()
-      .groupBy(col("a_id"), col("b_id"), col("__nfa__"), col("__nfb__"))
-      .agg(count(lit(1)).as("__m__"), max(col("__ham__")).as("max_hamming"))
+      .groupBy(col("a_id"), col("b_id"))
+      .agg(count(lit(1)).as("__m__"), max(col("__ham__")).as("max_hamming"),
+        max(col("__nfa__")).as("__nfa__"), max(col("__nfb__")).as("__nfb__"))
       .where(col("__m__") === col("__nfa__") &&
         col("__nfa__") === col("__nfb__"))
       .select(col("a_id"), col("b_id"), col("max_hamming"))

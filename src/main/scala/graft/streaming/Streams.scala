@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.llm.{Embeddings, TextOps}
+import graft.llm.{Dedup, Embeddings, Multimodal, TextOps}
 
 /** Structured-Streaming operators for continuous training-data ingestion
   * (beyond-reference surface: the reference is batch-only — zero streaming
@@ -363,8 +363,8 @@ object Streams {
       payloadCol: String,
   ): DataFrame = {
     import org.apache.spark.sql.types._
-    val hashed = graft.llm.Multimodal
-      .dhash(servedIds(docs, idCol, payloadCol), idCol, payloadCol)
+    val hashed = Multimodal.dhash(servedIds(docs, idCol, payloadCol), idCol,
+        payloadCol)
       .where(col("dhash").isNotNull)
     val outSchema = StructType(Seq(StructField(idCol, LongType),
       StructField("dhash", ArrayType(IntegerType, containsNull = false))))
@@ -412,7 +412,7 @@ object Streams {
       maxHamming: Int = 6,
   ): DataFrame =
     streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
-      graft.llm.Multimodal.dhash)
+      Multimodal.dhash)
 
   /** [[streamingImageNearDup]] for AUDIO clips — the energy-delta hash
     * against a persisted [[graft.llm.Multimodal.audioDhashIndex]]; the
@@ -426,7 +426,7 @@ object Streams {
       maxHamming: Int = 6,
   ): DataFrame =
     streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
-      graft.llm.Multimodal.audioDhash)
+      Multimodal.audioDhash)
 
   /** [[streamingImageNearDup]] through the SPECTRAL image hash against
     * a persisted [[graft.llm.Multimodal.imageSpectralIndex]] — the
@@ -441,7 +441,7 @@ object Streams {
       maxHamming: Int = 6,
   ): DataFrame =
     streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
-      graft.llm.Multimodal.imageSpectralHash)
+      Multimodal.imageSpectralHash)
 
   /** [[streamingAudioNearDup]] through the SPECTRAL hash against a
     * persisted [[graft.llm.Multimodal.audioSpectralIndex]] — the
@@ -456,7 +456,7 @@ object Streams {
       maxHamming: Int = 6,
   ): DataFrame =
     streamingHashNearDup(docs, idCol, payloadCol, index, maxHamming,
-      graft.llm.Multimodal.audioSpectralHash)
+      Multimodal.audioSpectralHash)
 
   /** The shared single-fingerprint streaming gate: the batch indexed
     * join's candidate frame ([[graft.llm.Multimodal
@@ -473,9 +473,8 @@ object Streams {
       hash: (DataFrame, String, String) => DataFrame,
   ): DataFrame = {
     import org.apache.spark.sql.types._
-    val cand = graft.llm.Multimodal
-      .hashIndexedCandidates(hash(servedIds(docs, idCol, payloadCol), idCol,
-        payloadCol), idCol, index, maxHamming)
+    val hashed = hash(servedIds(docs, idCol, payloadCol), idCol, payloadCol)
+    val cand = Multimodal.hashIndexedCandidates(hashed, idCol, index, maxHamming)
       .select(col("__nid__"), col("__id__").cast("long").as("__bid__"),
         col("__ham__"))
     adjudicateFirstSeen(cand,
@@ -578,9 +577,8 @@ object Streams {
       threshold: Double = 0.8,
   ): DataFrame = {
     import org.apache.spark.sql.types._
-    val cand = graft.llm.Dedup
-      .minhashIndexedCandidates(servedIds(docs, idCol, textCol), idCol,
-        textCol, index, shingleSize, numHashes, rowsPerBand, threshold)
+    val cand = Dedup.minhashIndexedCandidates(servedIds(docs, idCol, textCol),
+        idCol, textCol, index, shingleSize, numHashes, rowsPerBand, threshold)
       .select(col("__nid__"), col("__id__").cast("long").as("__bid__"),
         col("jaccard"))
     adjudicateFirstSeen(cand,
@@ -885,11 +883,10 @@ object Streams {
       maxHamming: Int = 6,
   ): DataFrame = {
     import org.apache.spark.sql.types._
-    val cand = graft.llm.Multimodal
-      .hashIndexedCandidates(
-        graft.llm.Multimodal.videoDhash(servedIds(docs, idCol, payloadCol),
-          idCol, payloadCol, every),
-        idCol, index, maxHamming, Seq("frame_ix"), Seq("n_frames"))
+    val hashed = Multimodal.videoDhash(servedIds(docs, idCol, payloadCol),
+      idCol, payloadCol, every)
+    val cand = Multimodal.hashIndexedCandidates(hashed, idCol, index,
+        maxHamming, Seq("frame_ix"), Seq("n_frames"))
       .select(col("__nid__"), col("n_frames").as("__nfa__"), col("frame_ix"),
         col("__id__").cast("long").as("__bid__"),
         col("__nf__").cast("long").as("__nfb__"), col("__ham__"))
