@@ -2361,8 +2361,8 @@ object Embeddings {
   ): DataFrame = {
     require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal segments")
     val segLen = dim / m
+    validateCodebookShape(codebooks, m, segLen)
     val cbooks = scope.cache(codebooks)
-    validateCodebookShape(cbooks, m, segLen)
     // SINGLE-PASS scoring: every per-query quantity folds into ONE 1-row
     // broadcast — per segment s, the centroid array (for the assignment
     // argmax) and a map cell → (qd = q_s·c, cn2 = ‖c‖²) lookup, plus the
@@ -2422,29 +2422,26 @@ object Embeddings {
       .withColumnRenamed("neighbor_id", "vec_id")
   }
 
-  /** Codebooks are model-parameter-sized: validating shape is one tiny
-    * aggregate, and catches training/serving m or dim drift loudly —
-    * a mismatched frame would otherwise score silently wrong, because
-    * the dot's left fold truncates to the shorter array. */
+  /** Codebooks are model-parameter-sized: validating shape collects the
+    * m·k (segment, entry dim) pairs and checks them on the driver — a
+    * pinned local frame runs no job — and catches training/serving m or
+    * dim drift loudly: a mismatched frame would otherwise score silently
+    * wrong, because the dot's left fold truncates to the shorter array. */
   private def validateCodebookShape(
       cbooks: DataFrame, m: Int, segLen: Int): Unit = {
     val shape = cbooks
-      .select(col("segment").cast("int").as("__s__"), size(col("cv")).as("__len__"))
-      .where(col("__s__").isNotNull) // a null segment surfaces as "missing"
-      .groupBy(col("__s__"))
-      .agg(countDistinct(col("__len__")).as("__nlen__"),
-        min(col("__len__")).as("__minlen__"))
+      .select(col("segment").cast("int"), size(col("cv")))
       .collect()
-      .map(r => (r.getInt(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) -1 else r.getInt(2)))
-      .sortBy(_._1)
-    require(shape.map(_._1).toSeq == (0 until m),
+      .filterNot(_.isNullAt(0)) // a null segment surfaces as "missing"
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (s, rows) =>
+        (s, rows.filterNot(_.isNullAt(1)).map(_.getInt(1)).distinct) }
+    require(shape.map(_._1) == (0 until m),
       s"codebooks cover segments ${shape.map(_._1).mkString(",")}; expected 0..${m - 1} " +
         "(was the frame trained with a different m?)")
-    shape.foreach { case (s, nlen, len) =>
-      require(nlen == 1L && len == segLen,
-        s"codebook segment $s has ${len}-dim entries; expected $segLen " +
+    shape.foreach { case (s, lens) =>
+      require(lens.sameElements(Seq(segLen)),
+        s"codebook segment $s has ${lens.minOption.getOrElse(-1)}-dim entries; expected $segLen " +
           "(was the frame trained with a different dim or m?)")
     }
   }

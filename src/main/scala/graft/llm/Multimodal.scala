@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 
 /** Multimodal column support (beyond-reference surface; SURVEY.md §2.7):
   * image/audio/video payloads are opaque `binary` columns with typed
-  * metadata extracted by a batched per-partition decode.
+  * metadata extracted by a per-partition decode.
   *
   * The decode is a REAL header parser for the dominant raster formats —
   * pure byte inspection, no codec libraries, so it runs anywhere:
@@ -23,11 +23,9 @@ import org.apache.spark.sql.types._
   *     honest durations) divided by the byte rate.
   * Unrecognized payloads keep byte_len and the SHA-256 fingerprint real
   * and report format "unknown" with zero dims — honest, never fabricated.
-  * Full pixel decode (resize, frame sampling) would slot into the same
-  * batched per-partition loop via a native codec (JNI/FFI); batching
-  * exists precisely so such a codec can amortize per-call setup across
-  * `batchSize` payloads, the same shape `mapInPandas` gives Python
-  * pipelines.
+  * The full pixel and sample decoders (PNG, [[Jpeg]], GIF, WAV) are pure
+  * JDK too; every DataFrame op maps its payload column through one
+  * narrow per-partition map ([[mapPayloads]]).
   */
 object Multimodal {
 
@@ -97,43 +95,12 @@ object Multimodal {
         }
       }
       if (res != null) res else unknown
-    } else if (payload.length >= 10 && u8(0) == 'G' && u8(1) == 'I' &&
-        u8(2) == 'F' && u8(3) == '8') {
-      // GIF block walk: count image descriptors (0x2C) — n_frames is REAL
-      // (animated GIFs report their frame count; a bare header reports 0).
-      // Extensions (0x21) and frame data are length-prefixed sub-block
-      // chains; color tables are 3·2^(size+1) bytes when flagged.
+    } else if (payload.length >= 10 && isGif(payload)) {
+      // n_frames is REAL: every complete image descriptor the block walk
+      // reaches, whatever its palette or data (animated GIFs report their
+      // frame count; a bare header reports 0)
       var frames = 0
-      var i = 13
-      if (payload.length >= 13) {
-        val packed = u8(10)
-        if ((packed & 0x80) != 0) i += 3 * (1 << ((packed & 7) + 1))
-        def skipSubBlocks(): Unit = {
-          var more = true
-          while (more && i < payload.length) {
-            val blen = u8(i); i += 1
-            if (blen == 0) more = false else i += blen
-          }
-        }
-        var done = false
-        while (!done && i < payload.length) {
-          u8(i) match {
-            case 0x3b => done = true // trailer
-            case 0x21 => i += 2; skipSubBlocks() // extension: label + chain
-            case 0x2c =>
-              if (i + 10 > payload.length) done = true
-              else {
-                val p = u8(i + 9)
-                i += 10
-                frames += 1 // complete image descriptor = one frame
-                if ((p & 0x80) != 0) i += 3 * (1 << ((p & 7) + 1))
-                i += 1 // LZW minimum code size
-                skipSubBlocks()
-              }
-            case _ => done = true // corrupt/unknown block: stop the walk
-          }
-        }
-      }
+      walkGif(payload) { _ => frames += 1; true }
       Row("gif", le16(6), le16(8), frames, len, sha, 0, 0, 0L)
     } else if (payload.length >= 36 && u8(0) == 'R' && u8(1) == 'I' &&
         u8(2) == 'F' && u8(3) == 'F' && u8(8) == 'W' && u8(9) == 'A' &&
@@ -230,19 +197,37 @@ object Multimodal {
     }
   }
 
-  /** dHash frame: (idCol, `dhash` array<int> of 8 band bytes) via one
-    * narrow mapPartitions — payloads never leave their partition. */
-  def dhash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
+  /** dHash frame: (idCol, `dhash` array<int> of 8 band bytes). */
+  def dhash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    hashFrame(df, idCol, payloadCol)(dhashBytes)
+
+  /** The one payload mapper: `f` turns each row and its `payloadCol`
+    * bytes into rows of `schema`, in one narrow mapPartitions — payloads
+    * never leave their partition, only what `f` keeps of them does. */
+  private def mapPayloads(df: DataFrame, payloadCol: String,
+      schema: StructType)(f: (Row, Array[Byte]) => Iterator[Row]): DataFrame = {
     val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("dhash", ArrayType(IntegerType, containsNull = false))))
-    df.mapPartitions { rows =>
-      rows.map { row =>
-        Row(row.get(idIdx), dhashBytes(row.getAs[Array[Byte]](payloadIdx)))
-      }
-    }(Encoders.row(outSchema))
+    df.mapPartitions(_.flatMap(row =>
+      f(row, row.getAs[Array[Byte]](payloadIdx))))(Encoders.row(schema))
   }
+
+  /** A hash frame: (idCol, `dhash` = `hash` of the payload, null when
+    * the payload does not decode). */
+  private def hashFrame(df: DataFrame, idCol: String, payloadCol: String)(
+      hash: Array[Byte] => Array[Int]): DataFrame = {
+    val idIdx = df.schema.fieldIndex(idCol)
+    mapPayloads(df, payloadCol, StructType(Seq(df.schema(idCol),
+        StructField("dhash", ArrayType(IntegerType, containsNull = false))))) {
+      (row, payload) => Iterator.single(Row(row.get(idIdx), hash(payload)))
+    }
+  }
+
+  /** `df` plus one `field` column computed from each payload by `f`. */
+  private def withPayloadColumn(df: DataFrame, payloadCol: String,
+      field: StructField)(f: Array[Byte] => Any): DataFrame =
+    mapPayloads(df, payloadCol, df.schema.add(field)) { (row, payload) =>
+      Iterator.single(Row.fromSeq(row.toSeq :+ f(payload)))
+    }
 
   /** Perceptual near-duplicate IMAGE pairs — the multimodal sibling of
     * the text dedup detectors: [[dhash]] every payload, block on the 8
@@ -591,20 +576,29 @@ object Multimodal {
     val stride = pcm.channels
     val n = pcm.samples.length / stride
     if (n < 65) return null
+    // global tap grid q = 64t + j — commutes with upsampling
+    spectralBits((t, j) =>
+      pcm.samples(((64L * t + j) * n / 576).toInt * stride).toLong)
+  }
+
+  /** The spectral kernel of [[audioSpectralHashBytes]] and
+    * [[imageSpectralHashBytes]]: `tap(t, j)` reads the 9×64 tap grid,
+    * each tap row t runs the 8 odd-band fixed-point DFT
+    * ([[SpectralCos]]/[[SpectralSin]]) to energies E = C² + S², and bit
+    * (t, b) is set iff band b's energy in row t beats row t+1's. */
+  private def spectralBits(tap: (Int, Int) => Long): Array[Int] = {
     val e = Array.ofDim[Long](9, 8)
+    val v = new Array[Long](64)
     var t = 0
     while (t < 9) {
+      var j = 0
+      while (j < 64) { v(j) = tap(t, j); j += 1 }
       var b = 0
       while (b < 8) {
         val ct = SpectralCos(b); val st = SpectralSin(b)
         var cs = 0L; var sn = 0L
-        var j = 0
-        while (j < 64) {
-          val q = 64L * t + j // global tap grid — commutes with upsampling
-          val v = pcm.samples((q * n / 576).toInt * stride).toLong
-          cs += v * ct(j); sn += v * st(j)
-          j += 1
-        }
+        j = 0
+        while (j < 64) { cs += v(j) * ct(j); sn += v(j) * st(j); j += 1 }
         e(t)(b) = cs * cs + sn * sn
         b += 1
       }
@@ -637,49 +631,13 @@ object Multimodal {
   def imageSpectralHashBytes(payload: Array[Byte]): Array[Int] = {
     val r = decodePngRaster(payload)
     if (r == null || r.w < 8 || r.h < 9) return null
-    val e = Array.ofDim[Long](9, 8)
-    var t = 0
-    while (t < 9) {
-      val y = (t.toLong * r.h / 9).toInt
-      var b = 0
-      while (b < 8) {
-        val ct = SpectralCos(b); val st = SpectralSin(b)
-        var cs = 0L; var sn = 0L
-        var j = 0
-        while (j < 64) {
-          val v = r.pixel((j.toLong * r.w / 64).toInt, y, 0).toLong
-          cs += v * ct(j); sn += v * st(j)
-          j += 1
-        }
-        e(t)(b) = cs * cs + sn * sn
-        b += 1
-      }
-      t += 1
-    }
-    Array.tabulate(8) { k =>
-      var byte = 0
-      var b = 0
-      while (b < 8) {
-        if (e(k)(b) > e(k + 1)(b)) byte |= 1 << b
-        b += 1
-      }
-      byte
-    }
+    spectralBits((t, j) =>
+      r.pixel((j.toLong * r.w / 64).toInt, (t.toLong * r.h / 9).toInt, 0).toLong)
   }
 
   /** Image spectral-hash frame (the [[dhash]] shape). */
-  def imageSpectralHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("dhash", ArrayType(IntegerType, containsNull = false))))
-    df.mapPartitions { rows =>
-      rows.map { row =>
-        Row(row.get(idIdx),
-          imageSpectralHashBytes(row.getAs[Array[Byte]](payloadIdx)))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def imageSpectralHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    hashFrame(df, idCol, payloadCol)(imageSpectralHashBytes)
 
   /** Perceptual near-duplicate IMAGE pairs by SPECTRAL content —
     * catches brightness-shifted / contrast-scaled / integer-upscaled
@@ -721,18 +679,8 @@ object Multimodal {
       index, maxHamming, scope)
 
   /** Spectral-hash frame (the [[dhash]] shape). */
-  def audioSpectralHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("dhash", ArrayType(IntegerType, containsNull = false))))
-    df.mapPartitions { rows =>
-      rows.map { row =>
-        Row(row.get(idIdx),
-          audioSpectralHashBytes(row.getAs[Array[Byte]](payloadIdx)))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def audioSpectralHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    hashFrame(df, idCol, payloadCol)(audioSpectralHashBytes)
 
   /** Perceptual near-duplicate AUDIO pairs by SPECTRAL content —
     * catches level-shifted / gain-scaled / integer-upsampled re-encodes
@@ -749,18 +697,8 @@ object Multimodal {
       maxHamming, scope, maxPerBucketSide)
 
   /** Audio hash frame (the [[dhash]] shape). */
-  def audioDhash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("dhash", ArrayType(IntegerType, containsNull = false))))
-    df.mapPartitions { rows =>
-      rows.map { row =>
-        Row(row.get(idIdx),
-          audioDhashBytes(row.getAs[Array[Byte]](payloadIdx)))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def audioDhash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    hashFrame(df, idCol, payloadCol)(audioDhashBytes)
 
   /** Perceptual near-duplicate AUDIO pairs — re-encoded / slightly
     * level-shifted copies of a clip collide, unrelated clips don't;
@@ -903,15 +841,6 @@ object Multimodal {
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
   }
 
-  /** Full PNG pixel decode — the real thing, pure JDK: chunk walk →
-    * concatenated IDAT → `java.util.zip.Inflater` → per-scanline
-    * unfilter (all five PNG filter types incl. Average/Paeth) → one
-    * accumulation pass for per-channel sum/min/max. Supports 8-bit
-    * color types 0 (gray), 2 (RGB), 4 (gray+alpha), 6 (RGBA),
-    * non-interlaced. Anything else — or any truncation/corruption the
-    * inflate or size checks catch — returns null (honest, never
-    * fabricated). This closes the "header-only" seam the metadata
-    * decoder documented. */
   /** The unfiltered raster behind [[decodePngPixels]]: `raw` holds
     * `h` scanlines of `1 + w*channels` bytes each (the leading filter
     * byte is dead after reconstruction). Null on any unsupported or
@@ -922,6 +851,15 @@ object Multimodal {
       raw(y * (1 + w * channels) + 1 + x * channels + c) & 0xff
   }
 
+  /** Full PNG pixel decode — the real thing, pure JDK: chunk walk →
+    * concatenated IDAT → `java.util.zip.Inflater` → per-scanline
+    * unfilter (all five PNG filter types incl. Average/Paeth) → one
+    * accumulation pass for per-channel sum/min/max. Supports 8-bit
+    * color types 0 (gray), 2 (RGB), 4 (gray+alpha), 6 (RGBA),
+    * non-interlaced. Anything else — or any truncation/corruption the
+    * inflate or size checks catch — returns null (honest, never
+    * fabricated). This closes the "header-only" seam the metadata
+    * decoder documented. */
   def decodePngPixels(payload: Array[Byte]): Row = {
     val r = decodePngRaster(payload)
     if (r == null) return null
@@ -1183,90 +1121,97 @@ object Multimodal {
       (f, x, y) => ((11L * x + 17L * y + 23L * f + 3L * id) % 256L).toInt)
   }
 
-  /** Full GIF pixel decode — pure JDK, a complete variable-width LZW
-    * decompressor (per the GIF89a spec: LSB-first codes, dynamic code
-    * width 3–12 bits, CLEAR/EOI handling, the KwKwK self-reference case)
-    * over the first image's sub-block-chained data, mapped through the
-    * global color table to RGB stats. Interlaced images are fine (row
-    * order doesn't change channel statistics). Returns null — honest,
-    * never fabricated — for images without a color table, local-palette
-    * frames, or any truncation/corruption the stream checks catch. */
-  def decodeGifPixels(payload: Array[Byte]): Row = {
-    if (payload == null || payload.length < 21) return null
+  /** True when the payload starts with the GIF signature "GIF8". */
+  private def isGif(payload: Array[Byte]): Boolean = {
     def u8(i: Int): Int = payload(i) & 0xff
-    if (!(u8(0) == 'G' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == '8')) return null
+    payload.length >= 4 &&
+      u8(0) == 'G' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == '8'
+  }
+
+  /** The entry count of a GIF's global color table, the palette every
+    * decoded index maps through; -1 for a short or non-GIF payload, one
+    * without a global table, or one that ends inside it. */
+  private def gifPalette(payload: Array[Byte]): Int =
+    if (payload == null || payload.length < 21 || !isGif(payload) ||
+        (payload(10) & 0x80) == 0) -1
+    else {
+      val entries = 1 << ((payload(10) & 7) + 1)
+      if (13 + 3 * entries >= payload.length) -1 else entries
+    }
+
+  /** A GIF image descriptor as [[walkGif]] finds it: 0-based frame
+    * index, the frame's dims, its local-palette flag, the LZW minimum
+    * code size (-1 when the payload ends first) and the data sub-block
+    * chain from `data` to `end`, past its 0 terminator (-1 when the chain
+    * runs off the payload). */
+  private final case class GifFrame(ix: Int, w: Int, h: Int, local: Boolean,
+      minCode: Int, data: Int, end: Int) {
+    /** Whole, mapped through the global table, with a legal code size. */
+    def decodable: Boolean = !local && minCode >= 2 && minCode <= 8 && end >= 0
+  }
+
+  /** How a [[walkGif]] ended. */
+  private object GifEnd extends Enumeration {
+    val Trailer, Truncated, Corrupt, Stopped = Value
+  }
+
+  /** The one GIF container walk: past the header and the global color
+    * table (when flagged), over the 0x21 extension, 0x2c image and 0x3b
+    * trailer blocks. Extensions (GCE / NETSCAPE / comment) and frame data
+    * are length-prefixed sub-block chains, hopped by their length bytes
+    * — nothing is copied or decoded here; color tables are 3·2^(size+1)
+    * bytes when flagged. `visit` sees every complete image descriptor in
+    * order, a frame whose palette or data the payload cuts short
+    * included, and returns whether to go on. */
+  private def walkGif(payload: Array[Byte])(
+      visit: GifFrame => Boolean): GifEnd.Value = {
+    def u8(i: Int): Int = payload(i) & 0xff
     def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    val packed = u8(10)
-    if ((packed & 0x80) == 0) return null // no global color table: indices unmappable
-    val gctSize = 3 * (1 << ((packed & 7) + 1))
-    var i = 13
-    val gctOff = i
-    i += gctSize
-    if (i >= payload.length) return null
-    // walk blocks to the first image descriptor
-    var w = 0; var h = 0
-    var found = false
-    var corrupt = false
-    while (!found && !corrupt && i < payload.length) {
-      u8(i) match {
-        case 0x3b => corrupt = true // trailer before any image
-        case 0x21 => // extension: label + sub-block chain
-          i += 2
-          var more = true
-          while (more && i < payload.length) {
-            val n = u8(i); i += 1
-            if (n == 0) more = false else i += n
-          }
+    def table(packed: Int): Int =
+      if ((packed & 0x80) != 0) 3 * (1 << ((packed & 7) + 1)) else 0
+    /** The offset past the 0 terminator of the chain at `start`, or -1. */
+    def hop(start: Int): Int = {
+      var i = start
+      while (i < payload.length && u8(i) != 0) i += 1 + u8(i)
+      if (i < payload.length) i + 1 else -1
+    }
+    var i = 13 + (if (payload.length >= 13) table(u8(10)) else 0)
+    var ix = 0
+    var end: GifEnd.Value = null
+    while (end == null) {
+      if (i < 0 || i >= payload.length) end = GifEnd.Truncated
+      else u8(i) match {
+        case 0x3b => end = GifEnd.Trailer
+        case 0x21 => i = hop(i + 2) // label + chain
         case 0x2c =>
-          if (i + 10 > payload.length) corrupt = true
+          if (i + 10 > payload.length) end = GifEnd.Truncated
           else {
-            w = le16(i + 5); h = le16(i + 7)
             val p = u8(i + 9)
-            i += 10
-            if ((p & 0x80) != 0) return null // local palette: fixture never emits one
-            found = true
+            val at = i + 10 + table(p) // the LZW minimum code size
+            val minCode = if (at < payload.length) u8(at) else -1
+            val f = GifFrame(ix, le16(i + 5), le16(i + 7), (p & 0x80) != 0,
+              minCode, at + 1, if (minCode < 0) -1 else hop(at + 1))
+            if (!visit(f)) end = GifEnd.Stopped
+            i = f.end; ix += 1
           }
-        case _ => corrupt = true
+        case _ => end = GifEnd.Corrupt
       }
     }
-    if (!found || corrupt || w <= 0 || h <= 0 || i >= payload.length) return null
-    // concatenate the image's LZW sub-blocks
-    val minCode = u8(i); i += 1
-    if (minCode < 2 || minCode > 8) return null
-    val lzw = readGifSubBlocks(payload, i)
-    if (lzw == null) return null
-    val stats = lzwChannelStats(lzw._1, minCode, payload, gctOff, w.toLong * h)
-    if (stats == null) return null
-    Row(w, h, 3, w.toLong * h, stats(0).toSeq, stats(1).toSeq, stats(2).toSeq)
+    end
   }
 
-  /** Concatenate a length-prefixed GIF sub-block chain starting at `i`.
-    * Returns (bytes, offset past the 0 terminator), or null if the chain
-    * runs off the payload. */
-  private def readGifSubBlocks(payload: Array[Byte], start: Int): (Array[Byte], Int) = {
-    var i = start
-    val buf = new java.io.ByteArrayOutputStream()
-    var more = true
-    while (more) {
-      if (i >= payload.length) return null // truncated chain
-      val n = payload(i) & 0xff; i += 1
-      if (n == 0) more = false
-      else {
-        if (i + n > payload.length) return null
-        buf.write(payload, i, n); i += n
-      }
-    }
-    (buf.toByteArray, i)
-  }
-
-  /** LZW-decode one frame's code stream and reduce it to per-channel
-    * (sums, mins, maxs) through the global color table at `gctOff`.
-    * Returns null on any stream corruption or a pixel-count mismatch.
-    * This is the shared decode core of [[decodeGifPixels]] (first frame)
-    * and [[sampleGifFrames]] (every sampled frame). */
-  private def lzwChannelStats(code: Array[Byte], minCode: Int,
-      payload: Array[Byte], gctOff: Int, nPx: Long): Array[Array[Long]] = {
-    def u8(i: Int): Int = payload(i) & 0xff
+  /** The one GIF LZW decoder (GIF89a: LSB-first codes, dynamic code
+    * width 3–12 bits, CLEAR/EOI handling, the KwKwK self-reference case)
+    * of a [[GifFrame.decodable]] frame, read straight from its
+    * sub-blocks: the frame's w·h palette-INDEX raster, row-major, or null
+    * on an empty frame or any corruption the stream checks catch (a bad
+    * code, no EOI, a pixel count other than w·h). Memory is one frame;
+    * the raster grows with what the stream emits, so a descriptor's
+    * claimed size alone allocates nothing. */
+  private def gifRaster(payload: Array[Byte], f: GifFrame): Array[Byte] = {
+    val nPx = f.w.toLong * f.h
+    if (nPx <= 0 || nPx > Int.MaxValue - 8) return null
+    val minCode = f.minCode
     val clear = 1 << minCode
     val eoi = clear + 1
     val prefix = new Array[Int](4096)
@@ -1275,27 +1220,26 @@ object Multimodal {
     var width = minCode + 1
     var nextFree = eoi + 1
     var prev = -1
-    var acc = 0L; var nbits = 0; var pos = 0
+    var acc = 0L; var nbits = 0
+    var pos = f.data; var left = 0 // data bytes left in the current sub-block
+    var out = new Array[Byte](math.min(nPx, 1L << 16).toInt)
     var emitted = 0L
-    val sums = new Array[Long](3)
-    val mins = Array.fill(3)(255L)
-    val maxs = new Array[Long](3)
     def emit(idx: Int): Unit = {
       if (emitted < nPx) {
-        val r = u8(gctOff + 3 * idx)
-        val g = u8(gctOff + 3 * idx + 1)
-        val b = u8(gctOff + 3 * idx + 2)
-        sums(0) += r; sums(1) += g; sums(2) += b
-        if (r < mins(0)) mins(0) = r; if (r > maxs(0)) maxs(0) = r
-        if (g < mins(1)) mins(1) = g; if (g > maxs(1)) maxs(1) = g
-        if (b < mins(2)) mins(2) = b; if (b > maxs(2)) maxs(2) = b
+        if (emitted == out.length)
+          out = java.util.Arrays.copyOf(out, math.min(nPx, 2L * out.length).toInt)
+        out(emitted.toInt) = idx.toByte
       }
       emitted += 1
     }
     var done = false
     while (!done) {
-      while (nbits < width && pos < code.length) {
-        acc |= (code(pos).toLong & 0xff) << nbits; nbits += 8; pos += 1
+      while (nbits < width && pos < f.end - 1) { // f.end - 1: the terminator
+        if (left == 0) left = payload(pos) & 0xff
+        else {
+          acc |= (payload(pos).toLong & 0xff) << nbits; nbits += 8; left -= 1
+        }
+        pos += 1
       }
       if (nbits < width) return null // ran out of bits before EOI
       val c = (acc & ((1L << width) - 1)).toInt
@@ -1328,7 +1272,90 @@ object Multimodal {
       }
     }
     if (emitted != nPx) return null // wrong pixel count: corrupt stream
-    Array(sums, mins, maxs)
+    out
+  }
+
+  /** [[gifRaster]] of a frame every index of which names an entry of
+    * the global table's `entries` — else null, since a lookup past the
+    * table would read bytes that are not palette. */
+  private def paletteRaster(payload: Array[Byte], f: GifFrame,
+      entries: Int): Array[Byte] = {
+    val raster = gifRaster(payload, f)
+    if (raster == null || (1 << f.minCode) <= entries) return raster
+    var k = 0
+    while (k < raster.length) {
+      if ((raster(k) & 0xff) >= entries) return null
+      k += 1
+    }
+    raster
+  }
+
+  /** A frame's per-channel (sums, mins, maxs) through the global color
+    * table — one pass over its [[paletteRaster]], the way
+    * [[decodePngPixels]] reduces [[decodePngRaster]]; null when the
+    * frame does not decode. */
+  private def gifFrameStats(payload: Array[Byte], f: GifFrame,
+      entries: Int): Seq[Seq[Long]] = {
+    val raster = paletteRaster(payload, f, entries)
+    if (raster == null) return null
+    val sums = new Array[Long](3)
+    val mins = Array.fill(3)(255L)
+    val maxs = new Array[Long](3)
+    var k = 0
+    while (k < raster.length) {
+      val at = 13 + 3 * (raster(k) & 0xff)
+      var c = 0
+      while (c < 3) {
+        val v = (payload(at + c) & 0xff).toLong
+        sums(c) += v
+        if (v < mins(c)) mins(c) = v
+        if (v > maxs(c)) maxs(c) = v
+        c += 1
+      }
+      k += 1
+    }
+    Seq(sums.toSeq, mins.toSeq, maxs.toSeq)
+  }
+
+  /** Full GIF pixel decode — pure JDK: the first image's
+    * [[gifRaster]] mapped through the global color table to RGB stats.
+    * Interlaced images are fine (row order doesn't change channel
+    * statistics), and nothing after the first frame is read. Returns
+    * null — honest, never fabricated — for images without a color
+    * table, local-palette frames, indices past the table, or any
+    * truncation/corruption the stream checks catch. */
+  def decodeGifPixels(payload: Array[Byte]): Row = {
+    val entries = gifPalette(payload)
+    if (entries < 0) return null
+    var px: Row = null
+    walkGif(payload) { f =>
+      val stats = if (f.decodable) gifFrameStats(payload, f, entries) else null
+      if (stats != null) px = Row.fromSeq(Seq[Any](f.w, f.h, 3, f.w.toLong * f.h) ++ stats)
+      false // the first frame only
+    }
+    px
+  }
+
+  /** The strict multi-frame GIF read of [[sampleGifFrames]],
+    * [[videoFrameDhashes]] and [[sceneDiffs]]: `decode` (given the frame
+    * and the global table's entry count) every `every`-th frame, in
+    * order. Null without a global table or the trailer, on any frame —
+    * sampled or not — that is not [[GifFrame.decodable]], or when
+    * `decode` returns null. */
+  private def decodeGifFrames[T >: Null](payload: Array[Byte], every: Int)(
+      decode: (GifFrame, Int) => T): Seq[T] = {
+    require(every >= 1, s"every must be >= 1, got $every")
+    val entries = gifPalette(payload)
+    if (entries < 0) return null
+    val out = scala.collection.mutable.ArrayBuffer.empty[T]
+    val end = walkGif(payload) { f =>
+      f.decodable && (f.ix % every != 0 || {
+        val v = decode(f, entries)
+        if (v != null) out += v
+        v != null
+      })
+    }
+    if (end == GifEnd.Trailer) out.toSeq else null
   }
 
   /** One sampled frame's statistics, produced by [[sampleGifFrames]]:
@@ -1351,56 +1378,14 @@ object Multimodal {
     * sampled frames, not total frames: the economics real video frame
     * sampling needs. Returns one [[FrameSchema]] row per sampled frame,
     * or null for corrupt payloads / no global palette / local-palette
-    * frames (same honesty rules as [[decodeGifPixels]]). */
-  def sampleGifFrames(payload: Array[Byte], every: Int): Seq[Row] = {
-    require(every >= 1, s"every must be >= 1, got $every")
-    if (payload == null || payload.length < 21) return null
-    def u8(i: Int): Int = payload(i) & 0xff
-    if (!(u8(0) == 'G' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == '8')) return null
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    val packed = u8(10)
-    if ((packed & 0x80) == 0) return null // no global color table
-    val gctOff = 13
-    var i = gctOff + 3 * (1 << ((packed & 7) + 1))
-    if (i >= payload.length) return null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var frameIx = 0
-    var done = false
-    while (!done) {
-      if (i >= payload.length) return null // no trailer: truncated
-      u8(i) match {
-        case 0x3b => done = true
-        case 0x21 => // extension (GCE / NETSCAPE / comment): label + chain
-          i += 2
-          val skipped = readGifSubBlocks(payload, i)
-          if (skipped == null) return null
-          i = skipped._2
-        case 0x2c =>
-          if (i + 10 > payload.length) return null
-          val fw = le16(i + 5); val fh = le16(i + 7)
-          val p = u8(i + 9)
-          i += 10
-          if ((p & 0x80) != 0) return null // local palette: unmappable here
-          if (i >= payload.length) return null
-          val minCode = u8(i); i += 1
-          if (minCode < 2 || minCode > 8) return null
-          val blocks = readGifSubBlocks(payload, i)
-          if (blocks == null) return null
-          i = blocks._2
-          if (frameIx % every == 0) {
-            if (fw <= 0 || fh <= 0) return null
-            val stats = lzwChannelStats(blocks._1, minCode, payload, gctOff,
-              fw.toLong * fh)
-            if (stats == null) return null
-            out += Row(frameIx, fw, fh, fw.toLong * fh,
-              stats(0).toSeq, stats(1).toSeq, stats(2).toSeq)
-          }
-          frameIx += 1
-        case _ => return null // unknown block type: corrupt
-      }
+    * frames / indices past the table (same honesty rules as
+    * [[decodeGifPixels]]). */
+  def sampleGifFrames(payload: Array[Byte], every: Int): Seq[Row] =
+    decodeGifFrames[Row](payload, every) { (f, entries) =>
+      val stats = gifFrameStats(payload, f, entries)
+      if (stats == null) null
+      else Row.fromSeq(Seq[Any](f.ix, f.w, f.h, f.w.toLong * f.h) ++ stats)
     }
-    out.toSeq
-  }
 
   /** Per-sampled-frame dHashes of an animated GIF — the VIDEO
     * fingerprint: every `every`-th frame LZW-decodes to its
@@ -1414,58 +1399,17 @@ object Multimodal {
     * (frame_ix, 8 band bytes) per sampled frame; null for corrupt /
     * local-palette / sub-grid payloads (honesty rules of
     * [[sampleGifFrames]]). */
-  def videoFrameDhashes(payload: Array[Byte], every: Int): Seq[(Int, Array[Int])] = {
-    require(every >= 1, s"every must be >= 1, got $every")
-    if (payload == null || payload.length < 21) return null
-    def u8(i: Int): Int = payload(i) & 0xff
-    if (!(u8(0) == 'G' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == '8')) return null
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    val packed = u8(10)
-    if ((packed & 0x80) == 0) return null
-    val gctOff = 13
-    var i = gctOff + 3 * (1 << ((packed & 7) + 1))
-    if (i >= payload.length) return null
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Int])]
-    var frameIx = 0
-    var done = false
-    while (!done) {
-      if (i >= payload.length) return null
-      u8(i) match {
-        case 0x3b => done = true
-        case 0x21 =>
-          i += 2
-          val skipped = readGifSubBlocks(payload, i)
-          if (skipped == null) return null
-          i = skipped._2
-        case 0x2c =>
-          if (i + 10 > payload.length) return null
-          val fw = le16(i + 5); val fh = le16(i + 7)
-          val p = u8(i + 9)
-          i += 10
-          if ((p & 0x80) != 0) return null
-          if (i >= payload.length) return null
-          val minCode = u8(i); i += 1
-          if (minCode < 2 || minCode > 8) return null
-          val blocks = readGifSubBlocks(payload, i)
-          if (blocks == null) return null
-          i = blocks._2
-          if (frameIx % every == 0) {
-            if (fw < 9 || fh < 8) return null
-            val idx = lzwIndices(blocks._1, minCode, fw * fh)
-            if (idx == null) return null
-            val px = new Array[Int](fw * fh)
-            var k = 0
-            while (k < px.length) { px(k) = idx(k) & 0xff; k += 1 }
-            val h = dhashOfGray(fw, fh, px)
-            if (h == null) return null
-            out += ((frameIx, h))
-          }
-          frameIx += 1
-        case _ => return null
+  def videoFrameDhashes(payload: Array[Byte], every: Int): Seq[(Int, Array[Int])] =
+    decodeGifFrames[(Int, Array[Int])](payload, every) { (f, _) =>
+      val raster = if (f.w < 9 || f.h < 8) null else gifRaster(payload, f)
+      if (raster == null) null
+      else {
+        val px = new Array[Int](raster.length)
+        var k = 0
+        while (k < px.length) { px(k) = raster(k) & 0xff; k += 1 }
+        (f.ix, dhashOfGray(f.w, f.h, px))
       }
     }
-    out.toSeq
-  }
 
   /** Video hash frame: one row per (idCol, `frame_ix`, `dhash`) sampled
     * frame via one narrow mapPartitions, with the clip's total sampled
@@ -1479,20 +1423,16 @@ object Multimodal {
       payloadCol: String,
       every: Int): DataFrame = {
     val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("frame_ix", IntegerType, nullable = false),
-      StructField("dhash", ArrayType(IntegerType, containsNull = false)),
-      StructField("n_frames", LongType, nullable = false)))
-    df.mapPartitions { rows =>
-      rows.flatMap { row =>
-        val hs = videoFrameDhashes(row.getAs[Array[Byte]](payloadIdx), every)
-        if (hs == null) Iterator.empty
-        else hs.iterator.map { case (f, h) =>
-          Row(row.get(idIdx), f, h, hs.length.toLong)
-        }
+    mapPayloads(df, payloadCol, StructType(Seq(df.schema(idCol),
+        StructField("frame_ix", IntegerType, nullable = false),
+        StructField("dhash", ArrayType(IntegerType, containsNull = false)),
+        StructField("n_frames", LongType, nullable = false)))) { (row, payload) =>
+      val hs = videoFrameDhashes(payload, every)
+      if (hs == null) Iterator.empty
+      else hs.iterator.map { case (f, h) =>
+        Row(row.get(idIdx), f, h, hs.length.toLong)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** The all-aligned-frames pairing rule over verified frame pairs
@@ -1601,62 +1541,6 @@ object Multimodal {
           col("__nf__").as("__nfb__"), col("__ham__")))
   }
 
-  /** LZW-decode one frame's code stream to its palette-INDEX raster
-    * (row-major), or null on corruption — the materializing variant of
-    * [[lzwChannelStats]], needed when two frames must be compared
-    * pixel-for-pixel. Memory is one frame (w·h bytes), never the clip. */
-  private def lzwIndices(code: Array[Byte], minCode: Int,
-      nPx: Int): Array[Byte] = {
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Int](4096)
-    val stack = new Array[Int](4097)
-    var width = minCode + 1
-    var nextFree = eoi + 1
-    var prev = -1
-    var acc = 0L; var nbits = 0; var pos = 0
-    val out = new Array[Byte](nPx)
-    var emitted = 0
-    def emit(idx: Int): Unit = {
-      if (emitted < nPx) out(emitted) = idx.toByte
-      emitted += 1
-    }
-    var done = false
-    while (!done) {
-      while (nbits < width && pos < code.length) {
-        acc |= (code(pos).toLong & 0xff) << nbits; nbits += 8; pos += 1
-      }
-      if (nbits < width) return null
-      val c = (acc & ((1L << width) - 1)).toInt
-      acc >>>= width; nbits -= width
-      if (c == clear) {
-        width = minCode + 1; nextFree = eoi + 1; prev = -1
-      } else if (c == eoi) done = true
-      else if (prev == -1) {
-        if (c >= clear) return null
-        emit(c); prev = c
-      } else {
-        if (c > nextFree) return null
-        var top = 0
-        var cur = if (c == nextFree) prev else c
-        while (cur >= clear + 2) { stack(top) = suffix(cur); top += 1; cur = prefix(cur) }
-        val first = cur
-        stack(top) = first; top += 1
-        var k = top - 1
-        while (k >= 0) { emit(stack(k)); k -= 1 }
-        if (c == nextFree) emit(first)
-        if (nextFree <= 4095) {
-          prefix(nextFree) = prev; suffix(nextFree) = first; nextFree += 1
-        }
-        if (nextFree == (1 << width) && width < 12) width += 1
-        prev = c
-      }
-    }
-    if (emitted != nPx) return null
-    out
-  }
-
   /** One frame-pair difference produced by [[sceneDiffs]]: the frame's
     * 0-based index (≥ 1 — frame 0 has no predecessor), its pixel count,
     * and the EXACT integer sum over pixels and RGB channels of
@@ -1675,91 +1559,47 @@ object Multimodal {
     * must share the full-screen geometry (sub-rectangle frames imply
     * disposal compositing this statistic doesn't model → null, honest).
     * Returns null for corrupt / no-global-palette / local-palette
-    * payloads, Nil for single-frame clips. */
+    * payloads or indices past the table, Nil for single-frame clips. */
   def sceneDiffs(payload: Array[Byte]): Seq[Row] = {
-    if (payload == null || payload.length < 21) return null
-    def u8(i: Int): Int = payload(i) & 0xff
-    if (!(u8(0) == 'G' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == '8')) return null
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    val packed = u8(10)
-    if ((packed & 0x80) == 0) return null
-    val gctOff = 13
-    var i = gctOff + 3 * (1 << ((packed & 7) + 1))
-    if (i >= payload.length) return null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var prev: GifFrame = null
     var prevRaster: Array[Byte] = null
-    var pw = -1; var ph = -1
-    var frameIx = 0
-    var done = false
-    while (!done) {
-      if (i >= payload.length) return null
-      u8(i) match {
-        case 0x3b => done = true
-        case 0x21 =>
-          i += 2
-          val skipped = readGifSubBlocks(payload, i)
-          if (skipped == null) return null
-          i = skipped._2
-        case 0x2c =>
-          if (i + 10 > payload.length) return null
-          val fw = le16(i + 5); val fh = le16(i + 7)
-          val p = u8(i + 9)
-          i += 10
-          if ((p & 0x80) != 0) return null
-          if (i >= payload.length) return null
-          val minCode = u8(i); i += 1
-          if (minCode < 2 || minCode > 8) return null
-          val blocks = readGifSubBlocks(payload, i)
-          if (blocks == null) return null
-          i = blocks._2
-          if (fw <= 0 || fh <= 0) return null
-          if (prevRaster != null && (fw != pw || fh != ph)) return null
-          val raster = lzwIndices(blocks._1, minCode, fw * fh)
-          if (raster == null) return null
-          if (prevRaster != null) {
-            var d = 0L
-            var k = 0
-            val n = fw * fh
-            while (k < n) {
-              val a = raster(k) & 0xff
-              val b = prevRaster(k) & 0xff
-              if (a != b) {
-                var c = 0
-                while (c < 3) {
-                  d += math.abs(u8(gctOff + 3 * a + c) - u8(gctOff + 3 * b + c))
-                  c += 1
-                }
+    val diffs = decodeGifFrames[Seq[Row]](payload, 1) { (f, entries) =>
+      val raster =
+        if (prev != null && (f.w != prev.w || f.h != prev.h)) null
+        else paletteRaster(payload, f, entries)
+      if (raster == null) null
+      else {
+        val row = if (prevRaster == null) Nil else {
+          var d = 0L
+          var k = 0
+          while (k < raster.length) {
+            val a = 13 + 3 * (raster(k) & 0xff)
+            val b = 13 + 3 * (prevRaster(k) & 0xff)
+            if (a != b) {
+              var c = 0
+              while (c < 3) {
+                d += math.abs((payload(a + c) & 0xff) - (payload(b + c) & 0xff))
+                c += 1
               }
-              k += 1
             }
-            out += Row(frameIx, n.toLong, d)
+            k += 1
           }
-          prevRaster = raster; pw = fw; ph = fh
-          frameIx += 1
-        case _ => return null
+          Seq(Row(f.ix, raster.length.toLong, d))
+        }
+        prev = f; prevRaster = raster
+        row
       }
     }
-    out.toSeq
+    if (diffs == null) null else diffs.flatten
   }
 
   /** DataFrame form of [[sceneDiffs]]: adds a `scenes` column (array of
-    * [[SceneDiffSchema]], null for corrupt payloads). Narrow
-    * mapPartitions; per-row memory is two frames, output is a few bytes
-    * per frame pair. */
-  def sceneDiffFrames(df: DataFrame, payloadCol: String,
-      batchSize: Int = 64): DataFrame = {
-    val outSchema = df.schema.add(StructField("scenes",
-      ArrayType(SceneDiffSchema, containsNull = false), nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val scenes = sceneDiffs(row.getAs[Array[Byte]](payloadIdx))
-          Row.fromSeq(row.toSeq :+ scenes)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+    * [[SceneDiffSchema]], null for corrupt payloads). Per-row memory is
+    * two frames, output is a few bytes per frame pair. */
+  def sceneDiffFrames(df: DataFrame, payloadCol: String): DataFrame =
+    withPayloadColumn(df, payloadCol, StructField("scenes",
+      ArrayType(SceneDiffSchema, containsNull = false), nullable = true))(
+      sceneDiffs)
 
   /** Deterministic scene-cut fixture: `5 + id%3` frames; within a scene
     * the pixel index drifts by +5 per frame, and at frame `cut = 2 +
@@ -1777,52 +1617,30 @@ object Multimodal {
   }
 
   /** DataFrame form of [[sampleGifFrames]]: adds a `frames` column
-    * (array of [[FrameSchema]], null for corrupt/non-GIF payloads). One
-    * narrow mapPartitions, no shuffle — payloads never leave the
-    * partition; only the per-frame stats (a few hundred bytes regardless
-    * of resolution) do, which is what makes every-Nth-frame feature
-    * extraction viable on a 100 TB video corpus. */
-  def frameSample(df: DataFrame, payloadCol: String, every: Int,
-      batchSize: Int = 64): DataFrame = {
-    val outSchema = df.schema.add(StructField("frames",
-      ArrayType(FrameSchema, containsNull = false), nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val frames = sampleGifFrames(row.getAs[Array[Byte]](payloadIdx), every)
-          Row.fromSeq(row.toSeq :+ frames)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+    * (array of [[FrameSchema]], null for corrupt/non-GIF payloads). No
+    * shuffle — payloads never leave the partition; only the per-frame
+    * stats (a few hundred bytes regardless of resolution) do, which is
+    * what makes every-Nth-frame feature extraction viable on a 100 TB
+    * video corpus. */
+  def frameSample(df: DataFrame, payloadCol: String, every: Int): DataFrame =
+    withPayloadColumn(df, payloadCol, StructField("frames",
+      ArrayType(FrameSchema, containsNull = false), nullable = true))(
+      sampleGifFrames(_, every))
 
   /** Decode a raster payload column into a `px` stats struct column (see
-    * [[PixelSchema]]): one narrow mapPartitions, no shuffle — the same
-    * batched per-partition shape as [[decode]], running the FULL pixel
-    * path (PNG: inflate + unfilter; JPEG: baseline Huffman + IDCT, see
-    * [[Jpeg]]; GIF: LZW + palette). Unsupported / corrupt payloads yield
-    * a null struct. */
-  def decodePixels(df: DataFrame, payloadCol: String,
-      batchSize: Int = 64): DataFrame = {
-    val outSchema = df.schema.add(StructField("px", PixelSchema, nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val payload = row.getAs[Array[Byte]](payloadIdx)
-          val px =
-            if (payload != null && payload.length >= 8 &&
-                payload.startsWith(PngSignature)) decodePngPixels(payload)
-            else if (payload != null && payload.length >= 4 &&
-                (payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8)
-              Jpeg.decodePixels(payload)
-            else decodeGifPixels(payload)
-          Row.fromSeq(row.toSeq :+ px)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+    * [[PixelSchema]]), running the FULL pixel path (PNG: inflate +
+    * unfilter; JPEG: baseline Huffman + IDCT, see [[Jpeg]]; GIF: LZW +
+    * palette). Unsupported / corrupt payloads yield a null struct. */
+  def decodePixels(df: DataFrame, payloadCol: String): DataFrame =
+    withPayloadColumn(df, payloadCol,
+      StructField("px", PixelSchema, nullable = true)) { payload =>
+      if (payload != null && payload.length >= 8 &&
+          payload.startsWith(PngSignature)) decodePngPixels(payload)
+      else if (payload != null && payload.length >= 4 &&
+          (payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8)
+        Jpeg.decodePixels(payload)
+      else decodeGifPixels(payload)
+    }
 
   /** ViT-style patch embedding prep: decode each PNG payload and reduce
     * every FULL `patch`×`patch` tile of the fixed grid (partial edge tiles
@@ -1837,47 +1655,40 @@ object Multimodal {
     * unfilter + one O(pixels) accumulation pass, and the emitted patch
     * vectors are (pixels / patch²)-fold SMALLER than the raster — the
     * image never leaves the partition, only the reduced features do. */
-  def patchMeans(df: DataFrame, payloadCol: String, patch: Int,
-      batchSize: Int = 64): DataFrame = {
+  def patchMeans(df: DataFrame, payloadCol: String, patch: Int): DataFrame = {
     require(patch >= 1, "patch must be >= 1")
-    val outSchema = df.schema.add(StructField("patches",
-      ArrayType(PatchSchema, containsNull = false), nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
     def round6(v: Double): Double =
       java.math.BigDecimal.valueOf(v + 0.0)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val raster = decodePngRaster(row.getAs[Array[Byte]](payloadIdx))
-          val patches = if (raster == null) null else {
-            val nx = raster.w / patch
-            val ny = raster.h / patch
-            val area = (patch * patch).toDouble
-            (0 until ny).flatMap { py =>
-              (0 until nx).map { px =>
-                val sums = new Array[Long](raster.channels)
-                var dy = 0
-                while (dy < patch) {
-                  var dx = 0
-                  while (dx < patch) {
-                    var c = 0
-                    while (c < raster.channels) {
-                      sums(c) += raster.pixel(px * patch + dx, py * patch + dy, c)
-                      c += 1
-                    }
-                    dx += 1
-                  }
-                  dy += 1
+    withPayloadColumn(df, payloadCol, StructField("patches",
+        ArrayType(PatchSchema, containsNull = false), nullable = true)) {
+      payload =>
+      val raster = decodePngRaster(payload)
+      if (raster == null) null else {
+        val nx = raster.w / patch
+        val ny = raster.h / patch
+        val area = (patch * patch).toDouble
+        (0 until ny).flatMap { py =>
+          (0 until nx).map { px =>
+            val sums = new Array[Long](raster.channels)
+            var dy = 0
+            while (dy < patch) {
+              var dx = 0
+              while (dx < patch) {
+                var c = 0
+                while (c < raster.channels) {
+                  sums(c) += raster.pixel(px * patch + dx, py * patch + dy, c)
+                  c += 1
                 }
-                Row(py, px, sums.map(s => round6(s / area)).toSeq)
+                dx += 1
               }
+              dy += 1
             }
+            Row(py, px, sums.map(s => round6(s / area)).toSeq)
           }
-          Row.fromSeq(row.toSeq :+ patches)
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Decoded 16-bit PCM audio: format parameters plus the raw interleaved
@@ -2067,38 +1878,32 @@ object Multimodal {
     * corrupt payloads. One narrow mapPartitions, no shuffle: audio never
     * leaves the partition, only features ~frameSamples-fold smaller do. */
   def audioFrameFeatures(df: DataFrame, payloadCol: String,
-      frameSamples: Int, batchSize: Int = 64): DataFrame = {
+      frameSamples: Int): DataFrame = {
     require(frameSamples >= 2, s"frameSamples must be >= 2, got $frameSamples")
-    val outSchema = df.schema.add(StructField("aframes",
-      ArrayType(AudioFrameSchema, containsNull = false), nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val pcm = decodeWavPcm(row.getAs[Array[Byte]](payloadIdx))
-          val frames = if (pcm == null) null else {
-            val stride = pcm.channels // channel 0 of the interleave
-            val n = pcm.samples.length / stride
-            (0 until (n + frameSamples - 1) / frameSamples).map { f =>
-              val lo = f * frameSamples
-              val hi = math.min(lo + frameSamples, n)
-              var sumSq = 0L; var zc = 0; var maxAbs = 0
-              var i = lo
-              while (i < hi) {
-                val v = pcm.samples(i * stride).toInt
-                sumSq += v.toLong * v
-                val a = math.abs(v)
-                if (a > maxAbs) maxAbs = a
-                if (i > lo && pcm.samples((i - 1) * stride).toInt * v < 0) zc += 1
-                i += 1
-              }
-              Row(f, hi - lo, sumSq, zc, maxAbs)
-            }
+    withPayloadColumn(df, payloadCol, StructField("aframes",
+        ArrayType(AudioFrameSchema, containsNull = false), nullable = true)) {
+      payload =>
+      val pcm = decodeWavPcm(payload)
+      if (pcm == null) null else {
+        val stride = pcm.channels // channel 0 of the interleave
+        val n = pcm.samples.length / stride
+        (0 until (n + frameSamples - 1) / frameSamples).map { f =>
+          val lo = f * frameSamples
+          val hi = math.min(lo + frameSamples, n)
+          var sumSq = 0L; var zc = 0; var maxAbs = 0
+          var i = lo
+          while (i < hi) {
+            val v = pcm.samples(i * stride).toInt
+            sumSq += v.toLong * v
+            val a = math.abs(v)
+            if (a > maxAbs) maxAbs = a
+            if (i > lo && pcm.samples((i - 1) * stride).toInt * v < 0) zc += 1
+            i += 1
           }
-          Row.fromSeq(row.toSeq :+ frames)
+          Row(f, hi - lo, sumSq, zc, maxAbs)
         }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Image RESIZE: box-filter downscale of each PNG payload by an integer
@@ -2109,39 +1914,31 @@ object Multimodal {
     * narrow mapPartitions, decode → reduce → encode per row, output
     * payloads factor²-fold smaller; null for corrupt payloads or images
     * smaller than one tile. */
-  def resizePng(df: DataFrame, payloadCol: String, factor: Int,
-      batchSize: Int = 64): DataFrame = {
+  def resizePng(df: DataFrame, payloadCol: String, factor: Int): DataFrame = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val outSchema = df.schema.add(
-      StructField("resized", BinaryType, nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
     val area = factor * factor
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val raster = decodePngRaster(row.getAs[Array[Byte]](payloadIdx))
-          val out: Array[Byte] = if (raster == null) null else {
-            val ow = raster.w / factor
-            val oh = raster.h / factor
-            if (ow == 0 || oh == 0) null
-            else encodePng(ow, oh, raster.channels, (x, y, c) => {
-              var s = 0
-              var dy = 0
-              while (dy < factor) {
-                var dx = 0
-                while (dx < factor) {
-                  s += raster.pixel(x * factor + dx, y * factor + dy, c)
-                  dx += 1
-                }
-                dy += 1
-              }
-              s / area
-            })
+    withPayloadColumn(df, payloadCol,
+        StructField("resized", BinaryType, nullable = true)) { payload =>
+      val raster = decodePngRaster(payload)
+      if (raster == null) null else {
+        val ow = raster.w / factor
+        val oh = raster.h / factor
+        if (ow == 0 || oh == 0) null
+        else encodePng(ow, oh, raster.channels, (x, y, c) => {
+          var s = 0
+          var dy = 0
+          while (dy < factor) {
+            var dx = 0
+            while (dx < factor) {
+              s += raster.pixel(x * factor + dx, y * factor + dy, c)
+              dx += 1
+            }
+            dy += 1
           }
-          Row.fromSeq(row.toSeq :+ out)
-        }
+          s / area
+        })
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Audio RESAMPLE: integer-factor decimation of each WAV payload's
@@ -2150,47 +1947,27 @@ object Multimodal {
     * per-row FIR this same loop would host), re-encoded as a real mono
     * WAV at sampleRate/factor into a `resampled` binary column. Null for
     * non-PCM / corrupt payloads. */
-  def resampleWav(df: DataFrame, payloadCol: String, factor: Int,
-      batchSize: Int = 64): DataFrame = {
+  def resampleWav(df: DataFrame, payloadCol: String, factor: Int): DataFrame = {
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val outSchema = df.schema.add(
-      StructField("resampled", BinaryType, nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val pcm = decodeWavPcm(row.getAs[Array[Byte]](payloadIdx))
-          val out: Array[Byte] =
-            if (pcm == null || pcm.sampleRate / factor == 0) null
-            else {
-              val stride = pcm.channels
-              val n = pcm.samples.length / stride
-              val kept = Array.tabulate((n + factor - 1) / factor)(i =>
-                pcm.samples(i * factor * stride))
-              encodeWav(pcm.sampleRate / factor, 1, kept)
-            }
-          Row.fromSeq(row.toSeq :+ out)
-        }
+    withPayloadColumn(df, payloadCol,
+        StructField("resampled", BinaryType, nullable = true)) { payload =>
+      val pcm = decodeWavPcm(payload)
+      if (pcm == null || pcm.sampleRate / factor == 0) null
+      else {
+        val stride = pcm.channels
+        val n = pcm.samples.length / stride
+        val kept = Array.tabulate((n + factor - 1) / factor)(i =>
+          pcm.samples(i * factor * stride))
+        encodeWav(pcm.sampleRate / factor, 1, kept)
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
-  /** Decode a binary payload column into a `meta` struct column, iterating
-    * each partition in batches of `batchSize` rows (the batch is where a
-    * full pixel codec would amortize setup / exploit vectorized decode).
-    * Runs as one narrow mapPartitions — no shuffle, scales with the scan. */
-  def decode(df: DataFrame, payloadCol: String, batchSize: Int = 64): DataFrame = {
-    val outSchema = df.schema.add(StructField("meta", MetaSchema, nullable = true))
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // batch boundary: a pixel codec would submit `batch` as one call
-        batch.map { row =>
-          val payload = row.getAs[Array[Byte]](payloadIdx)
-          val meta = if (payload == null) null else decodeMeta(payload)
-          Row.fromSeq(row.toSeq :+ meta)
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+  /** Decode a binary payload column into a `meta` struct column (null
+    * for a null payload) — no shuffle, scales with the scan. */
+  def decode(df: DataFrame, payloadCol: String): DataFrame =
+    withPayloadColumn(df, payloadCol,
+      StructField("meta", MetaSchema, nullable = true)) { payload =>
+      if (payload == null) null else decodeMeta(payload)
+    }
 }

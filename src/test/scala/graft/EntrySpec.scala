@@ -87,16 +87,11 @@ class EntrySpec extends GraftSuite {
       s"bare read.parquet of a centroid table: ${offenders.mkString(", ")}")
   }
 
-  test("source lint: each near-dup band formulation is written once under graft.llm and graft.streaming") {
-    // MinHash banding (Dedup.bandRows), the perceptual band explode
-    // (Multimodal.hashBands) and the popcount verify (Multimodal.hamming)
-    // each have one builder that the batch joins and the streaming gates
-    // share; a second copy is a fork that can drift from the oracles the
-    // first one replays.
-    val texts = Seq("src/main/scala/graft/llm", "src/main/scala/graft/streaming")
-      .flatMap(sources)
-    for (formulation <- Seq("bit_count(x ^ y)", "minhash_sig_words(",
-        "posexplode(col(\"dhash\"))")) {
+  /** Fails when any of `formulations` occurs more than once, summed
+    * over the files under `roots`. */
+  private def assertWrittenOnce(roots: Seq[String], formulations: Seq[String]): Unit = {
+    val texts = roots.flatMap(sources)
+    for (formulation <- formulations) {
       val quoted = java.util.regex.Pattern.quote(formulation).r
       val hits = texts.map { case (path, text) =>
         (path, quoted.findAllMatchIn(text).size)
@@ -104,6 +99,29 @@ class EntrySpec extends GraftSuite {
       assert(hits.map(_._2).sum <= 1,
         s"$formulation written ${hits.map(_._2).sum} times: ${hits.mkString(", ")}")
     }
+  }
+
+  test("source lint: each near-dup band formulation is written once under graft.llm and graft.streaming") {
+    // MinHash banding (Dedup.bandRows), the perceptual band explode
+    // (Multimodal.hashBands) and the popcount verify (Multimodal.hamming)
+    // each have one builder that the batch joins and the streaming gates
+    // share; a second copy is a fork that can drift from the oracles the
+    // first one replays.
+    assertWrittenOnce(
+      Seq("src/main/scala/graft/llm", "src/main/scala/graft/streaming"),
+      Seq("bit_count(x ^ y)", "minhash_sig_words(", "posexplode(col(\"dhash\"))"))
+  }
+
+  test("source lint: the media decoders write their GIF block walk, LZW decoder and spectral DFT once") {
+    // Every GIF consumer reads its frames through Multimodal.walkGif and
+    // gifRaster, and both spectral hashes run Multimodal.spectralBits; a
+    // second walk or decoder is a fork whose bounds checks can drift.
+    // The payload ops map rows one at a time, so batching by a size
+    // that no codec consumes is refused outright.
+    assertWrittenOnce(Seq("src/main/scala/graft/llm"),
+      Seq("case 0x2c =>", "val clear = 1 << minCode", "SpectralCos(b)"))
+    val batched = sourcesWhere("src/main")(_.contains("grouped(batchSize)"))
+    assert(batched.isEmpty, s"grouped(batchSize) in ${batched.mkString(", ")}")
   }
 
   test("plan lint: no cartesian product in any query's physical plan") {

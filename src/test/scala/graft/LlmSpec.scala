@@ -1967,7 +1967,7 @@ class LlmSpec extends GraftSuite {
     val s = spark
     import s.implicits._
     val d = Seq((1L, png), (2L, jpeg)).toDF("id", "payload")
-    val out = Multimodal.decode(d, "payload", batchSize = 1)
+    val out = Multimodal.decode(d, "payload")
       .select(sc("id"), sc("meta.format"), sc("meta.width"))
       .orderBy(sc("id")).collect()
     assert(out(0).getString(1) === "png" && out(0).getInt(2) === 389)
@@ -2013,7 +2013,7 @@ class LlmSpec extends GraftSuite {
     val s = spark
     import s.implicits._
     val d = Seq((3L, good), (4L, "junk".getBytes("UTF-8"))).toDF("id", "payload")
-    val out = Multimodal.decodePixels(d, "payload", batchSize = 1)
+    val out = Multimodal.decodePixels(d, "payload")
       .select(sc("id"), sc("px")).orderBy(sc("id")).collect()
     assert(!out(0).isNullAt(1) && out(1).isNullAt(1))
   }
@@ -2147,6 +2147,61 @@ class LlmSpec extends GraftSuite {
     val sf = Multimodal.sampleGifFrames(single, 1)
     val sp = Multimodal.decodeGifPixels(single)
     assert(sf.size === 1 && sf.head.getSeq[Long](4) === sp.getSeq[Long](4))
+  }
+
+  test("multimodal GIF: indices past a short global table, or a frame larger than its data, decode to null") {
+    // the encoder's 256-entry ramp cut to a 2-entry global table
+    // (packed & 7 = 0): every decoded index >= 2 names no palette entry
+    def cutTable(gif: Array[Byte]): Array[Byte] = {
+      val out = gif.take(13 + 6) ++ gif.drop(13 + 768)
+      out(10) = (out(10) & 0xf8).toByte
+      out
+    }
+    def ramp(f: Int, x: Int, y: Int): Int = (7 * x + 13 * y + 29 * f) % 256
+    // the fixtures are small, so a lookup past the table runs off the
+    // payload; the 40×40 clips are large enough that it lands on LZW
+    // data instead and would make up colors
+    val gifs = Seq(Multimodal.gifFixture(3L), Multimodal.gifAnimFixture(3L),
+      Multimodal.gifSceneFixture(3L), Multimodal.encodeGif(40, 40, ramp(0, _, _)),
+      Multimodal.encodeAnimatedGif(40, 40, 3, ramp))
+    assert(cutTable(gifs(3)).length > 13 + 3 * 256)
+    def hashes(p: Array[Byte]) = Option(Multimodal.videoFrameDhashes(p, 1))
+      .map(_.map { case (f, h) => (f, h.toSeq) })
+    for ((gif, k) <- gifs.zipWithIndex) {
+      val p = cutTable(gif)
+      assert(Multimodal.decodeGifPixels(p) === null, s"gif $k")
+      assert(Multimodal.sampleGifFrames(p, 1) === null, s"gif $k")
+      assert(Multimodal.sampleGifFrames(p, 2) === null, s"gif $k")
+      assert(Multimodal.sceneDiffs(p) === null, s"gif $k")
+      // the frame count and the index-plane hash read no palette
+      assert(Multimodal.decodeMeta(p).getInt(3) ===
+        Multimodal.decodeMeta(gif).getInt(3), s"gif $k")
+      assert(hashes(p) === hashes(gif), s"gif $k")
+    }
+    // a descriptor claiming 40000×50000 pixels over a few hundred bytes
+    // of data: the raster grows only with what the stream emits
+    val huge = Multimodal.gifFixture(3L).clone()
+    val at = 13 + 768 // the image descriptor
+    assert(huge(at) === 0x2c.toByte)
+    huge(at + 5) = 0x40; huge(at + 6) = 0x9c.toByte // 40000
+    huge(at + 7) = 0x50; huge(at + 8) = 0xc3.toByte // 50000
+    assert(Multimodal.decodeMeta(huge).getInt(3) === 1)
+    assert(Multimodal.decodeGifPixels(huge) === null)
+    assert(Multimodal.sampleGifFrames(huge, 1) === null)
+    assert(Multimodal.videoFrameDhashes(huge, 1) === null)
+    assert(Multimodal.sceneDiffs(huge) === null)
+    // indices inside the short table still map through it
+    val twoColor = cutTable(Multimodal.encodeGif(6, 5, (x, y) => (x + y) % 2))
+    val px = Multimodal.decodeGifPixels(twoColor)
+    assert(px != null && px.getSeq[Long](4) === Seq(15L, 30L, 45L) &&
+      px.getSeq[Long](5) === Seq(0L, 0L, 0L) && px.getSeq[Long](6) === Seq(1L, 2L, 3L))
+    // the DataFrame decode yields a null struct for the row, not a failed task
+    val s = spark
+    import s.implicits._
+    val d = Seq((1L, cutTable(gifs(3))), (2L, gifs(3))).toDF("id", "payload")
+    val out = Multimodal.decodePixels(d, "payload")
+      .select(sc("id"), sc("px")).orderBy(sc("id")).collect()
+    assert(out(0).isNullAt(1) && !out(1).isNullAt(1))
   }
 
   test("multimodal resize: box downscale re-encodes a real PNG with exact tile means") {
@@ -4140,7 +4195,35 @@ class LlmSpec extends GraftSuite {
       "the cold serve resolves the rotation's and codebooks' schemas once each")
     val (warm, warmIds) = withJobIds(serve())
     assert(schemaReads(warmIds).isEmpty, "a warm serve re-read a model table's schema")
+    // the pinned rotation and codebooks are collected once each, and the
+    // codebook shape check is one collect: the cold serve cached the
+    // pinned codebooks, so the warm frame's rows are read from that cache
+    // (a groupBy over them ran 3 jobs)
+    assert(warmIds.length === 3,
+      s"warm serve stages: ${warmIds.flatMap(tracker.getJobInfo(_))
+        .flatMap(_.stageIds.toSeq).flatMap(tracker.getStageInfo(_)).map(_.name)}")
     assert(warm.collect().toSeq === cold.collect().toSeq)
+    graft.llm.CacheScope.global.release()
+  }
+
+  test("PQ serves refuse codebooks of the wrong segment count or entry dim") {
+    val s = spark
+    import s.implicits._
+    val emb = (0L until 12L).map(i =>
+      (i, Array.tabulate(4)(d => ((i * 7 + d * 3) % 11).toFloat - 5f)))
+      .toDF("vec_id", "embedding")
+    val cb = Embeddings.pqCodebooks(emb, "vec_id", "embedding",
+      dim = 4, m = 2, initPred = sc("vec_id") < 3L, iters = 1)
+    def serve(codebooks: org.apache.spark.sql.DataFrame, dim: Int, m: Int) =
+      Embeddings.pqTopK(emb, "vec_id", "embedding", codebooks, dim, m,
+        queryId = 0L, k = 3)
+    assert(serve(cb, 4, 2).collect().length === 3)
+    val wrongM = intercept[IllegalArgumentException](serve(cb, 4, 1))
+    assert(wrongM.getMessage.contains("codebooks cover segments 0,1; expected 0..0"),
+      wrongM.getMessage)
+    val wrongDim = intercept[IllegalArgumentException](serve(cb, 6, 2))
+    assert(wrongDim.getMessage.contains(
+      "codebook segment 0 has 2-dim entries; expected 3"), wrongDim.getMessage)
     graft.llm.CacheScope.global.release()
   }
 

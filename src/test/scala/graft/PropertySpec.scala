@@ -845,6 +845,68 @@ class PropertySpec extends GraftSuite {
     }, cases = 30)
   }
 
+  test("GIF decoders: every prefix and block-byte flip of the fixtures decodes as recorded") {
+    // Pins the GIF container walk of every consumer (decodeMeta,
+    // decodeGifPixels, sampleGifFrames, videoFrameDhashes, sceneDiffs)
+    // on truncations at every length and on single-byte flips at each
+    // block introducer, descriptor packed byte, LZW min-code byte and
+    // sub-block length byte: no call may throw, and the rendered
+    // outputs hash to the digest recorded before the walks were merged.
+    // The header's table-size byte is left out (LlmSpec's cut-palette
+    // cases cover a short global table).
+    import graft.llm.Multimodal._
+    /** Offsets of the bytes to flip, from the encoder's block layout. */
+    def blockBytes(gif: Array[Byte]): Seq[Int] = {
+      def u8(i: Int): Int = gif(i) & 0xff
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      def chain(start: Int): Int = {
+        var i = start
+        while (u8(i) != 0) { out += i; i += 1 + u8(i) }
+        out += i
+        i + 1
+      }
+      var i = 13 + 768
+      while (u8(i) != 0x3b) {
+        out += i
+        if (u8(i) == 0x21) i = chain(i + 2)
+        else { out += i + 9; out += i + 10; i = chain(i + 11) }
+      }
+      out += i
+      out.toSeq
+    }
+    def render(v: Any): String = v match {
+      case null => "null"
+      case r: org.apache.spark.sql.Row => r.toSeq.map(render).mkString("(", ",", ")")
+      case s: Seq[_] => s.map(render).mkString("[", ",", "]")
+      case a: Array[_] => a.toSeq.map(render).mkString("[", ",", "]")
+      case (f, h) => s"${render(f)}:${render(h)}"
+      case l: Long => s"${l}L"
+      case x => x.toString
+    }
+    def outputs(p: Array[Byte]): String =
+      Seq(decodeMeta(p), decodeGifPixels(p), sampleGifFrames(p, 1),
+        sampleGifFrames(p, 2), videoFrameDhashes(p, 1),
+        videoFrameDhashes(p, 2), sceneDiffs(p)).map(render).mkString(";")
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    var cases = 0
+    for (id <- 1L to 3L;
+         gif <- Seq(gifFixture(id), gifAnimFixture(id), gifSceneFixture(id))) {
+      val truncated = (0 to gif.length).map(n => gif.take(n))
+      val flipped = for (at <- blockBytes(gif);
+                         mask <- Seq(0x01, 0x0a, 0x0c, 0x80, 0xff)) yield {
+        val p = gif.clone(); p(at) = (p(at) ^ mask).toByte; p
+      }
+      for (p <- truncated ++ flipped) {
+        sha.update(outputs(p).getBytes("UTF-8")); sha.update('\n'.toByte)
+        cases += 1
+      }
+    }
+    val digest = sha.digest().map("%02x".format(_)).mkString
+    assert(digest ===
+      "9c627947aa6fd2af42aa6f7dccff283980b23603ef41e886d4b982d8adad00f6",
+      s"$cases cases")
+  }
+
   test("property: WAV encode/decode round-trips arbitrary 16-bit PCM, honest under truncation") {
     val gen = for {
       sr <- Gen.choose(8000, 48000); ch <- Gen.choose(1, 3)
