@@ -114,7 +114,7 @@ object RecallCheck {
     val cbPq = Embeddings.pqCodebooks(emb, "vec_id", "embedding",
       dim = 64, m = 8, initPred = col("vec_id") < 64, iters = 2, scope = scope)
     val rotFit = Embeddings.opqPairRotationFit(emb, "vec_id", "embedding",
-      dim = 64, scope = scope)
+      dim = 64)
     val rotated = scope.cache(Embeddings.opqRotateFrame(emb, "vec_id",
       "embedding", rotFit, dim = 64))
     val cbOpq = Embeddings.pqCodebooks(rotated, "vec_id", "embedding",
@@ -122,10 +122,10 @@ object RecallCheck {
     val rows = Seq(
       ("pq prod knobs (m=8, 64 cents)", recallOf(
         perQuery(q => Embeddings.pqTopK(emb, "vec_id", "embedding", cbPq,
-          dim = 64, m = 8, queryId = q, k = k, scope = scope)))),
+          dim = 64, m = 8, queryId = q, k = k)))),
       ("OPQ pair-rot + pq (m=8, 64 cents)", recallOf(
         perQuery(q => Embeddings.pqTopK(rotated, "vec_id", "embedding",
-          cbOpq, dim = 64, m = 8, queryId = q, k = k, scope = scope)))))
+          cbOpq, dim = 64, m = 8, queryId = q, k = k)))))
     println(s"\nrecall@$k over planted CORRELATED halves (y ≈ 0.8x + noise, $n vectors, ${perQueryIds.length} queries)\n")
     println(s"| op (knobs) | recall@$k |")
     println("|---|---|")
@@ -211,14 +211,14 @@ object RecallCheck {
     // correlated table below shows the near-duplicate geometry where the
     // rotation wins outright.
     val opqRot = Embeddings.opqPairRotationFit(emb, "vec_id", "embedding",
-      dim = 64, scope = scope)
+      dim = 64)
     val opqRotated = scope.cache(Embeddings.opqRotateFrame(emb, "vec_id",
       "embedding", opqRot, dim = 64))
     val cbOpqProd = Embeddings.pqCodebooks(opqRotated, "vec_id", "embedding",
       dim = 64, m = 8, initPred = col("vec_id") < 64, iters = 2,
       scope = scope)
     val opqRotU = Embeddings.opqPairRotationFit(emb, "vec_id", "embedding",
-      dim = 64, minAbsRho = 0.0, scope = scope)
+      dim = 64, minAbsRho = 0.0)
     val opqRotatedU = scope.cache(Embeddings.opqRotateFrame(emb, "vec_id",
       "embedding", opqRotU, dim = 64))
     val cbOpqProdU = Embeddings.pqCodebooks(opqRotatedU, "vec_id",
@@ -303,19 +303,19 @@ object RecallCheck {
           queryPred, k = k, nprobe = 8, scope = scope), queryIds)),
       ("pq oracle knobs (m=2, 4 cents)", perQueryIds.length, recallOf(
         perQuery(q => Embeddings.pqTopK(emb, "vec_id", "embedding", cbTiny,
-          dim = 64, m = 2, queryId = q, k = k, scope = scope)), perQueryIds)),
+          dim = 64, m = 2, queryId = q, k = k)), perQueryIds)),
       ("pq prod knobs (m=8, 64 cents)", perQueryIds.length, recallOf(
         perQuery(q => Embeddings.pqTopK(emb, "vec_id", "embedding", cbProd,
-          dim = 64, m = 8, queryId = q, k = k, scope = scope)), perQueryIds)),
+          dim = 64, m = 8, queryId = q, k = k)), perQueryIds)),
       ("OPQ pair-rot gated 0.85 + pq prod knobs (m=8, 64 cents)",
         perQueryIds.length,
         recallOf(perQuery(q => Embeddings.pqTopK(opqRotated, "vec_id",
-          "embedding", cbOpqProd, dim = 64, m = 8, queryId = q, k = k,
-          scope = scope)), perQueryIds)),
+          "embedding", cbOpqProd, dim = 64, m = 8, queryId = q, k = k)),
+        perQueryIds)),
       ("OPQ pair-rot UNGATED (minRho=0) + pq prod knobs", perQueryIds.length,
         recallOf(perQuery(q => Embeddings.pqTopK(opqRotatedU, "vec_id",
-          "embedding", cbOpqProdU, dim = 64, m = 8, queryId = q, k = k,
-          scope = scope)), perQueryIds)),
+          "embedding", cbOpqProdU, dim = 64, m = 8, queryId = q, k = k)),
+        perQueryIds)),
       (s"ivfpq prod (k=$kCells, m=8, nprobe=1)", perQueryIds.length, recallOf(
         perQuery(q => Embeddings.ivfPqTopK(emb, "vec_id", "embedding",
           cents, cbProd, dim = 64, m = 8, queryId = q, k = k, scope = scope)),
@@ -323,22 +323,18 @@ object RecallCheck {
       ("pq prod SAMPLED-fit 25% (m=8, 64 cents, iters=8)",
         perQueryIds.length, recallOf(
         perQuery(q => Embeddings.pqTopK(emb, "vec_id", "embedding",
-          cbProdSampled, dim = 64, m = 8, queryId = q, k = k,
-          scope = scope)), perQueryIds)),
+          cbProdSampled, dim = 64, m = 8, queryId = q, k = k)), perQueryIds)),
       ("pq prod SAMPLED-fit 50% (m=8, 64 cents, iters=8)",
         perQueryIds.length, recallOf(
         perQuery(q => Embeddings.pqTopK(emb, "vec_id", "embedding",
-          cbProdSampled50, dim = 64, m = 8, queryId = q, k = k,
-          scope = scope)), perQueryIds)),
+          cbProdSampled50, dim = 64, m = 8, queryId = q, k = k)), perQueryIds)),
       ("pq full (m=8, 16 cents)", perQueryIds.length, recallOf(
         perQuery(q => Embeddings.pqTopK(emb, "vec_id", "embedding",
-          cb16, dim = 64, m = 8, queryId = q, k = k,
-          scope = scope)), perQueryIds)),
+          cb16, dim = 64, m = 8, queryId = q, k = k)), perQueryIds)),
       ("pq SAMPLED-fit 25% (m=8, 16 cents, iters=8)",
         perQueryIds.length, recallOf(
         perQuery(q => Embeddings.pqTopK(emb, "vec_id", "embedding",
-          cb16Sampled, dim = 64, m = 8, queryId = q, k = k,
-          scope = scope)), perQueryIds)),
+          cb16Sampled, dim = 64, m = 8, queryId = q, k = k)), perQueryIds)),
       (s"ivfpq SAMPLED-fit 25% end-to-end (k=$kCells, m=8)",
         perQueryIds.length, recallOf(
         perQuery(q => Embeddings.ivfPqTopK(emb, "vec_id", "embedding",

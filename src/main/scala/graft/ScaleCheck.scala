@@ -241,7 +241,7 @@ object ScaleCheck {
         maxCell = 4000)
       // the final version dir's postings serve as plain parquet (the
       // wall compares candidate bytes, not bucketing)
-      val postPostings = spark.read.parquet(s"$post/postings")
+      val postPostings = graft.sources.ParquetIO.read(spark, s"$post/postings")
       val postWall = minOf3(() =>
         Embeddings.ivfTopKIndexed(queries, "vec_id", "embedding", post,
           postPostings, k = 10, pushCells = false).count())

@@ -1,6 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import scala.util.chaining._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
@@ -368,6 +371,15 @@ object Embeddings {
       .join(one.withColumn("__one__", lit(1)), Seq("__one__"))
       .drop("__one__")
 
+  /** Pin a model-parameter-sized frame (centroids, codebooks, a
+    * rotation) driver-side: one collect, `check` over the collected
+    * rows, and those same rows as a LocalRelation. A pinned frame is a
+    * provably literal broadcast side and re-reads nothing; it is never
+    * `scope.cache`d — caching it would build an InMemoryRelation of rows
+    * the driver already holds, and each later collect of it a job. */
+  private def pin(df: DataFrame, check: Array[Row] => Unit = _ => ()): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().tap(check).toSeq.asJava, df.schema)
+
   /** The IVF probe front-end every serve shares, batch and streaming:
     * `queries` (idCol, vecCol) become (query_id, __q__, __qn__,
     * __qcell__), one row per probed cell. The centroids fold once into
@@ -536,7 +548,7 @@ object Embeddings {
       scope: CacheScope = CacheScope.global,
       sampleCap: Option[Long] = None): Unit = {
     graft.GraftExtensions.install(spark)
-    val postings = spark.read.parquet(s"$srcDir/postings")
+    val postings = graft.sources.ParquetIO.read(spark, s"$srcDir/postings")
     val attrs = postings.columns
       .filterNot(Set(idCol, vecCol, "__n__", "__cell__")).toSeq
     val emb = scope.cache(postings.drop("__n__", "__cell__"))
@@ -550,14 +562,21 @@ object Embeddings {
     val cents = sampleCap match {
       case None => kmeansFitSqrtK(emb, idCol, vecCol, iters, scope)
       case Some(cap) =>
-        require(cap >= 1, "sampleCap must be at least 1")
-        val n = math.max(1L, emb.count())
-        val k = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
-        val pct = math.min(100.0, cap.toDouble * 100.0 / n)
-        kmeansFitSampled(emb, idCol, vecCol,
-          math.min(k, Int.MaxValue.toLong).toInt, iters, pct, scope)
+        val (k, pct) = sqrtKSampleSizing(emb, cap)
+        kmeansFitSampled(emb, idCol, vecCol, k, iters, pct, scope)
     }
     ivfIndexSave(emb, idCol, vecCol, cents, dstTable, dstDir, buckets, attrs)
+  }
+
+  /** A sampled refit's sizing from ONE corpus count n: k = floor(√n)
+    * coarse cells (a corpus property, so the full count) and the
+    * hashSample percentage that keeps about `sampleCap` rows. */
+  private def sqrtKSampleSizing(emb: DataFrame, sampleCap: Long): (Int, Double) = {
+    require(sampleCap >= 1, "sampleCap must be at least 1")
+    val n = math.max(1L, emb.count())
+    val k = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
+    (math.min(k, Int.MaxValue.toLong).toInt,
+      math.min(100.0, sampleCap.toDouble * 100.0 / n))
   }
 
   /** Cell-population PROFILE of an IVF postings frame — the maintenance
@@ -610,7 +629,7 @@ object Embeddings {
       iters: Int = 2): Unit = {
     graft.GraftExtensions.install(spark)
     require(maxCell >= 2, "maxCell must be at least 2")
-    val postings = spark.read.parquet(s"$srcDir/postings")
+    val postings = graft.sources.ParquetIO.read(spark, s"$srcDir/postings")
     val centroids = storedCentroids(spark, srcDir)
     val idType = postings.schema(idCol).dataType
     require(IntegralTypes(idType),
@@ -653,10 +672,6 @@ object Embeddings {
           expr(s"vec_argmax_cell($vecCol, __n__, __subcents__)"))
         .drop("__subcents__", "__pc__")
     }
-    def pin(k: DataFrame): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(k.collect().toSeq.asJava, k.schema)
-    }
     // seeds: the two smallest member ids per hot cell via the k-bounded
     // topk_by aggregate (map-side combined — never a per-cell sort of
     // the skewed cell's full population), vectors joined back by id
@@ -678,9 +693,7 @@ object Embeddings {
         .select(col("__cell__").cast("long").as("__pc__"), col("__subc__"),
           posexplode(col(vecCol)).as(Seq("__d__", "__x__")))
         .groupBy(col("__pc__"), col("__subc__"), col("__d__"))
-        .agg(round(
-          sum(round(col("__x__").cast("double"), 6).cast("decimal(27,8)"))
-            .cast("double") / count(lit(1)), 6).as("__m__"))
+        .agg(exactMean("__x__").as("__m__"))
         .groupBy(col("__pc__"), col("__subc__"))
         .agg(expr(
           "transform(array_sort(collect_list(struct(__d__, __m__))), s -> s.__m__)")
@@ -733,7 +746,7 @@ object Embeddings {
     while (round < maxRounds && {
       // empty postings aggregate max() to NULL — treat as worst = 0 so
       // the loop exits immediately instead of NPE-ing on getLong
-      val row = spark.read.parquet(s"$cur/postings")
+      val row = graft.sources.ParquetIO.read(spark, s"$cur/postings")
         .groupBy(col("__cell__")).agg(count(lit(1)).as("__n__"))
         .agg(max(col("__n__"))).collect()(0)
       val worst = if (row.isNullAt(0)) 0L else row.getLong(0)
@@ -1009,23 +1022,114 @@ object Embeddings {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** The PQ codebooks folded into ONE broadcastable row: a map
-    * segment → array<struct<__cid__,__cv__,__cn__>> — the exact operand
-    * shape `vec_argmax_cell` takes, shared by the ingest-time encoder
-    * ([[ivfPqIndexSave]]) and the inline ADC scorer so train/serve
-    * assignment can never disagree. */
-  private def codebookCentArrays(
-      codebooks: DataFrame, l2: Boolean = false): DataFrame =
-    codebooks
+  /** Pin a PQ codebook frame (segment, cid, cv) driver-side: the one
+    * (m, dim) check, one collect, and the shape checks on the collected
+    * rows — m·k rows, model-parameter-sized. Training/serving m or dim
+    * drift fails loudly: a mismatched frame would otherwise score
+    * silently wrong, because the dot's left fold truncates to the
+    * shorter array. The same rows become the LocalRelation every PQ
+    * serve and encode reads. */
+  private def pinCodebooks(codebooks: DataFrame, m: Int, dim: Int): DataFrame = {
+    require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal segments")
+    val segLen = dim / m
+    pin(codebooks.select(col("segment").cast("int").as("segment"), col("cid"),
+      col("cv")), rows => {
+      val shape = rows
+        .filterNot(_.isNullAt(0)) // a null segment surfaces as "missing"
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map { case (s, segRows) =>
+          (s, segRows.filterNot(_.isNullAt(2)).map(_.getSeq[Any](2).size).distinct) }
+      require(shape.map(_._1) == (0 until m),
+        s"codebooks cover segments ${shape.map(_._1).mkString(",")}; expected 0..${m - 1} " +
+          "(was the frame trained with a different m?)")
+      shape.foreach { case (s, lens) =>
+        require(lens.sameElements(Seq(segLen)),
+          s"codebook segment $s has ${lens.minOption.getOrElse(-1)}-dim entries; expected $segLen " +
+            "(was the frame trained with a different dim or m?)")
+      }
+    })
+  }
+
+  /** The pinned codebooks folded into ONE broadcastable row of maps
+    * keyed by segment: `__cbs__` → array<struct<__cid__,__cv__,__cn__>>
+    * (the operand `vec_argmax_cell[_l2]` takes; L2 mode carries ‖cv‖² in
+    * `__cn__`), `__cn2s__` → (cid → ‖cv‖²) for the raw ADC denominator
+    * and `__cvm__` → (cid → cv), the code → entry lookup the residual
+    * encode reconstructs x̂ = c + r̂ from. Encode, inline
+    * ADC and the stored-code serve all read this one fold, so their
+    * assignments and partials cannot disagree. */
+  private def codebookRow(pinned: DataFrame, l2: Boolean): DataFrame = {
+    def bySegment(c: String, out: String): Column =
+      map_from_entries(collect_list(struct(col("__s__"), col(c)))).as(out)
+    val perSegment = pinned
       .select(col("segment").cast("int").as("__s__"),
         col("cid").as("__cid__"), col("cv").as("__cv__"),
-        // L2 mode: third field carries ‖cv‖² for vec_argmax_cell_l2
-        (if (l2) dot("cv", "cv") else sqrt(dot("cv", "cv"))).as("__cn__"))
+        (if (l2) dot("cv", "cv") else sqrt(dot("cv", "cv"))).as("__cn__"),
+        dot("cv", "cv").as("__cn2__"))
       .groupBy(col("__s__"))
       .agg(collect_list(struct(col("__cid__"), col("__cv__"), col("__cn__")))
-        .as("__cents__"))
-      .agg(map_from_entries(collect_list(struct(col("__s__"), col("__cents__"))))
-        .as("__cbs__"))
+        .as("__cents__"),
+        map_from_entries(collect_list(struct(col("__cid__"), col("__cn2__"))))
+          .as("__t__"),
+        map_from_entries(collect_list(struct(col("__cid__"), col("__cv__"))))
+          .as("__m__"))
+    // a consumer that never reads a map (the serve, `__cvm__`) has it
+    // pruned from the plan
+    perSegment.agg(bySegment("__cents__", "__cbs__"),
+      bySegment("__t__", "__cn2s__"), bySegment("__m__", "__cvm__"))
+  }
+
+  /** The one per-segment PQ encoder, over a frame carrying
+    * [[codebookRow]]'s `__cbs__`: segment s of `vecCol` is sliced, its
+    * norm taken, and `vec_argmax_cell` (`_l2` for residual codebooks —
+    * the metric they were fit with) picks its entry; the m entry ids
+    * land in `__codes__` in segment order. The index save and append
+    * store these codes and the inline ADC computes them for its
+    * candidates, so stored and inline codes are the same expression. */
+  private def pqCodes(df: DataFrame, vecCol: String, m: Int, segLen: Int,
+      l2: Boolean): DataFrame = {
+    val argmaxFn = if (l2) "vec_argmax_cell_l2" else "vec_argmax_cell"
+    (0 until m).foldLeft(df) { (d, s) =>
+      d.withColumn(s"__seg${s}__", slice(col(vecCol), s * segLen + 1, segLen))
+        .withColumn(s"__sn${s}__", sqrt(dot(s"__seg${s}__", s"__seg${s}__")))
+        .withColumn(s"__code${s}__",
+          expr(s"$argmaxFn(__seg${s}__, __sn${s}__, element_at(__cbs__, $s))"))
+    }
+      .withColumn("__codes__", array((0 until m).map(s => col(s"__code${s}__")): _*))
+      .drop((0 until m).flatMap(s =>
+        Seq(s"__seg${s}__", s"__sn${s}__", s"__code${s}__")): _*)
+  }
+
+  /** Per-query ADC lookup tables over a (tiny) query frame carrying
+    * `__q__` and `__cbs__`: `__tabs__` maps segment s → (cid →
+    * q_s·cv), m·k_codebook dot products per query row — model-
+    * parameter-sized, never the corpus. */
+  private def withTabs(queries: DataFrame, m: Int, segLen: Int): DataFrame =
+    queries.withColumn("__tabs__", expr(
+      s"""map_from_arrays(sequence(0, ${m - 1}),
+          transform(sequence(0, ${m - 1}), s ->
+            map_from_entries(transform(element_at(__cbs__, s), c ->
+              struct(c.__cid__,
+                float_vec_dot(slice(__q__, s * $segLen + 1, $segLen),
+                  c.__cv__))))))"""))
+
+  /** The one ADC score over `__codes__`: the m looked-up q·r̂ partials
+    * summed LEFT-TO-RIGHT in segment order (an in-expression fold, so
+    * the float order is fixed for any m and the oracle replays it).
+    * Raw codes score q·r̂ / (‖q‖·sqrt(Σ‖r̂_s‖²)) from `__cn2s__`;
+    * residual codes start the numerator from `__qc__` = q·c
+    * ((qc + qd0) + qd1 …) over the stored reconstructed norm `__xn__`.
+    * Rounded to 6 dp. */
+  private def adcScore(m: Int, residual: Boolean): Column = {
+    def code(s: Int) = s"element_at(__codes__, ${s + 1})"
+    val qd = (0 until m).map(s => expr(s"element_at(element_at(__tabs__, $s), ${code(s)})"))
+    if (residual)
+      round(qd.foldLeft(col("__qc__"))(_ + _) / (col("__qn__") * col("__xn__")), 6)
+    else {
+      val cn2 = (0 until m).map(s => expr(s"element_at(element_at(__cn2s__, $s), ${code(s)})"))
+      round(qd.reduce(_ + _) / (col("__qn__") * sqrt(cn2.reduce(_ + _))), 6)
+    }
+  }
 
   /** PERSIST the IVF-PQ index — the 100 TB serving artifact (the layout
     * FAISS ships as IndexIVFPQ; Jégou et al. 2011): `dir/centroids`
@@ -1095,18 +1199,17 @@ object Embeddings {
       residual: Boolean = false,
       scope: CacheScope = CacheScope.global): Unit = {
     graft.GraftExtensions.install(spark)
-    val postings = spark.read.parquet(s"$rawSrcDir/postings")
+    val postings = graft.sources.ParquetIO.read(spark, s"$rawSrcDir/postings")
     val attrs = postings.columns
       .filterNot(Set(idCol, vecCol, "__n__", "__cell__")).toSeq
     val emb = postings.drop("__n__", "__cell__")
-    val pct = sampleCap.map { cap =>
-      require(cap >= 1, "sampleCap must be at least 1")
-      math.min(100.0, cap.toDouble * 100.0 / math.max(1L, emb.count()))
+    // one corpus count sizes both the coarse k and the sample pct
+    val sizing = sampleCap.map(sqrtKSampleSizing(emb, _))
+    val coarse = sizing match {
+      case None => kmeansFitSqrtK(emb, idCol, vecCol, iters, scope)
+      case Some((k, p)) => kmeansFitSampled(emb, idCol, vecCol, k, iters, p, scope)
     }
-    val coarse = pct match {
-      case None    => kmeansFitSqrtK(emb, idCol, vecCol, iters, scope)
-      case Some(p) => kmeansFitSqrtKSampled(emb, idCol, vecCol, iters, p, scope)
-    }
+    val pct = sizing.map(_._2)
     val cbs = (pct, residual) match {
       case (None, false) => pqCodebooks(emb, idCol, vecCol, dim, m,
         col(idCol) < kCodebook, iters, scope)
@@ -1155,20 +1258,6 @@ object Embeddings {
       table, "__cell__", buckets)
   }
 
-  /** The codebooks as a 1-row broadcast of NESTED MAPS segment →
-    * (cid → cv): the code → entry-vector lookup residual encoding needs
-    * to RECONSTRUCT x̂ = c + r̂ at ingest (struct-array form serves the
-    * argmax; map form serves the point lookup). */
-  private def codebookCvMaps(codebooks: DataFrame): DataFrame =
-    codebooks
-      .select(col("segment").cast("int").as("__s__"),
-        col("cid").as("__cid__"), col("cv").as("__cv__"))
-      .groupBy(col("__s__"))
-      .agg(map_from_entries(collect_list(struct(col("__cid__"), col("__cv__"))))
-        .as("__m__"))
-      .agg(map_from_entries(collect_list(struct(col("__s__"), col("__m__"))))
-        .as("__cvm__"))
-
   /** ONE pass over a vector frame: coarse cell + all m segment codes
     * from a single 1-row broadcast of the codebook arrays — zero row
     * expansion, zero shuffle before the bucketed write. Shared by the
@@ -1195,28 +1284,16 @@ object Embeddings {
       m: Int,
       attrs: Seq[String],
       residual: Boolean = false): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal segments")
-    val segLen = dim / m
-    validateCodebookShape(codebooks, m, segLen)
+    val pinned = pinCodebooks(codebooks, m, dim)
     val celled =
       if (residual) withResidual(emb, idCol, vecCol, coarse)
       else withCell(
         emb.withColumn("__n__", sqrt(dot(vecCol, vecCol))), vecCol, coarse)
-    val srcVec = if (residual) "__res__" else vecCol
     // residual mode assigns codes under L2 (the metric the residual
     // codebooks were fit with — fit and encode can never disagree);
     // raw mode keeps the cosine rule the inline ADC path shares
-    val argmaxFn = if (residual) "vec_argmax_cell_l2" else "vec_argmax_cell"
-    val coded = (0 until m).foldLeft(
-      celled.crossJoin(broadcast(codebookCentArrays(codebooks, residual)))) {
-      (df, s) =>
-      df.withColumn(s"__seg${s}__", slice(col(srcVec), s * segLen + 1, segLen))
-        .withColumn(s"__sn${s}__", sqrt(dot(s"__seg${s}__", s"__seg${s}__")))
-        .withColumn(s"__code${s}__",
-          expr(s"$argmaxFn(__seg${s}__, __sn${s}__, element_at(__cbs__, $s))"))
-    }
-      .withColumn("__codes__",
-        array((0 until m).map(s => col(s"__code${s}__")): _*))
+    val coded = pqCodes(celled.crossJoin(broadcast(codebookRow(pinned, residual))),
+      if (residual) "__res__" else vecCol, m, dim / m, residual)
     if (!residual)
       coded.select(
         (Seq(idCol) ++ Seq("__cell__", "__codes__") ++ attrs).map(col): _*)
@@ -1225,8 +1302,8 @@ object Embeddings {
       // segment order) and store its norm — element adds and the
       // ascending-index dot fold replay exactly in the oracle
       val rhat = concat((0 until m).map(s =>
-        expr(s"element_at(element_at(__cvm__, $s), __code${s}__)")): _*)
-      coded.crossJoin(broadcast(codebookCvMaps(codebooks)))
+        expr(s"element_at(element_at(__cvm__, $s), element_at(__codes__, ${s + 1}))")): _*)
+      coded
         .withColumn("__rhat__", rhat)
         .withColumn("__xhat__",
           expr("zip_with(__ccv__, __rhat__, (a, b) -> a + b)"))
@@ -1239,11 +1316,11 @@ object Embeddings {
   /** IVF-PQ top-k served from a PERSISTED [[ivfPqIndexSave]] artifact —
     * the production two-stage read path: the query assigns itself to
     * coarse cells (broadcast centroid argmax), the probed cells' CODED
-    * postings scan feeds ADC scoring (the per-query qd lookup table and
-    * the query-independent ‖c‖² table each fold into one broadcastable
-    * map — candidates never touch the query vector, scoring is m map
-    * lookups per row summed in FIXED segment order, bit-identical to
-    * [[adcTopK]]'s fold), and an optional EXACT-cosine rerank repairs
+    * postings scan feeds ADC scoring (the per-query qd lookup tables and
+    * the query-independent ‖c‖² maps come from the one [[codebookRow]]
+    * fold — candidates never touch the query vector, and [[adcScore]]
+    * sums m map lookups per row in FIXED segment order, the expression
+    * [[adcTopK]] scores with), and an optional EXACT-cosine rerank repairs
     * the ranking over the `candFactor`·k ADC shortlist only (FAISS's
     * IndexRefineFlat tail — `rerank` is the raw-vector frame, e.g. the
     * corpus table; the shortlist side broadcasts, so the rerank is one
@@ -1270,13 +1347,11 @@ object Embeddings {
       pushCells: Boolean = true,
       filter: Option[Column] = None): DataFrame = {
     graft.GraftExtensions.install(queries.sparkSession)
-    require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal segments")
-    require(candFactor >= 1, "candFactor must be at least 1")
     val spark = queries.sparkSession
-    val segLen = dim / m
+    val pinned = pinCodebooks(
+      graft.sources.ParquetIO.read(spark, s"$dir/codebooks"), m, dim)
+    require(candFactor >= 1, "candFactor must be at least 1")
     val centroids = storedCentroids(spark, dir)
-    val codebooks = graft.sources.ParquetIO.read(spark, s"$dir/codebooks")
-    validateCodebookShape(codebooks, m, segLen)
     // the artifact self-describes its encoding (the save's marker):
     // residual postings score as q·(c + r̂) against the STORED
     // reconstructed norm, raw postings as q·r̂ against the code-norm map
@@ -1295,62 +1370,22 @@ object Embeddings {
         .withColumn("__qc__",
           dot("__q__", "element_at(__cmap__, __qcell__)"))
         .drop("__cmap__")
-    // per-(query, segment) qd lookup tables, computed in ONE projection
-    // per (tiny) query row against the 1-row codebook broadcast — the
-    // same parameter-attach shape withCell uses, so every cross join in
-    // the plan builds a provably-1-row side (global aggregate). The
-    // per-element work is queries × m × k_codebook dot products — model-
-    // parameter-sized, never the corpus.
-    val cb = codebooks.select(col("segment").cast("int").as("__s__"),
-      col("cid").as("__ccid__"), col("cv").as("__ccv__"))
-    val qWithTabs = probed
-      .crossJoin(broadcast(codebookCentArrays(codebooks))) // 1-row build
-      .withColumn("__tabs__", expr(
-        s"""map_from_arrays(sequence(0, ${m - 1}),
-            transform(sequence(0, ${m - 1}), s ->
-              map_from_entries(transform(element_at(__cbs__, s), c ->
-                struct(c.__cid__,
-                  float_vec_dot(slice(__q__, s * $segLen + 1, $segLen),
-                    c.__cv__))))))"""))
+    // per-(query, segment) qd lookup tables and the query-independent
+    // ‖c‖² maps, in ONE projection per (tiny) query row against the 1-row
+    // codebook fold — the same parameter-attach shape withCell uses, so
+    // every cross join in the plan builds a provably-1-row side
+    val qWithTabs = withTabs(
+      probed.crossJoin(broadcast(codebookRow(pinned, l2 = false))), m, dim / m)
       .drop("__cbs__")
-    // query-independent ‖c‖² lookup: one 1-row broadcast (global agg)
-    val cn2Row = cb
-      .select(col("__s__"), col("__ccid__"), dot("__ccv__", "__ccv__").as("__cn2__"))
-      .groupBy(col("__s__"))
-      .agg(map_from_entries(collect_list(struct(col("__ccid__"), col("__cn2__"))))
-        .as("__t__"))
-      .agg(map_from_entries(collect_list(struct(col("__s__"), col("__t__"))))
-        .as("__cn2s__"))
     // FILTERED search over coded postings ([[ivfTopKIndexed]]'s rule):
     // the attribute predicate applies at the postings scan (attrs
     // denormalized by [[ivfPqIndexSave]] push into parquet) and
     // candidates rank AFTER filtering, so ranks stay dense 1..k
-    val joined = qWithTabs
+    val scored = qWithTabs
       .join(prunedPostings(filter.fold(postings)(postings.where(_)),
           probed, pushCells),
         col("__qcell__") === col("__cell__") && col(idCol) =!= col("query_id"))
-    val scored = if (residual) joined else joined.crossJoin(broadcast(cn2Row))
-    // FIXED segment-order left fold — the same float order as adcTopK's
-    // per-segment sum, so stored-code scores bit-match the inline path
-    val qdotSum = (0 until m)
-      .map(s => expr(
-        s"element_at(element_at(__tabs__, $s), element_at(__codes__, ${s + 1}))"))
-      .reduce(_ + _)
-    val cn2Sum = (0 until m)
-      .map(s => expr(
-        s"element_at(element_at(__cn2s__, $s), element_at(__codes__, ${s + 1}))"))
-      .reduce(_ + _)
-    // residual score: cosine of q against the reconstruction ĉ+r̂ —
-    // numerator folds q·c then the m segment partials LEFT-TO-RIGHT
-    // ((qc + qd0) + qd1 — the oracle replays the same association),
-    // denominator is the stored reconstructed norm
-    val score =
-      if (residual)
-        round((0 until m)
-          .map(s => expr(
-            s"element_at(element_at(__tabs__, $s), element_at(__codes__, ${s + 1}))"))
-          .foldLeft(col("__qc__"))(_ + _) / (col("__qn__") * col("__xn__")), 6)
-      else round(qdotSum / (col("__qn__") * sqrt(cn2Sum)), 6)
+      .withColumn("score", adcScore(m, residual))
     // the ADC cut is [[topKCut]]: the candidate set is the probed
     // cells' CODED postings — corpus-sized growth — and the aggregate
     // combines map-side where the window would shuffle and sort all of
@@ -1362,8 +1397,8 @@ object Embeddings {
     val cut = if (rerank.isEmpty) k else candFactor * k
     require(cut.toLong <= 1000000L,
       s"topk_by cut = $cut exceeds the 1e6 cap (candFactor*k too large)")
-    val adc = topKCut(scored.withColumn("score", score),
-      Seq("query_id", "__q__", "__qn__"), idCol, cut, score = "score")
+    val adc = topKCut(scored, Seq("query_id", "__q__", "__qn__"), idCol, cut,
+      score = "score")
     rerank match {
       case None =>
         adc.select(col("query_id"), col("neighbor_id"), col("score"),
@@ -1610,11 +1645,19 @@ object Embeddings {
     }
   }
 
+  /** The exact-decimal group mean of a vector component: an EXACT
+    * decimal sum of the 6-dp-rounded members divided by the count,
+    * rounded back to 6 dp — the integer-cents trick generalized, so the
+    * mean is independent of summation order and bit-identical across
+    * engines (Lloyd's updates, the hot-cell split, label centroids). */
+  private def exactMean(x: String): Column =
+    round(sum(round(col(x).cast("double"), 6).cast("decimal(27,8)"))
+      .cast("double") / count(lit(1)), 6)
+
   private def lloyd(base: DataFrame, initPred: Column, iters: Int,
       l2: Boolean = false): DataFrame = {
     graft.GraftExtensions.install(base.sparkSession)
     require(iters >= 0, "iters must be non-negative")
-    val spark = base.sparkSession
     // Centroids are MODEL PARAMETERS, not data: k×dim values, bounded tiny
     // by the same k ≪ n argument that lets withCell broadcast them (MLlib's
     // KMeans keeps centers on the driver for the same reason). Pinning each
@@ -1622,10 +1665,6 @@ object Embeddings {
     // a single flat assignment+aggregate job with NO checkpoint writes and
     // NO superseded block-storage RDDs to release (the round-6 eager
     // localCheckpoint-per-iteration leaked those until GC).
-    def pin(k: DataFrame): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(k.collect().toSeq.asJava, k.schema)
-    }
     var cents = pin(base.where(initPred)
       .select(col("__vid__").as("cid"),
         expr("transform(__v__, v -> CAST(v AS double))").as("cv")))
@@ -1638,9 +1677,7 @@ object Embeddings {
         .where(col("__cell__").isNotNull)
         .select(col("__cell__"), posexplode(col("__v__")).as(Seq("__d__", "__x__")))
         .groupBy(col("__cell__"), col("__d__"))
-        .agg((round(
-          sum(round(col("__x__").cast("double"), 6).cast("decimal(27,8)"))
-            .cast("double") / count(lit(1)), 6)).as("__m__"))
+        .agg(exactMean("__x__").as("__m__"))
         .groupBy(col("__cell__"))
         .agg(expr("transform(array_sort(collect_list(struct(__d__, __m__))), s -> s.__m__)")
           .as("cv"))
@@ -1673,9 +1710,7 @@ object Embeddings {
       .groupBy(col(groupCol), (col("__d__") + 1).as("dim"))
       .agg(
         count(lit(1)).as("n_vecs"),
-        round(
-          sum(round(col("__x__").cast("double"), 6).cast("decimal(27,8)"))
-            .cast("double") / count(lit(1)), 6).as("centroid"))
+        exactMean("__x__").as("centroid"))
 
   /** Product-quantization codebooks: the vector splits into `m` equal
     * segments and each segment gets its own Lloyd's-fitted codebook (the
@@ -1694,13 +1729,20 @@ object Embeddings {
       iters: Int,
       scope: CacheScope = CacheScope.global,
       l2: Boolean = false,
-  ): DataFrame = {
+  ): DataFrame =
+    fitSegments(emb, idCol, vecCol, dim, m)(
+      kmeansFit(_, idCol, "__seg__", initPred, iters, scope, l2))
+
+  /** The per-segment codebook fit loop: `fit` trains one codebook on
+    * segment s's slice (`__seg__`) and the m results union as
+    * (segment, cid, cv). */
+  private def fitSegments(emb: DataFrame, idCol: String, vecCol: String,
+      dim: Int, m: Int)(fit: DataFrame => DataFrame): DataFrame = {
     require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal segments")
     val segLen = dim / m
     (0 until m).map { s =>
-      val sliced = emb.select(col(idCol),
-        slice(col(vecCol), s * segLen + 1, segLen).as("__seg__"))
-      kmeansFit(sliced, idCol, "__seg__", initPred, iters, scope, l2)
+      fit(emb.select(col(idCol),
+        slice(col(vecCol), s * segLen + 1, segLen).as("__seg__")))
         .withColumn("segment", lit(s))
     }.reduce(_ unionByName _)
       .select(col("segment"), col("cid"), col("cv"))
@@ -1731,23 +1773,15 @@ object Embeddings {
       samplePct: Double,
       scope: CacheScope = CacheScope.global,
       l2: Boolean = false,
-  ): DataFrame = {
-    require(m >= 1 && dim % m == 0,
-      s"dim $dim must split into m=$m equal segments")
-    val kept =
-      if (samplePct >= 100.0) emb
-      else emb.where(
-        TextOps.hashSample(col(idCol).cast("string"), samplePct))
-    val segLen = dim / m
-    (0 until m).map { s =>
-      val sliced = kept.select(col(idCol),
-        slice(col(vecCol), s * segLen + 1, segLen).as("__seg__"))
-      kmeansFitSampled(sliced, idCol, "__seg__", k, iters,
-        samplePct = 100.0, scope, l2)
-        .withColumn("segment", lit(s))
-    }.reduce(_ unionByName _)
-      .select(col("segment"), col("cid"), col("cv"))
-  }
+  ): DataFrame =
+    fitSegments(hashSampled(emb, idCol, samplePct), idCol, vecCol, dim, m)(
+      kmeansFitSampled(_, idCol, "__seg__", k, iters, samplePct = 100.0, scope, l2))
+
+  /** The hashSample kept set of `emb` on `idCol` — every row at
+    * `samplePct` ≥ 100 (no filter in the plan). */
+  private def hashSampled(emb: DataFrame, idCol: String, samplePct: Double): DataFrame =
+    if (samplePct >= 100.0) emb
+    else emb.where(TextOps.hashSample(col(idCol).cast("string"), samplePct))
 
   /** [[pqResidualCodebooks]] with sample-based training: the sample cut
     * applies BEFORE residual computation, so only kept rows ever pay
@@ -1766,11 +1800,7 @@ object Embeddings {
       scope: CacheScope = CacheScope.global,
   ): DataFrame = {
     graft.GraftExtensions.install(emb.sparkSession)
-    val kept =
-      if (samplePct >= 100.0) emb
-      else emb.where(
-        TextOps.hashSample(col(idCol).cast("string"), samplePct))
-    val res = withResidual(kept, idCol, vecCol, coarse)
+    val res = withResidual(hashSampled(emb, idCol, samplePct), idCol, vecCol, coarse)
       .select(col(idCol), col("__res__"))
     pqCodebooksSampled(res, idCol, "__res__", dim, m, k, iters,
       samplePct = 100.0, scope, l2 = true)
@@ -1853,17 +1883,11 @@ object Embeddings {
       dim: Int,
       samplePct: Double = 100.0,
       minAbsRho: Double = 0.85,
-      scope: CacheScope = CacheScope.global,
   ): DataFrame = {
     require(dim % 2 == 0, s"dim $dim must be even for the pair rotation")
-    val spark = emb.sparkSession
-    graft.GraftExtensions.install(spark)
+    graft.GraftExtensions.install(emb.sparkSession)
     val segLen = dim / 2
-    val kept =
-      if (samplePct >= 100.0) emb
-      else emb.where(
-        TextOps.hashSample(col(idCol).cast("string"), samplePct))
-    val agg = kept
+    val agg = hashSampled(emb, idCol, samplePct)
       .select(posexplode(expr(
         s"""transform(sequence(0, ${segLen - 1}), t -> struct(
               CAST(element_at($vecCol, t + 1) AS DOUBLE) AS x,
@@ -1889,8 +1913,7 @@ object Embeddings {
     // model parameters (dim doubles), pinned like kmeans centroids so
     // consumers never re-run the moment aggregate and the broadcast side
     // is a LocalRelation
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(agg.collect().toSeq.asJava, agg.schema)
+    pin(agg)
   }
 
   /** Apply a [[opqPairRotationFit]] rotation: same frame with `vecCol`
@@ -1948,11 +1971,11 @@ object Embeddings {
     require(m >= 2 && m % 2 == 0 && dim % m == 0,
       s"OPQ pair rotation needs an even m dividing dim (got m=$m, dim=$dim)")
     val rot = opqPairRotationFit(emb, idCol, vecCol, dim, samplePct,
-      minAbsRho, scope)
+      minAbsRho)
     val rotated = opqRotateFrame(emb, idCol, vecCol, rot, dim)
     val cb = pqCodebooks(rotated, idCol, vecCol, dim, m, initPred, iters,
       scope)
-    pqTopK(rotated, idCol, vecCol, cb, dim, m, queryId, k, scope)
+    pqTopK(rotated, idCol, vecCol, cb, dim, m, queryId, k)
   }
 
   /** PERSIST the OPQ model — rotation (1 row) + PQ codebooks fit in the
@@ -1977,7 +2000,7 @@ object Embeddings {
     require(m >= 2 && m % 2 == 0 && dim % m == 0,
       s"OPQ pair rotation needs an even m dividing dim (got m=$m, dim=$dim)")
     val rot = opqPairRotationFit(emb, idCol, vecCol, dim, samplePct,
-      minAbsRho, scope)
+      minAbsRho)
     rot.write.mode("overwrite").parquet(s"$dir/rot")
     val rotated = opqRotateFrame(emb, idCol, vecCol, rot, dim)
     pqCodebooks(rotated, idCol, vecCol, dim, m, initPred, iters, scope)
@@ -1988,15 +2011,15 @@ object Embeddings {
     * rotation and codebooks, rotate the corpus (a per-row projection),
     * and run the standard single-pass ADC — no fit stage in the serve.
     * Both model frames are parameter-sized (1 rotation row, m·k codebook
-    * rows) and are PINNED driver-side on read, exactly as [[opqTopK]]'s
-    * fit pins them (each read through `ParquetIO.read`, so a warm serve's
-    * only jobs are the two collects): the broadcast build sides are
-    * LocalRelations
-    * (provably single-row for the whole-suite BNLJ lint, where a bare
-    * file scan is not), and the serve plans the inline fit's 3
-    * exchanges, not the 6 a re-aggregate of the rotation and a codebook
-    * scan add. Values are identical to [[opqTopK]] (the fit is the same
-    * computation, run once at save time). */
+    * rows) and are PINNED driver-side, exactly as [[opqTopK]]'s fit pins
+    * them: the rotation here, the codebooks by [[adcTopK]]'s
+    * [[pinCodebooks]]. Each is read through `ParquetIO.read`, so a warm
+    * serve's only jobs are the two collects. The broadcast build sides
+    * are LocalRelations (provably single-row for the whole-suite BNLJ
+    * lint, where a bare file scan is not), and the serve plans the
+    * inline fit's 3 exchanges, not the 6 a re-aggregate of the rotation
+    * and a codebook scan add. Values are identical to [[opqTopK]] (the
+    * fit is the same computation, run once at save time). */
   def opqTopKWithModel(
       emb: DataFrame,
       idCol: String,
@@ -2006,17 +2029,12 @@ object Embeddings {
       m: Int,
       queryId: Long,
       k: Int,
-      scope: CacheScope = CacheScope.global,
   ): DataFrame = {
     val spark = emb.sparkSession
     graft.GraftExtensions.install(spark)
-    import scala.jdk.CollectionConverters._
-    def pinned(part: String): DataFrame = {
-      val stored = graft.sources.ParquetIO.read(spark, s"$dir/$part")
-      spark.createDataFrame(stored.collect().toSeq.asJava, stored.schema)
-    }
-    val rotated = opqRotateFrame(emb, idCol, vecCol, pinned("rot"), dim)
-    pqTopK(rotated, idCol, vecCol, pinned("cb"), dim, m, queryId, k, scope)
+    val rot = pin(graft.sources.ParquetIO.read(spark, s"$dir/rot"))
+    pqTopK(opqRotateFrame(emb, idCol, vecCol, rot, dim), idCol, vecCol,
+      graft.sources.ParquetIO.read(spark, s"$dir/cb"), dim, m, queryId, k)
   }
 
   // --------------------------------------------------------------------
@@ -2052,6 +2070,13 @@ object Embeddings {
     * contract as [[sq8CodeSql]]). */
   def sq8DqSql(code: String, mn: String, sc: String): String =
     s"($mn + CAST($code AS DOUBLE) * $sc)"
+
+  /** The dequantized cosine of the raw query `__q__` (norm `__qn__`)
+    * against a candidate's SQ8 `__code__` under `__mins__`/`__scales__`:
+    * q·dq / (‖q‖·‖dq‖), 6-dp rounded, in the codegen'd natives. */
+  private def sq8Cosine: Column =
+    round(expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
+      (col("__qn__") * sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6)
 
   /** One-pass SQ8 fit: per-dimension min/max over the corpus folded into
     * a PROVABLY 1-row frame (`__mins__`, `__scales__` array<double>,
@@ -2109,10 +2134,7 @@ object Embeddings {
       .select(col(idCol).as("__vid__"), col(vecCol).as("__v__"))
       .crossJoin(one)
       .withColumn("__code__", expr("vec_sq8_code(__v__, __mins__, __scales__)"))
-      .withColumn("score", round(
-        expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
-          (col("__qn__") *
-            sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6))
+      .withColumn("score", sq8Cosine)
     topKCut(scoredAll, Seq.empty, "__vid__", k, score = "score")
       .withColumnRenamed("neighbor_id", "vec_id")
   }
@@ -2209,10 +2231,7 @@ object Embeddings {
     val scored = postings
       .crossJoin(one)
       .where(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", round(
-        expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
-          (col("__qn__") *
-            sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6))
+      .withColumn("cosine", sq8Cosine)
     topKCut(scored, Seq("query_id"), idCol, k)
   }
 
@@ -2298,10 +2317,7 @@ object Embeddings {
     val scored = attachOne(probed, params) // provably 1-row (global agg)
       .join(prunedPostings(postings, probed, pushCells),
         col("__qcell__") === col("__cell__") && col(idCol) =!= col("query_id"))
-      .withColumn("cosine", round(
-        expr("vec_sq8_dot(__code__, __mins__, __scales__, __q__)") /
-          (col("__qn__") *
-            sqrt(expr("vec_sq8_norm2(__code__, __mins__, __scales__)"))), 6))
+      .withColumn("cosine", sq8Cosine)
     topKCut(scored, Seq("query_id"), idCol, k)
   }
 
@@ -2332,7 +2348,6 @@ object Embeddings {
       m: Int,
       queryId: Long,
       k: Int,
-      scope: CacheScope = CacheScope.global,
   ): DataFrame = {
     graft.GraftExtensions.install(emb.sparkSession)
     val cands = emb
@@ -2340,16 +2355,21 @@ object Embeddings {
       .select(col(idCol).as("__vid__"), col(vecCol).as("__v__"))
     val qrow = emb.where(col(idCol) === queryId)
       .select(col(vecCol).as("__q__"), sqrt(dot(vecCol, vecCol)).as("__qn__"))
-    adcTopK(cands, codebooks, qrow, dim, m, k, scope)
+    adcTopK(cands, codebooks, qrow, dim, m, k)
   }
 
-  /** The shared ADC scorer behind [[pqTopK]] and [[ivfPqTopK]]: one
-    * candidate-set pass that assigns every segment to its codebook cell
-    * and sums the query's precomputed per-(segment, cell) partials in
-    * FIXED segment order from a single 1-row broadcast, then ranks by
-    * (6-dp score desc, id). Validates the codebooks frame against
-    * (m, segLen) — a mismatched frame would otherwise score silently
-    * wrong, because the dot's left fold truncates to the shorter array. */
+  /** The inline ADC behind [[pqTopK]] and [[ivfPqTopK]]: encode the
+    * candidates, then score them with the stored-code scorer. The
+    * codebooks pin once ([[pinCodebooks]], which also checks their
+    * shape) and fold once ([[codebookRow]]); the query's lookup tables
+    * ([[withTabs]]) ride that 1-row fold, so the candidate set takes
+    * exactly one pass — one 1-row BroadcastNestedLoopJoin, a projection
+    * that computes all m codes ([[pqCodes]], the index encoder) and
+    * [[adcScore]] (the [[ivfPqTopKIndexed]] scorer), then the k-bounded
+    * cut. The round-8 design joined m per-segment partial frames
+    * pairwise on __vid__ — m−1 shuffle joins of the candidate set; this
+    * plan shuffles it zero times before the top-k, and the LlmSpec
+    * per-segment join anchor pins the values. */
   private def adcTopK(
       cands: DataFrame,
       codebooks: DataFrame,
@@ -2357,93 +2377,20 @@ object Embeddings {
       dim: Int,
       m: Int,
       k: Int,
-      scope: CacheScope,
   ): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m equal segments")
+    val pinned = pinCodebooks(codebooks, m, dim)
     val segLen = dim / m
-    validateCodebookShape(codebooks, m, segLen)
-    val cbooks = scope.cache(codebooks)
-    // SINGLE-PASS scoring: every per-query quantity folds into ONE 1-row
-    // broadcast — per segment s, the centroid array (for the assignment
-    // argmax) and a map cell → (qd = q_s·c, cn2 = ‖c‖²) lookup, plus the
-    // query norm. Candidates then take exactly one pass: one 1-row
-    // BroadcastNestedLoopJoin, a projection that computes all m cell
-    // assignments and sums the looked-up partials IN FIXED SEGMENT ORDER
-    // (an in-expression left fold, so the float order matches the old
-    // per-segment wide-join formulation bit-for-bit — AdcSinglePassSpec
-    // pins that identity), then the top-k window. The previous design
-    // joined m per-segment partial frames pairwise on __vid__ — m−1
-    // shuffle joins of the candidate set that a production m=8..16 would
-    // multiply; this plan shuffles the candidate set zero times before
-    // the top-k.
-    val segTables = cbooks.crossJoin(broadcast(qrow))
-      .select(col("segment").cast("int").as("__s__"), col("cid"), col("cv"),
-        sqrt(dot("cv", "cv")).as("__cn__"),
-        dot(s"slice(__q__, CAST(segment AS INT) * $segLen + 1, $segLen)", "cv")
-          .as("__qd__"),
-        dot("cv", "cv").as("__cn2__"))
-    val oneRow = segTables
-      .groupBy(col("__s__"))
-      .agg(
-        collect_list(struct(col("cid").as("__cid__"), col("cv").as("__cv__"),
-          col("__cn__"))).as("__cents__"),
-        map_from_entries(collect_list(struct(col("cid"),
-          struct(col("__qd__").as("qd"), col("__cn2__").as("cn2"))))).as("__tab__"))
-      .agg(
-        map_from_entries(collect_list(struct(col("__s__"), col("__cents__"))))
-          .as("__cbs__"),
-        map_from_entries(collect_list(struct(col("__s__"), col("__tab__"))))
-          .as("__tabs__"))
-      .crossJoin(broadcast(qrow.select(col("__qn__"))))
-    // per segment: slice, norm, then the same native argmax withCell uses
-    // (identical vec_argmax_cell over element_at(__cbs__, s) — train/serve
-    // assignment cannot disagree), yielding __cell{s}__
-    val withSegs = (0 until m).foldLeft(cands.crossJoin(broadcast(oneRow))) {
-      (df, s) =>
-        df.withColumn(s"__seg${s}__",
-            slice(col("__v__"), s * segLen + 1, segLen))
-          .withColumn(s"__sn${s}__", sqrt(dot(s"__seg${s}__", s"__seg${s}__")))
-          .withColumn(s"__cell${s}__",
-            expr(s"vec_argmax_cell(__seg${s}__, __sn${s}__, element_at(__cbs__, $s))"))
-    }
-    val qdotSum = (0 until m)
-      .map(s => expr(s"element_at(element_at(__tabs__, $s), __cell${s}__).qd"))
-      .reduce(_ + _)
-    val cn2Sum = (0 until m)
-      .map(s => expr(s"element_at(element_at(__tabs__, $s), __cell${s}__).cn2"))
-      .reduce(_ + _)
-    val scoredAll = withSegs
-      .withColumn("score", round(qdotSum / (col("__qn__") * sqrt(cn2Sum)), 6))
+    val one = withTabs(qrow.crossJoin(broadcast(codebookRow(pinned, l2 = false))),
+      m, segLen).drop("__q__")
+    val scoredAll = pqCodes(cands.crossJoin(broadcast(one)), "__v__", m, segLen,
+      l2 = false)
+      .withColumn("score", adcScore(m, residual = false))
     // k-bounded GLOBAL cut: the old no-partition row_number window pulled
     // every scored candidate into ONE partition and sorted it — at corpus
     // scale that single reducer IS the wall; the global topk_by aggregate
     // combines map-side (each partition ships ≤k entries)
     topKCut(scoredAll, Seq.empty, "__vid__", k, score = "score")
       .withColumnRenamed("neighbor_id", "vec_id")
-  }
-
-  /** Codebooks are model-parameter-sized: validating shape collects the
-    * m·k (segment, entry dim) pairs and checks them on the driver — a
-    * pinned local frame runs no job — and catches training/serving m or
-    * dim drift loudly: a mismatched frame would otherwise score silently
-    * wrong, because the dot's left fold truncates to the shorter array. */
-  private def validateCodebookShape(
-      cbooks: DataFrame, m: Int, segLen: Int): Unit = {
-    val shape = cbooks
-      .select(col("segment").cast("int"), size(col("cv")))
-      .collect()
-      .filterNot(_.isNullAt(0)) // a null segment surfaces as "missing"
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (s, rows) =>
-        (s, rows.filterNot(_.isNullAt(1)).map(_.getInt(1)).distinct) }
-    require(shape.map(_._1) == (0 until m),
-      s"codebooks cover segments ${shape.map(_._1).mkString(",")}; expected 0..${m - 1} " +
-        "(was the frame trained with a different m?)")
-    shape.foreach { case (s, lens) =>
-      require(lens.sameElements(Seq(segLen)),
-        s"codebook segment $s has ${lens.minOption.getOrElse(-1)}-dim entries; expected $segLen " +
-          "(was the frame trained with a different dim or m?)")
-    }
   }
 
   /** The full FAISS-style IVF-PQ serving composition: a coarse k-means
@@ -2483,7 +2430,7 @@ object Embeddings {
       .select(col("__vid__"), col("__v__"))
     val qrow = base.where(col("__vid__") === queryId)
       .select(col("__v__").as("__q__"), col("__n__").as("__qn__"))
-    adcTopK(cands, codebooks, qrow, dim, m, k, scope)
+    adcTopK(cands, codebooks, qrow, dim, m, k)
   }
 
   /** Per-vector symmetric int8 quantization (the standard storage/transfer

@@ -80,24 +80,30 @@ class EntrySpec extends GraftSuite {
   test("source lint: no file under src/main reads a centroid table with a bare read.parquet") {
     // A schemaless read runs a schema-inference job on every call; the
     // IVF serves read `centroids` through ParquetIO.read
-    // (Embeddings.storedCentroids), which resolves it once per version.
-    val bare = "read\\.parquet\\(s\"\\$[^\"]*/centroids\"\\)".r
+    // (Embeddings.storedCentroids), and the refits, hot-cell splits and
+    // ScaleCheck read `postings` back the same way, each resolved once
+    // per version.
+    val bare = "read\\.parquet\\(s\"\\$[^\"]*/(centroids|postings)\"\\)".r
     val offenders = sourcesWhere("src/main")(bare.findFirstIn(_).isDefined)
     assert(offenders.isEmpty,
-      s"bare read.parquet of a centroid table: ${offenders.mkString(", ")}")
+      s"bare read.parquet of a centroid or postings table: ${offenders.mkString(", ")}")
   }
 
   /** Fails when any of `formulations` occurs more than once, summed
     * over the files under `roots`. */
-  private def assertWrittenOnce(roots: Seq[String], formulations: Seq[String]): Unit = {
+  private def assertWrittenOnce(roots: Seq[String], formulations: Seq[String]): Unit =
+    assertMatchedOnce(roots, formulations.map(f => java.util.regex.Pattern.quote(f).r))
+
+  /** [[assertWrittenOnce]] for formulations given as regexes. */
+  private def assertMatchedOnce(roots: Seq[String],
+      patterns: Seq[scala.util.matching.Regex]): Unit = {
     val texts = roots.flatMap(sources)
-    for (formulation <- formulations) {
-      val quoted = java.util.regex.Pattern.quote(formulation).r
+    for (pattern <- patterns) {
       val hits = texts.map { case (path, text) =>
-        (path, quoted.findAllMatchIn(text).size)
+        (path, pattern.findAllMatchIn(text).size)
       }.filter(_._2 > 0)
       assert(hits.map(_._2).sum <= 1,
-        s"$formulation written ${hits.map(_._2).sum} times: ${hits.mkString(", ")}")
+        s"$pattern written ${hits.map(_._2).sum} times: ${hits.mkString(", ")}")
     }
   }
 
@@ -122,6 +128,19 @@ class EntrySpec extends GraftSuite {
       Seq("case 0x2c =>", "val clear = 1 << minCode", "SpectralCos(b)"))
     val batched = sourcesWhere("src/main")(_.contains("grouped(batchSize)"))
     assert(batched.isEmpty, s"grouped(batchSize) in ${batched.mkString(", ")}")
+  }
+
+  test("source lint: the PQ serves write their codebook fold, ADC lookup, driver pin and SQ8 cosine once") {
+    // Every PQ encode and serve reads one pinned codebook frame
+    // (Embeddings.pinCodebooks, through the one Embeddings.pin), folds
+    // it once (codebookRow) and scores with one adcScore; the SQ8 serves
+    // share sq8Cosine. A second copy is an inline/persisted fork whose
+    // scores can drift apart.
+    assertWrittenOnce(Seq("src/main/scala/graft/llm"),
+      Seq("map_from_entries(collect_list(struct(col(\"__s__\")",
+        "element_at(element_at(__tabs__", "vec_sq8_norm2(__code__"))
+    assertMatchedOnce(Seq("src/main/scala/graft/llm"),
+      Seq("createDataFrame\\([^\\n]*\\.collect\\(\\)".r))
   }
 
   test("plan lint: no cartesian product in any query's physical plan") {

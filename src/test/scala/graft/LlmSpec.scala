@@ -4195,11 +4195,10 @@ class LlmSpec extends GraftSuite {
       "the cold serve resolves the rotation's and codebooks' schemas once each")
     val (warm, warmIds) = withJobIds(serve())
     assert(schemaReads(warmIds).isEmpty, "a warm serve re-read a model table's schema")
-    // the pinned rotation and codebooks are collected once each, and the
-    // codebook shape check is one collect: the cold serve cached the
-    // pinned codebooks, so the warm frame's rows are read from that cache
-    // (a groupBy over them ran 3 jobs)
-    assert(warmIds.length === 3,
+    // the rotation and the codebooks are pinned by one collect each; the
+    // codebook shape check runs on the pinned rows, and nothing caches
+    // them, so no later job reads them back
+    assert(warmIds.length === 2,
       s"warm serve stages: ${warmIds.flatMap(tracker.getJobInfo(_))
         .flatMap(_.stageIds.toSeq).flatMap(tracker.getStageInfo(_)).map(_.name)}")
     assert(warm.collect().toSeq === cold.collect().toSeq)
@@ -4224,6 +4223,54 @@ class LlmSpec extends GraftSuite {
     val wrongDim = intercept[IllegalArgumentException](serve(cb, 6, 2))
     assert(wrongDim.getMessage.contains(
       "codebook segment 0 has 2-dim entries; expected 3"), wrongDim.getMessage)
+    graft.llm.CacheScope.global.release()
+  }
+
+  test("pqTopK plans no InMemoryRelation: its pinned codebooks are read as driver literals") {
+    val s = spark
+    import s.implicits._
+    val emb = (0L until 12L).map(i =>
+      (i, Array.tabulate(4)(d => ((i * 7 + d * 3) % 11).toFloat - 5f)))
+      .toDF("vec_id", "embedding")
+    val cb = Embeddings.pqCodebooks(emb, "vec_id", "embedding",
+      dim = 4, m = 2, initPred = sc("vec_id") < 3L, iters = 1)
+    val served = Embeddings.pqTopK(emb, "vec_id", "embedding", cb, dim = 4,
+      m = 2, queryId = 0L, k = 3)
+    val plan = served.queryExecution.executedPlan.toString
+    assert(!plan.contains("InMemoryRelation") && !plan.contains("InMemoryTableScan"),
+      s"pqTopK caches rows the driver already holds:\n$plan")
+    assert(served.collect().length === 3)
+    graft.llm.CacheScope.global.release()
+  }
+
+  test("ivfPqIndexRefit(sampleCap) counts the corpus once for both k and the sample") {
+    val s = spark
+    val emb = s.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .where(sc("vec_id") < 60)
+    val scope = new graft.llm.CacheScope
+    val cents = Embeddings.kmeansFitSqrtK(emb, "vec_id", "embedding",
+      iters = 1, scope = scope)
+    Embeddings.ivfIndexSave(emb, "vec_id", "embedding", cents,
+      "pq_cnt_raw", "/tmp/graft_pq_cnt/raw", buckets = 2)
+    // adaptive execution runs stages from a pool thread and names them
+    // after it; without it a job's stages carry the call that submitted it
+    val aqe = s.conf.get("spark.sql.adaptive.enabled")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (_, ids) = withJobIds(Embeddings.ivfPqIndexRefit(s,
+        "/tmp/graft_pq_cnt/raw", "vec_id", "embedding", "pq_cnt_v2",
+        "/tmp/graft_pq_cnt/v2", dim = 64, m = 2, kCodebook = 4, buckets = 2,
+        iters = 1, sampleCap = Some(30L), scope = scope))
+      val tracker = s.sparkContext.statusTracker
+      val countJobs = ids.flatMap(tracker.getJobInfo(_)).filter(_.stageIds.exists(
+        tracker.getStageInfo(_).exists(_.name.startsWith("count at Embeddings.scala"))))
+      assert(countJobs.length === 1,
+        s"corpus count jobs: ${countJobs.map(_.jobId).mkString(", ")}")
+    } finally {
+      s.conf.set("spark.sql.adaptive.enabled", aqe)
+      Seq("pq_cnt_raw", "pq_cnt_v2").foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+      scope.release()
+    }
     graft.llm.CacheScope.global.release()
   }
 
