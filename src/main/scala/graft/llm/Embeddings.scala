@@ -1096,8 +1096,6 @@ object Embeddings {
           expr(s"$argmaxFn(__seg${s}__, __sn${s}__, element_at(__cbs__, $s))"))
     }
       .withColumn("__codes__", array((0 until m).map(s => col(s"__code${s}__")): _*))
-      .drop((0 until m).flatMap(s =>
-        Seq(s"__seg${s}__", s"__sn${s}__", s"__code${s}__")): _*)
   }
 
   /** Per-query ADC lookup tables over a (tiny) query frame carrying
@@ -1140,11 +1138,11 @@ object Embeddings {
     * posting carries m dictionary-encoded code ids, so the per-query
     * candidate scan reads ~dim·4/m÷(code bytes) ≈ 16–32× fewer bytes —
     * and at embedding scale the postings scan IS the serving cost.
-    * Codes are the same deterministic rounded-argmax segment assignment
-    * the inline ADC path computes at query time ([[adcTopK]] uses the
-    * identical `vec_argmax_cell` over the identical centroid arrays),
-    * so serving from the stored codes is bit-identical to [[ivfPqTopK]]
-    * with the same coarse/codebook frames (LlmSpec pins parity). */
+    * Codes come from [[pqCodes]], the encoder the inline ADC path runs
+    * on its candidates at query time, and both paths score with
+    * [[adcScore]], so serving from the stored codes is bit-identical to
+    * [[ivfPqTopK]] with the same coarse/codebook frames (LlmSpec pins
+    * parity). */
   def ivfPqIndexSave(
       emb: DataFrame,
       idCol: String,
@@ -2366,10 +2364,9 @@ object Embeddings {
     * exactly one pass — one 1-row BroadcastNestedLoopJoin, a projection
     * that computes all m codes ([[pqCodes]], the index encoder) and
     * [[adcScore]] (the [[ivfPqTopKIndexed]] scorer), then the k-bounded
-    * cut. The round-8 design joined m per-segment partial frames
-    * pairwise on __vid__ — m−1 shuffle joins of the candidate set; this
-    * plan shuffles it zero times before the top-k, and the LlmSpec
-    * per-segment join anchor pins the values. */
+    * cut. Joining m per-segment partial frames on the id instead would
+    * shuffle the candidate set m−1 times; LlmSpec pins this plan's
+    * values to that per-segment join formulation. */
   private def adcTopK(
       cands: DataFrame,
       codebooks: DataFrame,
