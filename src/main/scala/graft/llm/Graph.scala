@@ -177,7 +177,8 @@ object Graph {
       .write.mode("overwrite").parquet(s"$dir/edges")
     // rank from the WRITTEN edges so the artifact is self-consistent
     // (and the fit never re-derives the input frame's lineage)
-    val stored = edges.sparkSession.read.parquet(s"$dir/edges")
+    val stored =
+      graft.sources.ParquetIO.read(edges.sparkSession, s"$dir/edges")
     pageRank(stored, "src", "dst", iterations, dampMicro)
       .write.mode("overwrite").parquet(s"$dir/ranks")
   }
@@ -212,12 +213,12 @@ object Graph {
       extraEdges: Option[DataFrame] = None,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val stored = spark.read.parquet(s"$dir/edges")
+    val stored = graft.sources.ParquetIO.read(spark, s"$dir/edges")
     val all = extraEdges.fold(stored)(d => stored.unionByName(
       d.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull)))
-    val prev = spark.read.parquet(s"$dir/ranks")
+    val prev = graft.sources.ParquetIO.read(spark, s"$dir/ranks")
     pageRankFrom(all, "src", "dst", Some(prev), iterations, dampMicro)
   }
 
@@ -231,7 +232,7 @@ object Graph {
       dstDir: String,
       iterations: Int,
       dampMicro: Long = 850000L): Unit = {
-    spark.read.parquet(s"$srcDir/edges")
+    graft.sources.ParquetIO.read(spark, s"$srcDir/edges")
       .write.mode("overwrite").parquet(s"$dstDir/edges")
     pageRankWarmRanks(spark, srcDir, iterations, dampMicro)
       .write.mode("overwrite").parquet(s"$dstDir/ranks")

@@ -85,223 +85,12 @@ object LangModel {
   def bitsPerChar(textCol: Column, model: Array[Double]): Column =
     call_function("lm_bits", normText(textCol), lit(BigramLm.encode(model)))
 
-  /** The shared interpolated-KN probability formula — ONE string, used
-    * verbatim by the Spark lowering AND the DuckDB oracle so the IEEE
-    * operation order (and therefore every compound-rounded double) is
-    * literally identical on both engines. Expects columns c12 (bigram
-    * count, NULL if unseen), c1/n1fw (left-word count / distinct
-    * continuations, NULL if w1 unseen), n1bw (distinct left contexts of
-    * w2, NULL if w2 unseen), n12 (total distinct bigrams). D = 0.75
-    * fixed; c12 ≥ 1 makes max(c12−D, 0) redundant. */
-  private[graft] val KnPSql: String =
-    """CASE
-         WHEN c12 IS NOT NULL THEN
-           ((CAST(c12 AS DOUBLE) - 0.75) / CAST(c1 AS DOUBLE))
-           + ((0.75 * CAST(n1fw AS DOUBLE)) / CAST(c1 AS DOUBLE))
-             * (coalesce(CAST(n1bw AS DOUBLE), CAST(0 AS DOUBLE))
-                / CAST(n12 AS DOUBLE))
-         WHEN c1 IS NOT NULL THEN
-           ((0.75 * CAST(n1fw AS DOUBLE)) / CAST(c1 AS DOUBLE))
-             * (coalesce(CAST(n1bw AS DOUBLE), CAST(0 AS DOUBLE))
-                / CAST(n12 AS DOUBLE))
-         ELSE coalesce(CAST(n1bw AS DOUBLE), CAST(0 AS DOUBLE))
-              / CAST(n12 AS DOUBLE)
-       END"""
-
-  /** Per-bigram integer micro-bits: −log₂(p)·1e6 rounded, with the
+  /** Per-gram integer micro-bits: −log₂(p)·1e6 rounded, with the
     * deterministic 30-bit OOV penalty when the continuation mass is zero
-    * (unseen w2). Same literal on both engines. */
+    * (unseen last word). Same literal on both engines. */
   private[graft] val KnTermSql: String =
     """CASE WHEN p <= 0 THEN 30000000
        ELSE CAST(round((-log2(p)) * 1000000) AS BIGINT) END"""
-
-  /** Interpolated Kneser–Ney word-bigram perplexity (Kneser & Ney 1995;
-    * Chen & Goodman 1998's interpolated form, fixed discount D = 0.75) —
-    * the WORD-level LM quality scorer the CCNet pipeline actually runs
-    * (KenLM is KN-smoothed), next to the dense char-bigram model above:
-    *
-    *   P(w₂|w₁) = (c(w₁w₂) − D)/c(w₁)
-    *            + (D·N1+(w₁•)/c(w₁)) · N1+(•w₂)/N1+(••)
-    *
-    * with the continuation distribution N1+(•w₂)/N1+(••) as the unigram
-    * base (the "how many contexts" estimate that makes KN beat raw
-    * counts). Unseen w₁ backs off entirely to the continuation
-    * distribution; an unseen w₂ takes a flat 30-bit OOV penalty.
-    * Tokenization = the shared Unicode tokenizer norm
-    * ([[TextOps.letterWords]]).
-    *
-    * Determinism: every count is an exact integer; P is the SAME IEEE
-    * double expression on both engines ([[KnPSql]], literally identical
-    * operation order); each bigram's −log₂ rounds to INTEGER micro-bits
-    * before the per-doc sum (order-free under any shuffle; the ~1ulp
-    * cross-engine log2 divergence is absorbed, the q_lm_perplexity
-    * precedent); one final 6-dp division.
-    *
-    * Scale anatomy: training is ONE map-side-combined bigram-count
-    * aggregate over the trusted slice (the unigram/continuation tables
-    * DERIVE from the Heaps-bounded bigram table — no second corpus
-    * pass); scoring explodes doc bigrams once and LEFT-joins the three
-    * model tables (vocabulary-bounded — AQE broadcasts them) plus a
-    * 1-row total attach, then one per-doc aggregate. Short docs
-    * (< 2 words) re-emit as (0, 0.0) through a thin left join.
-    * Output: (idCol, n_bigrams, bits_per_bigram). */
-  def knBigramScore(
-      docs: DataFrame,
-      train: DataFrame,
-      idCol: String,
-      textCol: String,
-      scope: CacheScope = CacheScope.global): DataFrame = {
-    graft.GraftExtensions.install(docs.sparkSession)
-    def bigramsOf(df: DataFrame, cols: Column*): DataFrame = df
-      .withColumn("__toks__", TextOps.letterWords(textCol))
-      .where(size(col("__toks__")) >= 2 &&
-        element_at(col("__toks__"), 1) =!= "")
-      .select(cols :+ explode(TextOps.wordShingles("__toks__", 2)).as("bg"): _*)
-    val tb = scope.cache(bigramsOf(train)
-      .groupBy(col("bg")).agg(count(lit(1)).as("c12")))
-    val uni = tb
-      .groupBy(expr("split(bg, ' ')[0]").as("w1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1fw"))
-    val cont = tb
-      .groupBy(expr("split(bg, ' ')[1]").as("w2"))
-      .agg(count(lit(1)).as("n1bw"))
-    val tot = tb.agg(count(lit(1)).as("n12"))
-    val scored = bigramsOf(docs, col(idCol))
-      .withColumn("w1", expr("split(bg, ' ')[0]"))
-      .withColumn("w2", expr("split(bg, ' ')[1]"))
-      .join(tb, Seq("bg"), "left")
-      .join(uni, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(tot)) // 1-row model parameter attach
-      .withColumn("p", expr(KnPSql))
-      .withColumn("__mb__", expr(KnTermSql))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("__mb__")).as("__s__"))
-      .select(col(idCol), col("n_bigrams"),
-        round(col("__s__").cast("double") / col("n_bigrams").cast("double")
-          / lit(1000000.0), 6).as("bits_per_bigram"))
-    docs.select(col(idCol)).distinct()
-      .join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("bits_per_bigram"), lit(0.0)).as("bits_per_bigram"))
-  }
-
-  /** Continuation-unigram probability of the trigram model's base level:
-    * N1+(•w3)/N1+(••) over the distinct-(w2,w3)-with-left-context table.
-    * Expects n1bw3 (NULL if w3 unseen) and nuni. */
-  private[graft] val Kn3PuSql: String =
-    """coalesce(CAST(n1bw3 AS DOUBLE), CAST(0 AS DOUBLE))
-       / CAST(nuni AS DOUBLE)"""
-
-  /** Middle (bigram) level of the trigram model, built from CONTINUATION
-    * counts the KN way: "counts" are N1+(•w2w3) (distinct left contexts
-    * of the bigram in the trigram table), the context mass is
-    * N1+(•w2•) = nc2 and the interpolation weight uses
-    * N1+(w2•) = n1fw2m (distinct continuations of w2 among trigram
-    * middles). NULL-keyed backoff: bigram unseen → weight·pu; middle
-    * word unseen → pu alone. Same fixed D = 0.75. */
-  private[graft] val Kn3PbSql: String =
-    """CASE
-         WHEN n1bw23 IS NOT NULL THEN
-           ((CAST(n1bw23 AS DOUBLE) - 0.75) / CAST(nc2 AS DOUBLE))
-           + ((0.75 * CAST(n1fw2m AS DOUBLE)) / CAST(nc2 AS DOUBLE)) * pu
-         WHEN nc2 IS NOT NULL THEN
-           ((0.75 * CAST(n1fw2m AS DOUBLE)) / CAST(nc2 AS DOUBLE)) * pu
-         ELSE pu
-       END"""
-
-  /** Top (trigram) level: raw counts c123/c12, interpolation weight
-    * D·N1+(w1w2•)/c(w1w2), recursing into the already-computed middle
-    * probability `pb`. Unseen context backs off to `pb` entirely. */
-  private[graft] val Kn3PSql: String =
-    """CASE
-         WHEN c123 IS NOT NULL THEN
-           ((CAST(c123 AS DOUBLE) - 0.75) / CAST(c12 AS DOUBLE))
-           + ((0.75 * CAST(n1fw12 AS DOUBLE)) / CAST(c12 AS DOUBLE)) * pb
-         WHEN c12 IS NOT NULL THEN
-           ((0.75 * CAST(n1fw12 AS DOUBLE)) / CAST(c12 AS DOUBLE)) * pb
-         ELSE pb
-       END"""
-
-  /** Interpolated Kneser–Ney word-TRIGRAM perplexity — [[knBigramScore]]
-    * generalized to order 3 with the full recursive backoff (the KenLM
-    * shape: Chen & Goodman 1998 interpolated KN, fixed D = 0.75):
-    *
-    *   P(w₃|w₁w₂) = (c(w₁w₂w₃)−D)/c(w₁w₂)
-    *              + (D·N1+(w₁w₂•)/c(w₁w₂)) · P_KN(w₃|w₂)
-    *   P_KN(w₃|w₂) = (N1+(•w₂w₃)−D)/N1+(•w₂•)
-    *              + (D·N1+(w₂•)/N1+(•w₂•)) · N1+(•w₃)/N1+(••)
-    *
-    * EVERY lower-order quantity derives from the ONE trigram-count
-    * table (continuation counts, the Kneser–Ney insight) — training
-    * stays a single map-side-combined corpus pass; the middle/unigram
-    * tables are vocabulary-bounded aggregates of it. No sentence
-    * markers: a bigram occurring only at document edges has no
-    * enclosing trigram and backs off (KenLM's <s> padding is a corpus
-    * prep choice, not an operator one).
-    *
-    * Determinism: the ONE-shared-formula-string discipline of the
-    * bigram op, layered — `pu`, `pb`, `p` are each computed as their
-    * own column from a literal shared with the oracle ([[Kn3PuSql]] /
-    * [[Kn3PbSql]] / [[Kn3PSql]]), so the IEEE op order is identical on
-    * both engines; per-trigram integer micro-bits ([[KnTermSql]], flat
-    * 30-bit OOV when the continuation mass is zero) make the per-doc
-    * sum order-free. Short docs (< 3 words) re-emit as (0, 0.0).
-    * Output: (idCol, n_trigrams, bits_per_trigram). */
-  def knTrigramScore(
-      docs: DataFrame,
-      train: DataFrame,
-      idCol: String,
-      textCol: String,
-      scope: CacheScope = CacheScope.global): DataFrame = {
-    graft.GraftExtensions.install(docs.sparkSession)
-    def trigramsOf(df: DataFrame, cols: Column*): DataFrame = df
-      .withColumn("__toks__", TextOps.letterWords(textCol))
-      .where(size(col("__toks__")) >= 3 &&
-        element_at(col("__toks__"), 1) =!= "")
-      .select(cols :+ explode(TextOps.wordShingles("__toks__", 3)).as("tg"): _*)
-    val tb3 = scope.cache(trigramsOf(train)
-      .groupBy(col("tg")).agg(count(lit(1)).as("c123")))
-    val ctx = tb3
-      .groupBy(substring_index(col("tg"), " ", 2).as("bg12"))
-      .agg(sum(col("c123")).as("c12"), count(lit(1)).as("n1fw12"))
-    val mid = scope.cache(tb3
-      .groupBy(substring_index(col("tg"), " ", -2).as("bg23"))
-      .agg(count(lit(1)).as("n1bw23")))
-    val midctx = mid
-      .groupBy(expr("split(bg23, ' ')[0]").as("w2m"))
-      .agg(sum(col("n1bw23")).as("nc2"), count(lit(1)).as("n1fw2m"))
-    val uni3 = mid
-      .groupBy(expr("split(bg23, ' ')[1]").as("w3"))
-      .agg(count(lit(1)).as("n1bw3"))
-    val tot = mid.agg(count(lit(1)).as("nuni"))
-    val scored = trigramsOf(docs, col(idCol))
-      .withColumn("bg12", substring_index(col("tg"), " ", 2))
-      .withColumn("bg23", substring_index(col("tg"), " ", -2))
-      .withColumn("w2m", expr("split(tg, ' ')[1]"))
-      .withColumn("w3", expr("split(tg, ' ')[2]"))
-      .join(tb3, Seq("tg"), "left")
-      .join(ctx, Seq("bg12"), "left")
-      .join(mid, Seq("bg23"), "left")
-      .join(midctx, Seq("w2m"), "left")
-      .join(uni3, Seq("w3"), "left")
-      .crossJoin(broadcast(tot)) // 1-row model parameter attach
-      .withColumn("pu", expr(Kn3PuSql))
-      .withColumn("pb", expr(Kn3PbSql))
-      .withColumn("p", expr(Kn3PSql))
-      .withColumn("__mb__", expr(KnTermSql))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"), sum(col("__mb__")).as("__s__"))
-      .select(col(idCol), col("n_trigrams"),
-        round(col("__s__").cast("double") / col("n_trigrams").cast("double")
-          / lit(1000000.0), 6).as("bits_per_trigram"))
-    docs.select(col(idCol)).distinct()
-      .join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
-        coalesce(col("bits_per_trigram"), lit(0.0)).as("bits_per_trigram"))
-  }
 
   /** Per-level interpolated-KN probability formula, GENERATED (one
     * source of truth for the Spark lowering AND the oracle): level 1 is
@@ -326,21 +115,32 @@ object LangModel {
          ELSE p${k - 1}
        END"""
 
-  /** Interpolated Kneser–Ney word N-GRAM perplexity for ANY order ≥ 2 —
-    * the full KenLM shape (KenLM ships order 5): one raw N-gram-count
-    * pass over the trusted slice, then EVERY lower level's
-    * adjusted-count table derives recursively by the Kneser–Ney rule
-    * (level-k count of gram u = number of DISTINCT left extensions of u
-    * among level-(k+1) SEEN grams), contexts aggregate per level, and
-    * scoring LEFT-joins the 2(N−1)+1 vocabulary-bounded model tables
+  /** Interpolated Kneser–Ney word N-GRAM perplexity for any order 2..8
+    * (Kneser & Ney 1995; Chen & Goodman 1998's interpolated form, fixed
+    * discount D = 0.75) — the word-level LM quality scorer the CCNet
+    * pipeline runs (KenLM is KN-smoothed and ships order 5):
+    *
+    *   P(wₖ|ctx) = (c(ctx wₖ) − D)/c(ctx)
+    *             + (D·N1+(ctx •)/c(ctx)) · P_KN(wₖ|shorter ctx)
+    *
+    * down to the continuation distribution N1+(•w)/N1+(••) as the
+    * unigram base (the "how many contexts" estimate that makes KN beat
+    * raw counts). One raw N-gram-count pass over the trusted slice, then
+    * every lower level's adjusted-count table derives by the Kneser–Ney
+    * rule (level-k count of gram u = number of DISTINCT left extensions
+    * of u among level-(k+1) SEEN grams), contexts aggregate per level,
+    * and scoring LEFT-joins the 2(N−1)+1 vocabulary-bounded model tables
     * (AQE broadcasts them) before folding the probability chain
     * p1 → … → pN with the per-level generated formula ([[knLevelPSql]],
-    * shared verbatim with the oracle — the layered IEEE-order
-    * discipline of the bigram/trigram ops, which this generalizes:
-    * LlmSpec pins order 2 ≡ [[knBigramScore]] and order 3 ≡
-    * [[knTrigramScore]] value-for-value). Integer micro-bit terms
-    * ([[KnTermSql]]) keep per-doc sums order-free; short docs
-    * (< order words) re-emit as (0, 0.0).
+    * shared verbatim with the oracle, so the IEEE op order is identical
+    * on both engines). Unseen contexts back off entirely; an unseen last
+    * word takes a flat 30-bit OOV penalty. Tokenization = the shared
+    * Unicode tokenizer norm ([[TextOps.letterWords]]); no sentence
+    * markers (KenLM's <s> padding is a corpus prep choice). Integer
+    * micro-bit terms ([[KnTermSql]]) keep per-doc sums order-free; short
+    * docs (< order words) re-emit as (0, 0.0). Orders 2 and 3 serve
+    * q_lm_kn and q_lm_kn3, whose oracles replay the dedicated bigram and
+    * trigram formulas value-for-value.
     * Output: (idCol, n_ngrams, bits_per_ngram). */
   def knNgramScore(
       docs: DataFrame,
@@ -350,16 +150,15 @@ object LangModel {
       order: Int = 5,
       scope: CacheScope = CacheScope.global,
       prune: Seq[Long] = Seq.empty): DataFrame = {
-    val n = order
-    val seen = knPruned(knLevelTables(train, textCol, order, scope), prune)
+    val seen = knPruned(levelTables(train, textCol, order, scope, knCount),
+      prune)
     // per-level ctx aggregates over the cached level tables, as in r17:
     // a fused all-levels ctx aggregate (union + one groupBy + cache) was
     // built and MEASURED this round — the extra InMemoryRelation encode
     // of the model-sized union cost more than the removed stages
     // (q_lm_kn5 4.3 → 5.3 s steady) and was reverted per guide §1.1
-    def ctx(k: Int): DataFrame = knCtxTable(seen(k), k)
-    val tot1 = seen(1).agg(sum(col("cnt1")).as("tot1"))
-    knScoreFromTables(docs, idCol, textCol, n, seen(_), Some(ctx), tot1)
+    knScoreFromTables(docs, idCol, textCol, order, seen(_),
+      Some(k => knCtxTable(seen(k), k)), tot1Of(seen(1)))
   }
 
   /** KenLM-style count PRUNING (`--prune` thresholds, one per level
@@ -415,48 +214,24 @@ object LangModel {
       textCol: String,
       order: Int = 5,
       scope: CacheScope = CacheScope.global): DataFrame = {
-    require(order >= 2 && order <= 8, "order must be in [2, 8]")
-    graft.GraftExtensions.install(train.sparkSession)
-    val n = order
-    val topGrams = scope.cache(knGramsOf(train, textCol, n)
-      .groupBy(col("tg").as("g")).agg(count(lit(1)).as("cnt")))
-    // ALL lower suffix-sum levels from ONE fused aggregate (guide §2.3 —
-    // the old derivation was N−1 SEQUENTIAL cached shuffles): suffix
-    // sums TELESCOPE — cnt_k(u) = Σ_{(k+1)-grams v: suffix_k(v)=u}
-    // cnt_{k+1}(v) = Σ_{N-grams g: suffix_k(g)=u} cnt_N(g) — so every
-    // level k < N is one explode of the N-gram table into its
-    // 1..(N−1)-word suffixes weighted by cnt_N and one grouped sum (a
-    // key's word count is its level; levels cannot collide).
-    // Sequential suffix-sum chain + per-level ctx pre-merge joins, the
-    // r17 shape, deliberately: both fused alternatives were built and
-    // MEASURED this round and regressed at sf0.1 — (a) telescoping the
-    // suffix sums into one explode+aggregate shuffles the 4×-exploded
-    // suffix set where the chain shuffles each shrinking level once, and
-    // (b) collapsing the per-level seen⋈ctx joins into one window over
-    // the fused level union pays a model-sized extra InMemoryRelation
-    // encode (q_lm_sb5 3.7 → 3.95 s steady, cpu 28 → 37 s). Reverted per
-    // guide §1.1; the family is model-table-volume bound at this scale,
-    // not stage-count bound.
-    val seen = new Array[DataFrame](n + 1)
-    seen(n) = topGrams.withColumnRenamed("cnt", s"cnt$n")
-    for (k <- (n - 1) to 1 by -1)
-      seen(k) = scope.cache(seen(k + 1)
-        .groupBy(substring_index(col("g"), " ", -k).as("g"))
-        .agg(sum(col(s"cnt${k + 1}")).as(s"cnt$k")))
+    val seen = levelTables(train, textCol, order, scope, sbSuffixSum)
     // SB's formula reads tot_k only on gram-HIT rows, so each level's
     // context total pre-merges onto the gram rows at the model layer
     // (vocabulary-bounded join; every gram's context exists by
     // construction) and scoring probes N tables instead of 2N−1 —
     // identical values, half the broadcast builds per scored corpus.
+    // Collapsing these per-level joins into one window over the fused
+    // level union was MEASURED and regressed: it pays a model-sized
+    // extra InMemoryRelation encode (q_lm_sb5 3.7 → 3.95 s steady,
+    // cpu 28 → 37 s at sf0.1), reverted per guide §1.1.
     def seenTot(k: Int): DataFrame =
       if (k == 1) seen(1)
       else seen(k)
         .join(knCtxTable(seen(k), k),
           substring_index(col("g"), " ", k - 1) === col(s"c$k"))
         .select(col("g"), col(s"cnt$k"), col(s"tot$k"))
-    val tot1 = seen(1).agg(sum(col("cnt1")).as("tot1"))
-    knScoreFromTables(docs, idCol, textCol, n, seenTot, None, tot1,
-      sbLevelPSql)
+    knScoreFromTables(docs, idCol, textCol, order, seenTot, None,
+      tot1Of(seen(1)), sbLevelPSql)
   }
 
   /** Model-size PROFILE of the order-N KN model — the artifact report a
@@ -469,14 +244,8 @@ object LangModel {
       textCol: String,
       order: Int = 5,
       scope: CacheScope = CacheScope.global): DataFrame = {
-    val seen = knLevelTables(train, textCol, order, scope)
-    (1 to order).map { k =>
-      seen(k).agg(
-        count(lit(1)).as("n_grams"),
-        sum(col(s"cnt$k")).as("total_count"))
-        .select(lit(k.toLong).as("level"), col("n_grams"),
-          col("total_count"))
-    }.reduce(_.unionByName(_))
+    val seen = levelTables(train, textCol, order, scope, knCount)
+    levelProfile(order, seen(_))
   }
 
   /** [[knModelProfile]] read from a PERSISTED [[knNgramFit]] artifact —
@@ -489,15 +258,19 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       order: Int = 5): DataFrame = {
-    require(order >= 2 && order <= 8, "order must be in [2, 8]")
+    requireOrder(order)
+    levelProfile(order, k => stored(spark, dir, s"level$k"))
+  }
+
+  /** One (level, n_grams, total_count) row per level 1..order. */
+  private def levelProfile(order: Int, level: Int => DataFrame): DataFrame =
     (1 to order).map { k =>
-      spark.read.parquet(s"$dir/level$k").agg(
+      level(k).agg(
         count(lit(1)).as("n_grams"),
         sum(col(s"cnt$k")).as("total_count"))
         .select(lit(k.toLong).as("level"), col("n_grams"),
           col("total_count"))
     }.reduce(_.unionByName(_))
-  }
 
   /** INCREMENTAL maintenance of a persisted UNPRUNED [[knNgramFit]]
     * model — the 100 TB production shape: adding a crawl shard must not
@@ -506,21 +279,22 @@ object LangModel {
     * table merges by count addition (raw window counts are exactly
     * additive across a document-disjoint shard union — grams never
     * cross document boundaries), and every lower adjusted-count level
-    * re-derives from the merged level-N table by the same Kneser–Ney
-    * rule the full fit uses — a gram-table-sized (Heaps-bounded)
-    * aggregation chain, not a corpus pass. Writes the updated model to
-    * `dstDir` (versioned-artifact update — never in-place, so a crash
-    * mid-write cannot corrupt the serving model and readers of `srcDir`
-    * are undisturbed). The result is bit-identical to a full refit on
-    * the combined corpus (spec-pinned). NOT valid on a count-pruned
-    * model: pruning discards the singleton tail the merge needs. */
+    * re-derives from the merged level-N table by the same level step
+    * ([[lowerLevel]]) the full fit uses — a gram-table-sized
+    * (Heaps-bounded) aggregation chain, not a corpus pass. Writes the
+    * updated model to `dstDir` (versioned-artifact update — never
+    * in-place, so a crash mid-write cannot corrupt the serving model and
+    * readers of `srcDir` are undisturbed). The result is bit-identical
+    * to a full refit on the combined corpus (spec-pinned). NOT valid on
+    * a count-pruned model: pruning discards the singleton tail the merge
+    * needs. */
   def knNgramFitDelta(
       newDocs: DataFrame,
       textCol: String,
       srcDir: String,
       dstDir: String,
       order: Int = 5): Unit = {
-    require(order >= 2 && order <= 8, "order must be in [2, 8]")
+    requireOrder(order)
     require(srcDir != dstDir,
       "delta fit writes a new model version; srcDir must differ from dstDir")
     graft.GraftExtensions.install(newDocs.sparkSession)
@@ -538,23 +312,16 @@ object LangModel {
           "maintenance.")
     }
     val n = order
-    val deltaN = knGramsOf(newDocs, textCol, n)
-      .groupBy(col("tg").as("g")).agg(count(lit(1)).as(s"cnt$n"))
-    val seen = new Array[DataFrame](n + 1)
-    seen(n) = spark.read.parquet(s"$srcDir/level$n")
-      .unionByName(deltaN)
+    stored(spark, srcDir, s"level$n")
+      .unionByName(topLevel(newDocs, textCol, n))
       .groupBy(col("g")).agg(sum(col(s"cnt$n")).as(s"cnt$n"))
-    seen(n).write.mode("overwrite").parquet(s"$dstDir/level$n")
-    for (k <- (n - 1) to 1 by -1) {
-      // derive from the WRITTEN upper level (read back) so the lineage
-      // per level is one scan + one aggregate, not a re-derivation chain
-      seen(k) = spark.read.parquet(s"$dstDir/level${k + 1}")
-        .groupBy(substring_index(col("g"), " ", -k).as("g"))
-        .agg(count(lit(1)).as(s"cnt$k"))
-      seen(k).write.mode("overwrite").parquet(s"$dstDir/level$k")
-    }
-    spark.read.parquet(s"$dstDir/level1")
-      .agg(sum(col("cnt1")).as("tot1"))
+      .write.mode("overwrite").parquet(s"$dstDir/level$n")
+    // derive from the WRITTEN upper level (read back) so the lineage
+    // per level is one scan + one aggregate, not a re-derivation chain
+    for (k <- (n - 1) to 1 by -1)
+      lowerLevel(stored(spark, dstDir, s"level${k + 1}"), k, knCount)
+        .write.mode("overwrite").parquet(s"$dstDir/level$k")
+    tot1Of(stored(spark, dstDir, "level1"))
       .write.mode("overwrite").parquet(s"$dstDir/tot1")
     // ctx tables are deliberately NOT materialized here: the serve path
     // derives them on the fly when absent (value-identical), and
@@ -565,33 +332,54 @@ object LangModel {
     writePruneMarker(spark, dstDir, Seq.empty)
   }
 
+  private def requireOrder(order: Int): Unit =
+    require(order >= 2 && order <= 8, "order must be in [2, 8]")
+
+  /** Level derivation aggregates for [[lowerLevel]]: Kneser–Ney counts
+    * the DISTINCT left extensions of a gram among the level above;
+    * Stupid Backoff sums the counts of the grams it is a suffix of. */
+  private val knCount: Int => Column = _ => count(lit(1))
+  private val sbSuffixSum: Int => Column = k => sum(col(s"cnt${k + 1}"))
+
+  /** Level k from level k + 1: one row per k-word suffix of the upper
+    * level's grams, counted by `agg(k)`. */
+  private def lowerLevel(
+      upper: DataFrame, k: Int, agg: Int => Column): DataFrame = upper
+    .groupBy(substring_index(col("g"), " ", -k).as("g"))
+    .agg(agg(k).as(s"cnt$k"))
+
+  /** The raw order-n level: one row per n-gram of `df` with its count. */
+  private def topLevel(df: DataFrame, textCol: String, n: Int): DataFrame =
+    knGramsOf(df, textCol, n)
+      .groupBy(col("tg").as("g")).agg(count(lit(1)).as(s"cnt$n"))
+
+  /** The 1-row unigram total the level-1 formula divides by. */
+  private def tot1Of(level1: DataFrame): DataFrame =
+    level1.agg(sum(col("cnt1")).as("tot1"))
+
   /** The order-N model's level tables: seen(k) = one row per SEEN k-gram
-    * with its level-k count — raw at k = N, adjusted (distinct left
-    * extensions among level-(k+1) seen grams) below. Index 1..N. */
-  private def knLevelTables(
+    * with its level-k count — raw at k = N, derived below by
+    * [[lowerLevel]] with `agg` ([[knCount]] or [[sbSuffixSum]]).
+    * Index 1..N. */
+  private def levelTables(
       train: DataFrame,
       textCol: String,
       order: Int,
-      scope: CacheScope): Array[DataFrame] = {
-    require(order >= 2 && order <= 8, "order must be in [2, 8]")
+      scope: CacheScope,
+      agg: Int => Column): Array[DataFrame] = {
+    requireOrder(order)
     graft.GraftExtensions.install(train.sparkSession)
-    val n = order
-    val seen = new Array[DataFrame](n + 1)
-    // Sequential suffix-count chain, deliberately: a fused
-    // one-aggregate derivation (explode every N-gram into its 2..N-word
-    // suffixes + distinct + grouped count) was built and MEASURED this
-    // round — it halves the stage count but shuffles the 4×-exploded
-    // suffix set TWICE (distinct, then count) where the chain shuffles
-    // each shrinking level once; q_lm_kn5 regressed 4.3 → 5.8 s wall /
-    // 28 → 42 s cpu at sf0.1 and the rewrite was reverted per guide
-    // §1.1. (The fused CONTEXT aggregate below survived measurement —
-    // it shuffles each level exactly once.)
-    seen(n) = scope.cache(knGramsOf(train, textCol, n)
-      .groupBy(col("tg").as("g")).agg(count(lit(1)).as(s"cnt$n")))
-    for (k <- (n - 1) to 1 by -1)
-      seen(k) = scope.cache(seen(k + 1)
-        .groupBy(substring_index(col("g"), " ", -k).as("g"))
-        .agg(count(lit(1)).as(s"cnt$k")))
+    val seen = new Array[DataFrame](order + 1)
+    // Sequential level chain, deliberately: two fused derivations were
+    // built and MEASURED — every N-gram exploded into its lower-level
+    // suffixes and aggregated once (KN needs a distinct, then a count)
+    // shuffles the 4×-exploded suffix set where the chain shuffles each
+    // shrinking level once; q_lm_kn5 regressed 4.3 → 5.8 s wall /
+    // 28 → 42 s cpu at sf0.1, and the telescoped SB suffix sum regressed
+    // q_lm_sb5 the same way. Both were reverted per guide §1.1.
+    seen(order) = scope.cache(topLevel(train, textCol, order))
+    for (k <- (order - 1) to 1 by -1)
+      seen(k) = scope.cache(lowerLevel(seen(k + 1), k, agg))
     seen
   }
 
@@ -601,19 +389,22 @@ object LangModel {
     .groupBy(substring_index(col("g"), " ", k - 1).as(s"c$k"))
     .agg(sum(col(s"cnt$k")).as(s"tot$k"), count(lit(1)).as(s"nfw$k"))
 
-  /** ALL levels' context aggregates (k = 2..N) in ONE fused aggregate —
-    * [[knCtxTable]] per level was N−1 separate shuffles re-run inside
-    * every serve. A context key's word count is k−1, so levels cannot
-    * collide and one groupBy over the tagged level union computes every
-    * table; [[knCtxOfAll]] filters the cached result per level. Runs on
-    * the (possibly pruned) seen tables, exactly like the per-level
-    * formulation. */
+  /** The n-word shingles of `df`'s text column, one row per occurrence
+    * in `tg`, next to `cols`; documents shorter than n words emit none. */
   private def knGramsOf(
       df: DataFrame, textCol: String, n: Int, cols: Column*): DataFrame = df
     .withColumn("__toks__", TextOps.letterWords(textCol))
     .where(size(col("__toks__")) >= n &&
       element_at(col("__toks__"), 1) =!= "")
     .select(cols :+ explode(TextOps.wordShingles("__toks__", n)).as("tg"): _*)
+
+  /** A table of a persisted model artifact, read through the schema
+    * resolver (one inference per file version, none on a warm serve). */
+  private def stored(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      table: String): DataFrame =
+    graft.sources.ParquetIO.read(spark, s"$dir/$table")
 
   /** PERSIST the order-N KN model — the train-once / score-many shape a
     * production LM filter runs (KenLM serializes its model the same
@@ -629,11 +420,11 @@ object LangModel {
       order: Int = 5,
       scope: CacheScope = CacheScope.global,
       prune: Seq[Long] = Seq.empty): Unit = {
-    val seen = knPruned(knLevelTables(train, textCol, order, scope), prune)
+    val seen = knPruned(levelTables(train, textCol, order, scope, knCount),
+      prune)
     for (k <- 1 to order)
       seen(k).write.mode("overwrite").parquet(s"$dir/level$k")
-    seen(1).agg(sum(col("cnt1")).as("tot1"))
-      .write.mode("overwrite").parquet(s"$dir/tot1")
+    tot1Of(seen(1)).write.mode("overwrite").parquet(s"$dir/tot1")
     // persist the context aggregates (post-prune, exactly what scoring
     // probes) so serves are pure scans — the KenLM stored-backoff shape
     for (k <- 2 to order)
@@ -683,10 +474,9 @@ object LangModel {
       textCol: String,
       dir: String,
       order: Int = 5): DataFrame = {
-    require(order >= 2 && order <= 8, "order must be in [2, 8]")
-    graft.GraftExtensions.install(docs.sparkSession)
+    requireOrder(order)
     val spark = docs.sparkSession
-    def seen(k: Int): DataFrame = spark.read.parquet(s"$dir/level$k")
+    def seen(k: Int): DataFrame = stored(spark, dir, s"level$k")
     // the fit persists the context aggregates next to the level tables
     // (KenLM stores its backoff tables the same way) so every serve is
     // pure scans — re-aggregating them per serve was N−1 shuffles per
@@ -696,14 +486,13 @@ object LangModel {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
     def ctx(k: Int): DataFrame =
-      if (ctxPersisted) spark.read.parquet(s"$dir/ctx$k")
+      if (ctxPersisted) stored(spark, dir, s"ctx$k")
       else knCtxTable(seen(k), k)
     // re-aggregate the 1-row artifact so the cross join's build side is
     // PROVABLY single-row in the plan (a bare file scan is not — the
     // whole-suite BNLJ lint rejects it), at the cost of nothing: the
     // file holds exactly one row, max = the value
-    val tot1 = spark.read.parquet(s"$dir/tot1")
-      .agg(max(col("tot1")).as("tot1"))
+    val tot1 = stored(spark, dir, "tot1").agg(max(col("tot1")).as("tot1"))
     knScoreFromTables(docs, idCol, textCol, order, seen, Some(ctx), tot1)
   }
 
@@ -723,13 +512,12 @@ object LangModel {
     * is estimated to EXCEED the session's broadcast threshold, the model
     * joins will shuffle the doc-gram frame 2N−1 times — so instead each
     * distinct gram text scores ONCE through the chain and per-doc
-    * occurrence counts re-attach after (integer micro-bits make
-    * Σ_occ mb ≡ Σ_distinct occ·mb bit-identical). Below the threshold
-    * the chain is all broadcast probes and the two occurrence-scale
-    * shuffles the rewrite adds are a measured local REGRESSION (r17) —
-    * so the gate follows the join strategy the planner will pick.
-    * `spark.graft.lm.scoreDistinctGrams` ∈ {auto, always, never}
-    * overrides (the value-parity spec pins `always` ≡ `never`). */
+    * occurrence counts (`__occ__`) re-attach after (integer micro-bits
+    * make Σ_occ mb ≡ Σ_distinct occ·mb bit-identical). Below the
+    * threshold the chain is all broadcast probes and the two
+    * occurrence-scale shuffles the rewrite adds are a measured local
+    * REGRESSION (r17) — so the gate follows the join strategy the
+    * planner will pick. */
   private def knScoreFromTables(
       docs: DataFrame,
       idCol: String,
@@ -739,6 +527,7 @@ object LangModel {
       ctx: Option[Int => DataFrame],
       tot1: DataFrame,
       pSql: Int => String = knLevelPSql): DataFrame = {
+    graft.GraftExtensions.install(docs.sparkSession)
     // attach the model to a frame carrying gram texts in `tg` and fold
     // the probability chain into integer micro-bits (`__mb__`)
     def attachModel(grams: DataFrame): DataFrame = {
@@ -765,22 +554,12 @@ object LangModel {
         .withColumn("p", col(s"p$n"))
         .withColumn("__mb__", expr(KnTermSql))
     }
-    val spark = docs.sparkSession
-    val mode = spark.conf.get("spark.graft.lm.scoreDistinctGrams", "auto")
-    val distinctGrams = mode match {
-      case "always" => true
-      case "never"  => false
-      case _ =>
-        val thresh =
-          try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-          catch { case _: Throwable => 10L << 20 }
-        // threshold < 0 disables auto-broadcast: the model joins shuffle
-        // either way, so the distinct-gram probe-side cut always pays
-        thresh < 0 ||
-          seen(n).queryExecution.optimizedPlan.stats.sizeInBytes
-            .toDouble > thresh.toDouble
-    }
+    // threshold < 0 disables auto-broadcast: the model joins shuffle
+    // either way, so the distinct-gram probe-side cut always pays
+    val thresh = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val distinctGrams = thresh < 0 ||
+      seen(n).queryExecution.optimizedPlan.stats.sizeInBytes
+        .toDouble > thresh.toDouble
     val agg0 =
       if (!distinctGrams)
         attachModel(knGramsOf(docs, textCol, n, col(idCol)))

@@ -14,21 +14,24 @@ object LmOps {
     // --- interpolated Kneser–Ney WORD-bigram LM perplexity (Kneser &
     //     Ney 1995; Chen & Goodman 1998; the KenLM smoothing CCNet
     //     scores with): trained on the doc_id%4=0 trusted slice, scoring
-    //     every doc; the P formula is ONE shared SQL string on both
-    //     engines (bit-identical IEEE order), per-bigram integer
-    //     micro-bits, 30-bit OOV penalty ---
+    //     every doc through the order-N scorer at order 2; per-bigram
+    //     integer micro-bits, 30-bit OOV penalty ---
     Op("q_lm_kn", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          graft.llm.LangModel.knBigramScore(
-            df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text")
+          graft.llm.LangModel.knNgramScore(
+            df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text",
+            order = 2)
+            .withColumnsRenamed(Map("n_ngrams" -> "n_bigrams",
+              "bits_per_ngram" -> "bits_per_bigram"))
         }
         .sort(col("doc_id"))
         .run(s),
-      // Interpolated-KN word-bigram replay: training tables from the
-      // doc_id%4=0 slice's bigram counts, the SHARED KnPSql/KnTermSql
-      // literals (same IEEE op order as the Spark lowering), integer
-      // micro-bit terms, short docs re-emitted (0, 0.0).
+      // Interpolated-KN word-bigram replay, written as the dedicated
+      // bigram model: training tables from the doc_id%4=0 slice's bigram
+      // counts, the KnPSql formula (the same IEEE op order as the
+      // order-2 level chain knLevelPSql(1..2) the Spark lowering folds),
+      // KnTermSql micro-bit terms, short docs re-emitted (0, 0.0).
       (s"""WITH ktx AS (
            SELECT doc_id, regexp_split_to_array(
              trim(regexp_replace(lower(nfc_normalize(text)), '[^\\p{L}]+', ' ', 'g')),
@@ -58,7 +61,7 @@ object LmOps {
            LEFT JOIN kuni u ON u.w1 = string_split(b.bg, ' ')[1]
            LEFT JOIN kcont co ON co.w2 = string_split(b.bg, ' ')[2]
            CROSS JOIN kn12 n),
-         kp AS (SELECT doc_id, ${graft.llm.LangModel.KnPSql} AS p FROM kjoin),
+         kp AS (SELECT doc_id, $KnPSql AS p FROM kjoin),
          kterm AS (SELECT doc_id, ${graft.llm.LangModel.KnTermSql} AS mb FROM kp),
          kagg AS (
            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
@@ -75,21 +78,25 @@ object LmOps {
 
     // --- interpolated KN TRIGRAM perplexity (KenLM shape: order-3 with
     //     full recursive continuation-count backoff, D = 0.75; all
-    //     lower-order tables derive from the one trigram-count table) —
-    //     layered shared-formula strings keep both engines IEEE-identical
-    //     per level, integer micro-bit terms keep sums order-free ---
+    //     lower-order tables derive from the one trigram-count table),
+    //     served by the order-N scorer at order 3; integer micro-bit
+    //     terms keep sums order-free ---
     Op("q_lm_kn3", (s, dir) =>
       m(dir, "documents")
         .native { df =>
-          graft.llm.LangModel.knTrigramScore(
-            df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text")
+          graft.llm.LangModel.knNgramScore(
+            df, df.where(F.col("doc_id") % 4 === 0), "doc_id", "text",
+            order = 3)
+            .withColumnsRenamed(Map("n_ngrams" -> "n_trigrams",
+              "bits_per_ngram" -> "bits_per_trigram"))
         }
         .sort(col("doc_id"))
         .run(s),
-      // KN TRIGRAM replay: one trigram-count table from the doc_id%4=0
-      // slice; context/middle/unigram tables derived from it exactly as
-      // the operator does; the layered SHARED Kn3Pu/Kn3Pb/Kn3P literals +
-      // KnTermSql micro-bits.
+      // KN TRIGRAM replay, written as the dedicated trigram model: one
+      // trigram-count table from the doc_id%4=0 slice; context/middle/
+      // unigram tables derived from it by the continuation-count rule;
+      // the layered Kn3Pu/Kn3Pb/Kn3P formulas (the IEEE op order of
+      // knLevelPSql(1..3)) + KnTermSql micro-bits.
       (s"""WITH k3x AS (
            SELECT doc_id, regexp_split_to_array(
              trim(regexp_replace(lower(nfc_normalize(text)), '[^\\p{L}]+', ' ', 'g')),
@@ -137,13 +144,13 @@ object LmOps {
            CROSS JOIN k3n n),
          k3pu AS (
            SELECT doc_id, c123, c12, n1fw12, n1bw23, nc2, n1fw2m,
-                  ${graft.llm.LangModel.Kn3PuSql} AS pu
+                  $Kn3PuSql AS pu
            FROM k3j),
          k3pb AS (
            SELECT doc_id, c123, c12, n1fw12,
-                  ${graft.llm.LangModel.Kn3PbSql} AS pb
+                  $Kn3PbSql AS pb
            FROM k3pu),
-         k3p AS (SELECT doc_id, ${graft.llm.LangModel.Kn3PSql} AS p FROM k3pb),
+         k3p AS (SELECT doc_id, $Kn3PSql AS p FROM k3pb),
          k3t AS (SELECT doc_id, ${graft.llm.LangModel.KnTermSql} AS mb FROM k3p),
          k3a AS (
            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
@@ -407,6 +414,67 @@ object LmOps {
                 count(*) AS n, min(bits) AS min_bits, max(bits) AS max_bits
          FROM scored, cuts GROUP BY 1 ORDER BY 1"""),
   )
+
+  /** The q_lm_kn oracle's interpolated-KN bigram probability. Expects
+    * columns c12 (bigram count, NULL if unseen), c1/n1fw (left-word
+    * count / distinct continuations, NULL if w1 unseen), n1bw (distinct
+    * left contexts of w2, NULL if w2 unseen), n12 (total distinct
+    * bigrams). D = 0.75 fixed; c12 ≥ 1 makes max(c12−D, 0) redundant.
+    * Operation for operation it is LangModel.knLevelPSql(2) over p1 =
+    * knLevelPSql(1): cnt2 = c12, tot2 = c1, nfw2 = n1fw, cnt1 = n1bw,
+    * tot1 = n12. */
+  private val KnPSql: String =
+    """CASE
+         WHEN c12 IS NOT NULL THEN
+           ((CAST(c12 AS DOUBLE) - 0.75) / CAST(c1 AS DOUBLE))
+           + ((0.75 * CAST(n1fw AS DOUBLE)) / CAST(c1 AS DOUBLE))
+             * (coalesce(CAST(n1bw AS DOUBLE), CAST(0 AS DOUBLE))
+                / CAST(n12 AS DOUBLE))
+         WHEN c1 IS NOT NULL THEN
+           ((0.75 * CAST(n1fw AS DOUBLE)) / CAST(c1 AS DOUBLE))
+             * (coalesce(CAST(n1bw AS DOUBLE), CAST(0 AS DOUBLE))
+                / CAST(n12 AS DOUBLE))
+         ELSE coalesce(CAST(n1bw AS DOUBLE), CAST(0 AS DOUBLE))
+              / CAST(n12 AS DOUBLE)
+       END"""
+
+  /** The q_lm_kn3 oracle's continuation-unigram base level:
+    * N1+(•w3)/N1+(••) over the distinct-(w2,w3)-with-left-context table.
+    * Expects n1bw3 (NULL if w3 unseen) and nuni. */
+  private val Kn3PuSql: String =
+    """coalesce(CAST(n1bw3 AS DOUBLE), CAST(0 AS DOUBLE))
+       / CAST(nuni AS DOUBLE)"""
+
+  /** The q_lm_kn3 oracle's middle (bigram) level, built from
+    * CONTINUATION counts the KN way: "counts" are N1+(•w2w3) (distinct
+    * left contexts of the bigram in the trigram table), the context mass
+    * is N1+(•w2•) = nc2 and the interpolation weight uses
+    * N1+(w2•) = n1fw2m (distinct continuations of w2 among trigram
+    * middles). NULL-keyed backoff: bigram unseen → weight·pu; middle
+    * word unseen → pu alone. Same fixed D = 0.75. */
+  private val Kn3PbSql: String =
+    """CASE
+         WHEN n1bw23 IS NOT NULL THEN
+           ((CAST(n1bw23 AS DOUBLE) - 0.75) / CAST(nc2 AS DOUBLE))
+           + ((0.75 * CAST(n1fw2m AS DOUBLE)) / CAST(nc2 AS DOUBLE)) * pu
+         WHEN nc2 IS NOT NULL THEN
+           ((0.75 * CAST(n1fw2m AS DOUBLE)) / CAST(nc2 AS DOUBLE)) * pu
+         ELSE pu
+       END"""
+
+  /** The q_lm_kn3 oracle's top (trigram) level: raw counts c123/c12,
+    * interpolation weight D·N1+(w1w2•)/c(w1w2), recursing into the
+    * middle probability `pb`. Unseen context backs off to `pb`
+    * entirely. */
+  private val Kn3PSql: String =
+    """CASE
+         WHEN c123 IS NOT NULL THEN
+           ((CAST(c123 AS DOUBLE) - 0.75) / CAST(c12 AS DOUBLE))
+           + ((0.75 * CAST(n1fw12 AS DOUBLE)) / CAST(c12 AS DOUBLE)) * pb
+         WHEN c12 IS NOT NULL THEN
+           ((0.75 * CAST(n1fw12 AS DOUBLE)) / CAST(c12 AS DOUBLE)) * pb
+         ELSE pb
+       END"""
 
   /** The char-bigram perplexity oracles' model and per-doc sums: letters
     * normalized, an add-0.5 bigram model trained on the doc_id % 10 < 8

@@ -81,12 +81,15 @@ class EntrySpec extends GraftSuite {
     // A schemaless read runs a schema-inference job on every call; the
     // IVF serves read `centroids` through ParquetIO.read
     // (Embeddings.storedCentroids), and the refits, hot-cell splits and
-    // ScaleCheck read `postings` back the same way, each resolved once
-    // per version.
-    val bare = "read\\.parquet\\(s\"\\$[^\"]*/(centroids|postings)\"\\)".r
+    // ScaleCheck read `postings` back the same way, as do the KN model's
+    // `level<k>`, `ctx<k>` and `tot1` tables (LangModel.stored) and the
+    // PageRank artifact's `edges` and `ranks`, each resolved once per
+    // version.
+    val bare = ("read\\.parquet\\(s\"\\$[^\"]*/" +
+      "(centroids|postings|level[^\"/]*|ctx[^\"/]*|tot1|edges|ranks)\"\\)").r
     val offenders = sourcesWhere("src/main")(bare.findFirstIn(_).isDefined)
     assert(offenders.isEmpty,
-      s"bare read.parquet of a centroid or postings table: ${offenders.mkString(", ")}")
+      s"bare read.parquet of a stored model table: ${offenders.mkString(", ")}")
   }
 
   /** Fails when any of `formulations` occurs more than once, summed
@@ -141,6 +144,18 @@ class EntrySpec extends GraftSuite {
         "element_at(element_at(__tabs__", "vec_sq8_norm2(__code__"))
     assertMatchedOnce(Seq("src/main/scala/graft/llm"),
       Seq("createDataFrame\\([^\\n]*\\.collect\\(\\)".r))
+  }
+
+  test("source lint: the LM scorers write their level step, order check and gram explode once") {
+    // Every KN and Stupid Backoff score runs through LangModel's one
+    // order-N chain: lowerLevel derives each level (the fit, the delta
+    // maintenance and both scorers), knGramsOf explodes the grams and
+    // requireOrder checks the order. A second copy is a per-order fork
+    // whose scores can drift from the generated oracles.
+    assertWrittenOnce(Seq("src/main/scala/graft/llm"),
+      Seq("substring_index(col(\"g\"), \" \", -k)",
+        "require(order >= 2 && order <= 8",
+        "explode(TextOps.wordShingles("))
   }
 
   test("plan lint: no cartesian product in any query's physical plan") {

@@ -4929,9 +4929,9 @@ class LlmSpec extends GraftSuite {
         (fixture, (id: Long) => id <= 2L),
         (corpus, (id: Long) => id % 4 == 0L))) {
       val df = data.toDF("doc_id", "text")
-      val got = graft.llm.LangModel.knBigramScore(
+      val got = graft.llm.LangModel.knNgramScore(
           df, df.where(sc("doc_id").isin(data.map(_._1).filter(pred): _*)),
-          "doc_id", "text")
+          "doc_id", "text", order = 2)
         .orderBy(sc("doc_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(got === scalaKn(data, pred))
@@ -5011,9 +5011,9 @@ class LlmSpec extends GraftSuite {
         (fixture, (id: Long) => id <= 2L),
         (corpus, (id: Long) => id % 4 == 0L))) {
       val df = data.toDF("doc_id", "text")
-      val got = graft.llm.LangModel.knTrigramScore(
+      val got = graft.llm.LangModel.knNgramScore(
           df, df.where(sc("doc_id").isin(data.map(_._1).filter(pred): _*)),
-          "doc_id", "text")
+          "doc_id", "text", order = 3)
         .orderBy(sc("doc_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(got === scalaKn3(data, pred))
@@ -5242,15 +5242,8 @@ class LlmSpec extends GraftSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .orderBy(sc("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // the generated per-level formula chain must reproduce the dedicated
-    // bigram and trigram operators BIT-FOR-BIT (same IEEE op order)
-    assert(rows(graft.llm.LangModel.knNgramScore(
-        docs, train, "doc_id", "text", order = 2)) ===
-      rows(graft.llm.LangModel.knBigramScore(docs, train, "doc_id", "text")))
-    assert(rows(graft.llm.LangModel.knNgramScore(
-        docs, train, "doc_id", "text", order = 3)) ===
-      rows(graft.llm.LangModel.knTrigramScore(docs, train, "doc_id", "text")))
-    // order 5 (the KenLM default): scores exist, are finite, and training
+    // orders 2 and 3 are pinned against plain-Scala bigram and trigram
+    // KN re-derivations in their own tests; order 5 (the KenLM default): scores exist, are finite, and training
     // docs compress better than the OOV ceiling
     val kn5 = rows(graft.llm.LangModel.knNgramScore(
       docs, train, "doc_id", "text", order = 5))
@@ -5288,27 +5281,35 @@ class LlmSpec extends GraftSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .orderBy(sc("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    def withMode[T](m: String)(f: => T): T = {
-      s.conf.set("spark.graft.lm.scoreDistinctGrams", m)
-      try f
-      finally {
-        s.conf.unset("spark.graft.lm.scoreDistinctGrams")
+    // the default broadcast threshold holds the sf0.001 model, so the
+    // chain runs per occurrence; threshold -1 turns broadcasts off and
+    // the gate scores each distinct gram once, re-attaching per-doc
+    // occurrence counts (`__occ__`). The analyzed plan shows which ran.
+    def gated(threshold: Option[String],
+        lm: => org.apache.spark.sql.DataFrame) = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = s.conf.get(key)
+      threshold.foreach(s.conf.set(key, _))
+      try {
+        val df = lm
+        assert(df.queryExecution.analyzed.toString.contains("__occ__") ===
+          threshold.isDefined)
+        rows(df)
+      } finally {
+        s.conf.set(key, prev)
         graft.llm.CacheScope.global.release()
       }
     }
     // the 100 TB rewrite (score each distinct gram once, re-attach
     // per-doc occurrence counts) must be BIT-identical to the
     // occurrence-chain: integer micro-bits make Σ_occ mb ≡ Σ_dist occ·mb
-    val knNever = withMode("never")(rows(graft.llm.LangModel.knNgramScore(
-      docs, train, "doc_id", "text", order = 4)))
-    val knAlways = withMode("always")(rows(graft.llm.LangModel.knNgramScore(
-      docs, train, "doc_id", "text", order = 4)))
-    assert(knAlways === knNever)
-    val sbNever = withMode("never")(rows(graft.llm.LangModel.sbNgramScore(
-      docs, train, "doc_id", "text", order = 4)))
-    val sbAlways = withMode("always")(rows(graft.llm.LangModel.sbNgramScore(
-      docs, train, "doc_id", "text", order = 4)))
-    assert(sbAlways === sbNever)
+    def kn4 = graft.llm.LangModel.knNgramScore(
+      docs, train, "doc_id", "text", order = 4)
+    def sb4 = graft.llm.LangModel.sbNgramScore(
+      docs, train, "doc_id", "text", order = 4)
+    val knNever = gated(None, kn4)
+    assert(gated(Some("-1"), kn4) === knNever)
+    assert(gated(Some("-1"), sb4) === gated(None, sb4))
     // the fit writes the per-level context aggregates next to the level
     // tables (pure-scan serving); scoring through the artifact stays
     // value-identical (the order-5 parity test covers values — here we
@@ -5322,6 +5323,23 @@ class LlmSpec extends GraftSuite {
         s"fit did not persist ctx$k")
     assert(rows(graft.llm.LangModel.knNgramScoreWithModel(
       docs, "doc_id", "text", "/tmp/graft_kn4_ctx", order = 4)) === knNever)
+    graft.llm.CacheScope.global.release()
+  }
+
+  test("a warm persisted KN serve builds with no Spark job") {
+    val s = spark
+    val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val dir = "/tmp/graft_kn5_warm"
+    graft.llm.LangModel.knNgramFit(docs.where(sc("doc_id") % 4 === 0),
+      "text", dir, order = 5)
+    def serve() = graft.llm.LangModel.knNgramScoreWithModel(
+      docs, "doc_id", "text", dir, order = 5)
+    val cold = serve() // resolves the level, ctx and tot1 schemas
+    val (warm, jobs) = withJobs(serve())
+    assert(jobs === 0, "a warm serve re-read a model table's schema")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSet
+    assert(rows(warm) === rows(cold))
     graft.llm.CacheScope.global.release()
   }
 
