@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expr.BigramLm
+import graft.sources.ParquetIO
 
 /** CCNet-style language-model perplexity quality filter
   * (Wenzek et al., "CCNet: Extracting High Quality Monolingual Datasets
@@ -259,7 +260,7 @@ object LangModel {
       dir: String,
       order: Int = 5): DataFrame = {
     requireOrder(order)
-    levelProfile(order, k => stored(spark, dir, s"level$k"))
+    levelProfile(order, k => ParquetIO.read(spark, s"$dir/level$k"))
   }
 
   /** One (level, n_grams, total_count) row per level 1..order. */
@@ -312,16 +313,16 @@ object LangModel {
           "maintenance.")
     }
     val n = order
-    stored(spark, srcDir, s"level$n")
+    ParquetIO.read(spark, s"$srcDir/level$n")
       .unionByName(topLevel(newDocs, textCol, n))
       .groupBy(col("g")).agg(sum(col(s"cnt$n")).as(s"cnt$n"))
       .write.mode("overwrite").parquet(s"$dstDir/level$n")
     // derive from the WRITTEN upper level (read back) so the lineage
     // per level is one scan + one aggregate, not a re-derivation chain
     for (k <- (n - 1) to 1 by -1)
-      lowerLevel(stored(spark, dstDir, s"level${k + 1}"), k, knCount)
+      lowerLevel(ParquetIO.read(spark, s"$dstDir/level${k + 1}"), k, knCount)
         .write.mode("overwrite").parquet(s"$dstDir/level$k")
-    tot1Of(stored(spark, dstDir, "level1"))
+    tot1Of(ParquetIO.read(spark, s"$dstDir/level1"))
       .write.mode("overwrite").parquet(s"$dstDir/tot1")
     // ctx tables are deliberately NOT materialized here: the serve path
     // derives them on the fly when absent (value-identical), and
@@ -398,14 +399,6 @@ object LangModel {
       element_at(col("__toks__"), 1) =!= "")
     .select(cols :+ explode(TextOps.wordShingles("__toks__", n)).as("tg"): _*)
 
-  /** A table of a persisted model artifact, read through the schema
-    * resolver (one inference per file version, none on a warm serve). */
-  private def stored(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      table: String): DataFrame =
-    graft.sources.ParquetIO.read(spark, s"$dir/$table")
-
   /** PERSIST the order-N KN model — the train-once / score-many shape a
     * production LM filter runs (KenLM serializes its model the same
     * way, as a probing table per level): the N seen-gram level tables
@@ -476,7 +469,7 @@ object LangModel {
       order: Int = 5): DataFrame = {
     requireOrder(order)
     val spark = docs.sparkSession
-    def seen(k: Int): DataFrame = stored(spark, dir, s"level$k")
+    def seen(k: Int): DataFrame = ParquetIO.read(spark, s"$dir/level$k")
     // the fit persists the context aggregates next to the level tables
     // (KenLM stores its backoff tables the same way) so every serve is
     // pure scans — re-aggregating them per serve was N−1 shuffles per
@@ -486,13 +479,14 @@ object LangModel {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
     def ctx(k: Int): DataFrame =
-      if (ctxPersisted) stored(spark, dir, s"ctx$k")
+      if (ctxPersisted) ParquetIO.read(spark, s"$dir/ctx$k")
       else knCtxTable(seen(k), k)
     // re-aggregate the 1-row artifact so the cross join's build side is
     // PROVABLY single-row in the plan (a bare file scan is not — the
     // whole-suite BNLJ lint rejects it), at the cost of nothing: the
     // file holds exactly one row, max = the value
-    val tot1 = stored(spark, dir, "tot1").agg(max(col("tot1")).as("tot1"))
+    val tot1 =
+      ParquetIO.read(spark, s"$dir/tot1").agg(max(col("tot1")).as("tot1"))
     knScoreFromTables(docs, idCol, textCol, order, seen, Some(ctx), tot1)
   }
 

@@ -82,9 +82,8 @@ class EntrySpec extends GraftSuite {
     // IVF serves read `centroids` through ParquetIO.read
     // (Embeddings.storedCentroids), and the refits, hot-cell splits and
     // ScaleCheck read `postings` back the same way, as do the KN model's
-    // `level<k>`, `ctx<k>` and `tot1` tables (LangModel.stored) and the
-    // PageRank artifact's `edges` and `ranks`, each resolved once per
-    // version.
+    // `level<k>`, `ctx<k>` and `tot1` tables and the PageRank artifact's
+    // `edges` and `ranks`, each resolved once per version.
     val bare = ("read\\.parquet\\(s\"\\$[^\"]*/" +
       "(centroids|postings|level[^\"/]*|ctx[^\"/]*|tot1|edges|ranks)\"\\)").r
     val offenders = sourcesWhere("src/main")(bare.findFirstIn(_).isDefined)
