@@ -28,206 +28,73 @@ object GraftExtensions {
       s"$fn expects a literal int parameter, got $other")
   }
 
+  /** One registration: `name` resolves to `cls` through `build`, which
+    * receives the arguments and a reader of the int literal at an index.
+    * A call with other than `arity` arguments fails before `build`. */
+  private def fn(name: String, cls: Class[_], arity: Int)(
+      build: (Seq[Expression], Int => Int) => Expression): FnReg =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => {
+        require(args.length == arity,
+          s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}")
+        build(args, i => intLit(args(i), name))
+      })
+
   private val functions: Seq[FnReg] = Seq(
-    (FunctionIdentifier("float_vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "float_vec_dot takes exactly 2 arguments")
-        FloatVecDot(args.head, args(1))
-      }),
-    (FunctionIdentifier("char_ngram_min"),
-      new ExpressionInfo(classOf[CharNgramMin].getName, "char_ngram_min"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "char_ngram_min takes exactly 2 arguments")
-        CharNgramMin(args.head, intLit(args(1), "char_ngram_min"))
-      }),
-    (FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "minhash_sig takes exactly 2 arguments")
-        MinHashSig(args.head, intLit(args(1), "minhash_sig"))
-      }),
-    (FunctionIdentifier("char_ngram_bottomk"),
-      new ExpressionInfo(classOf[CharNgramBottomK].getName, "char_ngram_bottomk"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "char_ngram_bottomk takes exactly 3 arguments")
-        CharNgramBottomK(args.head, intLit(args(1), "char_ngram_bottomk"),
-          intLit(args(2), "char_ngram_bottomk"))
-      }),
-    (FunctionIdentifier("char_ngram_jaccard"),
-      new ExpressionInfo(classOf[CharNgramJaccard].getName, "char_ngram_jaccard"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "char_ngram_jaccard takes exactly 3 arguments")
-        CharNgramJaccard(args.head, args(1), intLit(args(2), "char_ngram_jaccard"))
-      }),
-    (FunctionIdentifier("char_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "char_entropy"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "char_entropy takes exactly 1 argument")
-        CharEntropy(args.head)
-      }),
-    (FunctionIdentifier("simhash_bigrams"),
-      new ExpressionInfo(classOf[SimhashBigrams].getName, "simhash_bigrams"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "simhash_bigrams takes exactly 1 argument")
-        SimhashBigrams(args.head)
-      }),
-    (FunctionIdentifier("minhash_sig_words"),
-      new ExpressionInfo(classOf[MinHashSigWords].getName, "minhash_sig_words"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "minhash_sig_words takes exactly 3 arguments")
-        MinHashSigWords(args.head, intLit(args(1), "minhash_sig_words"),
-          intLit(args(2), "minhash_sig_words"))
-      }),
-    (FunctionIdentifier("word_kgram_md5s"),
-      new ExpressionInfo(classOf[WordKgramMd5s].getName, "word_kgram_md5s"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "word_kgram_md5s takes exactly 2 arguments")
-        WordKgramMd5s(args.head, intLit(args(1), "word_kgram_md5s"))
-      }),
-    (FunctionIdentifier("bloom_any_contain"),
-      new ExpressionInfo(classOf[BloomAnyContain].getName, "bloom_any_contain"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "bloom_any_contain takes exactly 2 arguments")
-        BloomAnyContain(args.head, args(1))
-      }),
-    (FunctionIdentifier("greedy_chain"),
-      new ExpressionInfo(classOf[GreedyChain].getName, "greedy_chain"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "greedy_chain takes exactly 3 arguments")
-        GreedyChain(args.head, args(1), intLit(args(2), "greedy_chain"))
-      }),
+    fn("float_vec_dot", classOf[FloatVecDot], 2)((a, _) => FloatVecDot(a.head, a(1))),
+    fn("char_ngram_min", classOf[CharNgramMin], 2)(
+      (a, int) => CharNgramMin(a.head, int(1))),
+    fn("minhash_sig", classOf[MinHashSig], 2)((a, int) => MinHashSig(a.head, int(1))),
+    fn("char_ngram_bottomk", classOf[CharNgramBottomK], 3)(
+      (a, int) => CharNgramBottomK(a.head, int(1), int(2))),
+    fn("char_ngram_jaccard", classOf[CharNgramJaccard], 3)(
+      (a, int) => CharNgramJaccard(a.head, a(1), int(2))),
+    fn("char_entropy", classOf[CharEntropy], 1)((a, _) => CharEntropy(a.head)),
+    fn("simhash_bigrams", classOf[SimhashBigrams], 1)(
+      (a, _) => SimhashBigrams(a.head)),
+    fn("minhash_sig_words", classOf[MinHashSigWords], 3)(
+      (a, int) => MinHashSigWords(a.head, int(1), int(2))),
+    fn("word_kgram_md5s", classOf[WordKgramMd5s], 2)(
+      (a, int) => WordKgramMd5s(a.head, int(1))),
+    fn("bloom_any_contain", classOf[BloomAnyContain], 2)(
+      (a, _) => BloomAnyContain(a.head, a(1))),
+    fn("greedy_chain", classOf[GreedyChain], 3)(
+      (a, int) => GreedyChain(a.head, a(1), int(2))),
     // bounded top-k by (score desc NULLS LAST, id asc) with map-side
     // combine — the k-bounded-state replacement for a row_number window
-    (FunctionIdentifier("topk_by"),
-      new ExpressionInfo(classOf[TopKBy].getName, "topk_by"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, "topk_by takes exactly 4 arguments")
-        TopKBy(args.head, args(1), args(2), intLit(args(3), "topk_by"))
-      }),
-    (FunctionIdentifier("char_bigram_counts"),
-      new ExpressionInfo(classOf[CharBigramCounts].getName, "char_bigram_counts"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "char_bigram_counts takes exactly 1 argument")
-        CharBigramCounts(args.head)
-      }),
-    (FunctionIdentifier("lm_bits"),
-      new ExpressionInfo(classOf[LmBits].getName, "lm_bits"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "lm_bits takes exactly 2 arguments")
-        LmBits(args.head, args(1))
-      }),
-    (FunctionIdentifier("word_ngram_jaccard"),
-      new ExpressionInfo(classOf[WordNgramJaccard].getName, "word_ngram_jaccard"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "word_ngram_jaccard takes exactly 3 arguments")
-        WordNgramJaccard(args.head, args(1), intLit(args(2), "word_ngram_jaccard"))
-      }),
-    (FunctionIdentifier("ac_count"),
-      new ExpressionInfo(classOf[AcCount].getName, "ac_count"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "ac_count takes exactly 2 arguments")
-        AcCount(args.head, args(1))
-      }),
-    (FunctionIdentifier("unigram_viterbi"),
-      new ExpressionInfo(classOf[UnigramViterbi].getName, "unigram_viterbi"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "unigram_viterbi takes exactly 2 arguments")
-        UnigramViterbi(args.head, args(1))
-      }),
-    (FunctionIdentifier("unigram_viterbi_pieces"),
-      new ExpressionInfo(classOf[UnigramViterbiPieces].getName,
-        "unigram_viterbi_pieces"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "unigram_viterbi_pieces takes exactly 2 arguments")
-        UnigramViterbiPieces(args.head, args(1))
-      }),
-    (FunctionIdentifier("unigram_viterbi_excl"),
-      new ExpressionInfo(classOf[UnigramViterbiExcl].getName,
-        "unigram_viterbi_excl"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "unigram_viterbi_excl takes exactly 3 arguments")
-        UnigramViterbiExcl(args.head, args(1), args(2))
-      }),
-    (FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[DeflateLen].getName, "deflate_len"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "deflate_len takes exactly 1 argument")
-        DeflateLen(args.head)
-      }),
-    (FunctionIdentifier("cdc_starts"),
-      new ExpressionInfo(classOf[CdcStarts].getName, "cdc_starts"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "cdc_starts takes exactly 2 arguments")
-        CdcStarts(args.head, intLit(args(1), "cdc_starts"))
-      }),
-    (FunctionIdentifier("boilerplate_strip"),
-      new ExpressionInfo(classOf[BoilerplateStripExpr].getName,
-        "boilerplate_strip"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "boilerplate_strip takes exactly 2 arguments")
-        BoilerplateStripExpr(args.head, args(1))
-      }),
-    (FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "nfc_normalize takes exactly 1 argument")
-        NfcNormalize(args.head)
-      }),
-    (FunctionIdentifier("mg_summary"),
-      new ExpressionInfo(classOf[MgSummary].getName, "mg_summary"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "mg_summary takes exactly 2 arguments")
-        MgSummary(args.head, intLit(args(1), "mg_summary"))
-      }),
-    (FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "word_ngrams takes exactly 2 arguments")
-        WordNgrams(args.head, intLit(args(1), "word_ngrams"))
-      }),
-    (FunctionIdentifier("wordpiece_encode"),
-      new ExpressionInfo(classOf[WordpieceEncode].getName, "wordpiece_encode"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "wordpiece_encode takes exactly 2 arguments")
-        WordpieceEncode(args.head, args(1))
-      }),
-    (FunctionIdentifier("vec_argmax_cell"),
-      new ExpressionInfo(classOf[VecArgmaxCell].getName, "vec_argmax_cell"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "vec_argmax_cell takes exactly 3 arguments")
-        VecArgmaxCell(args.head, args(1), args(2))
-      }),
+    fn("topk_by", classOf[TopKBy], 4)((a, int) => TopKBy(a.head, a(1), a(2), int(3))),
+    fn("char_bigram_counts", classOf[CharBigramCounts], 1)(
+      (a, _) => CharBigramCounts(a.head)),
+    fn("lm_bits", classOf[LmBits], 2)((a, _) => LmBits(a.head, a(1))),
+    fn("word_ngram_jaccard", classOf[WordNgramJaccard], 3)(
+      (a, int) => WordNgramJaccard(a.head, a(1), int(2))),
+    fn("ac_count", classOf[AcCount], 2)((a, _) => AcCount(a.head, a(1))),
+    fn("unigram_viterbi", classOf[UnigramViterbi], 2)(
+      (a, _) => UnigramViterbi(a.head, a(1))),
+    fn("unigram_viterbi_pieces", classOf[UnigramViterbiPieces], 2)(
+      (a, _) => UnigramViterbiPieces(a.head, a(1))),
+    fn("unigram_viterbi_excl", classOf[UnigramViterbiExcl], 3)(
+      (a, _) => UnigramViterbiExcl(a.head, a(1), a(2))),
+    fn("deflate_len", classOf[DeflateLen], 1)((a, _) => DeflateLen(a.head)),
+    fn("cdc_starts", classOf[CdcStarts], 2)((a, int) => CdcStarts(a.head, int(1))),
+    fn("boilerplate_strip", classOf[BoilerplateStripExpr], 2)(
+      (a, _) => BoilerplateStripExpr(a.head, a(1))),
+    fn("nfc_normalize", classOf[NfcNormalize], 1)((a, _) => NfcNormalize(a.head)),
+    fn("mg_summary", classOf[MgSummary], 2)((a, int) => MgSummary(a.head, int(1))),
+    fn("word_ngrams", classOf[WordNgrams], 2)((a, int) => WordNgrams(a.head, int(1))),
+    fn("wordpiece_encode", classOf[WordpieceEncode], 2)(
+      (a, _) => WordpieceEncode(a.head, a(1))),
+    fn("vec_argmax_cell", classOf[VecArgmaxCell], 3)(
+      (a, _) => VecArgmaxCell(a.head, a(1), a(2))),
     // SQ8 scalar quantization (per-dim 8-bit affine codes): encode +
     // codegen'd dequantized dot/norm — the serving hot loop
-    (FunctionIdentifier("vec_sq8_code"),
-      new ExpressionInfo(classOf[Sq8Code].getName, "vec_sq8_code"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "vec_sq8_code takes exactly 3 arguments")
-        Sq8Code(args.head, args(1), args(2))
-      }),
-    (FunctionIdentifier("vec_sq8_dot"),
-      new ExpressionInfo(classOf[Sq8Dot].getName, "vec_sq8_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, "vec_sq8_dot takes exactly 4 arguments")
-        Sq8Dot(args.head, args(1), args(2), args(3))
-      }),
-    (FunctionIdentifier("vec_sq8_norm2"),
-      new ExpressionInfo(classOf[Sq8Norm2].getName, "vec_sq8_norm2"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "vec_sq8_norm2 takes exactly 3 arguments")
-        Sq8Norm2(args.head, args(1), args(2))
-      }),
+    fn("vec_sq8_code", classOf[Sq8Code], 3)((a, _) => Sq8Code(a.head, a(1), a(2))),
+    fn("vec_sq8_dot", classOf[Sq8Dot], 4)((a, _) => Sq8Dot(a.head, a(1), a(2), a(3))),
+    fn("vec_sq8_norm2", classOf[Sq8Norm2], 3)((a, _) => Sq8Norm2(a.head, a(1), a(2))),
     // L2-argmin assignment (residual quantizers): score = vec·cv − cn/2
     // with ‖cv‖² in the struct's third field; norm operand ignored
-    (FunctionIdentifier("vec_argmax_cell_l2"),
-      new ExpressionInfo(classOf[VecArgmaxCell].getName, "vec_argmax_cell_l2"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "vec_argmax_cell_l2 takes exactly 3 arguments")
-        VecArgmaxCell(args.head, args(1), args(2), l2 = true)
-      }),
+    fn("vec_argmax_cell_l2", classOf[VecArgmaxCell], 3)(
+      (a, _) => VecArgmaxCell(a.head, a(1), a(2), l2 = true)),
   )
 
   /** Imperative registration for sessions built without the extensions

@@ -54,6 +54,48 @@ object Compiler {
     * (utils/private_column.py:5-20). */
   def nsCol(ns: String, c: String): String = s"__ns_${ns}__$c"
 
+  /** True for a namespaced internal column ([[nsCol]] or a chain of them). */
+  private def isNsCol(c: String): Boolean = c.startsWith("__ns_")
+
+  /** A joined model's column renamed into join namespace `ns`: plain
+    * columns become [[nsCol]]s, and already-namespaced ones chain as
+    * "<ns>:<inner>" so nested Disambiguated lookups (prefix "ns:inner")
+    * find them. */
+  private def joinedName(ns: String, c: String): String =
+    if (isNsCol(c)) s"__ns_$ns:" + c.stripPrefix("__ns_") else nsCol(ns, c)
+
+  /** A backticked Spark SQL identifier. */
+  private def bt(n: String): String = "`" + n.replace("`", "``") + "`"
+
+  /** `distinct(x)`, possibly named, → (x, true); anything else →
+    * (itself, false). In pick context the flag makes the layer SELECT
+    * DISTINCT (reference _sql_functions.py:33-38); as a group it is the
+    * segment idiom (docs/pattern_guides/segments.md), which grouping
+    * already deduplicates. */
+  private def stripDistinct(e: Expr): (Expr, Boolean) = e match {
+    case Call("distinct", Seq(inner), _) => (inner, true)
+    case Named(b, n) =>
+      val (inner, d) = stripDistinct(b); (Named(inner, n), d)
+    case other => (other, false)
+  }
+
+  /** The numeric literal `e` — Int, Long (the wire reads every integer
+    * literal as Long) or, unless `integral`, Double. */
+  private def numLit(e: Option[Expr], integral: Boolean = false): Option[Number] =
+    e.collect {
+      case Lit(n: java.lang.Integer)             => n: Number
+      case Lit(n: java.lang.Long)                => n: Number
+      case Lit(n: java.lang.Double) if !integral => n: Number
+    }
+
+  /** [[numLit]] of `args(i)`, failing with "`what` must be a numeric
+    * literal" (or "an integer literal"). */
+  private def numArg(args: Seq[Expr], i: Int, what: String,
+      integral: Boolean = false): Number =
+    numLit(args.lift(i), integral).getOrElse(throw new IllegalArgumentException(
+      s"$what must be ${if (integral) "an integer" else "a numeric"} literal, " +
+        s"got ${args.lift(i)}"))
+
   /** A lazily-emitted join (reference deferred join handlers,
     * query_layer.py:102-110). `build` produces the right side with all
     * columns renamed through [[nsCol]]; `cond` is evaluated at attach time. */
@@ -182,14 +224,8 @@ object Compiler {
           // aggregate (deterministic; same linear interpolation as DuckDB's
           // quantile_cont, so oracles replay 1:1)
           case "percentile" =>
-            val p = args.lift(1) match {
-              case Some(Lit(d: Double)) => d
-              case Some(Lit(l: Long))   => l.toDouble
-              case Some(Lit(i: Int))    => i.toDouble
-              case other => throw new IllegalArgumentException(
-                s"percentile fraction must be a numeric literal, got $other")
-            }
-            call_function("percentile", go(args.head), lit(p))
+            call_function("percentile", go(args.head),
+              lit(numArg(args, 1, "percentile fraction").doubleValue))
           // approximate percentile — the extreme-scale swap point the
           // `percentile` scaladoc documents: a bounded-memory quantile
           // sketch (Spark's QuantileSummaries) instead of the exact
@@ -198,21 +234,15 @@ object Compiler {
           // Values are rank-approximate (error ≤ n/accuracy), so this is
           // spec-gated on plan shape, not oracle-hashed.
           case "approx_percentile" =>
-            def num(e: Option[Expr], what: String): Double = e match {
-              case Some(Lit(d: Double)) => d
-              case Some(Lit(l: Long))   => l.toDouble
-              case Some(Lit(i: Int))    => i.toDouble
-              case other => throw new IllegalArgumentException(
-                s"approx_percentile $what must be a numeric literal, got $other")
-            }
             // Accuracy is optional (Spark itself accepts the 2-arg form, and
             // 2-arg calls arrive via the wire format): default to 10000,
             // Spark's own ApproximatePercentile default.
             val accuracy: Int =
               if (args.lift(2).isEmpty) 10000
-              else num(args.lift(2), "accuracy").toInt
+              else numArg(args, 2, "approx_percentile accuracy").doubleValue.toInt
             call_function("approx_percentile", go(args.head),
-              lit(num(args.lift(1), "fraction")), lit(accuracy))
+              lit(numArg(args, 1, "approx_percentile fraction").doubleValue),
+              lit(accuracy))
           // HyperLogLog++ cardinality sketch — countDistinct's
           // extreme-scale swap (O(1/rsd²) state per group, one shuffle).
           // Spec-gated like approx_percentile: values are approximate.
@@ -244,23 +274,15 @@ object Compiler {
           case "coalesce" => coalesce(args.map(go): _*)
           case "abs"      => abs(go(args.head))
           case "round" =>
-            val digits = args.lift(1) match {
-              case None              => 0
-              case Some(Lit(i: Int)) => i
-              case Some(Lit(l: Long)) => l.toInt
-              case other => throw new IllegalArgumentException(
-                s"round digits must be an integer literal, got $other")
-            }
+            val digits =
+              if (args.lift(1).isEmpty) 0
+              else numArg(args, 1, "round digits", integral = true).intValue
             round(go(args.head), digits)
           case "concat"   => concat(args.map(go): _*)
           case "substring" =>
-            // wire JSON deserializes every integer literal as Long
-            def intLit(e: Option[Expr]): Option[Int] = e match {
-              case Some(Lit(i: Int))  => Some(i)
-              case Some(Lit(l: Long)) => Some(l.toInt)
-              case _                  => None
-            }
-            (intLit(args.lift(1)), intLit(args.lift(2))) match {
+            def intLit(i: Int): Option[Int] =
+              numLit(args.lift(i), integral = true).map(_.intValue)
+            (intLit(1), intLit(2)) match {
               case (Some(p), Some(l)) => substring(go(args.head), p, l)
               case _ => throw new IllegalArgumentException(
                 s"substring(pos, len) must be integer literals, got ${args.drop(1)}")
@@ -391,7 +413,6 @@ object Compiler {
     * expressions). Covers the scalar expression subset meaningful inside a
     * SQL fragment; set-valued nodes (subqueries, model membership) throw. */
   def renderSql(e: Expr, prefix: Option[String] = None): String = {
-    def bt(n: String): String = "`" + n.replace("`", "``") + "`"
     def go(e: Expr): String = e match {
       case ColRef(n, nsOpt) =>
         (nsOpt orElse prefix) match {
@@ -508,13 +529,6 @@ object Compiler {
     * lowerings no SQL string reproduces, and a wrong rendering would be
     * worse than an honest refusal. */
   def renderQuery(m: Model, spark: SparkSession): String = {
-    def bt(n: String): String = "`" + n.replace("`", "``") + "`"
-    def stripDistinctKeep(e: Expr): (Expr, Boolean) = e match {
-      case Call("distinct", Seq(inner), _) => (inner, true)
-      case Named(b, n) =>
-        val (i, d) = stripDistinctKeep(b); (Named(i, n), d)
-      case other => (other, false)
-    }
     def render(s: Source): String = s match {
       case Source.Table(name) =>
         val ref =
@@ -540,7 +554,7 @@ object Compiler {
       case Source.Pick(b, cols, star) =>
         if (star) s"SELECT * FROM (${render(b)})"
         else {
-          val st = cols.map(stripDistinctKeep)
+          val st = cols.map(stripDistinct)
           val distinct = if (st.exists(_._2)) "DISTINCT " else ""
           val items = st.map { case (c, _) =>
             s"${renderSql(c)} AS ${bt(c.identifier)}" }
@@ -548,7 +562,7 @@ object Compiler {
         }
       case Source.Aggregate(b, groups, measures, "group") =>
         val g = groups.map { x =>
-          s"${renderSql(stripDistinctKeep(x)._1)} AS ${bt(x.identifier)}" }
+          s"${renderSql(stripDistinct(x)._1)} AS ${bt(x.identifier)}" }
         val ms = measures.map(x => s"${renderSql(x)} AS ${bt(x.identifier)}")
         if (measures.isEmpty)
           s"SELECT DISTINCT ${g.mkString(", ")} FROM (${render(b)})"
@@ -558,18 +572,7 @@ object Compiler {
           s"SELECT ${(g ++ ms).mkString(", ")} FROM (${render(b)}) " +
             s"GROUP BY ${groups.indices.map(i => (i + 1).toString).mkString(", ")}"
       case Source.Sort(b, keys) =>
-        val ks = keys.map { k =>
-          val dir = if (k.asc) "ASC" else "DESC"
-          val nl = k.nulls match {
-            case "auto"  => ""
-            case "first" => " NULLS FIRST"
-            case "last"  => " NULLS LAST"
-            case other =>
-              throw new IllegalArgumentException(s"bad nulls: $other")
-          }
-          s"${renderSql(k.e)} $dir$nl"
-        }
-        s"SELECT * FROM (${render(b)}) ORDER BY ${ks.mkString(", ")}"
+        s"SELECT * FROM (${render(b)}) ORDER BY ${keys.map(renderSortKey).mkString(", ")}"
       case Source.Limit(b0, n0, off0) =>
         // Fold stacked Limit nodes first (model.limit(5).limit(3) nests
         // two nodes and run() applies offset-then-limit per node, so the
@@ -608,12 +611,7 @@ object Compiler {
         // schema-only, nothing executes — renamed through the namespace
         // exactly like the lowering's build()
         val cols = compileSource(jm.source, spark).df.columns.toSeq
-        val renamed = cols.map { c =>
-          val target =
-            if (c.startsWith("__ns_")) s"__ns_${j.name}:" + c.stripPrefix("__ns_")
-            else nsCol(j.name, c)
-          s"${bt(c)} AS ${bt(target)}"
-        }
+        val renamed = cols.map(c => s"${bt(c)} AS ${bt(joinedName(j.name, c))}")
         val pkName = nsCol(j.name, "__pk__")
         val pk = jm.primaryKey
           .map(p => s", ${renderSql(p)} AS ${bt(pkName)}").getOrElse("")
@@ -664,35 +662,11 @@ object Compiler {
           if (partitionBy.isEmpty) ""
           else s"PARTITION BY ${partitionBy.map(renderSql(_)).mkString(", ")} "
         val o = s"ORDER BY ${orderKeys.map(renderSortKey).mkString(", ")}"
-        val running = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-        def over(frame: String) = s"OVER ($p$o$frame)"
         wcols.foldLeft(render(b)) { (acc, wc) =>
-          def t: String = renderSql(wc.target.getOrElse(
-            throw new IllegalArgumentException(
-              s"window column '${wc.name}' (${wc.kind}) needs a target")))
-          val moving =
-            s" ROWS BETWEEN ${wc.frame - 1} PRECEDING AND CURRENT ROW"
-          val fn = wc.kind match {
-            case "row_number"   => s"row_number() ${over("")}"
-            case "rank"         => s"rank() ${over("")}"
-            case "dense_rank"   => s"dense_rank() ${over("")}"
-            case "percent_rank" => s"percent_rank() ${over("")}"
-            case "cume_dist"    => s"cume_dist() ${over("")}"
-            case "ntile"        => s"ntile(${wc.frame}) ${over("")}"
-            case "lag"          => s"lag($t, ${wc.offset}) ${over("")}"
-            case "lead"         => s"lead($t, ${wc.offset}) ${over("")}"
-            case "first_value"  => s"first_value($t) ${over(running)}"
-            case "last_value"   => s"last_value($t, true) ${over(running)}"
-            case "running_sum"  => s"sum($t) ${over(running)}"
-            case "running_min"  => s"min($t) ${over(running)}"
-            case "running_max"  => s"max($t) ${over(running)}"
-            case "moving_sum"   => s"sum($t) ${over(moving)}"
-            case "moving_avg"   => s"avg($t) ${over(moving)}"
-            case other =>
-              throw new IllegalArgumentException(
-                s"unknown window kind '$other'")
-          }
-          s"SELECT *, $fn AS ${bt(wc.name)} FROM ($acc)"
+          val kind = Source.WinKind.of(wc)
+          val fn = kind.sql(renderSql(wc.target.get), wc)
+          s"SELECT *, $fn OVER ($p$o${kind.frame.sql(wc)}) " +
+            s"AS ${bt(wc.name)} FROM ($acc)"
         }
       case other =>
         throw new UnsupportedOperationException(
@@ -702,19 +676,9 @@ object Compiler {
     render(m.source)
   }
 
-  /** ORDER BY item with the lowering's EXPLICIT null placement
-    * ([[sortKeyCols]]: auto = Spark's asc→nulls-first / desc→nulls-last). */
-  private def renderSortKey(k: graft.ir.SortKey): String = {
-    val dir = (k.asc, k.nulls) match {
-      case (true, "auto") | (true, "first")  => "ASC NULLS FIRST"
-      case (true, "last")                    => "ASC NULLS LAST"
-      case (false, "auto") | (false, "last") => "DESC NULLS LAST"
-      case (false, "first")                  => "DESC NULLS FIRST"
-      case (_, other) =>
-        throw new IllegalArgumentException(s"bad nulls: $other")
-    }
-    s"${renderSql(k.e)} $dir"
-  }
+  /** ORDER BY item with the lowering's explicit null placement
+    * ([[graft.ir.SortKey.nullsFirst]]). */
+  private def renderSortKey(k: SortKey): String = s"${renderSql(k.e)} ${k.sqlOrder}"
 
   /** Python-strftime → Spark date_format pattern pieces, covering the
     * reference's FULL token whitelist (format_timestamp.py:81-111) with the
@@ -809,19 +773,38 @@ object Compiler {
 
   // =================== source lowering ===================
 
-  /** SortKey list → ordered Columns with the reference's nulls-auto rule
-    * (auto = first when asc, last when desc — sort.py:13-45). */
+  /** `c` in `k`'s direction and null placement (the reference's
+    * nulls-auto rule, sort.py:13-45, resolved by SortKey.nullsFirst). */
+  private def ordered(c: Column, k: SortKey): Column =
+    if (k.asc) { if (k.nullsFirst) c.asc_nulls_first else c.asc_nulls_last }
+    else if (k.nullsFirst) c.desc_nulls_first
+    else c.desc_nulls_last
+
+  /** SortKey list → ordered Columns compiled against `f`. */
   private def sortKeyCols(keys: Seq[SortKey], f: Frame): Seq[Column] =
-    keys.map { k =>
-      val c = compileExpr(k.e, f)
-      (k.asc, k.nulls) match {
-        case (true, "auto") | (true, "first")  => c.asc_nulls_first
-        case (true, "last")                    => c.asc_nulls_last
-        case (false, "auto") | (false, "last") => c.desc_nulls_last
-        case (false, "first")                  => c.desc_nulls_first
-        case (_, other) => throw new IllegalArgumentException(s"bad nulls: $other")
-      }
-    }
+    keys.map(k => ordered(compileExpr(k.e, f), k))
+
+  /** Compile a sub-model and attach all its pending joins, so every
+    * relation-qualified column of it is present on its frame. */
+  private def compileClosed(m: Model, spark: SparkSession): Frame = {
+    val f = compileSource(m.source, spark)
+    f.pending.keys.toSeq.foreach(f.attach)
+    f
+  }
+
+  /** A sub-model's column contract: fail unless `f` has every one of
+    * `cols`. */
+  private def requireExposed(f: Frame, what: String, cols: String*): Unit =
+    require(cols.forall(f.hasCol), s"$what model must expose " +
+      (if (cols.size == 1) s"a column named '${cols.head}'"
+       else cols.mkString("columns (", ", ", ")")) +
+      s"; got (${f.df.columns.mkString(", ")})")
+
+  /** `f`'s frame with each (name, expression) compiled against `f` and
+    * added in order by withColumn — a corpus operator's input
+    * projection. */
+  private def withInputs(f: Frame, cols: (String, Expr)*): DataFrame =
+    cols.foldLeft(f.df) { case (df, (n, e)) => df.withColumn(n, compileExpr(e, f)) }
 
   def compileSource(s: Source, spark: SparkSession): Frame = s match {
     case Source.Table(name) =>
@@ -868,14 +851,6 @@ object Compiler {
     case Source.Pick(base, cols, star) =>
       val f = compileSource(base, spark)
       if (!star) {
-        // distinct(x) in pick context → SELECT DISTINCT (reference
-        // _sql_functions.py:33-38); strip the wrapper, dedupe the result
-        def stripDistinct(e: Expr): (Expr, Boolean) = e match {
-          case Call("distinct", Seq(inner), _) => (inner, true)
-          case Named(b, n) =>
-            val (inner, d) = stripDistinct(b); (Named(inner, n), d)
-          case other => (other, false)
-        }
         val stripped = cols.map(stripDistinct)
         val compiled = stripped.map { case (c, _) => compileExpr(c, f).as(c.identifier) }
         f.df = f.df.select(compiled: _*)
@@ -886,15 +861,7 @@ object Compiler {
 
     case Source.Aggregate(base, groups, measures, mode) =>
       val f = compileSource(base, spark)
-      // distinct(x) as a group is the reference's segment idiom
-      // (docs/pattern_guides/segments.md); grouping already deduplicates,
-      // so strip the wrapper and keep the inner expression
-      def stripDistinct(e: Expr): Expr = e match {
-        case Call("distinct", Seq(inner), _) => inner
-        case Named(b, n)                     => Named(stripDistinct(b), n)
-        case other                           => other
-      }
-      val groupCols = groups.map(g => compileExpr(stripDistinct(g), f).as(g.identifier))
+      val groupCols = groups.map(g => compileExpr(stripDistinct(g)._1, f).as(g.identifier))
       val measureCols = measures.map(m => compileExpr(m, f).as(m.identifier))
       val out = mode match {
         case "group" =>
@@ -926,7 +893,7 @@ object Compiler {
                          else part.split(",").toSeq.map(_.toInt))
           val names = groups.map(_.identifier)
           val withGroups = groups.zip(names).foldLeft(f.df) {
-            case (df, (g, n)) => df.withColumn(n, compileExpr(stripDistinct(g), f))
+            case (df, (g, n)) => df.withColumn(n, compileExpr(stripDistinct(g)._1, f))
           }
           withGroups
             .groupingSets(sets.map(_.map(i => col(names(i)))),
@@ -970,21 +937,12 @@ object Compiler {
       val f = compileSource(base, spark)
       val pkName = nsCol(name, "__pk__")
       val build = () => {
-        val jf = compileSource(joined.source, spark)
-        val pkCol = joined.primaryKey.map(pk => compileExpr(pk, jf))
-        // attach the joined model's OWN pending joins so its
+        // the joined model's OWN pending joins attach so its
         // relation-qualified attributes (nested namespaces) resolve — the
         // reference compiles the joined model's full query layer
-        jf.pending.keys.toSeq.foreach(jf.attach)
-        // rename through this namespace; already-namespaced columns of the
-        // joined side chain as "<name>:<inner>" so nested Disambiguated
-        // lookups (prefix "name:inner") find them
-        val renamed = jf.df.columns.map { c =>
-          val target =
-            if (c.startsWith("__ns_")) s"__ns_$name:" + c.stripPrefix("__ns_")
-            else nsCol(name, c)
-          jf.df(c).as(target)
-        }.toSeq
+        val jf = compileClosed(joined, spark)
+        val pkCol = joined.primaryKey.map(pk => compileExpr(pk, jf))
+        val renamed = jf.df.columns.map(c => jf.df(c).as(joinedName(name, c))).toSeq
         val extra = pkCol.map(_.as(pkName)).toSeq
         jf.df.select(renamed ++ extra: _*)
       }
@@ -1054,50 +1012,14 @@ object Compiler {
       val pNames = partitionBy.map(shared(_, "p"))
       val oNames = orderKeys.map(k => shared(k.e, "o"))
       val parts = pNames.map(col(_))
-      val ordCols = orderKeys.zip(oNames).map { case (k, n) =>
-        (k.asc, k.nulls) match {
-          case (true, "auto") | (true, "first")  => col(n).asc_nulls_first
-          case (true, "last")                    => col(n).asc_nulls_last
-          case (false, "auto") | (false, "last") => col(n).desc_nulls_last
-          case (false, "first")                  => col(n).desc_nulls_first
-          case (_, other) =>
-            throw new IllegalArgumentException(s"bad nulls: $other")
-        }
-      }
+      val ordCols = orderKeys.zip(oNames).map { case (k, n) => ordered(col(n), k) }
       val w = Window.partitionBy(parts: _*).orderBy(ordCols: _*)
-      val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       wcols.foreach { wc =>
         require(!f.df.columns.contains(wc.name),
           s"window column '${wc.name}' already exists on the input")
-        def tgt: Column = compileExpr(wc.target.getOrElse(
-          throw new IllegalArgumentException(
-            s"window column '${wc.name}' (${wc.kind}) needs a target expression")), f)
-        val c = wc.kind match {
-          case "row_number"  => row_number().over(w)
-          case "rank"        => rank().over(w)
-          case "dense_rank"  => dense_rank().over(w)
-          // percent_rank/cume_dist emit double in [0,1]; ntile takes the
-          // bucket count through `frame` (rank-family kinds are targetless,
-          // like row_number)
-          case "percent_rank" => percent_rank().over(w)
-          case "cume_dist"   => cume_dist().over(w)
-          case "ntile"       => ntile(wc.frame.toInt).over(w)
-          case "lag"         => lag(tgt, wc.offset.toInt).over(w)
-          case "lead"        => lead(tgt, wc.offset.toInt).over(w)
-          // first/last value over the running frame: last_value with the
-          // default frame would read the partition tail (order-dependent
-          // answers); the running frame gives the standard "latest so far"
-          case "first_value" => first(tgt).over(running)
-          case "last_value"  => last(tgt, ignoreNulls = true).over(running)
-          case "running_sum" => sum(tgt).over(running)
-          case "running_min" => min(tgt).over(running)
-          case "running_max" => max(tgt).over(running)
-          case "moving_sum"  => sum(tgt).over(w.rowsBetween(-(wc.frame - 1), 0))
-          case "moving_avg"  => avg(tgt).over(w.rowsBetween(-(wc.frame - 1), 0))
-          case other =>
-            throw new IllegalArgumentException(s"unknown window kind '$other'")
-        }
-        f.df = f.df.withColumn(wc.name, c)
+        val kind = Source.WinKind.of(wc)
+        val t = if (kind.needsTarget) compileExpr(wc.target.get, f) else null
+        f.df = f.df.withColumn(wc.name, kind.col(t, wc).over(kind.frame.over(w, wc)))
       }
       f.df = f.df.drop(tmpNames.toSeq: _*)
       f
@@ -1125,8 +1047,7 @@ object Compiler {
         .withColumn("__k__", lk)
         .withColumn("__ts__", lt.cast("timestamp"))
         .withColumn("__tag__", lit(leftTag))
-      val rf = compileSource(right.source, spark)
-      rf.pending.keys.toSeq.foreach(rf.attach)
+      val rf = compileClosed(right, spark)
       val rv = struct(pick.map(p => compileExpr(p, rf).as(p.identifier)): _*)
       val rightAll = rf.df.select(
         compileExpr(rightOn, rf).as("__k__"),
@@ -1174,8 +1095,7 @@ object Compiler {
       val keepCols = lf.df.columns.toSeq
       pick.foreach(p => require(!keepCols.contains(p.identifier),
         s"rangeJoin pick '${p.identifier}' collides with an existing column"))
-      val rf = compileSource(right.source, spark)
-      rf.pending.keys.toSeq.foreach(rf.attach)
+      val rf = compileClosed(right, spark)
       val rv = struct(pick.map(p => compileExpr(p, rf).as(p.identifier)): _*)
       val rightBase = rf.df.select(
         rightOn.map(k => compileExpr(k, rf)).getOrElse(lit(0L)).as("__k__"),
@@ -1238,8 +1158,7 @@ object Compiler {
       // side reduces to its key columns (scan prunes to them) and AQE
       // picks broadcast vs shuffled from the actual key-side size
       val lf = compileSource(base, spark)
-      val rf = compileSource(right.source, spark)
-      rf.pending.keys.toSeq.foreach(rf.attach)
+      val rf = compileClosed(right, spark)
       val ns = freshNs("setjoin")
       val rightKeys = rf.df.select(on.zipWithIndex.map { case ((_, re), i) =>
         compileExpr(re, rf).as(nsCol(ns, s"k$i"))
@@ -1259,16 +1178,11 @@ object Compiler {
       // like any model, so the whole node is wire-complete; its contract
       // is a column named like the group identifier plus `weight`.
       val bf = compileSource(base, spark)
-      val wf = compileSource(weights.source, spark)
-      wf.pending.keys.toSeq.foreach(wf.attach)
+      val wf = compileClosed(weights, spark)
       val gName = group.identifier
-      require(wf.df.columns.contains(gName) && wf.df.columns.contains("weight"),
-        s"upsampleMix weights model must expose columns ($gName, weight); " +
-          s"got (${wf.df.columns.mkString(", ")})")
+      requireExposed(wf, "upsampleMix weights", gName, "weight")
       val keyName = "__upmix_key__" // dunder: stripped by sink post-process
-      val df = bf.df
-        .withColumn(gName, compileExpr(group, bf))
-        .withColumn(keyName, compileExpr(key, bf))
+      val df = withInputs(bf, gName -> group, keyName -> key)
       new Frame(graft.llm.TextOps
         .upsampleMix(df, gName, keyName, wf.df.select(col(gName), col("weight")))
         .drop(keyName))
@@ -1280,9 +1194,7 @@ object Compiler {
       val bf = compileSource(base, spark)
       val idName = id.identifier
       val txName = "__sc_text__"
-      val df = bf.df
-        .withColumn(idName, compileExpr(id, bf))
-        .withColumn(txName, compileExpr(text, bf))
+      val df = withInputs(bf, idName -> id, txName -> text)
       new Frame(graft.llm.Dedup
         .substringClean(df, idName, txName, minSpanWords, minCopies))
 
@@ -1293,9 +1205,7 @@ object Compiler {
       val bf = compileSource(base, spark)
       val idName = id.identifier
       val txName = "__cdc_text__"
-      val df = bf.df
-        .withColumn(idName, compileExpr(id, bf))
-        .withColumn(txName, compileExpr(text, bf))
+      val df = withInputs(bf, idName -> id, txName -> text)
       new Frame(graft.llm.Search.cdcChunks(df, idName, txName, k, modulus))
 
     case Source.BoilerplateStrip(base, id, text, stops, mw, pct, llc) =>
@@ -1306,9 +1216,7 @@ object Compiler {
       graft.GraftExtensions.install(spark) // the boilerplate_strip native
       val idName = id.identifier
       val txName = "__bp_text__"
-      val df = bf.df
-        .withColumn(idName, compileExpr(id, bf))
-        .withColumn(txName, compileExpr(text, bf))
+      val df = withInputs(bf, idName -> id, txName -> text)
         .withColumn("__bp__",
           graft.llm.TextOps.boilerplateLines(txName, stops, mw, pct, llc))
         .select(
@@ -1327,9 +1235,7 @@ object Compiler {
       val bf = compileSource(base, spark)
       val kName = "__ws_key__"
       val wName = "__ws_w__"
-      val df = bf.df
-        .withColumn(kName, compileExpr(key, bf))
-        .withColumn(wName, compileExpr(weight, bf))
+      val df = withInputs(bf, kName -> key, wName -> weight)
       new Frame(graft.llm.TextOps.weightedSample(df, kName, wName, k)
         .drop(wName))
 
@@ -1340,11 +1246,10 @@ object Compiler {
       // because drift needs its full word distribution, not a bounded
       // parameter set.
       val bf = compileSource(base, spark)
-      val of = compileSource(other.source, spark)
-      of.pending.keys.toSeq.foreach(of.attach)
+      val of = compileClosed(other, spark)
       val tName = "__drift_text__"
-      val dfA = bf.df.withColumn(tName, compileExpr(text, bf))
-      val dfB = of.df.withColumn(tName, compileExpr(otherText, of))
+      val dfA = withInputs(bf, tName -> text)
+      val dfB = withInputs(of, tName -> otherText)
       new Frame(graft.llm.TextOps.unigramKl(dfA, dfB, tName, alpha))
 
     case Source.CorpusDiff(base, other, id, text, otherId, otherText) =>
@@ -1352,16 +1257,11 @@ object Compiler {
       // shared id/text column naming; the new snapshot is a sub-model
       // (the CorpusDrift seam), compiled — not collected.
       val bf = compileSource(base, spark)
-      val of = compileSource(other.source, spark)
-      of.pending.keys.toSeq.foreach(of.attach)
+      val of = compileClosed(other, spark)
       val idName = id.identifier
       val tName = "__cd_text__"
-      val dfO = bf.df
-        .withColumn(idName, compileExpr(id, bf))
-        .withColumn(tName, compileExpr(text, bf))
-      val dfN = of.df
-        .withColumn(idName, compileExpr(otherId, of))
-        .withColumn(tName, compileExpr(otherText, of))
+      val dfO = withInputs(bf, idName -> id, tName -> text)
+      val dfN = withInputs(of, idName -> otherId, tName -> otherText)
       new Frame(graft.llm.Dedup.corpusDiff(dfO, dfN, idName, tName))
 
     case Source.CorpusReport(base, text, groups) =>
@@ -1370,10 +1270,7 @@ object Compiler {
       val bf = compileSource(base, spark)
       val tName = "__cr_text__"
       val gNames = groups.map(_.identifier)
-      val df = groups.zip(gNames).foldLeft(
-        bf.df.withColumn(tName, compileExpr(text, bf))) {
-        case (d, (g, n)) => d.withColumn(n, compileExpr(g, bf))
-      }
+      val df = withInputs(bf, (tName -> text) +: gNames.zip(groups): _*)
       new Frame(graft.llm.TextOps.corpusReport(df, tName, gNames))
 
     case Source.SemanticDecontam(base, id, vec, eval, evalVec, threshold) =>
@@ -1384,21 +1281,16 @@ object Compiler {
       // suites, or a 1-row broadcast of the suite above the operator's
       // maxEvalVecs plan-size bound (still zero shuffles either way).
       val bf = compileSource(base, spark)
-      val ef = compileSource(eval.source, spark)
-      ef.pending.keys.toSeq.foreach(ef.attach)
+      val ef = compileClosed(eval, spark)
       val vName = evalVec.identifier
-      require(ef.df.columns.contains(vName),
-        s"semanticDecontam eval model must expose a column named '$vName'; " +
-          s"got (${ef.df.columns.mkString(", ")})")
+      requireExposed(ef, "semanticDecontam eval", vName)
       val evalVecs = ef.df
         .where(col(vName).isNotNull)
         .select(col(vName))
         .collect().map(_.getSeq[Float](0).toSeq).toSeq
       val idName = id.identifier
       val cName = "__sd_vec__"
-      val df = bf.df
-        .withColumn(idName, compileExpr(id, bf))
-        .withColumn(cName, compileExpr(vec, bf))
+      val df = withInputs(bf, idName -> id, cName -> vec)
       new Frame(graft.llm.Embeddings.semanticDecontaminate(
         df, idName, cName, evalVecs, threshold))
 
@@ -1410,9 +1302,7 @@ object Compiler {
       // helper strips at the sink post-process.
       val bf = compileSource(base, spark)
       val iName = "__dc_id__"
-      val df = bf.df
-        .withColumn("domain", compileExpr(domain, bf))
-        .withColumn(iName, compileExpr(id, bf))
+      val df = withInputs(bf, "domain" -> domain, iName -> id)
       new Frame(graft.llm.TextOps.domainCap(df, "domain", iName, cap)
         .drop(iName))
 
@@ -1423,22 +1313,18 @@ object Compiler {
       // table frozen into the plan as an array literal (zero joins); the
       // cut is sort+limit (TakeOrdered) with a k-row rank window.
       val bf = compileSource(base, spark)
-      val tf = compileSource(target.source, spark)
-      tf.pending.keys.toSeq.foreach(tf.attach)
+      val tf = compileClosed(target, spark)
       val idName = id.identifier
       val txName = text.identifier
-      require(tf.df.columns.contains(txName),
-        s"dsirSelect target model must expose a column named '$txName'; " +
-          s"got (${tf.df.columns.mkString(", ")})")
+      requireExposed(tf, "dsirSelect target", txName)
       // materialize-FEATURES-once (the semdedup doctrine): the hashed
       // gram-bucket arrays — the dominant md5 cost — are computed in ONE
       // pass and cached; the fit's raw-count pass and the serving fold
       // both read the cache instead of re-hashing the corpus. Scope is
       // released per query by the harness.
       graft.GraftExtensions.install(spark)
-      val feats = graft.llm.CacheScope.global.cache(bf.df
-        .withColumn(idName, compileExpr(id, bf))
-        .withColumn(txName, compileExpr(text, bf))
+      val feats = graft.llm.CacheScope.global.cache(
+        withInputs(bf, idName -> id, txName -> text)
         .where(col(txName).isNotNull)
         .select(col(idName),
           graft.llm.Dsir.gramBuckets(col(txName), dims).as("__bk__")))
@@ -1454,18 +1340,12 @@ object Compiler {
       // map-side token counts, ONE hash-partitioned running-sum window on
       // the group key. Same weights-sub-model contract as UpsampleMix.
       val bf = compileSource(base, spark)
-      val wf = compileSource(weights.source, spark)
-      wf.pending.keys.toSeq.foreach(wf.attach)
+      val wf = compileClosed(weights, spark)
       val gName = group.identifier
-      require(wf.df.columns.contains(gName) && wf.df.columns.contains("weight"),
-        s"tokenBudgetFill weights model must expose columns ($gName, weight); " +
-          s"got (${wf.df.columns.mkString(", ")})")
+      requireExposed(wf, "tokenBudgetFill weights", gName, "weight")
       val idName = id.identifier
       val txName = "__tbf_text__"
-      val df = bf.df
-        .withColumn(idName, compileExpr(id, bf))
-        .withColumn(gName, compileExpr(group, bf))
-        .withColumn(txName, compileExpr(text, bf))
+      val df = withInputs(bf, idName -> id, gName -> group, txName -> text)
       new Frame(graft.llm.TextOps.tokenBudgetFill(df, idName, gName, txName,
         wf.df.select(col(gName), col("weight")), budget))
 
@@ -1716,7 +1596,7 @@ object Compiler {
     // internals (all dunder- or ns-prefixed by construction). A merely
     // `__`-prefixed user column like `__raw` stays visible.
     val visible = deduped.filterNot(n =>
-      n.startsWith("__ns_") || graft.ir.Expr.isPrivateName(n))
+      isNsCol(n) || graft.ir.Expr.isPrivateName(n))
     renamed.select(visible.map(col).toIndexedSeq: _*)
   }
 }

@@ -238,4 +238,18 @@ object Expr {
 
 /** One ORDER BY key (reference sort.py:7-59): dir asc/desc, nulls
   * first/last/auto (auto = first when asc, last when desc). */
-final case class SortKey(e: Expr, asc: Boolean = true, nulls: String = "auto")
+final case class SortKey(e: Expr, asc: Boolean = true, nulls: String = "auto") {
+  /** The resolved null placement — the one home of the auto rule, read by
+    * the DataFrame lowering and the `model.sql()` renderer alike. */
+  def nullsFirst: Boolean = nulls match {
+    case "auto"  => asc
+    case "first" => true
+    case "last"  => false
+    case other   => throw new IllegalArgumentException(s"bad nulls: $other")
+  }
+
+  /** The ORDER BY direction with explicit null placement, e.g.
+    * "DESC NULLS LAST". */
+  def sqlOrder: String =
+    s"${if (asc) "ASC" else "DESC"} NULLS ${if (nullsFirst) "FIRST" else "LAST"}"
+}

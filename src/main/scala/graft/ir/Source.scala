@@ -1,6 +1,7 @@
 package graft.ir
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
 /** (group, timestamp, event_key) triple enabling event analytics
   * (reference src/model/activity_schema.py:7-22). */
@@ -180,14 +181,11 @@ object Source {
       anti: Boolean,
   ) extends Source
 
-  /** One windowed analytic column of a [[WindowCalc]]. `kind` ∈
-    * row_number | rank | dense_rank | percent_rank | cume_dist | ntile |
-    * lag | lead | first_value | last_value | running_sum | running_min |
-    * running_max | moving_sum | moving_avg. `target` is the measured
-    * expression (absent for the rank family), `offset` the lag/lead
-    * distance, `frame` the moving-window size in rows (trailing, current
-    * row included) — or, for ntile, the bucket count. first/last_value
-    * read the running frame (latest-so-far; last_value ignores NULLs). */
+  /** One windowed analytic column of a [[WindowCalc]]. `kind` names a
+    * [[WinKind]]. `target` is the measured expression (absent for the
+    * rank family), `offset` the lag/lead distance, `frame` the
+    * moving-window size in rows (trailing, current row included) — or,
+    * for ntile, the bucket count. */
   final case class WinCol(
       name: String,
       kind: String,
@@ -195,6 +193,109 @@ object Source {
       offset: Long = 1L,
       frame: Long = 0L,
   )
+
+  /** The rows a window kind reads, as Spark SQL frame text and as a frame
+    * on the shared spec: the spec's own frame (the rank family and
+    * lag/lead), the running frame (first row to the current row) or the
+    * trailing `frame`-row moving frame. Frames are spelled out in ROWS —
+    * the ORDER BY default RANGE would read peer rows on ties. */
+  sealed abstract class WinFrame(
+      val sql: WinCol => String,
+      val over: (WindowSpec, WinCol) => WindowSpec)
+  object WinFrame {
+    case object Spec extends WinFrame(_ => "", (w, _) => w)
+    case object Running extends WinFrame(
+      _ => " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
+      (w, _) => w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    case object Moving extends WinFrame(
+      wc => s" ROWS BETWEEN ${wc.frame - 1} PRECEDING AND CURRENT ROW",
+      (w, wc) => w.rowsBetween(-(wc.frame - 1), 0))
+  }
+
+  /** The [[WinCol]] field a window kind passes after its target: lag and
+    * lead's `offset`, ntile's bucket count (`frame`). */
+  sealed abstract class WinArg(val of: WinCol => Long)
+  object WinArg {
+    case object Offset extends WinArg(_.offset)
+    case object Buckets extends WinArg(_.frame)
+  }
+
+  /** One window kind. `fn` is the Spark SQL function it calls; the call's
+    * arguments are the target (when `needsTarget`), then `arg`, then
+    * `true` for `ignoreNulls`. `col` builds the same call as a Column over
+    * the compiled target (null for the targetless kinds). */
+  final case class WinKind(
+      name: String,
+      fn: String,
+      needsTarget: Boolean,
+      frame: WinFrame,
+      arg: Option[WinArg] = None,
+      ignoreNulls: Boolean = false,
+  )(val col: (Column, WinCol) => Column) {
+
+    /** Fails unless `wc` carries what this kind reads. */
+    def check(wc: WinCol): Unit = {
+      require(!needsTarget || wc.target.isDefined,
+        s"window column '${wc.name}' (${wc.kind}) needs a target expression")
+      if (frame == WinFrame.Moving)
+        require(wc.frame >= 1,
+          s"window column '${wc.name}': moving frame must be >= 1 row")
+      if (arg.contains(WinArg.Buckets))
+        require(wc.frame >= 1,
+          s"window column '${wc.name}': $name bucket count (frame) must be >= 1")
+    }
+
+    /** The SQL call over the rendered `target`, without its OVER clause. */
+    def sql(target: => String, wc: WinCol): String = {
+      val args = (if (needsTarget) Seq(target) else Nil) ++
+        arg.map(_.of(wc).toString) ++ (if (ignoreNulls) Seq("true") else Nil)
+      s"$fn(${args.mkString(", ")})"
+    }
+  }
+
+  object WinKind {
+    import org.apache.spark.sql.functions._
+    import WinFrame._
+    /** Every window kind — the one list `Model.withWindow`'s checks, the
+      * DataFrame lowering and the `model.sql()` renderer read. */
+    val all: Seq[WinKind] = Seq(
+      WinKind("row_number", "row_number", false, Spec)((_, _) => row_number()),
+      WinKind("rank", "rank", false, Spec)((_, _) => rank()),
+      WinKind("dense_rank", "dense_rank", false, Spec)((_, _) => dense_rank()),
+      // percent_rank/cume_dist emit double in [0,1]
+      WinKind("percent_rank", "percent_rank", false, Spec)((_, _) => percent_rank()),
+      WinKind("cume_dist", "cume_dist", false, Spec)((_, _) => cume_dist()),
+      WinKind("ntile", "ntile", false, Spec, Some(WinArg.Buckets))(
+        (_, wc) => ntile(wc.frame.toInt)),
+      WinKind("lag", "lag", true, Spec, Some(WinArg.Offset))(
+        (t, wc) => lag(t, wc.offset.toInt)),
+      WinKind("lead", "lead", true, Spec, Some(WinArg.Offset))(
+        (t, wc) => lead(t, wc.offset.toInt)),
+      // first/last value over the running frame: last_value over the
+      // spec's default frame would read the partition tail
+      // (order-dependent answers); the running frame gives the standard
+      // "latest so far", last_value ignoring NULLs
+      WinKind("first_value", "first_value", true, Running)((t, _) => first(t)),
+      WinKind("last_value", "last_value", true, Running, ignoreNulls = true)(
+        (t, _) => last(t, ignoreNulls = true)),
+      WinKind("running_sum", "sum", true, Running)((t, _) => sum(t)),
+      WinKind("running_min", "min", true, Running)((t, _) => min(t)),
+      WinKind("running_max", "max", true, Running)((t, _) => max(t)),
+      WinKind("moving_sum", "sum", true, Moving)((t, _) => sum(t)),
+      WinKind("moving_avg", "avg", true, Moving)((t, _) => avg(t)),
+    )
+
+    private val byName: Map[String, WinKind] = all.map(k => k.name -> k).toMap
+
+    /** The kind of `wc`, checked against what it carries. */
+    def of(wc: WinCol): WinKind = {
+      val kind = byName.getOrElse(wc.kind, throw new IllegalArgumentException(
+        s"unknown window kind '${wc.kind}'; one of: " +
+          all.map(_.name).sorted.mkString(", ")))
+      kind.check(wc)
+      kind
+    }
+  }
 
   /** Windowed analytics (beyond-reference): every column shares ONE
     * (partitionBy, orderKeys) window spec, so the whole node costs a

@@ -1363,7 +1363,7 @@ object Dedup {
         require(cap == maxGramCopies,
           s"index at $dir was saved with cap $cap; serving with " +
             s"maxGramCopies=$maxGramCopies would diverge from a rebuild")
-        val hot = spark.read.parquet(s"$dir/hot")
+        val hot = graft.sources.ParquetIO.read(spark, s"$dir/hot")
         if (hot.isEmpty) postings
         else postings.join(broadcast(hot), Seq("__gh__"), "left_anti")
     }

@@ -360,7 +360,7 @@ object TextOps {
       dir: String,
       scope: CacheScope = CacheScope.global): DataFrame = {
     graft.GraftExtensions.install(docs.sparkSession)
-    val rules = docs.sparkSession.read.parquet(s"$dir/rules")
+    val rules = graft.sources.ParquetIO.read(docs.sparkSession, s"$dir/rules")
       .orderBy(col("merge_ix"))
       .collect().map(_.getString(1)) // bounded: one row per merge
     val seeded = byteSeedFrame(

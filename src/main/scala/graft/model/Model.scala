@@ -336,22 +336,7 @@ final case class Model(
     require(cols.nonEmpty, "withWindow requires at least one window column")
     require(cols.map(_.name).distinct.size == cols.size,
       s"duplicate window column names in ${cols.map(_.name).mkString(", ")}")
-    val rankFamily = Set("row_number", "rank", "dense_rank", "percent_rank",
-      "cume_dist", "ntile")
-    val kinds = rankFamily ++ Set("lag", "lead", "first_value", "last_value",
-      "running_sum", "running_min", "running_max", "moving_sum", "moving_avg")
-    cols.foreach { wc =>
-      require(kinds.contains(wc.kind),
-        s"unknown window kind '${wc.kind}'; one of: ${kinds.toSeq.sorted.mkString(", ")}")
-      require(rankFamily.contains(wc.kind) || wc.target.isDefined,
-        s"window column '${wc.name}' (${wc.kind}) needs a target expression")
-      if (wc.kind.startsWith("moving_"))
-        require(wc.frame >= 1,
-          s"window column '${wc.name}': moving frame must be >= 1 row")
-      if (wc.kind == "ntile")
-        require(wc.frame >= 1,
-          s"window column '${wc.name}': ntile bucket count (frame) must be >= 1")
-    }
+    cols.foreach(Source.WinKind.of)
     copy(
       source = Source.WindowCalc(source,
         partitionBy.map(bindSqlRefs(_)),
@@ -588,12 +573,6 @@ final case class Model(
     Model(Source.CdcChunks(source, id, text, k, modulus))
   }
 
-  /** Weighted sampling without replacement (the wire-serializable form
-    * of `graft.llm.TextOps.weightedSample`): Efraimidis–Spirakis
-    * priorities with the draw md5-derandomized on `key` — top-`k`
-    * priorities are a weight-proportional sample, deterministic across
-    * runs/engines/topology. Adds `priority`; non-positive/NULL weights
-    * are excluded. */
   /** Boilerplate line stripping (the wire-serializable form of
     * `graft.llm.TextOps.boilerplateLines`): jusText's context-free
     * length + stopword-density rules with an integer density compare.
@@ -609,6 +588,12 @@ final case class Model(
       minWords, minStopPct, longLineChars))
   }
 
+  /** Weighted sampling without replacement (the wire-serializable form
+    * of `graft.llm.TextOps.weightedSample`): Efraimidis–Spirakis
+    * priorities with the draw md5-derandomized on `key` — top-`k`
+    * priorities are a weight-proportional sample, deterministic across
+    * runs/engines/topology. Adds `priority`; non-positive/NULL weights
+    * are excluded. */
   def weightedSample(key: Expr, weight: Expr, k: Int): Model = {
     require(k >= 1, "weightedSample needs k >= 1")
     Model(Source.WeightedSample(source, key, weight, k))

@@ -35,11 +35,18 @@ object WireFormat {
     "measures" -> m.measures.map { case (k, v) => Map("name" -> k, "expr" -> exprW(v)) }.toList,
     "relations" -> m.relations.values.map(relW).toList,
     "primaryKey" -> m.primaryKey.map(exprW).orNull,
-    "activitySchema" -> m.activitySchema.map(a => Map(
-      "group" -> exprW(a.group), "timestamp" -> exprW(a.timestamp),
-      "eventKey" -> Option(a.eventKey).map(exprW).orNull)).orNull,
+    "activitySchema" -> m.activitySchema.map(schemaW).orNull,
     "customMeta" -> m.customMeta,
   )
+
+  /** An activity schema's fields — the model's `activitySchema` object,
+    * and inlined into the matchSteps and sessionize nodes. */
+  private def schemaW(a: ActivitySchema): Map[String, Any] = Map(
+    "group" -> exprW(a.group), "timestamp" -> exprW(a.timestamp),
+    "eventKey" -> Option(a.eventKey).map(exprW).orNull)
+
+  private def sortKeysW(keys: Seq[SortKey]): List[Map[String, Any]] =
+    keys.map(k => Map("expr" -> exprW(k.e), "asc" -> k.asc, "nulls" -> k.nulls)).toList
 
   private def relW(r: Relation): Map[String, Any] = Map(
     "name" -> r.name,
@@ -68,15 +75,13 @@ object WireFormat {
         "groups" -> g.map(exprW).toList, "measures" -> ms.map(exprW).toList,
         "mode" -> mode)
     case Source.Sort(b, keys) =>
-      Map("t" -> "sort", "base" -> sourceW(b), "keys" -> keys.map(k =>
-        Map("expr" -> exprW(k.e), "asc" -> k.asc, "nulls" -> k.nulls)).toList)
+      Map("t" -> "sort", "base" -> sourceW(b), "keys" -> sortKeysW(keys))
     case Source.Limit(b, n, off) =>
       Map("t" -> "limit", "base" -> sourceW(b), "n" -> n, "offset" -> off)
     case Source.RankLimit(b, parts, keys, k, rankName) =>
       Map("t" -> "rankLimit", "base" -> sourceW(b),
         "partitionBy" -> parts.map(exprW).toList,
-        "keys" -> keys.map(sk =>
-          Map("expr" -> exprW(sk.e), "asc" -> sk.asc, "nulls" -> sk.nulls)).toList,
+        "keys" -> sortKeysW(keys),
         "k" -> k, "rankName" -> rankName)
     case Source.Union(b, o) =>
       Map("t" -> "union", "base" -> sourceW(b), "other" -> sourceW(o))
@@ -88,17 +93,13 @@ object WireFormat {
         "joined" -> modelW(joined), "foreignKey" -> fk.map(exprW).orNull,
         "condition" -> cond.map(exprW).orNull, "dropUnmatched" -> drop)
     case Source.MatchSteps(b, schema, steps, parts, limit) =>
-      Map("t" -> "matchSteps", "base" -> sourceW(b),
-        "group" -> exprW(schema.group), "timestamp" -> exprW(schema.timestamp),
-        "eventKey" -> Option(schema.eventKey).map(exprW).orNull,
+      Map("t" -> "matchSteps", "base" -> sourceW(b)) ++ schemaW(schema) ++ Map(
         "steps" -> steps.map(st => Map("name" -> st.name, "cond" -> exprW(st.condition))).toList,
         "partitionStartEvents" -> parts.map(exprW).toList,
         "timeLimit" -> limit.map(i => Map("num" -> i.num, "unit" -> i.unit)).orNull)
     case Source.Sessionize(b, schema, gap) =>
-      Map("t" -> "sessionize", "base" -> sourceW(b),
-        "group" -> exprW(schema.group), "timestamp" -> exprW(schema.timestamp),
-        "eventKey" -> Option(schema.eventKey).map(exprW).orNull,
-        "gapSeconds" -> gap)
+      Map("t" -> "sessionize", "base" -> sourceW(b)) ++ schemaW(schema) +
+        ("gapSeconds" -> gap)
     case Source.SetJoin(b, right, on, anti) =>
       Map("t" -> "setJoin", "base" -> sourceW(b), "right" -> modelW(right),
         "on" -> on.map { case (l, r) =>
@@ -107,8 +108,7 @@ object WireFormat {
     case Source.WindowCalc(b, parts, keys, cols) =>
       Map("t" -> "windowCalc", "base" -> sourceW(b),
         "partitionBy" -> parts.map(exprW).toList,
-        "keys" -> keys.map(sk =>
-          Map("expr" -> exprW(sk.e), "asc" -> sk.asc, "nulls" -> sk.nulls)).toList,
+        "keys" -> sortKeysW(keys),
         "cols" -> cols.map(wc => Map(
           "name" -> wc.name, "kind" -> wc.kind,
           "target" -> wc.target.map(exprW).orNull,
@@ -231,6 +231,20 @@ object WireFormat {
   private def str(v: Any): String = v.asInstanceOf[String]
   private def bool(v: Any): Boolean = v.asInstanceOf[Boolean]
   private def long(v: Any): Long = v.asInstanceOf[Long]
+  /** A JSON number as a Double: the reader returns integral numbers as
+    * Long. */
+  private def double(v: Any, what: String): Double = v match {
+    case d: Double => d
+    case l: Long   => l.toDouble
+    case other => throw new IllegalArgumentException(s"$what must be numeric, got $other")
+  }
+
+  private def schemaR(a: Map[String, Any]): ActivitySchema =
+    ActivitySchema(exprR(obj(a("group"))), exprR(obj(a("timestamp"))),
+      Option(a("eventKey")).map(x => exprR(obj(x))).orNull)
+
+  private def sortKeysR(keys: Any): List[SortKey] = arr(keys).map(obj).map(k =>
+    SortKey(exprR(obj(k("expr"))), bool(k("asc")), str(k("nulls"))))
 
   private def modelR(m: Map[String, Any]): Model = Model(
     source = sourceR(obj(m("source"))),
@@ -246,11 +260,7 @@ object WireFormat {
       rel.name -> rel
     }),
     primaryKey = Option(m("primaryKey")).map(v => exprR(obj(v))),
-    activitySchema = Option(m("activitySchema")).map { v =>
-      val a = obj(v)
-      ActivitySchema(exprR(obj(a("group"))), exprR(obj(a("timestamp"))),
-        Option(a("eventKey")).map(x => exprR(obj(x))).orNull)
-    },
+    activitySchema = Option(m("activitySchema")).map(v => schemaR(obj(v))),
     // absent in pre-customMeta wires — tolerate additively
     customMeta = m.get("customMeta")
       .map(v => obj(v).map { case (k, x) => k -> str(x) })
@@ -279,15 +289,13 @@ object WireFormat {
         // absent in pre-mode wires — tolerate additively
         s.get("mode").map(str).getOrElse("group"))
     case "sort" =>
-      Source.Sort(sourceR(obj(s("base"))), arr(s("keys")).map(obj).map(k =>
-        SortKey(exprR(obj(k("expr"))), bool(k("asc")), str(k("nulls")))))
+      Source.Sort(sourceR(obj(s("base"))), sortKeysR(s("keys")))
     case "limit" =>
       Source.Limit(sourceR(obj(s("base"))), long(s("n")), long(s("offset")))
     case "rankLimit" =>
       Source.RankLimit(sourceR(obj(s("base"))),
         arr(s("partitionBy")).map(p => exprR(obj(p))),
-        arr(s("keys")).map(obj).map(k =>
-          SortKey(exprR(obj(k("expr"))), bool(k("asc")), str(k("nulls")))),
+        sortKeysR(s("keys")),
         long(s("k")), str(s("rankName")))
     case "union" =>
       Source.Union(sourceR(obj(s("base"))), sourceR(obj(s("other"))))
@@ -303,9 +311,7 @@ object WireFormat {
         Option(s("condition")).map(v => exprR(obj(v))),
         bool(s("dropUnmatched")))
     case "matchSteps" =>
-      Source.MatchSteps(sourceR(obj(s("base"))),
-        ActivitySchema(exprR(obj(s("group"))), exprR(obj(s("timestamp"))),
-          Option(s("eventKey")).map(x => exprR(obj(x))).orNull),
+      Source.MatchSteps(sourceR(obj(s("base"))), schemaR(s),
         arr(s("steps")).map(obj).map(st => Step(str(st("name")), exprR(obj(st("cond"))))),
         arr(s("partitionStartEvents")).map(e => exprR(obj(e))),
         Option(s("timeLimit")).map(v => {
@@ -319,8 +325,7 @@ object WireFormat {
     case "windowCalc" =>
       Source.WindowCalc(sourceR(obj(s("base"))),
         arr(s("partitionBy")).map(p => exprR(obj(p))),
-        arr(s("keys")).map(obj).map(k =>
-          SortKey(exprR(obj(k("expr"))), bool(k("asc")), str(k("nulls")))),
+        sortKeysR(s("keys")),
         arr(s("cols")).map(obj).map(wc => Source.WinCol(
           str(wc("name")), str(wc("kind")),
           Option(wc("target")).map(t => exprR(obj(t))),
@@ -334,10 +339,7 @@ object WireFormat {
         // absent in pre-pruneRight wires — tolerate additively
         s.get("pruneRight").exists(v => bool(v)))
     case "sessionize" =>
-      Source.Sessionize(sourceR(obj(s("base"))),
-        ActivitySchema(exprR(obj(s("group"))), exprR(obj(s("timestamp"))),
-          Option(s("eventKey")).map(x => exprR(obj(x))).orNull),
-        long(s("gapSeconds")))
+      Source.Sessionize(sourceR(obj(s("base"))), schemaR(s), long(s("gapSeconds")))
     case "rangeJoin" =>
       Source.RangeJoin(sourceR(obj(s("base"))), modelR(obj(s("right"))),
         Option(s("leftOn")).map(v => exprR(obj(v))),
@@ -371,14 +373,9 @@ object WireFormat {
       Source.DomainCap(sourceR(obj(s("base"))), exprR(obj(s("domain"))),
         exprR(obj(s("id"))), long(s("cap")).toInt)
     case "corpusDrift" =>
-      val alpha = s("alpha") match {
-        case d: Double => d
-        case l: Long => l.toDouble
-        case other => throw new IllegalArgumentException(
-          s"corpusDrift alpha must be numeric, got $other")
-      }
       Source.CorpusDrift(sourceR(obj(s("base"))), modelR(obj(s("other"))),
-        exprR(obj(s("text"))), exprR(obj(s("otherText"))), alpha)
+        exprR(obj(s("text"))), exprR(obj(s("otherText"))),
+        double(s("alpha"), "corpusDrift alpha"))
     case "corpusDiff" =>
       Source.CorpusDiff(sourceR(obj(s("base"))), modelR(obj(s("other"))),
         exprR(obj(s("id"))), exprR(obj(s("text"))),
@@ -387,15 +384,9 @@ object WireFormat {
       Source.CorpusReport(sourceR(obj(s("base"))), exprR(obj(s("text"))),
         s("groups").asInstanceOf[List[Any]].map(g => exprR(obj(g))))
     case "semanticDecontam" =>
-      val th = s("threshold") match {
-        case d: Double => d
-        case l: Long => l.toDouble
-        case other => throw new IllegalArgumentException(
-          s"semanticDecontam threshold must be numeric, got $other")
-      }
       Source.SemanticDecontam(sourceR(obj(s("base"))), exprR(obj(s("id"))),
         exprR(obj(s("vec"))), modelR(obj(s("eval"))),
-        exprR(obj(s("evalVec"))), th)
+        exprR(obj(s("evalVec"))), double(s("threshold"), "semanticDecontam threshold"))
     case "tokenBudgetFill" =>
       Source.TokenBudgetFill(sourceR(obj(s("base"))), exprR(obj(s("id"))),
         exprR(obj(s("group"))), exprR(obj(s("text"))),
@@ -445,7 +436,7 @@ object WireFormat {
         case "str"    => str(o("v"))
         case "bool"   => bool(o("v"))
         case "long"   => long(o("v"))
-        case "double" => o("v") match { case d: Double => d; case l: Long => l.toDouble }
+        case "double" => double(o("v"), "a double literal")
         case "ts"     => java.time.Instant.parse(str(o("v")))
         case "date"   => java.time.LocalDate.parse(str(o("v")))
         case "interval" => TimeInterval(long(o("num")), str(o("unit")))

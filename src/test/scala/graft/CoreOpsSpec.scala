@@ -820,6 +820,51 @@ class CoreOpsSpec extends GraftSuite {
             frame = 2L),
           graft.ir.Source.WinCol("latest", "last_value", Some(col("amt")))))
       .sort(col("id")))
+    // every window kind, over a nullable order key placed DESC NULLS
+    // FIRST and a nullable target (lag/lead/last_value see the NULLs)
+    Seq[(Long, String, Option[Double], Option[Double])](
+        (1L, "x", Some(10.0), Some(1.0)), (2L, "x", None, Some(2.0)),
+        (3L, "y", Some(20.0), None), (4L, "y", Some(40.0), Some(4.0)),
+        (5L, "x", Some(25.0), None), (6L, "y", None, Some(6.0)),
+        (7L, "x", Some(5.0), Some(2.0)))
+      .toDF("id", "grp", "amt", "seq").createOrReplaceTempView("msql_n")
+    val nullable = Model.table("msql_n")
+    val kinds = Seq("row_number", "rank", "dense_rank", "percent_rank",
+      "cume_dist", "ntile", "lag", "lead", "first_value", "last_value",
+      "running_sum", "running_min", "running_max", "moving_sum", "moving_avg")
+    assert(graft.ir.Source.WinKind.all.map(_.name).sorted === kinds.sorted)
+    check(nullable
+      .withWindow(
+        partitionBy = Seq(col("grp")),
+        orderBy = Seq(graft.ir.SortKey(col("seq"), asc = false, nulls = "first"),
+          graft.ir.SortKey(col("id"))),
+        cols = kinds.map { k =>
+          val targetless = Set("row_number", "rank", "dense_rank",
+            "percent_rank", "cume_dist", "ntile")
+          graft.ir.Source.WinCol(s"w_$k", k,
+            if (targetless(k)) None else Some(col("amt")), frame = 2L)
+        })
+      .sort(col("id")))
+    // every (direction × nulls) ORDER BY, then a topK ranked NULLS LAST
+    for (dir <- Seq("asc", "desc"); nulls <- Seq("auto", "first", "last"))
+      check(nullable.sort(col("seq"), dir, nulls).sort(col("id")))
+    check(nullable
+      .topK(partitionBy = Seq(col("grp")),
+        orderBy = Seq(graft.ir.SortKey(col("seq"), nulls = "last"),
+          graft.ir.SortKey(col("id"))),
+        k = 2, rankName = "rk")
+      .sort(col("grp")).sort(col("rk")))
+    // the kind table and the null-placement rule refuse with one message
+    val unknown = intercept[IllegalArgumentException] {
+      nullable.withWindow(Seq(col("grp")), Seq(graft.ir.SortKey(col("id"))),
+        Seq(graft.ir.Source.WinCol("m", "median", Some(col("amt")))))
+    }
+    assert(unknown.getMessage === "unknown window kind 'median'; one of: " +
+      kinds.sorted.mkString(", "))
+    val badNulls = intercept[IllegalArgumentException] {
+      nullable.sort(col("seq"), nulls = "middle").sql(s)
+    }
+    assert(badNulls.getMessage === "bad nulls: middle")
     // match_steps-backed composites still refuse honestly
     intercept[UnsupportedOperationException] {
       Model.table("msql_w").native(df => df).sql(s)

@@ -82,10 +82,11 @@ class EntrySpec extends GraftSuite {
     // IVF serves read `centroids` through ParquetIO.read
     // (Embeddings.storedCentroids), and the refits, hot-cell splits and
     // ScaleCheck read `postings` back the same way, as do the KN model's
-    // `level<k>`, `ctx<k>` and `tot1` tables and the PageRank artifact's
-    // `edges` and `ranks`, each resolved once per version.
+    // `level<k>`, `ctx<k>` and `tot1` tables, the PageRank artifact's
+    // `edges` and `ranks`, the BPE model's `rules` and the substring
+    // index's `hot` grams, each resolved once per version.
     val bare = ("read\\.parquet\\(s\"\\$[^\"]*/" +
-      "(centroids|postings|level[^\"/]*|ctx[^\"/]*|tot1|edges|ranks)\"\\)").r
+      "(centroids|postings|level[^\"/]*|ctx[^\"/]*|tot1|edges|ranks|rules|hot)\"\\)").r
     val offenders = sourcesWhere("src/main")(bare.findFirstIn(_).isDefined)
     assert(offenders.isEmpty,
       s"bare read.parquet of a stored model table: ${offenders.mkString(", ")}")
@@ -155,6 +156,19 @@ class EntrySpec extends GraftSuite {
       Seq("substring_index(col(\"g\"), \" \", -k)",
         "require(order >= 2 && order <= 8",
         "explode(TextOps.wordShingles("))
+  }
+
+  test("source lint: the semantic layer writes its null placement, window kinds, sub-model closure and join-one rename once") {
+    // SortKey.nullsFirst resolves every ORDER BY key, Source.WinKind is
+    // the one window-kind table, Compiler.compileClosed attaches a
+    // sub-model's pending joins and Compiler.isNsCol recognizes a
+    // namespaced column; the lowering, the model.sql() renderer, Model's
+    // checks and the wire codec all read them. A second copy is a fork
+    // whose rule can drift between run() and model.sql().
+    assertWrittenOnce(
+      Seq("compile", "model", "wire", "ir").map(d => s"src/main/scala/graft/$d"),
+      Seq("\"bad nulls", "\"running_sum\"", "pending.keys.toSeq.foreach",
+        "startsWith(\"__ns_\")"))
   }
 
   test("plan lint: no cartesian product in any query's physical plan") {

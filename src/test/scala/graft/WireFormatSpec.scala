@@ -12,6 +12,106 @@ class WireFormatSpec extends GraftSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** Models that together reach every serializable Source node, each
+    * with the exact `WireFormat.toJson` it wrote when recorded in
+    * `src/test/resources/wire_golden.txt` (one `name<TAB>json` line per
+    * model). Nothing here runs: toJson is pure. */
+  private def goldenModels: Seq[(String, Model)] = {
+    import graft.ir.{SortKey, Source}
+    val events = Model.table("events")
+      .withActivitySchema(col("user_id"), col("ts"), col("event_type"))
+    val docs = Model.table("docs")
+    val weights = Model.sqlQuery("SELECT 'en' AS lang, 1.5 AS weight")
+    val snapshot = Model.table("docs_v2").filter(col("lang") === lit("en"))
+    val orders = Model.table("orders")
+      .withCustomMeta("owner" -> "analytics")
+      .withJoinOne(Model.table("customer").withPrimaryKey(col("c_custkey")),
+        named = "customer", foreignKey = col("o_custkey"))
+    Seq(
+      "relational" -> orders
+        .filter(col("o_totalprice") > lit(1000.0) &&
+          col("o_orderstatus").in(Seq("F", "O", null)))
+        .aggregate(
+          groups = Seq(col("o_orderpriority"),
+            orders.rel("customer").attr("c_name").named("name")),
+          measures = Seq(count().named("n"), sum(col("o_totalprice")).named("total")))
+        .sort(col("o_orderpriority"), "desc", "first").sort(col("n"), nulls = "last")
+        .limit(25L, 5L),
+      "scans" -> Model.sqlQuery("SELECT 1 AS id, 2 AS a, 3 AS b")
+        .unionAll(Model.csv("in/t.csv")).unionAll(Model.json("in/t.json"))
+        .unionAll(Model.orc("in/t.orc")).unionAll(Model.xlsx("in/t.xlsx", Some("s1")))
+        .unionAll(Model.warc("in/c.warc.gz")).unionAll(Model.wet("in/c.wet.gz"))
+        .unionAll(Model.wat("in/c.wat.gz"))
+        .fold(ids = Seq(col("id")), values = Seq(col("a"), col("b")))
+        .pick(col("id"), col("key"), col("value"))
+        .rollup(groups = Seq(col("key")), measures = Seq(sum(col("value")).named("s")))
+        .pickStar(),
+      "windows" -> Model.table("events")
+        .topK(Seq(col("user_id")),
+          Seq(SortKey(col("ts"), asc = false, nulls = "first"), SortKey(col("event_id"))),
+          k = 3L, rankName = "rk")
+        .withWindow(Seq(col("user_id")),
+          Seq(SortKey(col("ts"), nulls = "last"), SortKey(col("event_id"), asc = false)),
+          Seq(Source.WinCol("rn", "row_number", None),
+            Source.WinCol("prev_ts", "lag", Some(col("ts")), offset = 2L),
+            Source.WinCol("q", "ntile", None, frame = 4L),
+            Source.WinCol("mv", "moving_avg", Some(col("amount")), frame = 3L)))
+        .semiJoin(Model.table("users"), Seq(col("user_id") -> col("id")))
+        .antiJoin(Model.table("bots"), Seq(col("user_id") -> col("id")))
+        .asofJoin(Model.table("orders"),
+          on = (col("user_id"), col("o_custkey")),
+          ts = (col("ts"), col("o_orderdate")),
+          pick = Seq(col("o_orderkey").named("last_order")), seq = col("o_orderkey"))
+        .rangeJoin(Model.table("promos"), point = col("ts"),
+          between = (col("starts"), col("ends")), pick = Seq(col("promo_id")),
+          on = (col("user_id"), col("user_id")), bucketMicros = 3600000000L),
+      "activity" -> events.filter(col("event_type") =!= lit("bot")),
+      "journeys" -> events.matchSteps(Seq[StepSpec]("view", "purchase"),
+        partitionStartEvents = Seq(col("session_id")), timeLimit = interval(7, "day")),
+      "sessions" -> events.sessionize(1800L),
+      "corpus" -> docs
+        .upsampleMix(weights, group = col("lang"), key = col("id"))
+        .substringClean(col("id"), col("text"), minSpanWords = 6, minCopies = 3)
+        .dsirSelect(snapshot, id = col("id"), text = col("text"), k = 10, dims = 64)
+        .tokenBudgetFill(weights, id = col("id"), group = col("lang"),
+          text = col("text"), budget = 2000L)
+        .cdcChunks(col("id"), col("text"), k = 5, modulus = 32)
+        .weightedSample(col("id"), col("w"), k = 7)
+        .corpusDrift(snapshot, col("text"), col("text"), alpha = 0.25)
+        .semanticDecontam(snapshot, col("id"), col("vec"), col("vec"), threshold = 1.0)
+        .corpusDiff(snapshot, col("id"), col("text"), col("id"), col("text"))
+        .corpusReport(col("text"), col("lang"))
+        .domainCap(col("domain"), col("id"), cap = 3)
+        .boilerplateStrip(col("id"), col("text"), Seq("the", "a"), minWords = 4),
+    )
+  }
+
+  test("toJson writes the recorded bytes for every serializable source node") {
+    val golden = scala.io.Source.fromResource("wire_golden.txt").getLines()
+      .filter(_.nonEmpty).map { line =>
+        val Array(name, json) = line.split("\t", 2); name -> json
+      }.toMap
+    assert(golden.keySet === goldenModels.map(_._1).toSet)
+    for ((name, m) <- goldenModels) {
+      val json = WireFormat.toJson(m)
+      assert(json === golden(name), s"$name wire bytes changed")
+      assert(WireFormat.fromJson(json) === m, s"$name does not round-trip")
+    }
+    // the set reaches every Source node that has a wire form
+    def nodes(x: Any): Seq[String] = x match {
+      case s: graft.ir.Source with Product =>
+        s.getClass.getSimpleName +: s.productIterator.toSeq.flatMap(nodes(_))
+      case p: Product     => p.productIterator.toSeq.flatMap(nodes(_))
+      case i: Iterable[_] => i.toSeq.flatMap(nodes(_))
+      case _              => Nil
+    }
+    import scala.reflect.runtime.universe._
+    val serializable = typeOf[graft.ir.Source].typeSymbol.asClass
+      .knownDirectSubclasses.map(_.name.toString) -- Set("FromDF", "NativeOp")
+    assert(serializable.size === 36)
+    assert(goldenModels.flatMap(m => nodes(m._2)).toSet === serializable)
+  }
+
   test("complex relational model round-trips and runs identically") {
     val customer = Model.parquet(dir, "customer").withPrimaryKey(col("c_custkey"))
     val m = Model.parquet(dir, "orders")
