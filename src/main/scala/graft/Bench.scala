@@ -116,7 +116,9 @@ object Bench {
 
     // With args: time only the named queries, three passes each (regression
     // isolation — pass 1 includes per-query codegen, passes 2-3 are steady
-    // state). Without args: the driver's full single-pass sweep.
+    // state: the session's codegen cache holds the named queries' classes,
+    // so they compile nothing again). Without args: the driver's full
+    // single-pass sweep.
     // Non-query args (a data-dir passed positionally, a typo) are skipped
     // up front with ONE note — previously each pass printed a spurious
     // "failed: key not found" row that polluted the targeted artifact.

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -13,13 +14,42 @@ import graft.expr.{AcCount, BloomAnyContain, BoilerplateStripExpr, CdcStarts, Ch
   * replaces a CodegenFallback higher-order-function hot loop with plain
   * JVM code producing bit-identical values. Enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * imperatively via `GraftExtensions.install(spark)`. */
+  * imperatively via `GraftExtensions.install(spark)`.
+  *
+  * The config path also sizes Spark's compiled-code cache for graft's
+  * plans ([[codegenCacheDefault]] on the live SparkContext's conf, before
+  * the session's SharedState copies it); an explicit value wins. The size
+  * is read once per JVM, when `CodeGenerator` first initializes, so it
+  * only takes effect for a session built before the JVM's first codegen. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.GraftConfBridge.activeConf.foreach(GraftExtensions.codegenCacheDefault)
     GraftExtensions.functions.foreach(ext.injectFunction)
+  }
 }
 
 object GraftExtensions {
+  /** Spark keys its compiled-code cache by (context class loader, code), so
+    * in local mode each whole-stage class takes a driver key and an
+    * executor key. Spark's default of 100 entries holds neither perfbench
+    * pool, and every deck recompiled every class. 1000 holds the larger
+    * pool five times over; a sweep runs every op once, so a cache holding
+    * all of its keys would only serve a second sweep in the same JVM. */
+  // keys: bi_dashboard deck 138, cold llm_pipeline deck 189, one pass of all 292 ops (sf0.01) 3161
+  private val CodegenCacheEntries = 1000
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** The codegen cache pair graft's sessions start with: a JVM system
+    * property of the key wins over graft's default. */
+  def codegenCache: (String, String) =
+    CodegenCacheKey -> sys.props.getOrElse(CodegenCacheKey, CodegenCacheEntries.toString)
+
+  /** Sets graft's codegen cache size on `conf` unless it carries one. */
+  def codegenCacheDefault(conf: SparkConf): SparkConf = {
+    val (key, size) = codegenCache
+    conf.setIfMissing(key, size)
+  }
+
   private type FnReg = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
   private def intLit(e: Expression, fn: String): Int = e match {

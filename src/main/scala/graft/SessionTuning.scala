@@ -1,7 +1,7 @@
 package graft
 
 /** The one local SparkSession factory ([[session]]) every main and the
-  * test suites run on, and the I/O tuning it applies.
+  * test suites run on, and the I/O and codegen-cache tuning it applies.
   *
   * Shuffle block files are the measured bottleneck of the small-shuffle
   * queries on this host (guide §2.1: "Local disk bandwidth for shuffle
@@ -55,13 +55,18 @@ object SessionTuning {
     }
 
   /** The local session: `local[cpus]`, shuffle partitions = cpus, UTC,
-    * UI off, the fast local dir and log level ERROR. */
+    * UI off, the fast local dir, graft's codegen cache size
+    * ([[GraftExtensions.codegenCache]], the pair the extension also
+    * defaults; Spark reads it once per JVM, at the first codegen, so it
+    * holds when this is the JVM's first session) and log level ERROR. */
   def session(cpus: String): org.apache.spark.sql.SparkSession = {
+    val (cacheKey, cacheSize) = GraftExtensions.codegenCache
     val s = apply(org.apache.spark.sql.SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(cacheKey, cacheSize)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -803,8 +803,12 @@ object Compiler {
   /** `f`'s frame with each (name, expression) compiled against `f` and
     * added in order by withColumn — a corpus operator's input
     * projection. */
-  private def withInputs(f: Frame, cols: (String, Expr)*): DataFrame =
-    cols.foldLeft(f.df) { case (df, (n, e)) => df.withColumn(n, compileExpr(e, f)) }
+  private def withInputs(f: Frame, cols: (String, Expr)*): DataFrame = {
+    // compile every input first: one that names a join-one relation
+    // attribute attaches the join to `f.df`
+    val compiled = cols.map { case (n, e) => n -> compileExpr(e, f) }
+    compiled.foldLeft(f.df) { case (df, (n, c)) => df.withColumn(n, c) }
+  }
 
   def compileSource(s: Source, spark: SparkSession): Frame = s match {
     case Source.Table(name) =>

@@ -240,8 +240,9 @@ object Expr {
   * first/last/auto (auto = first when asc, last when desc). */
 final case class SortKey(e: Expr, asc: Boolean = true, nulls: String = "auto") {
   /** The resolved null placement — the one home of the auto rule, read by
-    * the DataFrame lowering and the `model.sql()` renderer alike. */
-  def nullsFirst: Boolean = nulls match {
+    * the DataFrame lowering and the `model.sql()` renderer alike. A val, so
+    * a bad `nulls` fails when the key is built (Model or wire decode). */
+  val nullsFirst: Boolean = nulls match {
     case "auto"  => asc
     case "first" => true
     case "last"  => false

@@ -205,6 +205,23 @@ class CoreOpsSpec extends GraftSuite {
     assert(out.head.getLong(0) === 2L)
   }
 
+  test("a corpus operator's input may name a join-one relation attribute") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, 10L), (2L, 20L)).toDF("id", "lid")
+    val titles = Seq((10L, "the quick brown fox jumps over the lazy dog"),
+      (20L, "a stitch in time saves nine and then some more")).toDF("k", "title")
+    val m = Model.fromDF(docs).withJoinOne(
+      Model.fromDF(titles).withPrimaryKey(col("k")), named = "l", foreignKey = col("lid"))
+    // the input compiles (attaching the join) before the projection
+    val out = m.cdcChunks(col("id"), m.rel("l").attr("title")).run(s)
+    val direct = Model.fromDF(docs.join(titles, docs("lid") === titles("k")))
+      .cdcChunks(col("id"), col("title")).run(s)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.toString).sorted.toSeq
+    assert(rows(out) === rows(direct) && rows(direct).nonEmpty)
+  }
+
   test("join is lazy: unreferenced relation emits no join") {
     val (sales, products) = salesAndProducts
     val joined = sales.withJoinOne(products, named = "product",
@@ -861,8 +878,9 @@ class CoreOpsSpec extends GraftSuite {
     }
     assert(unknown.getMessage === "unknown window kind 'median'; one of: " +
       kinds.sorted.mkString(", "))
+    // a bad null placement fails when the model is built, not when run
     val badNulls = intercept[IllegalArgumentException] {
-      nullable.sort(col("seq"), nulls = "middle").sql(s)
+      nullable.sort(col("seq"), nulls = "middle")
     }
     assert(badNulls.getMessage === "bad nulls: middle")
     // match_steps-backed composites still refuse honestly

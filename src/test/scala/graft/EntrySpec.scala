@@ -171,6 +171,17 @@ class EntrySpec extends GraftSuite {
         "startsWith(\"__ns_\")"))
   }
 
+  test("source lint: the codegen cache size key is written once under src/main") {
+    // GraftExtensions.codegenCache is the one pair that the extension and
+    // SessionTuning.session both set; a second literal is a second size
+    // that can drift from the first.
+    val key = "spark.sql.codegen.cache.maxEntries"
+    val hits = sources("src/main").flatMap { case (path, text) =>
+      java.util.regex.Pattern.quote(key).r.findAllMatchIn(text).map(_ => path)
+    }
+    assert(hits.size === 1, s"$key written ${hits.size} times: ${hits.mkString(", ")}")
+  }
+
   test("plan lint: no cartesian product in any query's physical plan") {
     // Whole-suite guard: a CartesianProductExec anywhere means a join lost
     // its equi-condition (or a non-broadcastable nested loop slipped in) —

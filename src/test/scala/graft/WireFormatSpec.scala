@@ -151,6 +151,15 @@ class WireFormatSpec extends GraftSuite {
       m.run(spark).collect().map(_.toSeq).toSeq)
   }
 
+  test("a payload with a bad sort-key null placement fails to decode") {
+    val json = WireFormat.toJson(Model.table("orders").sort(col("o_orderkey")))
+    assert(json.contains("\"nulls\":\"auto\""))
+    val e = intercept[IllegalArgumentException] {
+      WireFormat.fromJson(json.replace("\"nulls\":\"auto\"", "\"nulls\":\"middle\""))
+    }
+    assert(e.getMessage === "bad nulls: middle")
+  }
+
   test("topK model round-trips and runs identically") {
     import graft.ir.SortKey
     val m = Model.parquet(dir, "orders")
