@@ -18,7 +18,9 @@ object Explain {
         "q_grouping_sets", "q_window_rank", "q_lang_mix",
         "q_ann_quantized", "q_multimodal_pixels", "q_json_props",
         "q_dedup_cross", "q_dedup_boilerplate_skew", "q_xlsx_source",
-        "q_multimodal_jpeg", "q_funnel_partition_limit")
+        "q_multimodal_jpeg", "q_funnel_partition_limit",
+        // the llm_pipeline benchmark pool (q_dedup_minhash is above)
+        "q_lm_kn", "q_ann_opq", "q_dedup_clusters")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

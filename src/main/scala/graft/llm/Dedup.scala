@@ -141,33 +141,40 @@ object Dedup {
           .as("n_unique"))
 
   /** The (`id`, `toks`) token rows of `docs`: each document's id and
-    * whitespace tokens, documents with fewer than `minTokens` tokens
-    * dropped (they hold no shingle). */
+    * whitespace tokens. Documents with too few tokens for a shingle stay:
+    * each consumer's explode emits no row for them. (A `where` on the
+    * token count would be pushed below this projection and tokenize
+    * every document a second time.) */
   private def tokenRows(
-      docs: DataFrame, idCol: String, textCol: String, minTokens: Int,
+      docs: DataFrame, idCol: String, textCol: String,
       id: String = "__id__", toks: String = "__toks__"): DataFrame =
-    docs
-      .select(col(idCol).as(id), col(textCol).as("__text__"))
-      .withColumn(toks, TextOps.tokens(col("__text__")))
-      .where(size(col(toks)) >= minTokens)
+    docs.select(col(idCol).as(id), TextOps.tokens(col(textCol)).as(toks))
+
+  /** `tokens` plus `__sig__`, the MinHash signature of the tokens in
+    * `toks`: the fused native graft.expr.MinHashSigWords (value-identical
+    * to the CodegenFallback HOF chain), NULL for a document with fewer
+    * than `shingleSize` tokens. The one place a signature is computed;
+    * [[bandRows]] reads it. */
+  private def signed(tokens: DataFrame, toks: String, shingleSize: Int,
+      numHashes: Int): DataFrame = {
+    graft.GraftExtensions.install(tokens.sparkSession)
+    tokens.withColumn("__sig__", when(size(col(toks)) >= shingleSize,
+      expr(s"minhash_sig_words($toks, $shingleSize, $numHashes)")))
+  }
 
   /** The one MinHash LSH band-row builder: one row per band of each row
-    * of `tokens` — its `keep` columns plus (`__band__`, `__bh__`), the
-    * band's hash over the MinHash signature of the tokens in `toks`. The
-    * signature is the fused native graft.expr.MinHashSigWords
-    * (value-identical to the CodegenFallback HOF chain). */
+    * of `signedRows` (a [[signed]] frame) — its `keep` columns plus
+    * (`__band__`, `__bh__`), the band's hash over `__sig__`. A NULL
+    * signature (a document too short to shingle) bands to no row. */
   private def bandRows(
-      tokens: DataFrame, toks: String, keep: Seq[String],
-      shingleSize: Int, numHashes: Int, rowsPerBand: Int): DataFrame = {
+      signedRows: DataFrame, keep: Seq[String], numHashes: Int,
+      rowsPerBand: Int): DataFrame = {
     require(numHashes == rowsPerBand * (numHashes / rowsPerBand),
       "numHashes must be a multiple of rowsPerBand")
-    graft.GraftExtensions.install(tokens.sparkSession)
-    tokens
-      .withColumn("__sig__",
-        expr(s"minhash_sig_words($toks, $shingleSize, $numHashes)"))
-      .select(keep.map(col) :+
-        posexplode(TextOps.bandHashes("__sig__", numHashes / rowsPerBand,
-          rowsPerBand)).as(Seq("__band__", "__bh__")): _*)
+    signedRows.select(keep.map(col) :+
+      posexplode(when(col("__sig__").isNotNull,
+        TextOps.bandHashes("__sig__", numHashes / rowsPerBand, rowsPerBand)))
+        .as(Seq("__band__", "__bh__")): _*)
   }
 
   /** The band-posting key `__bkey__`: the `parts` joined by ':' — equal
@@ -182,7 +189,7 @@ object Dedup {
     round(expr(s"word_ngram_jaccard($a, $b, $shingleSize)"), 6)
 
   /** One corpus side of the MinHash band join: the cached (`__id__`,
-    * `__toks__`) token rows the verification reads back, and the id-only
+    * `__toks__`, `__sig__`) rows the verification reads back, and the id-only
     * band rows (`__id__`, `__band__`, `__bh__`) the band join shuffles.
     *
     * Hot-bucket guard (off by default, maxBucketSize <= 0): a degenerate
@@ -199,12 +206,13 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String, shingleSize: Int,
       numHashes: Int, rowsPerBand: Int, scope: CacheScope,
       maxBucketSize: Int): (DataFrame, DataFrame) = {
-    // persisted: tokenization runs once for the band join AND the
-    // verification joins (the materialize-features-first phase)
-    val base = scope.cache(tokenRows(docs, idCol, textCol, shingleSize)
-      .select(col("__id__"), col("__toks__")))
-    val bandedAll = bandRows(base, "__toks__", Seq("__id__"), shingleSize,
-      numHashes, rowsPerBand)
+    // persisted: tokenization and the signature run once for both band
+    // join sides AND the verification joins (the materialize-features-
+    // first phase). A document too short to shingle stays in the cache
+    // but bands to no row, so no candidate pair ever reads it back.
+    val base = scope.cache(signed(tokenRows(docs, idCol, textCol),
+      "__toks__", shingleSize, numHashes))
+    val bandedAll = bandRows(base, Seq("__id__"), numHashes, rowsPerBand)
     val banded =
       if (maxBucketSize <= 0) bandedAll
       else bandedAll
@@ -328,8 +336,9 @@ object Dedup {
       numHashes: Int = 8,
       rowsPerBand: Int = 2,
   ): DataFrame =
-    bandRows(tokenRows(docs, idCol, textCol, shingleSize), "__toks__",
-        Seq("__id__", "__toks__"), shingleSize, numHashes, rowsPerBand)
+    bandRows(signed(tokenRows(docs, idCol, textCol), "__toks__",
+        shingleSize, numHashes), Seq("__id__", "__toks__"), numHashes,
+        rowsPerBand)
       .select(col("__id__"), bandKey("__band__", "__bh__"), col("__toks__"))
 
   /** Index MAINTENANCE — append a new slice's band postings into a
@@ -366,10 +375,9 @@ object Dedup {
       newDocs: DataFrame, idCol: String, textCol: String, index: DataFrame,
       shingleSize: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
       persist: DataFrame => DataFrame = identity): DataFrame = {
-    val tokens = tokenRows(newDocs, idCol, textCol, shingleSize,
-      "__nid__", "__ntoks__")
-    persist(bandRows(tokens, "__ntoks__", Seq("__nid__", "__ntoks__"),
-        shingleSize, numHashes, rowsPerBand)
+    val tokens = tokenRows(newDocs, idCol, textCol, "__nid__", "__ntoks__")
+    persist(bandRows(signed(tokens, "__ntoks__", shingleSize, numHashes),
+        Seq("__nid__", "__ntoks__"), numHashes, rowsPerBand)
       .select(col("__nid__"), col("__ntoks__"), bandKey("__band__", "__bh__")))
       .join(index, Seq("__bkey__"))
       .withColumn("jaccard", jaccard("__ntoks__", "__toks__", shingleSize))
@@ -437,7 +445,7 @@ object Dedup {
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     graft.GraftExtensions.install(docs.sparkSession)
-    val grams = tokenRows(docs, idCol, textCol, shingleSize)
+    val grams = tokenRows(docs, idCol, textCol)
       .withColumn("__grams__",
         array_distinct(expr(s"word_ngrams(__toks__, $shingleSize)")))
       .withColumn("__sz__", size(col("__grams__")))
@@ -523,7 +531,7 @@ object Dedup {
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     graft.GraftExtensions.install(docs.sparkSession)
-    val grams = tokenRows(docs, idCol, textCol, shingleSize)
+    val grams = tokenRows(docs, idCol, textCol)
       .withColumn("__grams__",
         array_distinct(expr(s"word_ngrams(__toks__, $shingleSize)")))
       .withColumn("__sz__", size(col("__grams__")))
@@ -580,12 +588,17 @@ object Dedup {
       scope: CacheScope = CacheScope.global,
   ): DataFrame = {
     graft.GraftExtensions.install(docs.sparkSession)
-    val base = scope.cache(tokenRows(docs, idCol, textCol, 2)
+    val base = scope.cache(tokenRows(docs, idCol, textCol)
       // native fused bigram-simhash (graft.expr.SimhashBigrams) — value-
-      // identical to the wordShingles→hashedTokens→simhash32 HOF chain
-      .withColumn("__fp__", expr("simhash_bigrams(__toks__)"))
+      // identical to the wordShingles→hashedTokens→simhash32 HOF chain;
+      // NULL for a document without a bigram
+      .withColumn("__fp__", when(size(col("__toks__")) >= 2,
+        expr("simhash_bigrams(__toks__)")))
       // both band-join sides read the fingerprints — hash once
       .select(col("__id__"), col("__fp__")))
+      // the length guard filters the cache: over the token projection it
+      // would be pushed below it and tokenize every document again
+      .where(col("__fp__").isNotNull)
     val banded = base.select(col("__id__"), col("__fp__"),
       posexplode(expr(
         "transform(sequence(0, 3), j -> (__fp__ >> (8 * j)) & 255)"))
@@ -643,17 +656,58 @@ object Dedup {
     *     the returned result carries its own checkpoint).
     *   - every superseded frame is unpersisted; the RESULT is
     *     `localCheckpoint`ed (self-contained partitions), which lets the
-    *     internal pair/edge/label caches be dropped before returning. */
+    *     internal pair/edge/label caches be dropped before returning.
+    *
+    * Small pair sets skip the rounds: when every pair fits in a broadcast
+    * (at most [[maxLocalPairs]] of them, a bound read from
+    * `spark.sql.autoBroadcastJoinThreshold`; a negative threshold turns
+    * this off) one bounded collect brings them to the driver, a
+    * union-find labels them ([[localComponents]]) and the result is a
+    * local relation of the same schema. Detector output is usually a
+    * few hundred pairs, where each propagation round is an eager job of
+    * fixed cost (q_dedup_clusters ran 21 of them). The local path always
+    * reaches the fixpoint, so it never hits `maxIterations`. One log
+    * line per call records the path taken. */
   def clusterPairs(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
       maxIterations: Int = 20,
   ): DataFrame = {
-    // pairs is typically an expensive detector output and is read twice
-    // (both edge directions) — materialize it once (internal-only persist:
-    // dropped before return, the result no longer references it)
+    // pairs is typically an expensive detector output, read by the
+    // bounded collect and, above the local bound, twice more (both edge
+    // directions) — materialize it once (internal-only persist: dropped
+    // before return, the result no longer references it)
     val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    val thresh = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val maxLocal = maxLocalPairs(pairs.schema, aCol, bCol, thresh)
+    val head =
+      if (maxLocal <= 0) None
+      else Some(p.select(col(aCol), col(bCol)).limit(maxLocal + 1).collect())
+    val local = head.filter(_.length <= maxLocal)
+    val counted = head.fold("unknown")(h =>
+      if (h.length > maxLocal) s">$maxLocal" else h.length.toString)
+    log.info(s"clusterPairs path=${if (local.isDefined) "local" else "distributed"} " +
+      s"pairs=$counted max_local_pairs=$maxLocal broadcast_threshold=$thresh")
+    local match {
+      case Some(rows) =>
+        p.unpersist(blocking = false)
+        val idType = pairs.schema(aCol).dataType
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id", idType,
+            pairs.schema(aCol).nullable || pairs.schema(bCol).nullable),
+          org.apache.spark.sql.types.StructField("cluster_id", idType)))
+        pairs.sparkSession.createDataFrame(java.util.Arrays.asList(
+          localComponents(rows, localIdOrdering(idType).get): _*), schema)
+      case None => propagateLabels(p, aCol, bCol, maxIterations)
+    }
+  }
+
+  /** [[clusterPairs]]' distributed min-label propagation over the
+    * persisted pairs `p`, which it unpersists. */
+  private def propagateLabels(
+      p: DataFrame, aCol: String, bCol: String,
+      maxIterations: Int): DataFrame = {
     // no distinct(): detectors emit each pair once, and min-aggregation is
     // duplicate-tolerant anyway — a dedup shuffle of the full edge list
     // would cost more than the duplicates it removes
@@ -710,7 +764,7 @@ object Dedup {
       // partially-merged clusters are WRONG output — make it observable.
       // A graph deep enough to hit this is also the signal to switch to a
       // doubling scheme (pointer jumping / large-star): see scaladoc.
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      log.warn(
         s"clusterPairs did not converge in $maxIterations rounds; " +
           "cluster_ids may be partially merged (raise maxIterations or " +
           "switch to a doubling propagation for high-diameter graphs)")
@@ -723,6 +777,97 @@ object Dedup {
     edges.unpersist(blocking = false)
     p.unpersist(blocking = false)
     out
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The most pairs [[clusterPairs]] labels on the driver: as many
+    * (a, b) rows as fit in `threshold` bytes at Spark's size estimate of
+    * 8 + 2 × the id type's default size per row — 0 (never local) for a
+    * negative threshold, for a and b of different types, or for an id
+    * type without a [[localIdOrdering]]. */
+  private[llm] def maxLocalPairs(schema: org.apache.spark.sql.types.StructType,
+      aCol: String, bCol: String, threshold: Long): Int = {
+    val t = schema(aCol).dataType
+    if (threshold < 0 || t != schema(bCol).dataType ||
+        localIdOrdering(t).isEmpty) 0
+    else math.min(threshold / (8L + 2L * t.defaultSize), Int.MaxValue - 1L)
+      .toInt
+  }
+
+  /** Spark's ordering of the collected values of an id type, for the
+    * types the local clustering path accepts: integral ids and
+    * UTF8-binary strings (compared as UTF-8 bytes, as Spark's `min` and
+    * `least` do). Other types stay on the distributed path. */
+  private def localIdOrdering(
+      t: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
+    import org.apache.spark.sql.types._
+    t match {
+      case LongType => Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
+      case IntegerType => Some(Ordering.Int.on[Any](_.asInstanceOf[Int]))
+      case ShortType => Some(Ordering.Short.on[Any](_.asInstanceOf[Short]))
+      case ByteType => Some(Ordering.Byte.on[Any](_.asInstanceOf[Byte]))
+      case StringType => Some(Ordering.fromLessThan[Any](
+        (x, y) => org.apache.spark.unsafe.types.UTF8String.fromString(
+          x.asInstanceOf[String]).compareTo(
+          org.apache.spark.unsafe.types.UTF8String.fromString(
+            y.asInstanceOf[String])) < 0))
+      case _ => None
+    }
+  }
+
+  /** [[clusterPairs]]' output computed on the driver by union-find: one
+    * (doc_id, cluster_id) row per distinct id of `pairs`, labelled with
+    * the least id of its component under `ord`. A NULL id joins no
+    * component, as NULL never equi-joins in the distributed rounds: the
+    * one NULL row takes the least label among the components it is
+    * paired with (NULL when it is paired only with itself). */
+  private def localComponents(
+      pairs: Array[org.apache.spark.sql.Row],
+      ord: Ordering[Any]): Array[org.apache.spark.sql.Row] = {
+    val index = new java.util.HashMap[Any, Integer]()
+    val ids = scala.collection.mutable.ArrayBuffer[Any]()
+    val parent = scala.collection.mutable.ArrayBuffer[Int]()
+    def node(v: Any): Int = {
+      val i = index.get(v)
+      if (i ne null) i.intValue
+      else {
+        index.put(v, ids.length); ids += v; parent += ids.length - 1
+        ids.length - 1
+      }
+    }
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var c = i
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    // the root of every component is its least id
+    def union(x: Int, y: Int): Unit = {
+      val (rx, ry) = (find(x), find(y))
+      if (rx != ry) {
+        if (ord.lteq(ids(rx), ids(ry))) parent(ry) = rx else parent(rx) = ry
+      }
+    }
+    var nullSeen = false
+    val nullNeighbors = scala.collection.mutable.ArrayBuffer[Int]()
+    for (r <- pairs) {
+      val (a, b) = (r.get(0), r.get(1))
+      if (a == null || b == null) {
+        nullSeen = true
+        if (a != null) nullNeighbors += node(a)
+        if (b != null) nullNeighbors += node(b)
+      } else union(node(a), node(b))
+    }
+    val rows = ids.indices.map(i =>
+      org.apache.spark.sql.Row(ids(i), ids(find(i))))
+    val nullRow =
+      if (!nullSeen) None
+      else Some(org.apache.spark.sql.Row(null,
+        nullNeighbors.map(i => ids(find(i))).reduceOption[Any](ord.min(_, _))
+          .orNull))
+    (rows ++ nullRow).toArray
   }
 
   /** Near-dup-aware train/validation split: assign every document a
@@ -842,10 +987,11 @@ object Dedup {
     graft.GraftExtensions.install(train.sparkSession)
     // shingle construction + hashing fused in the codegen'd
     // word_kgram_md5s native (same md5-hex values as the HOF
-    // shingle+md5 formulation — spec-pinned), distinct'd per doc
+    // shingle+md5 formulation — spec-pinned), distinct'd per doc; a doc
+    // shorter than n words hashes to an empty array and explodes to no
+    // row, so no length filter (one would tokenize every doc twice)
     def grams(df: DataFrame, id: String, text: String, outId: String) = df
       .select(col(id).as(outId), TextOps.tokens(col(text)).as("__toks__"))
-      .where(size(col("__toks__")) >= n)
       .select(col(outId), explode(array_distinct(
         call_function("word_kgram_md5s", col("__toks__"), lit(n)))).as("__gh__"))
     grams(train, trainId, trainText, "__tid__")
@@ -1039,11 +1185,11 @@ object Dedup {
       minCopies)) {
       // positional gram hashing runs through the codegen'd native (the
       // HOF formulation `md5(posexplode(wordShingles(...)))` is the
-      // value-identity anchor — LlmSpec pins native ≡ HOF)
+      // value-identity anchor — LlmSpec pins native ≡ HOF); a doc shorter
+      // than k words hashes to an empty array and explodes to no row
       graft.GraftExtensions.install(docs.sparkSession)
       val pos = docs
         .select(col(idCol), TextOps.tokens(col(textCol)).as("__toks__"))
-        .where(size(col("__toks__")) >= k)
         .select(col(idCol),
           posexplode(expr(s"word_kgram_md5s(__toks__, $k)"))
             .as(Seq("__p0__", "__gh__")))
@@ -1148,7 +1294,6 @@ object Dedup {
       docs
         .select(col(idCol).as("__did__"),
           TextOps.tokens(col(textCol)).as("__toks__"))
-        .where(size(col("__toks__")) >= k)
         .select(col("__did__"),
           posexplode(expr(s"word_kgram_md5s(__toks__, $k)"))
             .as(Seq("__p0__", "__gh__")))
@@ -1254,13 +1399,15 @@ object Dedup {
     writeSubstrMeta(dir, k, maxGramCopies, buckets, segments = 1)
   }
 
-  /** The shared (id, pos, gram-hash) explode behind save and append. */
+  /** The shared (id, pos, gram-hash) explode behind save and append. A
+    * doc shorter than k words hashes to an empty array and explodes to no
+    * row. */
   private def substringGramPositions(
       docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     docs
       .select(col(idCol).cast("long").as("__id__"),
         TextOps.tokens(col(textCol)).as("__toks__"))
-      .where(col("__id__").isNotNull && size(col("__toks__")) >= k)
+      .where(col("__id__").isNotNull)
       .select(col("__id__"),
         posexplode(expr(s"word_kgram_md5s(__toks__, $k)"))
           .as(Seq("__p0__", "__gh__")))

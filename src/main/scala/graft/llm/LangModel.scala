@@ -391,12 +391,16 @@ object LangModel {
     .agg(sum(col(s"cnt$k")).as(s"tot$k"), count(lit(1)).as(s"nfw$k"))
 
   /** The n-word shingles of `df`'s text column, one row per occurrence
-    * in `tg`, next to `cols`; documents shorter than n words emit none. */
+    * in `tg`, next to `cols`; documents shorter than n words emit none.
+    * The length guard is the shingle array's own: a NULL or short token
+    * array shingles to an empty array, which explodes to no row. (A
+    * `where` on the token count would be pushed below the tokenizing
+    * projection and tokenize every document twice more. An empty first
+    * word needs no guard: letterWords trims, so only an empty text has
+    * one, and its one-word array is shorter than any order.) */
   private def knGramsOf(
       df: DataFrame, textCol: String, n: Int, cols: Column*): DataFrame = df
     .withColumn("__toks__", TextOps.letterWords(textCol))
-    .where(size(col("__toks__")) >= n &&
-      element_at(col("__toks__"), 1) =!= "")
     .select(cols :+ explode(TextOps.wordShingles("__toks__", n)).as("tg"): _*)
 
   /** PERSIST the order-N KN model — the train-once / score-many shape a

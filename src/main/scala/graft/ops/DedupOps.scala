@@ -646,13 +646,20 @@ object DedupOps {
       m(dir, "documents")
         .native { df =>
           val tbl = oddMinhashIndex(s, df, dir)
-          val dst = "minhash_takedown_" +
-            Fixtures.dirKey(dir) + "_" + Fixtures.runTag
+          // a fresh version per call: a second call rewriting the first
+          // call's table under the same name served a stale file listing
+          // (FILE_NOT_EXIST). The previous call's version is retired once
+          // this one is written (its serve has been consumed by then).
+          val dst = "minhash_takedown_" + Fixtures.dirKey(dir) + "_" +
+            Fixtures.runTag + "_v" + takedownSeq.incrementAndGet()
           graft.sources.ParquetIO.removeFromBucketed(
             s, tbl, "__id__",
             df.where(F.col("doc_id") % 2 === 1 && F.col("doc_id") % 3 === 0)
               .select(F.col("doc_id")),
             dst, s"/tmp/graft_takedown/$dst", "__bkey__", 8)
+          Option(lastTakedown.getAndSet(dst))
+            .filter(s.catalog.tableExists)
+            .foreach(graft.sources.ParquetIO.retireVersion(s, _))
           graft.llm.Dedup.minhashJoinIndexed(
             df.where(F.col("doc_id") % 2 === 0), "doc_id", "text",
             df.sparkSession.table(dst))
@@ -1129,6 +1136,12 @@ object DedupOps {
     * each call must publish NEW version names (re-using one would
     * overwrite files a cached relation still references). */
   private val promoteSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** q_dedup_takedown's per-JVM version counter (a fresh table per call,
+    * as for [[promoteSeq]]) and the version its last call published. */
+  private val takedownSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val lastTakedown =
+    new java.util.concurrent.atomic.AtomicReference[String]()
 
   /** Persisted substring gram-posting index over the documents table
     * (minMatchWords = 8): the admission queries' stream-static corpus

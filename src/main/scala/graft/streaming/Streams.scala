@@ -1299,9 +1299,10 @@ object Streams {
       bloomFpp: Double = 0.001,
   ): DataFrame = {
     graft.GraftExtensions.install(docs.sparkSession)
+    // a text shorter than n words shingles to an empty array and
+    // explodes to no row
     val evalGramsDf = eval
       .select(TextOps.tokens(col(evalText)).as("__toks__"))
-      .where(size(col("__toks__")) >= n)
       .select(explode(array_distinct(TextOps.wordShingles("__toks__", n)))
         .as("__g__"))
       .select(md5(col("__g__").cast("binary")).as("__gh__"))

@@ -410,4 +410,48 @@ class EntrySpec extends GraftSuite {
     }
     llm.CacheScope.global.release()
   }
+
+  test("plan lint: no row filter evaluates a tokenizer or a MinHash signature") {
+    // A filter on a column that a projection below it aliases is pushed
+    // through that projection, and Catalyst substitutes the aliased
+    // expression at every reference: a `where(size(toks) >= n)` over a
+    // tokenizing projection tokenizes each row once in the filter and
+    // again in the projection (q_lm_kn planned 8 regexp_replace where 2
+    // do the work). Per-row work of this weight runs once per row, so no
+    // FilterExec anywhere in a query's plan, cached plans included, may
+    // evaluate the NFC tokenizer or the MinHash signature.
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def flatten(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p.children ++ (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case _ => Seq.empty
+      })).flatMap(flatten)
+    val heavy = Set("nfc_normalize", "minhash_sig_words")
+    val dir = "/root/testdata/sf0.001"
+    val offenders = planned(dir).flatMap { case (name, _, plan) =>
+      flatten(plan).collect {
+        case f: FilterExec
+            if f.condition.exists(e => heavy.contains(e.prettyName)) =>
+          s"$name: ${f.condition.sql}"
+      }.distinct
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("an op that publishes a table serves a second call in the same session") {
+    // q_dedup_takedown writes its takedown table on every call; a second
+    // call that rewrote the first call's table under the same name served
+    // a stale file listing (FILE_NOT_EXIST). Each call publishes a fresh
+    // version, so both calls return the same rows.
+    val dir = "/root/testdata/sf0.001"
+    def run(): Seq[org.apache.spark.sql.Row] =
+      SparkEntry.queries("q_dedup_takedown")(spark, dir).collect().toSeq
+    val first = run()
+    val second = run()
+    llm.CacheScope.global.release()
+    assert(first.nonEmpty && second === first)
+  }
 }

@@ -2994,6 +2994,65 @@ class LlmSpec extends GraftSuite {
     assert(out.toSeq === Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (9L, 7L)))
   }
 
+  test("clusterPairs labels a small pair set with one bounded collect") {
+    val s = spark
+    import s.implicits._
+    // a 5-hop chain plus an isolated pair, in one partition: the local
+    // path collects the pairs once and builds the labels on the driver,
+    // where the distributed path runs a job per propagation round
+    val pairs = Seq((4L, 5L), (2L, 3L), (5L, 6L), (1L, 2L), (3L, 4L),
+      (7L, 9L)).toDF("doc_a", "doc_b").coalesce(1)
+    val expected = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L),
+      (6L, 1L), (7L, 7L), (9L, 7L))
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val ((local, dist, localJobs, distJobs), lines) = clusterPairsLog {
+      val (local, localJobs) =
+        withJobs(labels(Dedup.clusterPairs(pairs, "doc_a", "doc_b")))
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = s.conf.getOption(key)
+      s.conf.set(key, "-1")
+      val (dist, distJobs) =
+        try withJobs(labels(Dedup.clusterPairs(pairs, "doc_a", "doc_b")))
+        finally saved.fold(s.conf.unset(key))(s.conf.set(key, _))
+      (local, dist, localJobs, distJobs)
+    }
+    assert(local === expected && dist === expected)
+    assert(localJobs === 1)
+    assert(distJobs > 5, s"the distributed path ran $distJobs jobs")
+    // one decision line per call: path, pair count and the bound
+    assert(lines === Seq(
+      "clusterPairs path=local pairs=6 max_local_pairs=436906 broadcast_threshold=10485760",
+      "clusterPairs path=distributed pairs=unknown max_local_pairs=0 broadcast_threshold=-1"))
+  }
+
+  /** `body`'s result and the INFO lines Dedup logs while it runs. */
+  private def clusterPairsLog[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import scala.jdk.CollectionConverters._
+    val lines = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
+    val appender = new AbstractAppender("clusterPairsLog", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(Dedup.getClass.getName)
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    try (body, lines.asScala.toSeq)
+    finally {
+      logger.setLevel(level)
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("quantizedRerankTopK: candidates=all degenerates to brute-force exactly") {
     val s = spark
     val emb = s.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

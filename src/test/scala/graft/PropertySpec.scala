@@ -777,6 +777,82 @@ class PropertySpec extends GraftSuite {
     }, cases = 6)
   }
 
+  /** clusterPairs over (`a`, `b`) as a set of (doc_id, cluster_id) rows,
+    * NULLs kept, and whether the result is a driver-side local relation:
+    * the local union-find path under the session's broadcast threshold,
+    * the distributed min-label propagation when `distributed` sets the
+    * threshold to -1. */
+  private def clustersOf(pairs: org.apache.spark.sql.DataFrame,
+      distributed: Boolean): (Set[(Any, Any)], Boolean) = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    if (distributed) spark.conf.set(key, "-1")
+    try {
+      val out = graft.llm.Dedup.clusterPairs(pairs, "a", "b")
+      assert(out.schema.map(f => (f.name, f.dataType)) ===
+        Seq("doc_id" -> pairs.schema("a").dataType,
+          "cluster_id" -> pairs.schema("a").dataType))
+      (out.collect().map(r => (r.get(0), r.get(1))).toSet,
+        out.queryExecution.analyzed.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    } finally
+      if (distributed) saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Random pair lists over `ids`: random edges (self-pairs and repeats
+    * included), one path of 5-9 hops over `chain` listed in random order
+    * (its min-label propagation runs past the third round, where the
+    * distributed path checkpoints), repeats of some pairs, and pairs with
+    * NULL on one or both sides. */
+  private def pairListGen[T](ids: Seq[T], chain: Seq[T]): Gen[Seq[(Option[T], Option[T])]] =
+    for {
+      edges <- Gen.chooseNum(0, 12).flatMap(n =>
+        Gen.listOfN(n, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids))))
+      hops <- Gen.chooseNum(5, 9)
+      path <- Gen.pick(hops + 1, chain).map(_.toSeq.sortBy(_.toString))
+      flips <- Gen.listOfN(hops, Gen.oneOf(true, false))
+      order <- Gen.listOfN(hops, Gen.chooseNum(0, 1000))
+      repeats <- Gen.chooseNum(0, 3)
+      nulls <- Gen.someOf(Seq[(Option[T], Option[T])](
+        (None, Some(ids.head)), (Some(ids.last), None), (None, None)))
+    } yield {
+      val steps = path.zip(path.tail).zip(flips).map {
+        case ((x, y), flip) => if (flip) (y, x) else (x, y)
+      }.zip(order).sortBy(_._2).map(_._1)
+      val all = (edges ++ steps).map { case (x, y) => (Option(x), Option(y)) }
+      all ++ all.take(repeats) ++ nulls
+    }
+
+  test("property: clusterPairs' local union-find == its distributed label propagation") {
+    val s = spark
+    import s.implicits._
+    // integral ids: the chain nodes sort by value, so the path's least id
+    // sits at one end and its label walks every hop
+    val longIds = (1L to 30L)
+    check(Prop.forAll(pairListGen(longIds, (100L to 120L))) { ps =>
+      val pairs = ps.toDF("a", "b")
+      val (local, wasLocal) = clustersOf(pairs, distributed = false)
+      val (dist, wasDist) = clustersOf(pairs, distributed = true)
+      wasLocal && !wasDist && local == dist
+    }, cases = 6)
+    // string ids, ordered by UTF-8 bytes as Spark's min does: U+FF5E
+    // sorts below a supplementary character in UTF-8 but above its
+    // surrogate pair in UTF-16; the empty string is an id like any other
+    val strIds = Seq("", "a", "ab", "b", "Z", "\u00e9", "\uff5e",
+      "\ud83d\ude00", "a\u00e9", "\uff5ez", "\ud83d\ude00a", "zz")
+    val strChain = (0 until 12).map(i => s"c$i") ++ Seq("c\uff5e", "c\ud83d\ude00")
+    check(Prop.forAll(pairListGen(strIds, strChain)) { ps =>
+      val pairs = ps.toDF("a", "b")
+      val (local, wasLocal) = clustersOf(pairs, distributed = false)
+      val (dist, wasDist) = clustersOf(pairs, distributed = true)
+      wasLocal && !wasDist && local == dist
+    }, cases = 4)
+    // empty input: no rows on either path
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(clustersOf(none, distributed = false) === ((Set.empty, true)))
+    assert(clustersOf(none, distributed = true) === ((Set.empty, false)))
+  }
+
   test("property: scrubPii never alters text without @, +, or dotted digits") {
     val s = spark
     import s.implicits._
