@@ -1,7 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Corpus deduplication operators (beyond-reference surface; SURVEY.md
@@ -693,10 +694,10 @@ object Dedup {
       case Some(rows) =>
         p.unpersist(blocking = false)
         val idType = pairs.schema(aCol).dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", idType,
+        val schema = StructType(Seq(
+          StructField("doc_id", idType,
             pairs.schema(aCol).nullable || pairs.schema(bCol).nullable),
-          org.apache.spark.sql.types.StructField("cluster_id", idType)))
+          StructField("cluster_id", idType)))
         pairs.sparkSession.createDataFrame(java.util.Arrays.asList(
           localComponents(rows, localIdOrdering(idType).get): _*), schema)
       case None => propagateLabels(p, aCol, bCol, maxIterations)
@@ -786,8 +787,8 @@ object Dedup {
     * 8 + 2 × the id type's default size per row — 0 (never local) for a
     * negative threshold, for a and b of different types, or for an id
     * type without a [[localIdOrdering]]. */
-  private[llm] def maxLocalPairs(schema: org.apache.spark.sql.types.StructType,
-      aCol: String, bCol: String, threshold: Long): Int = {
+  private def maxLocalPairs(schema: StructType, aCol: String, bCol: String,
+      threshold: Long): Int = {
     val t = schema(aCol).dataType
     if (threshold < 0 || t != schema(bCol).dataType ||
         localIdOrdering(t).isEmpty) 0
@@ -799,8 +800,7 @@ object Dedup {
     * types the local clustering path accepts: integral ids and
     * UTF8-binary strings (compared as UTF-8 bytes, as Spark's `min` and
     * `least` do). Other types stay on the distributed path. */
-  private def localIdOrdering(
-      t: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
+  private def localIdOrdering(t: DataType): Option[Ordering[Any]] = {
     import org.apache.spark.sql.types._
     t match {
       case LongType => Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
@@ -823,8 +823,7 @@ object Dedup {
     * one NULL row takes the least label among the components it is
     * paired with (NULL when it is paired only with itself). */
   private def localComponents(
-      pairs: Array[org.apache.spark.sql.Row],
-      ord: Ordering[Any]): Array[org.apache.spark.sql.Row] = {
+      pairs: Array[Row], ord: Ordering[Any]): Array[Row] = {
     val index = new java.util.HashMap[Any, Integer]()
     val ids = scala.collection.mutable.ArrayBuffer[Any]()
     val parent = scala.collection.mutable.ArrayBuffer[Int]()
@@ -860,11 +859,10 @@ object Dedup {
         if (b != null) nullNeighbors += node(b)
       } else union(node(a), node(b))
     }
-    val rows = ids.indices.map(i =>
-      org.apache.spark.sql.Row(ids(i), ids(find(i))))
+    val rows = ids.indices.map(i => Row(ids(i), ids(find(i))))
     val nullRow =
       if (!nullSeen) None
-      else Some(org.apache.spark.sql.Row(null,
+      else Some(Row(null,
         nullNeighbors.map(i => ids(find(i))).reduceOption[Any](ord.min(_, _))
           .orNull))
     (rows ++ nullRow).toArray

@@ -379,6 +379,10 @@ object LangModel {
     // 28 → 42 s cpu at sf0.1, and the telescoped SB suffix sum regressed
     // q_lm_sb5 the same way. Both were reverted per guide §1.1.
     seen(order) = scope.cache(topLevel(train, textCol, order))
+    // every level is read at least twice (the next level down or tot1,
+    // and the scoring join); an uncached level 1 measured no better on
+    // q_lm_kn (perfbench --trace 1, 4 cores: 19 jobs either way, executor
+    // CPU 1.56 s vs 1.42–1.47 s cached), so each level stays cached
     for (k <- (order - 1) to 1 by -1)
       seen(k) = scope.cache(lowerLevel(seen(k + 1), k, agg))
     seen
