@@ -58,7 +58,10 @@ object SessionTuning {
     * UI off, the fast local dir, graft's codegen cache size
     * ([[GraftExtensions.codegenCache]], the pair the extension also
     * defaults; Spark reads it once per JVM, at the first codegen, so it
-    * holds when this is the JVM's first session) and log level ERROR. */
+    * holds when this is the JVM's first session) and log level ERROR for
+    * Spark, INFO for graft's own loggers (`graft.*`): Spark's chatter
+    * stays off while graft's decision lines and warnings (clusterPairs'
+    * path line, its non-convergence warning) still print. */
   def session(cpus: String): org.apache.spark.sql.SparkSession = {
     val (cacheKey, cacheSize) = GraftExtensions.codegenCache
     val s = apply(org.apache.spark.sql.SparkSession.builder())
@@ -69,6 +72,8 @@ object SessionTuning {
       .config(cacheKey, cacheSize)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft", org.apache.logging.log4j.Level.INFO)
     s
   }
 }

@@ -651,7 +651,7 @@ object DedupOps {
           // (FILE_NOT_EXIST). The previous call's version is retired once
           // this one is written (its serve has been consumed by then).
           val dst = "minhash_takedown_" + Fixtures.dirKey(dir) + "_" +
-            Fixtures.runTag + "_v" + takedownSeq.incrementAndGet()
+            Fixtures.runTag + "_v" + versionSeq.incrementAndGet()
           graft.sources.ParquetIO.removeFromBucketed(
             s, tbl, "__id__",
             df.where(F.col("doc_id") % 2 === 1 && F.col("doc_id") % 3 === 0)
@@ -699,7 +699,7 @@ object DedupOps {
           // files a cached relation may still reference — exactly the
           // stale-read the versioned-artifact contract exists to prevent
           val tag = Fixtures.dirKey(dir) + "_" + Fixtures.runTag +
-            "_v" + promoteSeq.incrementAndGet()
+            "_v" + versionSeq.incrementAndGet()
           val td = s"minhash_promo_td_$tag"
           graft.sources.ParquetIO.removeFromBucketed(
             s, tbl, "__id__",
@@ -1132,14 +1132,13 @@ object DedupOps {
          FROM byh"""),
   )
 
-  /** Per-JVM version counter for q_dedup_promote's maintenance loop:
-    * each call must publish NEW version names (re-using one would
-    * overwrite files a cached relation still references). */
-  private val promoteSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Per-JVM version counter for the index-maintenance ops
+    * (q_dedup_takedown, q_dedup_promote): each call must publish NEW
+    * version names (re-using one would overwrite files a cached relation
+    * or a file listing still references). */
+  private val versionSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** q_dedup_takedown's per-JVM version counter (a fresh table per call,
-    * as for [[promoteSeq]]) and the version its last call published. */
-  private val takedownSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** The takedown version q_dedup_takedown's last call published. */
   private val lastTakedown =
     new java.util.concurrent.atomic.AtomicReference[String]()
 

@@ -182,6 +182,15 @@ class EntrySpec extends GraftSuite {
     assert(hits.size === 1, s"$key written ${hits.size} times: ${hits.mkString(", ")}")
   }
 
+  test("a graft session prints graft's own INFO lines and only Spark's errors") {
+    // SessionTuning sets Spark to ERROR; clusterPairs' decision line
+    // (INFO) and its non-convergence warning must still reach the log
+    SessionTuning.session("4")
+    val log = org.slf4j.LoggerFactory.getLogger(_: String)
+    assert(log("graft.llm.Dedup$").isInfoEnabled)
+    assert(!log("org.apache.spark.scheduler.DAGScheduler").isWarnEnabled)
+  }
+
   test("plan lint: no cartesian product in any query's physical plan") {
     // Whole-suite guard: a CartesianProductExec anywhere means a join lost
     // its equi-condition (or a non-broadcastable nested loop slipped in) —
