@@ -3026,9 +3026,10 @@ class LlmSpec extends GraftSuite {
       "clusterPairs path=distributed pairs=unknown max_local_pairs=0 broadcast_threshold=-1"))
   }
 
-  /** `body`'s result and the INFO lines Dedup logs while it runs. */
+  /** `body`'s result and the INFO lines Dedup logs while it runs (graft's
+    * session logs `graft.*` at INFO). */
   private def clusterPairsLog[T](body: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import scala.jdk.CollectionConverters._
@@ -3042,12 +3043,9 @@ class LlmSpec extends GraftSuite {
     appender.start()
     val logger = LogManager.getLogger(Dedup.getClass.getName)
       .asInstanceOf[Logger]
-    val level = logger.getLevel
     logger.addAppender(appender)
-    logger.setLevel(Level.INFO)
     try (body, lines.asScala.toSeq)
     finally {
-      logger.setLevel(level)
       logger.removeAppender(appender)
       appender.stop()
     }
